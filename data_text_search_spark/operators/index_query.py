@@ -59,6 +59,7 @@ from __future__ import annotations
 
 import bisect
 import math
+import os
 import re
 from collections import Counter
 
@@ -300,11 +301,96 @@ def _read_unit(pds, unit: str, columns: list[str], flt):
     try:
         dset = pds.dataset(unit, format="parquet")
     except FileNotFoundError as e:
-        raise RuntimeError(
-            f"index colocation unit vanished: {unit!r} — the index was "
-            "merged/compacted (or deleted) after this searcher opened; "
-            "call refresh() on the IndexSearcher and retry") from e
+        raise _unit_vanished(unit) from e
     return dset.to_table(columns=columns, filter=flt, use_threads=False)
+
+
+def _unit_vanished(unit: str) -> RuntimeError:
+    """The error every colocation-unit reader raises for a unit (or one of
+    its files) that the searcher's snapshot enumerated but is gone."""
+    return RuntimeError(
+        f"index colocation unit vanished: {unit!r} — the index was "
+        "merged/compacted (or deleted) after this searcher opened; "
+        "call refresh() on the IndexSearcher and retry")
+
+
+def _unit_footers(units: list[str]) -> list[tuple]:
+    """Footers of the parquet files of the given colocation units, for
+    reads on the driver: one (filesystem, unit, file path, footer, term
+    (min, max) per row group — None where a group has no usable
+    statistics) per file. Reads footers only and keeps no file open."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    from data_text_search_spark.sources import fsio
+
+    out = []
+    for unit in units:
+        if fsio.is_local(unit):
+            fs = pafs.LocalFileSystem()
+            base = os.path.abspath(fsio.local_path(unit))
+        else:
+            fs, base = pafs.FileSystem.from_uri(unit)
+        try:
+            infos = fs.get_file_info(pafs.FileSelector(base, recursive=True))
+            # the dataset reader's rule: skip any "."/"_"-prefixed part
+            files = sorted(
+                i.path for i in infos if i.type == pafs.FileType.File
+                and not any(p.startswith((".", "_")) for p in
+                            i.path[len(base):].split("/")))
+            for path in files:
+                with fs.open_input_file(path) as f:
+                    md = pq.read_metadata(f)
+                ti = md.schema.names.index("term")
+                ranges = []
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(ti).statistics
+                    ok = (st is not None and st.has_min_max
+                          and isinstance(st.min, str))
+                    ranges.append((st.min, st.max) if ok else None)
+                out.append((fs, unit, path, md, ranges))
+        except FileNotFoundError as e:
+            raise _unit_vanished(unit) from e
+    return out
+
+
+def _read_terms_local(footers: list[tuple], terms: list[str],
+                      columns: list[str]) -> pd.DataFrame:
+    """`columns` of the rows of `terms` (sorted) in the footer'd unit
+    files, read on the driver with no Spark job: row groups whose term
+    min/max statistics exclude every wanted term are skipped, the rest
+    are read column-pruned and single-threaded, then filtered to the
+    terms. A file gone since its footer was read raises the vanished
+    error."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    want = pa.array(terms, pa.string())
+    tables = []
+    for fs, unit, path, md, ranges in footers:
+        groups = []
+        for g, r in enumerate(ranges):
+            if r is not None:
+                i = bisect.bisect_left(terms, r[0])
+                if i == len(terms) or terms[i] > r[1]:
+                    continue
+            groups.append(g)
+        if not groups:
+            continue
+        try:
+            with fs.open_input_file(path) as f:
+                tbl = pq.ParquetFile(f, metadata=md).read_row_groups(
+                    groups, columns=columns, use_threads=False)
+        except FileNotFoundError as e:
+            raise _unit_vanished(unit) from e
+        tbl = tbl.filter(pc.is_in(tbl["term"], value_set=want))
+        if tbl.num_rows:
+            tables.append(tbl)
+    if not tables:
+        schema = footers[0][3].schema.to_arrow_schema()
+        tables = [pa.schema([schema.field(c) for c in columns]).empty_table()]
+    return pa.concat_tables(tables).to_pandas(use_threads=False)
 
 
 def _map_batches(kernel):
@@ -773,11 +859,18 @@ class IndexSearcher:
         # uncommitted segment dirs that must stay invisible)
         self.postings = spark.read.option("basePath", self.paths.postings) \
             .parquet(*committed_postings_dirs(root, m))
-        self.term_stats = spark.read.parquet(*committed_term_stats_paths(root, m))
         # unfiltered dictionary (alpha-pruned terms INCLUDED): fuzzy_search
         # must match against every term the corpus contains — a pruned hot
         # term still counts for the reference's fuzzy semantics
-        self._term_stats_all = self.term_stats
+        self._term_stats_all = spark.read.parquet(
+            *committed_term_stats_paths(root, m))
+        if cache:
+            # the dictionary is consulted per query — keep it hot. The
+            # UNFILTERED rows are cached, so warm() counts (budget gate)
+            # and materializes exactly what it collects; the live view
+            # below filters the cached rows
+            self._term_stats_all = self._term_stats_all.cache()
+        self.term_stats = self._term_stats_all
         if "pruned" in self.term_stats.columns:
             # alpha-cutoff terms are flagged, not deleted (kept for
             # incremental stats); queries must not see them
@@ -821,19 +914,20 @@ class IndexSearcher:
         # (term -> pandas rows) + its postings budget; rebuilt on refresh()
         self._local_blocks: dict[str, pd.DataFrame] = {}
         self._local_postings = 0
+        # footers of the colocation units' files (_unit_footers), read at
+        # search_local's first miss, not here: opening stays cheap
+        self._footers: list[tuple] | None = None
         # search_after's per-termset scored-frame LRU (cursor pages of
         # one query session re-read the same localCheckpointed frame
         # instead of re-scoring the match set); cleared on refresh()
         self._page_cache: dict[tuple, DataFrame] = {}
-        if cache:
-            # term_stats is consulted per query — keep it hot; postings
-            # benefit too at repeated-query workloads (at cluster scale the
-            # executor-local parquet cache plays this role)
-            self.term_stats = self.term_stats.cache()
 
     def warm(self) -> None:
-        """Materialize caches (bench calls this before timing)."""
-        n = self.term_stats.count()
+        """Materialize caches (bench calls this before timing). The
+        driver dictionaries are built only when the collected (unfiltered)
+        dictionary fits DRIVER_TERM_CACHE_MAX — the budget term_meta()
+        applies to the same rows."""
+        n = self._term_stats_all.count()
         if n <= self.DRIVER_TERM_CACHE_MAX and self._term_map is None:
             has_cf = "cf" in self.term_stats.columns
             has_pruned = "pruned" in self._term_stats_all.columns
@@ -3321,9 +3415,14 @@ class IndexSearcher:
         scheduling) even when the query's pruned posting lists are a few
         MB; the reference's in-process dict answers in milliseconds. This
         path closes that gap for interactive use: the SAME exact kernel
-        runs on the driver over the query terms' blocks, which are
-        fetched once (bucket+term-pruned scan) and kept in a term-level
-        LRU, so repeated-vocabulary queries skip Spark entirely.
+        runs on the driver over the query terms' blocks, which are kept
+        in a term-level LRU. A term missing from the LRU is fetched on
+        the driver too, with no Spark job: a pyarrow columnar read of the
+        colocation units' files (WAND_COLS only, row groups pruned by
+        their term min/max statistics; the unit footers are read once,
+        at the first miss). Only a layout-v1 index fetches them with a
+        Spark scan. A unit file gone since its footer was read (a merge
+        replaced the index) raises the vanished error: call refresh().
         Size-gated by Σ df of the query terms (postings that would not
         comfortably fit a driver): above the gate, or when the term
         dictionary is too large to warm driver-side, it transparently
@@ -3340,11 +3439,16 @@ class IndexSearcher:
             return self.search(query, n).toPandas()
         missing = sorted(t for t in qcounts if t not in self._local_blocks)
         if missing:
-            mb = sorted({self._term_map[t][0] for t in missing})
-            pdf = (self.postings
-                   .filter(F.col("term_bucket").isin(mb)
-                           & F.col("term").isin(missing))
-                   .drop("term_bucket").toPandas())
+            if self._units is not None:
+                if self._footers is None:
+                    self._footers = _unit_footers(self._units)
+                pdf = _read_terms_local(self._footers, missing, WAND_COLS)
+            else:  # layout v1: bucket+term-pruned Spark scan
+                mb = sorted({self._term_map[t][0] for t in missing})
+                pdf = (self.postings
+                       .filter(F.col("term_bucket").isin(mb)
+                               & F.col("term").isin(missing))
+                       .select(*WAND_COLS).toPandas())
             for t, rows in pdf.groupby("term"):
                 self._local_blocks[str(t)] = rows.reset_index(drop=True)
                 self._local_postings += int(rows["n_docs"].sum())

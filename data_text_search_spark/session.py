@@ -61,14 +61,16 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
     )
-    # shuffle/spill to tmpfs when available: /tmp here is a virtual disk
-    # whose bandwidth flatlines multi-core scaling (on a real cluster this
-    # is the node-local NVMe that scales with node count)
-    shm = "/dev/shm/spark-local"
-    if os.path.isdir("/dev/shm"):
+    # shuffle/spill to tmpfs when available and the caller named no local
+    # dir: /tmp here is a virtual disk whose bandwidth flatlines
+    # multi-core scaling (on a real cluster this is the node-local NVMe
+    # that scales with node count)
+    extra_conf = extra_conf or {}
+    if "spark.local.dir" not in extra_conf and os.path.isdir("/dev/shm"):
+        shm = "/dev/shm/spark-local"
         os.makedirs(shm, exist_ok=True)
         builder = builder.config("spark.local.dir", shm)
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

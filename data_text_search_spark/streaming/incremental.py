@@ -554,6 +554,11 @@ def merge_segments(spark: SparkSession, root: str) -> dict:
         "(or the old one back) — both are complete indexes\n", spark)
     fsio.rename(root, old, spark)
     fsio.rename(tmp, root, spark)
+    # Spark's cache matches plans by read path, not by the files under
+    # it, and only its own writes refresh a path's cached reads: a
+    # searcher's cached term_stats would keep serving the pre-merge rows
+    # to every later searcher. Re-list them (re-cached lazily; no job)
+    spark.catalog.refreshByPath(root)
     fsio.delete(marker, spark)
     fsio.delete(old, spark)
     return load_manifest(root)
@@ -589,6 +594,7 @@ def recover_merge(spark: SparkSession, root: str) -> dict:
             raise ValueError(
                 f"merge marker at {marker} but neither {tmp} nor {old} "
                 "exists — nothing to recover")
+        spark.catalog.refreshByPath(root)   # as after merge_segments' swap
     fsio.delete(marker, spark)
     fsio.delete(old, spark)
     fsio.delete(tmp, spark)

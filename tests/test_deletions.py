@@ -22,7 +22,10 @@ from data_text_search_spark.fixtures.corpus import corpus_pandas
 from data_text_search_spark.functions.text import tokenize_py
 from data_text_search_spark.operators import fuzzy
 from data_text_search_spark.operators.index_build import build_index, load_manifest
-from data_text_search_spark.operators.index_query import IndexSearcher
+from data_text_search_spark.operators.index_query import (
+    WAND_COLS,
+    IndexSearcher,
+)
 from data_text_search_spark.streaming.incremental import (
     add_documents,
     delete_documents,
@@ -90,6 +93,82 @@ def test_all_query_paths_agree(spark, corpus, deleted_index):
     # driver-local path
     loc = s.search_local(QUERY, 10)
     assert list(zip(loc["doc_id"], loc["score"].round(9))) == ref
+
+
+@pytest.fixture(scope="module")
+def segmented_index(spark, corpus, tmp_path_factory):
+    """Base build over N docs, one appended segment whose docs hold terms
+    no base doc has, then tombstones in both the base and the segment."""
+    _, df = corpus
+    root = str(tmp_path_factory.mktemp("segidx") / "idx")
+    build_index(spark, df, root, BM25Config(), id_col="doc_id",
+                shards=4, groups=1)
+    seg = pd.DataFrame({
+        "doc_id": range(10_000, 10_012),
+        "content": [f"flibbertigibbet gizmo{i % 3} return import "
+                    f"{'wobble ' * (i % 4)}" for i in range(12)]})
+    add_documents(spark, root, spark.createDataFrame(seg), id_col="doc_id")
+    delete_documents(spark, root, [2, 7, 12, 10_001, 10_004])
+    return root
+
+
+LOCAL_QUERIES = [QUERY, "flibbertigibbet", "gizmo1 wobble", "return gizmo2",
+                 "wobble def class", "flibbertigibbet notinthecorpusatall",
+                 QUERY]
+
+
+def test_search_local_equals_search_segmented(spark, segmented_index):
+    """The driver fetch reads base AND segment units and masks both
+    tombstone sets: search_local ranks exactly like search, including
+    terms only a segment holds, on first touch and on LRU hits."""
+    s = IndexSearcher(spark, segmented_index)
+    assert len(s._units) > 4                 # base + segment units
+    for q in LOCAL_QUERIES:
+        want = _rows(s.search(q, 10))
+        loc = s.search_local(q, 10)
+        assert list(zip(loc["doc_id"], loc["score"].round(9))) == want, q
+        assert not set(loc["doc_id"]) & {2, 7, 12, 10_001, 10_004}
+    only_seg = s.search_local("flibbertigibbet", 20)["doc_id"].tolist()
+    assert sorted(only_seg) == sorted(set(range(10_000, 10_012))
+                                      - {10_001, 10_004})
+
+
+def test_search_local_negative_cache_columns(spark, segmented_index):
+    """A dictionary term that no unit holds is cached as an empty block
+    with the columns and dtypes of a real one, both when the fetch finds
+    nothing at all and when it finds other terms' rows."""
+    s = IndexSearcher(spark, segmented_index)
+    s.warm()
+    entry = s._term_map["flibbertigibbet"]
+    s._term_map["zzghost"] = s._term_map["zzghost2"] = entry
+    assert s.search_local("zzghost", 5).empty
+    s.search_local("flibbertigibbet zzghost2", 5)
+    real = s._local_blocks["flibbertigibbet"]
+    assert len(real) and list(real.columns) == WAND_COLS
+    for ghost in ("zzghost", "zzghost2"):
+        empty = s._local_blocks[ghost]
+        assert empty.empty and list(empty.columns) == WAND_COLS, ghost
+        assert (empty.dtypes == real.dtypes).all(), ghost
+
+
+def test_search_local_after_merge_raises_vanished(spark, corpus, tmp_path):
+    """merge_segments replaces the unit files whose footers a searcher
+    read before it: a search_local miss raises the vanished error (call
+    refresh()) instead of answering from rows of another index."""
+    _, df = corpus
+    root = str(tmp_path / "idx")
+    build_index(spark, df, root, BM25Config(), id_col="doc_id",
+                shards=4, groups=1)
+    delete_documents(spark, root, [3, 4])
+    old = IndexSearcher(spark, root)
+    before = old.search_local("return", 5)      # footers read here
+    merge_segments(spark, root)
+    with pytest.raises(RuntimeError, match="vanished.*refresh"):
+        old.search_local("import", 5)
+    assert old.search_local("return", 5).equals(before)  # LRU hit
+    old.refresh()
+    assert old.search_local("import", 5)["doc_id"].tolist() == [
+        r["doc_id"] for r in old.search("import", 5).collect()]
 
 
 def test_fuzzy_paths_mask_deleted(spark, corpus, deleted_index):

@@ -296,6 +296,7 @@ def test_full_maintenance_cycle_on_file_uri(spark, tmp_path):
     s = IndexSearcher(spark, root)
     res = s.search("flibbertigibbet", 3).collect()
     assert [r["doc_id"] for r in res] == [900000]
+    assert s.search_local("flibbertigibbet", 3)["doc_id"].tolist() == [900000]
 
 
 def test_recover_merge_rolls_forward_after_swap_crash(spark, tmp_path,
@@ -451,6 +452,8 @@ def test_merge_segments_through_jvm_filesystem(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(fsio, "is_local", lambda p: False)
     m = merge_segments(spark, f"file://{root}")
     assert m["n_docs"] == 81 and not m.get("segments")
+    s = IndexSearcher(spark, f"file://{root}")   # pyarrow URI filesystem
+    assert s.search_local("peregrine", 3)["doc_id"].tolist() == [700000]
     monkeypatch.undo()
     s = IndexSearcher(spark, root)
     assert [r["doc_id"] for r in s.search("peregrine", 3).collect()] == [700000]
@@ -565,3 +568,36 @@ def test_empty_delta_creates_no_segment(spark, tmp_path):
     assert m2.get("segments", []) == before.get("segments", [])
     s = IndexSearcher(spark, root)
     assert s.search("return import", 5).count() == 5
+
+
+def test_new_searcher_after_merge_sees_new_dictionary(spark, tmp_path,
+                                                      spark_jobs):
+    """Spark's cache matches plans by read paths: searchers opened before
+    merge_segments cached `term_stats` (and a segment's), and the merge
+    swaps new files in under those paths by directory renames, which
+    Spark does not see. Searchers opened later must read the current
+    dictionary, also after the next append reuses the segment's id."""
+    root = _base(spark, tmp_path, n=100)
+    before_add = IndexSearcher(spark, root)
+    assert before_add.search("return", 5).count() == 5  # cache materialized
+
+    def add(word, first, n):
+        add_documents(spark, root, spark.createDataFrame(pd.DataFrame({
+            "doc_id": range(first, first + n),
+            "content": [f"{word} ray burst {i}" for i in range(n)]})),
+            id_col="doc_id")
+
+    add("gamma", 500_000, 10)
+    after_add = IndexSearcher(spark, root)
+    assert after_add.search("gamma", 50).count() == 10
+    merge_segments(spark, root)
+    with spark_jobs() as jobs:     # what merge_segments ran after its swap
+        spark.catalog.refreshByPath(root)
+    assert jobs == []
+    s = IndexSearcher(spark, root)
+    assert s.search("gamma", 50).count() == 10
+    assert len(s.search_local("gamma", 50)) == 10
+    add("epsilon", 600_000, 5)                # reuses the first segment id
+    s = IndexSearcher(spark, root)
+    assert s.search("epsilon", 50).count() == 5
+    assert s.search("gamma", 50).count() == 10

@@ -195,6 +195,57 @@ def test_search_local_matches_distributed(spark, corpus_pdf, searcher):
         r["doc_id"] for r in searcher.search("return import", 5).collect()]
 
 
+def test_search_local_runs_no_spark_job(spark, index_root, spark_jobs):
+    """On a layout-v2 index a first-touch search_local reads its posting
+    blocks on the driver, and an LRU hit reads nothing: neither starts a
+    Spark job."""
+    s = IndexSearcher(spark, index_root)
+    s.warm()
+    assert s._units is not None
+    with spark_jobs() as first:
+        got = s.search_local("def return import", 10)
+    with spark_jobs() as hit:
+        again = s.search_local("def return import", 10)
+    assert first == [] and hit == []
+    assert len(got) == 10 and got.equals(again)
+    assert got["doc_id"].tolist() == [
+        r["doc_id"] for r in s.search("def return import", 10).collect()]
+
+
+def test_warm_gates_on_the_dictionary_it_collects(spark, tmp_path,
+                                                  spark_jobs):
+    """warm() collects the UNFILTERED dictionary, so its driver budget is
+    checked against that count: a heavily alpha-pruned dictionary whose
+    live part fits the budget but whose whole does not stays
+    distributed, in at most 3 jobs, and queries still answer."""
+    import pandas as pd
+
+    n = 20
+    common = " ".join(f"common{j}" for j in range(30))   # df = n: pruned
+    df = spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(n),
+        "content": [f"{common} uniq{i}" for i in range(n)]}))
+    root = str(tmp_path / "pruned")
+    build_index(spark, df, root, BM25Config(alpha=0.0), id_col="doc_id",
+                shards=2, groups=1)
+    s = IndexSearcher(spark, root)
+    n_live, n_all = s.term_stats.count(), s._term_stats_all.count()
+    assert (n_live, n_all) == (n, n + 30)
+    s.DRIVER_TERM_CACHE_MAX = n_live + 10      # live < budget < all
+    with spark_jobs() as jobs:
+        s.warm()
+    assert s._term_map is None and s._meta_map is None
+    assert len(jobs) <= 3
+    assert s.search_local("uniq7 common3", 5)["doc_id"].tolist() == [7]
+    # within budget both driver maps are built from the one collect
+    s2 = IndexSearcher(spark, root)
+    s2.DRIVER_TERM_CACHE_MAX = n_all
+    with spark_jobs() as jobs:
+        s2.warm()
+    assert len(jobs) <= 3
+    assert len(s2._term_map) == n_live and len(s2._meta_map) == n_all
+
+
 def _fuzzy_parity(spark, searcher_, corpus_df_, q, mm=1):
     from data_text_search_spark.operators.fuzzy import fuzzy_search
     got = [tuple(r) for r in searcher_.fuzzy_search(q, mm).collect()]
