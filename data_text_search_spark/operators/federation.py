@@ -267,7 +267,6 @@ class FederatedSearcher:
             qcounts = {t: counts[t] for t in qidf if t in meta}
             if not qcounts:
                 return None
-            buckets = sorted({meta[t][3] for t in qcounts})
             rmap, fb = {}, {}
             for t in qcounts:
                 idf_l = meta[t][1]
@@ -280,7 +279,7 @@ class FederatedSearcher:
                 tomb=m._tomb_handle)
             kernel = _rescale_bounds_kernel(
                 inner, rmap, fb, self.avgdl / m.avgdl if m.avgdl else 1.0)
-            top = m._topn_job(qcounts, buckets, kernel, n)
+            top = m._topn_job(qcounts, kernel, n)
             return top.select("doc_id", "score").toPandas()
 
         # members are independent indexes: their kernel jobs run on

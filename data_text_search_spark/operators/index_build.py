@@ -25,16 +25,20 @@ bm25_functions.py:203-210):
   order — 2.6x smaller index, bit-identical scores (pytest-pinned).
 
 - **Sub-shard-major layout.** Inside each group directory, postings are
-  parquet-partitioned by spart = shard % subshards — the COLOCATION
-  unit: ALL postings of a sub-shard's documents, for every term, live
-  in one term-sorted file (bounded row groups, 16 MB). A query task
-  therefore reads its own sub-shards' files directly with a term-IN
-  filter (parquet min/max row-group pruning on the sorted term column)
-  and scores them in place: the kernel stage needs NO shuffle at all
-  (index_query reads the files per task) — the distributed-search
-  shape of a document-partitioned engine (one self-contained local
-  index per shard, merge only top-k rows). term_bucket remains a data
-  column for the v1 Spark-scan paths (search_local, fallback).
+  parquet-partitioned by spart = shard % subshards (subshards =
+  min(shards, 256)) — the COLOCATION unit: ALL postings of a sub-shard's
+  documents, for every term, live in one term-sorted file (bounded row
+  groups, 16 MB). A query task therefore reads its own sub-shards'
+  files directly with a term-IN filter (parquet min/max row-group
+  pruning on the sorted term column) and scores them in place: the
+  kernel stage needs NO shuffle at all (index_query reads the files per
+  task) — the distributed-search shape of a document-partitioned engine
+  (one self-contained local index per shard, merge only top-k rows).
+
+- **One on-disk format.** The manifest records `version`
+  (FORMAT_VERSION); every reader goes through load_manifest, which
+  refuses any other version with one "rebuild" error, so no reader
+  carries a branch for an older layout.
 
 - **Resumable build.** The expensive upstream (tokenize → per-doc
   (term, tf) pairs) is checkpointed once to `tokenized/`; posting
@@ -86,6 +90,13 @@ POSTINGS_SCHEMA = (
     "n_docs int, doc_deltas binary, tfs binary, impacts binary, "
     "block_max double, block_min double, shard_n_docs long"
 )
+# the term dictionary: every reader passes it to spark.read.schema, so
+# opening term_stats never runs a schema-inference job
+TERM_STATS_SCHEMA = ("term string, df long, cf long, idf double, "
+                     "pruned boolean, term_bucket int")
+# the layout every build writes: v2 colocation units, doc_stats as its
+# own stage, `cf` + `pruned` in term_stats, a non-null n_chars
+FORMAT_VERSION = 3
 # shard_n_docs: the shard's TOTAL posting count, emitted on the shard's
 # first block row only (null elsewhere). It exists so the shard-balance
 # metric (max/mean postings per shard — the doc-hash salting claim) rides
@@ -104,9 +115,7 @@ POSTINGS_SCHEMA = (
 # take the highest sequence, and older versions are garbage-collected only
 # AFTER the new one is committed. A crash at any point leaves at least one
 # complete manifest: either the old max (commit not yet visible) or both
-# (GC not yet run — harmless, next commit sweeps them). Legacy single-file
-# `manifest.json` indexes (pre-versioning) are still readable; their first
-# new commit supersedes the legacy file.
+# (GC not yet run — harmless, next commit sweeps them).
 
 _MANIFEST_V_RE = None  # compiled lazily (module import stays cheap)
 
@@ -142,14 +151,12 @@ def _write_manifest_atomic(path: str, manifest: dict) -> None:
             fsio.delete(old)
         except Exception:
             pass
-    if not versions and fsio.exists(path):
-        try:
-            fsio.delete(path)  # legacy pre-versioning manifest, superseded
-        except Exception:
-            pass
 
 
 def load_manifest(root: str) -> dict | None:
+    """The latest committed manifest, or None when `root` holds none.
+    Raises for a manifest of another FORMAT_VERSION: every reader and
+    writer loads through here, so that one check is the format gate."""
     from data_text_search_spark.sources import fsio
     p = IndexPaths(root).manifest
     # A concurrent commit may GC the version we just listed (list sees
@@ -166,25 +173,27 @@ def load_manifest(root: str) -> dict | None:
                 # versions existed a moment ago and ALL vanished — a
                 # committed index looking suddenly absent must be loud
                 # (returning None would read as "no index, rebuild over
-                # a live dir"), not a silent legacy-path fallthrough
+                # a live dir")
                 raise RuntimeError(
                     f"manifest at {p}: every version vanished between "
                     "reads — concurrent wipe or filesystem fault")
-            break
+            return None
         saw_versions = True
         try:
-            return json.loads(fsio.read_text(versions[-1][1]))
+            m = json.loads(fsio.read_text(versions[-1][1]))
         except Exception:
             if fsio.exists(versions[-1][1]):
                 raise  # still there — a real read fault, not the GC race
             continue
-    else:
-        raise RuntimeError(
-            f"manifest at {p}: latest version vanished on 8 consecutive "
-            "reads — concurrent commit storm or filesystem fault")
-    if not fsio.exists(p):
-        return None
-    return json.loads(fsio.read_text(p))  # legacy single-file manifest
+        if m.get("version") != FORMAT_VERSION:
+            raise ValueError(
+                f"index at {root}: index format v{m.get('version', 1)}; "
+                f"this engine reads v{FORMAT_VERSION}; rebuild with "
+                "`build_index(..., resume=False)`")
+        return m
+    raise RuntimeError(
+        f"manifest at {p}: latest version vanished on 8 consecutive "
+        "reads — concurrent commit storm or filesystem fault")
 
 
 # --- committed-view path listings -----------------------------------------
@@ -227,34 +236,14 @@ def committed_tombstone_paths(root: str, manifest: dict) -> list[str]:
             for t in manifest.get("tombstones", [])]
 
 
-def doc_stats_df(pairs_df: DataFrame, complete_n_chars: bool = False) -> DataFrame:
-    """doc_stats columns derived from the tokenized checkpoint, including
-    n_chars = len(' '.join(tokens)) = Σ tf·len(term) + max(doc_len−1, 0)
-    — the reference's fuzzy-score denominator (spacy_search_funcs.py:34,
-    100-104), stored at build so IndexSearcher.fuzzy_search never
-    re-tokenizes the corpus.
-
-    complete_n_chars=True (build paths, which wrote the checkpoint with
-    the current tokenize UDF themselves) projects the stored column
-    directly — the scan then prunes the heavy `pairs` column entirely.
-    The default derives/repairs n_chars from the (term, tf) pairs
-    (order-independent): a union of legacy (pre-n_chars) and current
-    checkpoint files surfaces the missing column as NULL for the legacy
-    rows, and those must be derived, not dropped — the coalesce keeps
-    `pairs` in the read schema, which is the safe-but-slower choice for
-    mixed-provenance readers."""
-    if complete_n_chars and "n_chars" in pairs_df.columns:
-        return pairs_df.select("doc_id", "doc_len", "shard", "n_chars")
-    computed = (F.aggregate(
-        "pairs", F.lit(0).cast("long"),
-        lambda acc, p: acc + p["tf"].cast("long") * F.length(p["term"]))
-        + F.greatest(F.col("doc_len").cast("long") - 1, F.lit(0).cast("long")))
-    if "n_chars" in pairs_df.columns:
-        return pairs_df.select(
-            "doc_id", "doc_len", "shard",
-            F.coalesce(F.col("n_chars"), computed).alias("n_chars"))
-    return pairs_df.select("doc_id", "doc_len", "shard",
-                           computed.alias("n_chars"))
+def doc_stats_df(pairs_df: DataFrame) -> DataFrame:
+    """doc_stats columns of a tokenized checkpoint. Its n_chars =
+    len(' '.join(tokens)) = Σ tf·len(term) + max(doc_len−1, 0) — the
+    reference's fuzzy-score denominator (spacy_search_funcs.py:34,
+    100-104) — is computed by the tokenize UDF and stored at build, so
+    IndexSearcher.fuzzy_search never re-tokenizes the corpus; the
+    projection lets the scan prune the heavy `pairs` column."""
+    return pairs_df.select("doc_id", "doc_len", "shard", "n_chars")
 
 
 def _encode_shard_factory(block_size: int, impact_codec: str = "f64"):
@@ -366,7 +355,6 @@ def build_index(
     groups: int = 4,
     resume: bool = True,
     tokenized_pairs: DataFrame | None = None,
-    subshards: int | None = None,
 ) -> dict:
     """Build (or resume building) a physical index under `root`.
 
@@ -389,12 +377,11 @@ def build_index(
     shards = shards or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     tp = config.term_partitions
     # colocation units of the shuffle-free query path: capped so the file
-    # count (subshards per group) stays sane at 10^5+ shards; subshards=0
-    # forces the v1 (term_bucket-partitioned, shuffle-executor) layout
-    subshards = int(subshards if subshards is not None else min(shards, 256))
+    # count (subshards per group) stays sane at 10^5+ shards
+    subshards = min(shards, 256)
 
     manifest = (load_manifest(root) if resume else None) or {
-        "version": 2,
+        "version": FORMAT_VERSION,
         "tokenizer": TOKEN_PATTERN,
         "config": {"k1": config.k1, "b": config.b, "alpha": config.alpha,
                    "clean": config.clean, "block_size": config.block_size,
@@ -404,11 +391,9 @@ def build_index(
         "subshards": subshards,
         "stages": {}, "groups_state": {}, "metrics": {},
     }
-    if (manifest["shards"] != shards or manifest["groups"] != groups
-            or manifest.get("subshards") != subshards):
-        # layout params are pinned by the first run of a build
-        shards, groups = manifest["shards"], manifest["groups"]
-        subshards = manifest.get("subshards")
+    # layout params are pinned by the first run of a build
+    shards, groups = manifest["shards"], manifest["groups"]
+    subshards = manifest["subshards"]
     if manifest.get("tokenizer") != TOKEN_PATTERN:
         # a resumed (or reopened) index persisted under a different token
         # spec would silently mix incompatible postings with new ones
@@ -423,10 +408,6 @@ def build_index(
                 "clean": config.clean, "block_size": config.block_size,
                 "impact_codec": config.impact_codec,
                 "stopwords": sorted(config.stopwords)}
-    if "stopwords" not in manifest["config"]:
-        # indexes persisted before the stopwords knob: an absent key
-        # means the empty list (the only possible value back then)
-        manifest["config"]["stopwords"] = []
     if manifest["config"] != want_cfg or manifest["term_buckets"] != tp:
         raise ValueError(
             f"resume config mismatch: index at {root} was built with "
@@ -457,24 +438,8 @@ def build_index(
         tk_obs = Observation()
         if tokenized_pairs is not None:
             # merge path: re-shard the persisted pairs (shards may differ
-            # from the source index's layout) and checkpoint. Pre-n_chars
-            # source checkpoints (or mixed old+new unions, where missing
-            # parquet columns surface as NULLs) get the column derived
-            # here (same formula as doc_stats_df), so the merged
-            # checkpoint always carries a complete n_chars
+            # from the source index's layout) and checkpoint
             tp_df = tokenized_pairs
-            nch_expr = (
-                F.aggregate(
-                    "pairs", F.lit(0).cast("long"),
-                    lambda acc, p: acc + p["tf"].cast("long")
-                    * F.length(p["term"]))
-                + F.greatest(F.col("doc_len").cast("long") - 1,
-                             F.lit(0).cast("long")))
-            if "n_chars" in tp_df.columns:
-                tp_df = tp_df.withColumn(
-                    "n_chars", F.coalesce(F.col("n_chars"), nch_expr))
-            else:
-                tp_df = tp_df.withColumn("n_chars", nch_expr)
             (tp_df
              .withColumn("shard", F.pmod(F.xxhash64("doc_id"),
                                          F.lit(shards)).cast("int"))
@@ -499,11 +464,7 @@ def build_index(
         avgdl = total_len / n_docs if n_docs else 0.0
         manifest["n_docs"] = n_docs
         manifest["avgdl"] = avgdl
-        # protocol 3: doc_stats is its own (concurrent) stage; older
-        # manifests folded it into `tokenized`, so resume uses this
-        # marker to tell the two layouts apart
-        mark_stage("tokenized", seconds=round(time.perf_counter() - t0, 3),
-                   protocol=3)
+        mark_stage("tokenized", seconds=round(time.perf_counter() - t0, 3))
         manifest["metrics"]["tokenize_docs_per_sec"] = round(
             n_docs / max(time.perf_counter() - t0, 1e-9), 1)
         _write_manifest_atomic(paths.manifest, manifest)
@@ -519,19 +480,16 @@ def build_index(
     # written rows the distinct set, and the exact collision check
     # (max(dup) > 1) rides the write as observe() metrics; the verdict is
     # inspected at join time, before the build is marked complete.
-    ds_stage_done = stage_done("doc_stats") or (
-        stage_done("tokenized")
-        and manifest["stages"]["tokenized"].get("protocol", 2) < 3)
     ds_state: dict = {}
     ds_thread = None
-    if not ds_stage_done:
+    if not stage_done("doc_stats"):
         pairs_for_ds = spark.read.parquet(td_path)
 
         def _doc_stats_job() -> None:
             try:
                 t_ds = time.perf_counter()
                 ds_obs = Observation()
-                (doc_stats_df(pairs_for_ds, complete_n_chars=True)
+                (doc_stats_df(pairs_for_ds)
                  .groupBy("doc_id")
                  .agg(F.first("doc_len").alias("doc_len"),
                       F.first("shard").alias("shard"),
@@ -621,7 +579,8 @@ def build_index(
 
     # ---- stage: postings, one job per group (resumable) ------------------
     k1, b = config.k1, config.b
-    term_stats = spark.read.parquet(paths.term_stats).filter(~F.col("pruned"))
+    term_stats = (spark.read.schema(TERM_STATS_SCHEMA)
+                  .parquet(paths.term_stats).filter(~F.col("pruned")))
     enc_df = (
         td.join(term_stats.select("term", "idf"), "term")
         .withColumn(
@@ -659,39 +618,30 @@ def build_index(
                      F.max("shard_n_docs").alias("shard_max"),
                      F.avg("shard_n_docs").alias("shard_mean"))
         )
-        gdir = f"{paths.postings}/group={g}"
-        if subshards:
-            # layout v2: ONE file per colocation unit (spart = shard %
-            # subshards). When shards == subshards the encode stage's
-            # groupBy("shard") already puts each spart's rows in exactly
-            # one task, so the partitionBy write emits one file per unit
-            # with no extra shuffle. When shards > subshards, shards
-            # mapping to the same spart land in different encode tasks
-            # and partitionBy would emit up to shards/subshards files per
-            # unit (shards total per group — a small-files blowup at the
-            # 10^5-shard scale this layout targets), so ONE repartition
-            # of the already-encoded blocks (the cheapest payload in the
-            # build, ~3-10 B/posting) restores the one-file-per-unit
-            # invariant. Rows are term-sorted with bounded row groups,
-            # so a query task opens its own unit's file and prunes to
-            # its terms' row groups via parquet min/max stats
-            # (term_bucket stays as a data column for the v1 Spark-scan
-            # paths). File count per group = subshards, independent of
-            # the term-dictionary size.
-            sparted = blocks.withColumn(
-                "spart", F.pmod(F.col("shard"), F.lit(subshards)).cast("int"))
-            if shards > subshards:
-                sparted = sparted.repartition(subshards, "spart")
-            (sparted
-             .sortWithinPartitions("spart", "term", "shard", "block_id")
-             .write.mode("overwrite")
-             .option("parquet.block.size", str(16 << 20))
-             .partitionBy("spart").parquet(gdir))
-        else:
-            # layout v1 (resume of a pre-subshards index)
-            (blocks.repartition(tp, "term_bucket")
-             .sortWithinPartitions("term", "shard", "block_id")
-             .write.mode("overwrite").partitionBy("term_bucket").parquet(gdir))
+        # ONE file per colocation unit (spart = shard % subshards). When
+        # shards == subshards the encode stage's groupBy("shard") already
+        # puts each spart's rows in exactly one task, so the partitionBy
+        # write emits one file per unit with no extra shuffle. When
+        # shards > subshards, shards mapping to the same spart land in
+        # different encode tasks and partitionBy would emit up to
+        # shards/subshards files per unit (shards total per group — a
+        # small-files blowup at the 10^5-shard scale this layout
+        # targets), so ONE repartition of the already-encoded blocks (the
+        # cheapest payload in the build, ~3-10 B/posting) restores the
+        # one-file-per-unit invariant. Rows are term-sorted with bounded
+        # row groups, so a query task opens its own unit's file and
+        # prunes to its terms' row groups via parquet min/max stats. File
+        # count per group = subshards, independent of the term-dictionary
+        # size.
+        sparted = blocks.withColumn(
+            "spart", F.pmod(F.col("shard"), F.lit(subshards)).cast("int"))
+        if shards > subshards:
+            sparted = sparted.repartition(subshards, "spart")
+        (sparted
+         .sortWithinPartitions("spart", "term", "shard", "block_id")
+         .write.mode("overwrite")
+         .option("parquet.block.size", str(16 << 20))
+         .partitionBy("spart").parquet(f"{paths.postings}/group={g}"))
         stats = g_obs.get
         n_post = int(stats["n_postings"] or 0)
         manifest["groups_state"][gkey] = {

@@ -1,6 +1,6 @@
 """Query executor over the physical index: block-max dynamic pruning.
 
-Document-partitioned, shuffle-free execution (layout v2): each task
+Document-partitioned, shuffle-free execution: each task
 reads its OWN colocation units' posting files (pyarrow, term-IN
 row-group pruning) and scores them in place; only per-task top-k rows
 leave the task, merged by a driver scatter-gather (or a hash aggregate
@@ -71,6 +71,7 @@ from pyspark.sql import functions as F
 from data_text_search_spark.config import IndexPaths
 from data_text_search_spark.functions.text import tokenize_py
 from data_text_search_spark.operators.index_build import (
+    TERM_STATS_SCHEMA,
     committed_doc_stats_paths,
     committed_postings_dirs,
     committed_term_stats_paths,
@@ -289,20 +290,52 @@ def _expand_to_positions(merged: pd.DataFrame,
     })[cols]
 
 
-def _read_unit(pds, unit: str, columns: list[str], flt):
-    """Column-pruned, term-filtered pyarrow read of ONE colocation unit.
+def _arrow_fs(path: str):
+    """(pyarrow filesystem, path on it) of an index path or URI."""
+    import pyarrow.fs as pafs
 
-    A unit enumerated by the searcher's manifest snapshot MUST exist: a
-    missing directory means a concurrent merge_tier/merge_segments (or a
-    manual wipe) replaced the index under this open searcher. Silently
-    skipping it would return results missing that unit's entire corpus
-    slice — fail loudly instead, like the v1 executor's Spark scan does
-    in the same race."""
+    from data_text_search_spark.sources import fsio
+    if fsio.is_local(path):
+        return pafs.LocalFileSystem(), os.path.abspath(fsio.local_path(path))
+    return pafs.FileSystem.from_uri(path)
+
+
+def _list_units(dirs: list[str]) -> dict[str, list[str]]:
+    """Colocation unit (a `spart=` dir) -> its sorted parquet files, from
+    ONE recursive listing per committed postings dir. Readers open
+    exactly these files, so a merge that recreates a unit dir under the
+    same name (with new part-file names) is caught as a vanished unit
+    instead of being read with this searcher's stale dictionary."""
+    import pyarrow.fs as pafs
+
+    units: dict[str, list[str]] = {}
+    for d in dirs:
+        fs, base = _arrow_fs(d)
+        found: dict[str, list[str]] = {}
+        for i in fs.get_file_info(pafs.FileSelector(
+                base, allow_not_found=True, recursive=True)):
+            rel = i.path[len(base):].strip("/").split("/")
+            # the dataset reader's rule: skip "."/"_"-prefixed files
+            if (i.type == pafs.FileType.File and len(rel) == 2
+                    and rel[0].startswith("spart=")
+                    and not rel[1].startswith((".", "_"))):
+                found.setdefault(rel[0], []).append(i.path)
+        units.update((f"{d}/{n}", sorted(found[n])) for n in sorted(found))
+    return units
+
+
+def _read_unit(fs, unit: str, files: list[str], columns: list[str], flt):
+    """Column-pruned, term-filtered pyarrow read of ONE colocation unit's
+    files, as listed when the searcher opened. A file that is gone means
+    a merge (or a manual wipe) replaced the index under this open
+    searcher: skipping it would drop that unit's corpus slice from the
+    results, so it raises the vanished error instead."""
+    import pyarrow.dataset as pds
     try:
-        dset = pds.dataset(unit, format="parquet")
+        return pds.dataset(files, format="parquet", filesystem=fs).to_table(
+            columns=columns, filter=flt, use_threads=False)
     except FileNotFoundError as e:
         raise _unit_vanished(unit) from e
-    return dset.to_table(columns=columns, filter=flt, use_threads=False)
 
 
 def _unit_vanished(unit: str) -> RuntimeError:
@@ -314,43 +347,29 @@ def _unit_vanished(unit: str) -> RuntimeError:
         "call refresh() on the IndexSearcher and retry")
 
 
-def _unit_footers(units: list[str]) -> list[tuple]:
-    """Footers of the parquet files of the given colocation units, for
+def _unit_footers(fs, unit_files: dict[str, list[str]]) -> list[tuple]:
+    """Footers of the listed files of the given colocation units, for
     reads on the driver: one (filesystem, unit, file path, footer, term
     (min, max) per row group — None where a group has no usable
     statistics) per file. Reads footers only and keeps no file open."""
-    import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
-    from data_text_search_spark.sources import fsio
-
     out = []
-    for unit in units:
-        if fsio.is_local(unit):
-            fs = pafs.LocalFileSystem()
-            base = os.path.abspath(fsio.local_path(unit))
-        else:
-            fs, base = pafs.FileSystem.from_uri(unit)
-        try:
-            infos = fs.get_file_info(pafs.FileSelector(base, recursive=True))
-            # the dataset reader's rule: skip any "."/"_"-prefixed part
-            files = sorted(
-                i.path for i in infos if i.type == pafs.FileType.File
-                and not any(p.startswith((".", "_")) for p in
-                            i.path[len(base):].split("/")))
-            for path in files:
+    for unit, files in unit_files.items():
+        for path in files:
+            try:
                 with fs.open_input_file(path) as f:
                     md = pq.read_metadata(f)
-                ti = md.schema.names.index("term")
-                ranges = []
-                for g in range(md.num_row_groups):
-                    st = md.row_group(g).column(ti).statistics
-                    ok = (st is not None and st.has_min_max
-                          and isinstance(st.min, str))
-                    ranges.append((st.min, st.max) if ok else None)
-                out.append((fs, unit, path, md, ranges))
-        except FileNotFoundError as e:
-            raise _unit_vanished(unit) from e
+            except FileNotFoundError as e:
+                raise _unit_vanished(unit) from e
+            ti = md.schema.names.index("term")
+            ranges = []
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(ti).statistics
+                ok = (st is not None and st.has_min_max
+                      and isinstance(st.min, str))
+                ranges.append((st.min, st.max) if ok else None)
+            out.append((fs, unit, path, md, ranges))
     return out
 
 
@@ -391,27 +410,6 @@ def _read_terms_local(footers: list[tuple], terms: list[str],
         schema = footers[0][3].schema.to_arrow_schema()
         tables = [pa.schema([schema.field(c) for c in columns]).empty_table()]
     return pa.concat_tables(tables).to_pandas(use_threads=False)
-
-
-def _map_batches(kernel):
-    """mapInPandas adapter: one kernel invocation per PARTITION (the
-    Arrow batches of the partition concatenated). Scoring is
-    doc-partitioned, so any grouping of whole shards is a valid partial
-    top-k unit — running per partition instead of per shard makes the
-    per-invocation overhead (the batch kernel's query loop, the WAND
-    kernel's bound setup) proportional to TASKS (~4·cores), not to the
-    shard count, which at 10^5-10^6 shards is the difference between an
-    O(shards·queries) and an O(cores·queries) Python-loop bill."""
-
-    def run(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        out = kernel(pd.concat(pdfs, ignore_index=True))
-        if len(out):
-            yield out
-
-    return run
 
 
 def _batch_kernel_factory(qterms: dict[int, dict[str, int]], k: int,
@@ -841,28 +839,22 @@ class IndexSearcher:
                 f"{m.get('tokenizer')!r}, this engine tokenizes with "
                 f"{TOKEN_PATTERN!r}; rebuild the index")
         self.manifest = m
-        # colocation units of the shuffle-free kernel stage (layout v2):
-        # every spart= dir under each committed postings dir — a unit is a
-        # whole set of sub-shards' postings across all term buckets, so any
-        # grouping of whole units is a valid partial top-k task. None →
-        # layout v1 index → the repartition("shard") fallback executor.
-        self._units: list[str] | None = None
-        if m.get("subshards"):
-            from data_text_search_spark.sources import fsio
-            units = []
-            for d in committed_postings_dirs(root, m):
-                units.extend(f"{d}/{name}" for name in fsio.listdir(d, spark)
-                             if name.startswith("spart="))
-            self._units = units or None
-        # enumerate committed directories from the manifest (never glob the
-        # root: a crashed incremental append can leave fully-written but
-        # uncommitted segment dirs that must stay invisible)
-        self.postings = spark.read.option("basePath", self.paths.postings) \
-            .parquet(*committed_postings_dirs(root, m))
+        # colocation units of the shuffle-free kernel stage: every spart=
+        # dir under each committed postings dir (enumerated from the
+        # manifest, never by globbing the root: a crashed incremental
+        # append can leave uncommitted segment dirs that must stay
+        # invisible), with the files listed NOW — readers open exactly
+        # those. A unit is a whole set of sub-shards' postings across all
+        # terms, so any grouping of whole units is a valid partial
+        # top-k task.
+        self._fs = _arrow_fs(root)[0]
+        self._unit_files = _list_units(committed_postings_dirs(root, m))
+        self._units = list(self._unit_files)
         # unfiltered dictionary (alpha-pruned terms INCLUDED): fuzzy_search
         # must match against every term the corpus contains — a pruned hot
-        # term still counts for the reference's fuzzy semantics
-        self._term_stats_all = spark.read.parquet(
+        # term still counts for the reference's fuzzy semantics. The
+        # pinned schema means opening runs no Spark job
+        self._term_stats_all = spark.read.schema(TERM_STATS_SCHEMA).parquet(
             *committed_term_stats_paths(root, m))
         if cache:
             # the dictionary is consulted per query — keep it hot. The
@@ -870,11 +862,9 @@ class IndexSearcher:
             # and materializes exactly what it collects; the live view
             # below filters the cached rows
             self._term_stats_all = self._term_stats_all.cache()
-        self.term_stats = self._term_stats_all
-        if "pruned" in self.term_stats.columns:
-            # alpha-cutoff terms are flagged, not deleted (kept for
-            # incremental stats); queries must not see them
-            self.term_stats = self.term_stats.filter(~F.col("pruned"))
+        # alpha-cutoff terms are flagged, not deleted (kept for
+        # incremental stats); queries must not see them
+        self.term_stats = self._term_stats_all.filter(~F.col("pruned"))
         cfg = m.get("config", {})
         self.codec = cfg.get("impact_codec", "f64")
         self.k1 = cfg.get("k1", 1.5)
@@ -895,14 +885,20 @@ class IndexSearcher:
         )
         tpaths = committed_tombstone_paths(root, m)
         if tpaths:
-            tomb_pdf = spark.read.parquet(*tpaths).select("doc_id").toPandas()
-            arr = np.sort(tomb_pdf["doc_id"].to_numpy(dtype=np.int64))
+            # sorted-id parquet dirs, read on the driver: no Spark job
+            import pyarrow.dataset as pds
+            arr = np.sort(np.concatenate([
+                pds.dataset(_arrow_fs(p)[1], format="parquet",
+                            filesystem=self._fs)
+                .to_table(columns=["doc_id"])["doc_id"]
+                .to_numpy().astype(np.int64) for p in tpaths]))
             if arr.size:
                 self._tombstones = arr
                 self._tomb_handle = (
                     spark.sparkContext.broadcast(arr) if arr.size > 1_000_000
                     else arr)
-        self._term_map: dict[str, tuple[int, float, int]] | None = None
+        # live query dictionary: term -> (idf, df, cf); built by warm()
+        self._term_map: dict[str, tuple[float, int, int]] | None = None
         # lazy federation dictionary (term_meta): includes pruned terms
         self._meta_map: dict | None | bool = None
         # code-point-sorted _meta_map keys (prefix bisect); lazy
@@ -915,7 +911,8 @@ class IndexSearcher:
         self._local_blocks: dict[str, pd.DataFrame] = {}
         self._local_postings = 0
         # footers of the colocation units' files (_unit_footers), read at
-        # search_local's first miss, not here: opening stays cheap
+        # the first driver-side read (_driver_footers), not here: opening
+        # stays cheap
         self._footers: list[tuple] | None = None
         # search_after's per-termset scored-frame LRU (cursor pages of
         # one query session re-read the same localCheckpointed frame
@@ -929,11 +926,6 @@ class IndexSearcher:
         applies to the same rows."""
         n = self._term_stats_all.count()
         if n <= self.DRIVER_TERM_CACHE_MAX and self._term_map is None:
-            has_cf = "cf" in self.term_stats.columns
-            has_pruned = "pruned" in self._term_stats_all.columns
-            cols = ["term", "term_bucket", "idf", "df"] + (
-                ["cf"] if has_cf else []) + (
-                ["pruned"] if has_pruned else [])
             # ONE collect over the unfiltered dictionary feeds BOTH maps:
             # the live query dictionary (_term_map — membership means the
             # term scores) and the pruned-INCLUDED federation/clause
@@ -941,49 +933,37 @@ class IndexSearcher:
             # gating and per-member term_meta stop paying a filtered
             # collect per call (alpha-pruned rows are a tiny tail, so the
             # widened collect costs what the old live-only one did)
-            rows = self._term_stats_all.select(*cols).collect()
-            self._term_map = {
-                r["term"]: (r["term_bucket"], r["idf"], r["df"],
-                            (int(r["cf"]) if has_cf
-                             and r["cf"] is not None else None))
-                for r in rows
-                if not (has_pruned and r["pruned"])
-            }
+            rows = self._term_stats_all.select(
+                "term", "idf", "df", "cf", "pruned").collect()
+            self._term_map = {r["term"]: (r["idf"], r["df"], int(r["cf"]))
+                              for r in rows if not r["pruned"]}
             if self._meta_map is None:
                 self._meta_map = {
                     r["term"]: (int(r["df"]), float(r["idf"]),
-                                bool(r["pruned"]) if has_pruned else False,
-                                int(r["term_bucket"]))
+                                bool(r["pruned"]))
                     for r in rows}
 
-    def term_meta(self, terms) -> dict[str, tuple[int, float, bool, int]]:
-        """(df, local idf, pruned, term_bucket) for the given terms present
-        in this index's dictionary INCLUDING alpha-pruned entries (their
-        true df still counts toward federated global df) — the per-member
+    def term_meta(self, terms) -> dict[str, tuple[int, float, bool]]:
+        """(df, local idf, pruned) for the given terms present in this
+        index's dictionary INCLUDING alpha-pruned entries (their true df
+        still counts toward federated global df) — the per-member
         statistics operators/federation.py combines. Served from a lazily
         collected driver map when the vocabulary fits (same budget as
         warm()), else one vocabulary-directed filtered collect."""
-        ts = self._term_stats_all
-        if "pruned" not in ts.columns:    # legacy pre-alpha-flag layout
-            ts = ts.withColumn("pruned", F.lit(False))
+        ts = self._term_stats_all.select("term", "df", "idf", "pruned")
         if self._meta_map is None:
             if ts.count() <= self.DRIVER_TERM_CACHE_MAX:
                 self._meta_map = {
                     r["term"]: (int(r["df"]), float(r["idf"]),
-                                bool(r["pruned"]), int(r["term_bucket"]))
-                    for r in ts.select(
-                        "term", "df", "idf", "pruned",
-                        "term_bucket").collect()}
+                                bool(r["pruned"])) for r in ts.collect()}
             else:
                 self._meta_map = False  # too large: stay distributed
         if self._meta_map:
             return {t: self._meta_map[t] for t in terms
                     if t in self._meta_map}
-        rows = (ts.filter(F.col("term").isin(list(terms)))
-                .select("term", "df", "idf", "pruned",
-                        "term_bucket").collect())
-        return {r["term"]: (int(r["df"]), float(r["idf"]), bool(r["pruned"]),
-                            int(r["term_bucket"])) for r in rows}
+        rows = ts.filter(F.col("term").isin(list(terms))).collect()
+        return {r["term"]: (int(r["df"]), float(r["idf"]), bool(r["pruned"]))
+                for r in rows}
 
     def _pruned_flags(self, terms) -> dict[str, bool]:
         """term -> alpha-pruned flag for the given terms PRESENT in the
@@ -998,11 +978,8 @@ class IndexSearcher:
         if isinstance(self._meta_map, dict):
             return {t: self._meta_map[t][2] for t in terms
                     if t in self._meta_map}
-        ts = self._term_stats_all
-        if "pruned" not in ts.columns:
-            ts = ts.withColumn("pruned", F.lit(False))
         return {r["term"]: bool(r["pruned"]) for r in
-                ts.filter(F.col("term").isin(terms))
+                self._term_stats_all.filter(F.col("term").isin(terms))
                 .select("term", "pruned").collect()}
 
     def _prefix_matches(self, prefix: str, cap: int) -> "list[str] | None":
@@ -1028,17 +1005,12 @@ class IndexSearcher:
             i += 1
         return out
 
-    def _kernel_parts(self) -> int:
-        """Partition count for the per-shard kernel stage: the default
-        spark.sql.shuffle.partitions (≈ cores) puts many shards into few
-        tasks, and at full parallelism ONE skewed task gates the stage
-        (at low parallelism waves average the skew out — a pure
-        scaling-efficiency loss). ~4 tasks per core restores wave
-        averaging; never more than one task per shard."""
-        spark = self.spark
-        base = max(4 * spark.sparkContext.defaultParallelism,
-                   int(spark.conf.get("spark.sql.shuffle.partitions", "8")))
-        return int(min(self.manifest["shards"], base))
+    def _driver_footers(self) -> list[tuple]:
+        """The units' file footers for reads on the driver
+        (_read_terms_local), read once per searcher at first use."""
+        if self._footers is None:
+            self._footers = _unit_footers(self._fs, self._unit_files)
+        return self._footers
 
     def refresh(self) -> None:
         """Re-list index files — pick up segments appended (and
@@ -1052,7 +1024,7 @@ class IndexSearcher:
     def _colocated_run(self, terms: list[str], kernel,
                        columns: list[str], schema: str,
                        tasks_per_core: int = 1) -> DataFrame:
-        """Shuffle-free kernel stage (layout v2): one task per group of
+        """Shuffle-free kernel stage: one task per group of
         whole colocation units; each task reads ITS OWN units' posting
         files directly (pyarrow dataset: term-IN row-group statistics
         pruning on the term-sorted files, column-pruned to `columns`)
@@ -1074,10 +1046,9 @@ class IndexSearcher:
         averaging would otherwise buy; raise it on clusters with genuine
         straggler variance."""
         spark = self.spark
-        units = self._units
-        T = int(min(len(units),
-                    max(tasks_per_core * spark.sparkContext.defaultParallelism,
-                        1)))
+        fs, units = self._fs, list(self._unit_files.items())
+        T = max(min(len(units),
+                    tasks_per_core * spark.sparkContext.defaultParallelism), 1)
         tset = sorted(terms)
 
         def run(batches):
@@ -1086,8 +1057,8 @@ class IndexSearcher:
             for idx in batches:
                 for tid in idx["id"].tolist():
                     parts = []
-                    for u in units[tid::T]:
-                        tbl = _read_unit(pds, u, columns, flt)
+                    for u, files in units[tid::T]:
+                        tbl = _read_unit(fs, u, files, columns, flt)
                         if tbl.num_rows:
                             parts.append(tbl.to_pandas())
                     if not parts:
@@ -1165,7 +1136,7 @@ class IndexSearcher:
         offs = np.asarray(offs_l, dtype=np.int64)
         dfs = np.zeros(max(len(tid), 1), dtype=np.float64)
         for t, i in tid.items():
-            dfs[i] = self._term_map[t][2]
+            dfs[i] = self._term_map[t][1]
         sig_df = (np.add.reduceat(dfs[flat], offs[:-1])
                   if flat.size else np.zeros(Q))
         # per-sig cost estimate → WEIGHTED contiguous chunking: groups
@@ -1206,14 +1177,14 @@ class IndexSearcher:
     def _colocated_batch_grid(self, qterms: dict[int, dict[str, int]],
                               kernel, schema: str,
                               k: int = 10) -> tuple[DataFrame, int]:
-        """Grid executor for search_batch over layout v2: task (qi, di)
+        """Grid executor for search_batch: task (qi, di)
         reads ONLY its query group's terms over ONLY its unit slice
         (pyarrow, term-IN row-group pruned) and scores that group in
         place. Returns (per-task partial top-k frame, Td) — each query's
         rows appear in exactly Td tasks, so the merge input is
         Q·Td·k rows (≤ the 1-D executor's Q·cores·k)."""
         spark = self.spark
-        units = self._units
+        fs, units = self._fs, list(self._unit_files.items())
         Tq, Td, groups = self._batch_grid(qterms, len(units), k)
         gterms = [sorted({t for qid in g for t in qterms[qid]})
                   for g in groups]
@@ -1227,8 +1198,8 @@ class IndexSearcher:
                         continue
                     flt = pds.field("term").isin(gterms[qi])
                     parts = []
-                    for u in units[di::Td]:
-                        tbl = _read_unit(pds, u, BATCH_COLS, flt)
+                    for u, files in units[di::Td]:
+                        tbl = _read_unit(fs, u, files, BATCH_COLS, flt)
                         if tbl.num_rows:
                             parts.append(tbl.to_pandas())
                     if not parts:
@@ -1307,23 +1278,11 @@ class IndexSearcher:
         empty = pd.DataFrame(columns=["query_id", "doc_id", "score"])
         if not all_terms:
             return _merge_topn_driver(empty, n)
-        if self._term_map is not None:
-            term_set = {t for t in all_terms if t in self._term_map}
-            buckets = sorted({self._term_map[t][0] for t in term_set})
-            qidf = {t: self._term_map[t][1] for t in term_set}
-        else:
-            present = (self.term_stats.filter(F.col("term").isin(all_terms))
-                       .select("term", "term_bucket", "idf").collect())
-            term_set = {r["term"] for r in present}
-            buckets = sorted({r["term_bucket"] for r in present})
-            qidf = {r["term"]: r["idf"] for r in present}
+        _, qidf = self._terms_from_counts(dict.fromkeys(all_terms, 1))
+        term_set = set(qidf)
         if idf_override is not None:
-            bucket_of = ({t: self._term_map[t][0] for t in term_set}
-                         if self._term_map is not None
-                         else {r["term"]: r["term_bucket"] for r in present})
             term_set = {t for t in term_set if t in idf_override}
             qidf = {t: float(idf_override[t]) for t in term_set}
-            buckets = sorted({bucket_of[t] for t in term_set})
         if not term_set:
             return _merge_topn_driver(empty, n)
         # distinct effective termsets → effective query ids
@@ -1360,17 +1319,8 @@ class IndexSearcher:
                                         else float(avgdl_override)),
                                        self.k1, self.b,
                                        tomb=self._tomb_handle, allow=allow)
-        kschema = "query_id int, doc_id long, score double"
-        if self._units is not None:
-            local, tasks = self._colocated_batch_grid(qterms, kernel,
-                                                      kschema, n)
-        else:
-            tasks = self._kernel_parts()
-            blocks = self.postings.filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(sorted(term_set)))
-            local = (blocks.repartition(tasks, "shard")
-                     .mapInPandas(_map_batches(kernel), schema=kschema))
+        local, tasks = self._colocated_batch_grid(
+            qterms, kernel, "query_id int, doc_id long, score double", n)
         if tasks * len(qterms) * n <= self.DRIVER_MERGE_MAX_ROWS:
             # the per-task tops are small (≤ tasks·distinct·n rows): fetch
             # them as ONE Arrow transfer and finish the top-n merge on the
@@ -1470,29 +1420,26 @@ class IndexSearcher:
                 .withColumn("score_abs", F.abs(F.round("score", 2))))
 
     def _query_terms(self, query: str) -> tuple[
-            dict[str, int], list[int], dict[str, float]]:
+            dict[str, int], dict[str, float]]:
         return self._terms_from_counts(Counter(tokenize_py(query)))
 
     def _terms_from_counts(self, counts) -> tuple[
-            dict[str, int], list[int], dict[str, float]]:
+            dict[str, int], dict[str, float]]:
         """Dictionary lookup for an explicit (term -> count) multiset —
         the shared tail of _query_terms, also the entry point for
-        expanded queries whose counts are synthesized, not tokenized."""
+        expanded queries whose counts are synthesized, not tokenized.
+        Returns the live terms' (counts, idfs)."""
         if not counts:
-            return {}, [], {}
+            return {}, {}
         if self._term_map is not None:
             # driver-side dictionary (warm() collected it): zero Spark jobs
             qcounts = {t: c for t, c in counts.items() if t in self._term_map}
-            buckets = sorted({self._term_map[t][0] for t in qcounts})
-            qidf = {t: self._term_map[t][1] for t in qcounts}
-            return qcounts, buckets, qidf
+            return qcounts, {t: self._term_map[t][0] for t in qcounts}
         present = (self.term_stats
                    .filter(F.col("term").isin(list(counts)))
-                   .select("term", "term_bucket", "idf").collect())
-        qcounts = {r["term"]: counts[r["term"]] for r in present}
-        buckets = sorted({r["term_bucket"] for r in present})
-        qidf = {r["term"]: r["idf"] for r in present}
-        return qcounts, buckets, qidf
+                   .select("term", "idf").collect())
+        return ({r["term"]: counts[r["term"]] for r in present},
+                {r["term"]: r["idf"] for r in present})
 
     # filtered search: an allow set at or below this many ids is
     # collected to a sorted array and masked at decode time (the same
@@ -1518,7 +1465,7 @@ class IndexSearcher:
         """search() over an explicit (term -> count) multiset — the
         whole execution path behind search, also driven directly by
         search_expanded with synthesized counts."""
-        qcounts, buckets, qidf = self._terms_from_counts(counts)
+        qcounts, qidf = self._terms_from_counts(counts)
         spark = self.spark
         empty = RESULT_SCHEMA + ", rank int, score_abs double"
         if not qcounts:
@@ -1537,27 +1484,18 @@ class IndexSearcher:
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle,
                                             allow=allow)
-        return self._topn_job(qcounts, buckets, kernel, n)
+        return self._topn_job(qcounts, kernel, n)
 
-    def _topn_job(self, qcounts, buckets, kernel, n: int,
+    def _topn_job(self, qcounts, kernel, n: int,
                   columns: list[str] = None) -> DataFrame:
-        """Shared execution tail of every single-query top-n kernel:
-        colocated shuffle-free stage (layout v2) or shard-repartitioned
-        fallback (v1), then the size-gated driver scatter-gather merge
-        (distributed hash-agg merge above DRIVER_MERGE_MAX_ROWS)."""
+        """Shared execution tail of every single-query top-n kernel: the
+        colocated shuffle-free stage, then the size-gated driver
+        scatter-gather merge (distributed hash-agg merge above
+        DRIVER_MERGE_MAX_ROWS)."""
         spark = self.spark
-        if self._units is not None:
-            tasks = min(len(self._units),
-                        spark.sparkContext.defaultParallelism)
-            local = self._colocated_run(sorted(qcounts), kernel,
-                                        columns or WAND_COLS, RESULT_SCHEMA)
-        else:
-            tasks = self._kernel_parts()
-            blocks = self.postings.filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(list(qcounts)))
-            local = (blocks.repartition(tasks, "shard")
-                     .mapInPandas(_map_batches(kernel), schema=RESULT_SCHEMA))
+        tasks = min(len(self._units), spark.sparkContext.defaultParallelism)
+        local = self._colocated_run(sorted(qcounts), kernel,
+                                    columns or WAND_COLS, RESULT_SCHEMA)
         if tasks * n <= self.DRIVER_MERGE_MAX_ROWS:
             out = _merge_topn_driver(local.toPandas(), n)
             return spark.createDataFrame(
@@ -1578,7 +1516,7 @@ class IndexSearcher:
         warmed driver dictionary when present, else one filtered collect
         over term_stats (vocabulary-sized, never the corpus)."""
         if self._term_map is not None:
-            return {t: self._term_map[t][2] for t in terms}
+            return {t: self._term_map[t][1] for t in terms}
         rows = (self.term_stats.filter(F.col("term").isin(list(terms)))
                 .select("term", "df").collect())
         return {r["term"]: int(r["df"]) for r in rows}
@@ -1588,24 +1526,37 @@ class IndexSearcher:
         terms. Fast path: build/merge persist cf as a term_stats column
         (round-5 verdict item 3), so on a segment-free index this is a
         warmed-dictionary lookup (or one vocabulary-directed filtered
-        collect) — no posting decode at all. The query-time posting-sum
-        job remains for segmented indexes (segment term_stats carry NEW
+        collect) — no posting decode at all. A segmented index takes the
+        query-time posting-sum job instead (segment term_stats carry NEW
         terms only, so a pre-existing term's persisted cf would miss
-        segment postings) and legacy cf-less indexes. Lucene
-        collection-statistics semantics on every path: tombstoned docs
-        still COUNT until a merge physically drops them (the build-time
-        cf froze before any deletion; the job applies no mask)."""
+        segment postings). Lucene collection-statistics semantics on
+        every path: tombstoned docs still COUNT until a merge physically
+        drops them (the build-time cf froze before any deletion; the job
+        applies no mask)."""
         terms = list(terms)
         if not self.manifest.get("segments"):
-            cf = self._cf_from_stats(terms)
-            if cf is not None:
-                return cf
+            return self._cf_from_stats(terms)
+        return self._cf_from_postings(terms)
+
+    def _cf_from_stats(self, terms: list[str]) -> dict[str, int]:
+        """Per-term cf from the persisted term_stats column. Terms absent
+        from the live dictionary are absent from the result, matching
+        _cf_from_postings' output shape."""
+        if self._term_map is not None:
+            return {t: self._term_map[t][2] for t in terms
+                    if t in self._term_map}
+        rows = (self.term_stats.filter(F.col("term").isin(terms))
+                .select("term", "cf").collect())
+        return {r["term"]: int(r["cf"]) for r in rows}
+
+    def _cf_from_postings(self, terms: list[str]) -> dict[str, int]:
+        """Per-term cf summed from the posting blocks' tf varints (one
+        kernel job; the compact codec is the one that keeps raw tfs)."""
         if self.codec != "compact":
             raise ValueError(
                 "collection_tf needs the compact codec (raw tf varints); "
                 "this index stores precomputed f64 impacts")
-        counts = Counter({t: 1 for t in terms})
-        qcounts, buckets, _ = self._terms_from_counts(counts)
+        qcounts, _ = self._terms_from_counts(Counter({t: 1 for t in terms}))
         if not qcounts:
             return {}
         from data_text_search_spark.functions.codec import varint_decode
@@ -1622,40 +1573,10 @@ class IndexSearcher:
                 out.append((str(term), int(tfs.sum())))
             return pd.DataFrame(out, columns=["term", "cf"])
 
-        cols = ["term", "n_docs", "tfs"]
-        if self._units is not None:
-            local = self._colocated_run(sorted(qcounts), cf_kernel,
-                                        cols, "term string, cf long")
-        else:
-            blocks = self.postings.filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(list(qcounts)))
-            local = blocks.mapInPandas(_map_batches(cf_kernel),
-                                       schema="term string, cf long")
+        local = self._colocated_run(sorted(qcounts), cf_kernel,
+                                    ["term", "n_docs", "tfs"],
+                                    "term string, cf long")
         rows = local.groupBy("term").agg(F.sum("cf").alias("cf")).collect()
-        return {r["term"]: int(r["cf"]) for r in rows}
-
-    def _cf_from_stats(self, terms: list[str]) -> "dict[str, int] | None":
-        """Per-term cf from the persisted term_stats column, or None when
-        the index predates the column (then the posting-sum job runs).
-        Terms absent from the live dictionary are absent from the result,
-        matching the job's output shape."""
-        if "cf" not in self._term_stats_all.columns:
-            return None
-        if self._term_map is not None:
-            out: dict[str, int] = {}
-            for t in terms:
-                v = self._term_map.get(t)
-                if v is None:
-                    continue
-                if len(v) < 4 or v[3] is None:
-                    return None     # mixed/legacy dictionary rows
-                out[t] = int(v[3])
-            return out
-        rows = (self.term_stats.filter(F.col("term").isin(terms))
-                .select("term", "cf").collect())
-        if any(r["cf"] is None for r in rows):
-            return None
         return {r["term"]: int(r["cf"]) for r in rows}
 
     def search_similarity(self, query: str, model: str = "tfidf",
@@ -1708,7 +1629,7 @@ class IndexSearcher:
         if model not in self.SIMILARITIES:
             raise ValueError(f"unknown similarity {model!r}; "
                              f"one of {self.SIMILARITIES}")
-        qcounts, buckets, _ = self._query_terms(query)
+        qcounts, _ = self._query_terms(query)
         empty = RESULT_SCHEMA + ", rank int, score_abs double"
         if not qcounts:
             return self.spark.createDataFrame([], empty)
@@ -1751,8 +1672,7 @@ class IndexSearcher:
 
         kernel = _sim_topk_kernel_factory(qcounts, n, impact_fn,
                                           tomb=self._tomb_handle)
-        return self._topn_job(qcounts, buckets, kernel, n,
-                              columns=BATCH_COLS)
+        return self._topn_job(qcounts, kernel, n, columns=BATCH_COLS)
 
     def score_all(self, query: str) -> DataFrame:
         """EXACT BM25 scores for EVERY matching doc (no top-k cut) —
@@ -1764,21 +1684,15 @@ class IndexSearcher:
         kernel runs with k past any shard's doc count, which statically
         disables block-max pruning (θ_lb stays −inf) — exhaustive exact
         accumulation."""
-        qcounts, buckets, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         if not qcounts:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         k = (1 << 62)
         kernel = _shard_topk_kernel_factory(qcounts, k, self.codec, qidf,
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle)
-        if self._units is not None:
-            return self._colocated_run(sorted(qcounts), kernel,
-                                       WAND_COLS, RESULT_SCHEMA)
-        blocks = self.postings.filter(
-            F.col("term_bucket").isin(buckets)
-            & F.col("term").isin(list(qcounts)))
-        return (blocks.repartition(self._kernel_parts(), "shard")
-                .mapInPandas(_map_batches(kernel), schema=RESULT_SCHEMA))
+        return self._colocated_run(sorted(qcounts), kernel,
+                                   WAND_COLS, RESULT_SCHEMA)
 
     def function_score(self, query: str, values: DataFrame,
                        val_col: str = "n_chars", n: int = 10) -> DataFrame:
@@ -1863,10 +1777,7 @@ class IndexSearcher:
             return spark.createDataFrame([], out_schema)
         qdf = F.broadcast(spark.createDataFrame([(t,) for t in qtokens],
                                                 "qtok string"))
-        ts = self._term_stats_all
-        if "pruned" not in ts.columns:
-            ts = ts.withColumn("pruned", F.lit(False))
-        matched = (ts.select("term", "pruned")
+        matched = (self._term_stats_all.select("term", "pruned")
                    .join(qdf, _fuzzy_match_cond(F.col("term"), F.col("qtok"),
                                                 max_mistakes))
                    .groupBy("term", "pruned").agg(F.count("*").alias("w"))
@@ -1878,21 +1789,6 @@ class IndexSearcher:
             return spark.createDataFrame([], out_schema)
         dstats = spark.read.parquet(
             *committed_doc_stats_paths(self.paths.root, self.manifest))
-        if ("n_chars" not in dstats.columns
-                or dstats.filter(F.col("n_chars").isNull()).head(1)):
-            # index built before n_chars was stored — or a MIXED union
-            # (legacy base doc_stats + post-n_chars segments), where the
-            # missing parquet column surfaces as NULL for the legacy rows
-            # and would silently drop those docs from the score. Derive
-            # the column once from the tokenized checkpoint instead (same
-            # formula as doc_stats_df); the null probe is a column-pruned
-            # LIMIT 1 scan, ~free on the current all-non-null layout
-            from data_text_search_spark.operators.index_build import (
-                committed_tokenized_paths,
-                doc_stats_df,
-            )
-            dstats = doc_stats_df(spark.read.parquet(
-                *committed_tokenized_paths(self.paths.root, self.manifest)))
         return (local.join(dstats.select("doc_id", "n_chars"), "doc_id")
                 .select("doc_id",
                         F.col("n_chars").cast("int").alias("n_chars"),
@@ -1916,21 +1812,8 @@ class IndexSearcher:
         if weights:
             kernel = _fuzzy_tf_kernel_factory(weights,
                                               tomb=self._tomb_handle)
-            if self._units is not None:
-                parts.append(self._colocated_run(sorted(weights), kernel,
-                                                 FUZZY_COLS, mc_schema))
-            else:
-                if self._term_map is not None:
-                    buckets = sorted({self._term_map[t][0] for t in weights
-                                      if t in self._term_map})
-                    blocks = self.postings.filter(
-                        F.col("term_bucket").isin(buckets))
-                else:
-                    blocks = self.postings
-                blocks = blocks.filter(F.col("term").isin(sorted(weights)))
-                parts.append(
-                    blocks.repartition(self._kernel_parts(), "shard")
-                    .mapInPandas(_map_batches(kernel), schema=mc_schema))
+            parts.append(self._colocated_run(sorted(weights), kernel,
+                                             FUZZY_COLS, mc_schema))
         if pruned_w:
             from data_text_search_spark.operators.index_build import (
                 committed_tokenized_paths,
@@ -1979,21 +1862,8 @@ class IndexSearcher:
         if weights:
             kernel = _presence_kernel_factory(weights,
                                               tomb=self._tomb_handle)
-            if self._units is not None:
-                parts.append(self._colocated_run(sorted(weights), kernel,
-                                                 PRESENCE_COLS, mc_schema))
-            else:
-                if self._term_map is not None:
-                    buckets = sorted({self._term_map[t][0] for t in weights
-                                      if t in self._term_map})
-                    blocks = self.postings.filter(
-                        F.col("term_bucket").isin(buckets))
-                else:
-                    blocks = self.postings
-                blocks = blocks.filter(F.col("term").isin(sorted(weights)))
-                parts.append(
-                    blocks.repartition(self._kernel_parts(), "shard")
-                    .mapInPandas(_map_batches(kernel), schema=mc_schema))
+            parts.append(self._colocated_run(sorted(weights), kernel,
+                                             PRESENCE_COLS, mc_schema))
         if pruned_w:
             from data_text_search_spark.operators.index_build import (
                 committed_tokenized_paths,
@@ -2029,7 +1899,7 @@ class IndexSearcher:
         (tombstone-masked) — the filter-context match set behind the
         stats / sort aggregations. Answered from posting blocks only
         (vocabulary-directed scan, no corpus pass)."""
-        qcounts, _, _ = self._query_terms(query)
+        qcounts, _ = self._query_terms(query)
         if not qcounts:
             return None
         local = self._tf_weighted_counts({t: 1 for t in qcounts}, {})
@@ -2224,10 +2094,7 @@ class IndexSearcher:
             weights = {t: 1 for t in warm_m if not mm[t][2]}
             pruned_w = {t: 1 for t in warm_m if mm[t][2]}
         else:
-            ts = self._term_stats_all
-            if "pruned" not in ts.columns:
-                ts = ts.withColumn("pruned", F.lit(False))
-            matched = (ts.select("term", "pruned")
+            matched = (self._term_stats_all.select("term", "pruned")
                        .filter(F.col("term").startswith(prefix))
                        .limit(max_terms + 1).collect())
             if len(matched) > max_terms:
@@ -2260,10 +2127,7 @@ class IndexSearcher:
         if not pattern:
             raise ValueError("regex_search: empty pattern")
         spark = self.spark
-        ts = self._term_stats_all
-        if "pruned" not in ts.columns:
-            ts = ts.withColumn("pruned", F.lit(False))
-        matched = (ts.select("term", "pruned")
+        matched = (self._term_stats_all.select("term", "pruned")
                    .filter(F.col("term").rlike(f"^(?:{pattern})$"))
                    .limit(max_terms + 1).collect())
         if len(matched) > max_terms:
@@ -2441,7 +2305,7 @@ class IndexSearcher:
         the form a production user with an on-disk index calls.
         Tombstoned docs are excluded (they are excluded from every
         query path)."""
-        qcounts, _, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         spark = self.spark
         if not qcounts:
             return spark.createDataFrame(
@@ -2465,7 +2329,7 @@ class IndexSearcher:
         fg_df needs no re-tokenize), background df from the live term
         dictionary. Same lift semantics/oracle as the logical-index
         operator."""
-        qcounts, _, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         spark = self.spark
         empty = "term string, fg_df long, bg_df long, lift double"
         if not qcounts:
@@ -2676,26 +2540,16 @@ class IndexSearcher:
         counts = Counter(tokenize_py(query))
         t["parse_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
         t0 = _time.perf_counter()
-        qcounts, buckets, qidf = self._terms_from_counts(counts)
+        qcounts, qidf = self._terms_from_counts(counts)
         t["dictionary_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
         if not qcounts:
             return {"timings_ms": t, "rows": []}
         kernel = _shard_topk_kernel_factory(qcounts, n, self.codec, qidf,
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle)
-        spark = self.spark
         t0 = _time.perf_counter()
-        if self._units is not None:
-            local = self._colocated_run(sorted(qcounts), kernel,
-                                        WAND_COLS, RESULT_SCHEMA)
-        else:
-            blocks = self.postings.filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(list(qcounts)))
-            local = (blocks.repartition(self._kernel_parts(), "shard")
-                     .mapInPandas(_map_batches(kernel),
-                                  schema=RESULT_SCHEMA))
-        pdf = local.toPandas()
+        pdf = self._colocated_run(sorted(qcounts), kernel, WAND_COLS,
+                                  RESULT_SCHEMA).toPandas()
         t["kernel_job_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
         t0 = _time.perf_counter()
         out = _merge_topn_driver(pdf, n)
@@ -2707,11 +2561,11 @@ class IndexSearcher:
     def score_explain(self, query: str, doc_id: int) -> DataFrame:
         """ES _explain analog: WHY does this doc score what it scores —
         one row per matching query term with (tf, df, idf, contribution),
-        the additive decomposition of the doc's BM25 score. Reads only
-        the query terms' posting blocks whose [first_doc_id, last_doc_id]
-        range covers the doc (bucket + term + range-pruned fetch, a few
-        KB), decodes driver-side; tombstoned docs return the typed empty
-        result (a deleted doc cannot be explained, like ES on a deleted
+        the additive decomposition of the doc's BM25 score. Reads the
+        query terms' rows of the colocation units on the driver with no
+        Spark job (_read_terms_local: term row-group pruned), keeps the
+        blocks whose [first_doc_id, last_doc_id] range covers the doc and
+        decodes them; tombstoned docs return the typed empty result (a deleted doc cannot be explained, like ES on a deleted
         _id). Columns: (term, tf, df, idf 6dp, contribution 4dp),
         term asc."""
         from data_text_search_spark.functions.codec import (
@@ -2721,19 +2575,15 @@ class IndexSearcher:
         schema = ("term string, tf long, df long, idf double, "
                   "contribution double")
         counts = Counter(tokenize_py(query))
-        qcounts, buckets, qidf = self._terms_from_counts(counts)
+        qcounts, qidf = self._terms_from_counts(counts)
         if not qcounts or (self._tombstones is not None
                            and int(doc_id) in self._tombstones):
             return self.spark.createDataFrame([], schema)
         dfm = self._query_term_df(qcounts)
-        blocks = (self.postings
-                  .filter(F.col("term_bucket").isin(buckets)
-                          & F.col("term").isin(list(qcounts))
-                          & (F.col("first_doc_id") <= int(doc_id))
-                          & (F.col("last_doc_id") >= int(doc_id)))
-                  .select("term", "first_doc_id", "n_docs", "doc_deltas",
-                          "tfs", "impacts")
-                  .toPandas())
+        blocks = _read_terms_local(self._driver_footers(), sorted(qcounts),
+                                   BATCH_COLS + ["last_doc_id"])
+        blocks = blocks[(blocks["first_doc_id"] <= int(doc_id))
+                        & (blocks["last_doc_id"] >= int(doc_id))]
         rows = []
         for term, trows in blocks.groupby("term"):
             fd = trows["first_doc_id"].to_numpy(dtype=np.int64)
@@ -2766,20 +2616,14 @@ class IndexSearcher:
         """Query EXPLAIN without executing: per-term dictionary stats
         (df, idf, query count) plus every execution decision search()
         would take for this query — interactive-local eligibility,
-        distributed executor form (colocated units vs bucket-pruned
-        scan), task count, whether the scatter-gather driver merge
-        applies, buckets touched, posting volume to decode, and active
-        tombstone masking. Reads ONLY the term dictionary (vocab-sized);
+        distributed executor form, task count, whether the
+        scatter-gather driver merge applies, posting volume to decode,
+        and active tombstone masking. Reads ONLY the term dictionary (vocab-sized);
         never decodes a posting — safe to call per query at any index
         size."""
         counts = Counter(tokenize_py(query))
-        qcounts, buckets, qidf = self._query_terms(query)
-        if self._term_map is not None:
-            dfs = {t: int(self._term_map[t][2]) for t in qcounts}
-        else:
-            dfs = {r["term"]: int(r["df"]) for r in
-                   self.term_stats.filter(F.col("term").isin(list(qcounts)))
-                   .select("term", "df").collect()}
+        qcounts, qidf = self._query_terms(query)
+        dfs = {t: int(d) for t, d in self._query_term_df(qcounts).items()}
         missing = sorted(set(counts) - set(qcounts))
         pruned: list[str] = []
         if missing:
@@ -2791,13 +2635,8 @@ class IndexSearcher:
                     and (self._term_map is not None
                          or n_terms is None
                          or n_terms <= self.DRIVER_TERM_CACHE_MAX))
-        if self._units is not None:
-            tasks = min(len(self._units),
-                        self.spark.sparkContext.defaultParallelism)
-            executor = "colocated-units"
-        else:
-            tasks = self._kernel_parts()
-            executor = "bucket-pruned-scan"
+        tasks = min(len(self._units),
+                    self.spark.sparkContext.defaultParallelism)
         return {
             "query": query,
             "terms": [{"term": t, "qcount": int(c), "df": dfs[t],
@@ -2811,9 +2650,8 @@ class IndexSearcher:
                                   if self._tombstones is not None else 0),
             "plan": {
                 "interactive_local_eligible": local_ok,
-                "distributed_executor": executor,
+                "distributed_executor": "colocated-units",
                 "tasks": int(tasks),
-                "buckets_touched": len(buckets),
                 "term_buckets": int(self.manifest["term_buckets"]),
                 "driver_merge": tasks * n <= self.DRIVER_MERGE_MAX_ROWS,
             },
@@ -3198,7 +3036,7 @@ class IndexSearcher:
         pagination is a scan-bounded operation by nature), then the
         cursor predicate + TakeOrderedAndProject. Composes with
         tombstones and filter-context `keep` like every other path."""
-        qcounts, _, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         spark = self.spark
         empty = "doc_id long, score double, rank int, score_abs double"
         if not qcounts:
@@ -3420,9 +3258,9 @@ class IndexSearcher:
         the driver too, with no Spark job: a pyarrow columnar read of the
         colocation units' files (WAND_COLS only, row groups pruned by
         their term min/max statistics; the unit footers are read once,
-        at the first miss). Only a layout-v1 index fetches them with a
-        Spark scan. A unit file gone since its footer was read (a merge
-        replaced the index) raises the vanished error: call refresh().
+        at the first miss). A unit file listed at open but gone now (a
+        merge replaced the index) raises the vanished error: call
+        refresh().
         Size-gated by Σ df of the query terms (postings that would not
         comfortably fit a driver): above the gate, or when the term
         dictionary is too large to warm driver-side, it transparently
@@ -3431,24 +3269,16 @@ class IndexSearcher:
         cols = ["doc_id", "score", "rank", "score_abs"]
         if self._term_map is None:
             self.warm()
-        qcounts, buckets, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         if not qcounts:
             return pd.DataFrame(columns=cols)
         if (self._term_map is None
-                or sum(self._term_map[t][2] for t in qcounts) > max_postings):
+                or sum(self._term_map[t][1] for t in qcounts) > max_postings):
             return self.search(query, n).toPandas()
         missing = sorted(t for t in qcounts if t not in self._local_blocks)
         if missing:
-            if self._units is not None:
-                if self._footers is None:
-                    self._footers = _unit_footers(self._units)
-                pdf = _read_terms_local(self._footers, missing, WAND_COLS)
-            else:  # layout v1: bucket+term-pruned Spark scan
-                mb = sorted({self._term_map[t][0] for t in missing})
-                pdf = (self.postings
-                       .filter(F.col("term_bucket").isin(mb)
-                               & F.col("term").isin(missing))
-                       .select(*WAND_COLS).toPandas())
+            pdf = _read_terms_local(self._driver_footers(), missing,
+                                    WAND_COLS)
             for t, rows in pdf.groupby("term"):
                 self._local_blocks[str(t)] = rows.reset_index(drop=True)
                 self._local_postings += int(rows["n_docs"].sum())

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from data_text_search_spark.config import IndexPaths
 from data_text_search_spark.operators.index_build import (
+    TERM_STATS_SCHEMA,
     committed_doc_stats_paths,
     committed_term_stats_paths,
     committed_tombstone_paths,
@@ -33,9 +34,8 @@ def index_info(spark: SparkSession, root: str) -> dict:
     if not m or not m.get("complete"):
         raise ValueError(f"no complete index at {root}")
     paths = IndexPaths(root)
-    ts = spark.read.parquet(*committed_term_stats_paths(root, m))
-    if "pruned" not in ts.columns:
-        ts = ts.withColumn("pruned", F.lit(False))
+    ts = spark.read.schema(TERM_STATS_SCHEMA).parquet(
+        *committed_term_stats_paths(root, m))
     vocab = ts.agg(
         F.count("*").alias("n"),
         F.sum(F.when(F.col("pruned"), 1).otherwise(0)).alias("pruned"),

@@ -63,7 +63,6 @@ from data_text_search_spark.functions.text import (
     _TOKEN_RE,
     tokenize_py,
 )
-from data_text_search_spark.operators.index_query import _map_batches
 
 BLOCK_SIZE = 128
 
@@ -575,6 +574,25 @@ def _run_kernel(spark: SparkSession, root: str, terms: list[str], kernel,
     parts = max(spark.sparkContext.defaultParallelism, 1)
     return (blocks.repartition(parts, "shard")
             .mapInPandas(_map_batches(kernel), schema=schema))
+
+
+def _map_batches(kernel):
+    """mapInPandas adapter: one kernel invocation per PARTITION (the
+    Arrow batches of the partition concatenated). Scoring is
+    doc-partitioned, so any grouping of whole shards is a valid partial
+    unit — running per partition instead of per shard makes the
+    per-invocation overhead proportional to TASKS, not to the shard
+    count."""
+
+    def run(batches):
+        pdfs = [p for p in batches if len(p)]
+        if not pdfs:
+            return
+        out = kernel(pd.concat(pdfs, ignore_index=True))
+        if len(out):
+            yield out
+
+    return run
 
 
 def phrase_count(spark: SparkSession, root: str, phrase: str) -> DataFrame:

@@ -36,6 +36,7 @@ from data_text_search_spark.config import BM25Config, IndexPaths
 from data_text_search_spark.operators.bm25_exhaustive import ingest
 from data_text_search_spark.operators.index_build import (
     POSTINGS_SCHEMA,
+    TERM_STATS_SCHEMA,
     _encode_shard_factory,
     _write_manifest_atomic,
     committed_doc_stats_paths,
@@ -289,13 +290,7 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
     # anti-join against ALL terms (incl. alpha-pruned ones, which are
     # flagged, not deleted) — a pruned hot term in the delta must stay
     # pruned, not resurrect with a delta-only df and inflated IDF
-    full_stats = spark.read.parquet(*stats_paths)
-    if "cf" not in full_stats.columns:
-        # legacy base dictionary (pre-cf): keep the segment schema
-        # aligned so the union below works; collection_tf falls back to
-        # the posting-sum job on such indexes anyway
-        full_stats = full_stats.withColumn(
-            "cf", F.lit(None).cast("long"))
+    full_stats = spark.read.schema(TERM_STATS_SCHEMA).parquet(*stats_paths)
     # cf for NEW terms is exact (the term has no base postings, so its
     # whole collection frequency is this segment's Σtf); pre-existing
     # terms keep their frozen base cf, which is why collection_tf
@@ -308,9 +303,8 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
                                - F.log(F.col("df") + 0.5))
                    .withColumn("pruned",
                                ~(F.col("idf") > F.lit(cfg["alpha"]))
-                               | (F.col("term").isin(
-                                      list(cfg.get("stopwords", [])))
-                                  if cfg.get("stopwords") else F.lit(False)))
+                               | (F.col("term").isin(list(cfg["stopwords"]))
+                                  if cfg["stopwords"] else F.lit(False)))
                    .withColumn("term_bucket",
                                F.pmod(F.xxhash64("term"), F.lit(tp)).cast("int"))
                    )
@@ -344,7 +338,7 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
         return t
 
     side_threads = [
-        _side(lambda: doc_stats_df(pairs_df, complete_n_chars=True)
+        _side(lambda: doc_stats_df(pairs_df)
               .write.mode("overwrite").parquet(paths.doc_stats_seg(seg_id))),
         _side(lambda: pairs_df.write.mode("overwrite")
               .parquet(paths.tokenized_seg(seg_id))),
@@ -357,7 +351,7 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
     new_terms = int(dt_obs.get["n"])
     if new_terms:
         live_stats = (full_stats.unionByName(
-            spark.read.schema(delta_terms.schema)
+            spark.read.schema(TERM_STATS_SCHEMA)
             .parquet(paths.term_stats_seg(seg_id)))
             .filter(~F.col("pruned")))
     else:
@@ -373,37 +367,29 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
                / (F.col("tf") + F.lit(k1)
                   * (1 - b + b * F.col("doc_len") / F.lit(avgdl))))
            .select("term", "doc_id", "tf", "impact", "shard",
-                   *(["doc_len"] if cfg.get("impact_codec", "f64") == "compact"
+                   *(["doc_len"] if cfg["impact_codec"] == "compact"
                      else [])))
-    kernel = _encode_shard_factory(cfg["block_size"],
-                                   cfg.get("impact_codec", "f64"))
+    kernel = _encode_shard_factory(cfg["block_size"], cfg["impact_codec"])
     blocks = (enc.groupBy("shard").applyInPandas(kernel, schema=POSTINGS_SCHEMA)
               .withColumn("term_bucket",
                           F.pmod(F.xxhash64("term"), F.lit(tp)).cast("int")))
-    subshards = manifest.get("subshards")
-    if subshards:
-        # layout v2 — segments mirror the base's spart colocation dirs
-        # (one term-sorted file per unit) so the shuffle-free query path
-        # covers them too; same shards>subshards realignment as the base
-        # build (index_build.py postings stage)
-        sparted = blocks.withColumn(
-            "spart", F.pmod(F.col("shard"), F.lit(subshards)).cast("int"))
-        if manifest["shards"] > subshards:
-            sparted = sparted.repartition(subshards, "spart")
-        (sparted
-         .sortWithinPartitions("spart", "term", "shard", "block_id")
-         .write.mode("overwrite")
-         .option("parquet.block.size", str(16 << 20))
-         .partitionBy("spart")
-         .parquet(paths.postings_seg(seg_id)))
-    else:
-        (blocks.repartition(tp, "term_bucket")
-         .sortWithinPartitions("term", "shard", "block_id")
-         .write.mode("overwrite").partitionBy("term_bucket")
-         .parquet(paths.postings_seg(seg_id)))
-    # doc_stats (complete n_chars — pairs_df is fresh tokenize output)
-    # and the per-segment tokenized checkpoint (merges re-score from it
-    # without re-tokenizing) were written by the side threads above
+    # segments mirror the base's spart colocation dirs (one term-sorted
+    # file per unit) so the shuffle-free query path covers them too; same
+    # shards>subshards realignment as the base build (index_build.py
+    # postings stage)
+    subshards = manifest["subshards"]
+    sparted = blocks.withColumn(
+        "spart", F.pmod(F.col("shard"), F.lit(subshards)).cast("int"))
+    if manifest["shards"] > subshards:
+        sparted = sparted.repartition(subshards, "spart")
+    (sparted
+     .sortWithinPartitions("spart", "term", "shard", "block_id")
+     .write.mode("overwrite")
+     .option("parquet.block.size", str(16 << 20))
+     .partitionBy("spart")
+     .parquet(paths.postings_seg(seg_id)))
+    # doc_stats and the per-segment tokenized checkpoint (merges re-score
+    # from it without re-tokenizing) were written by the side threads above
     for t in side_threads:
         t.join()
     if side_err:
@@ -527,7 +513,8 @@ def merge_segments(spark: SparkSession, root: str) -> dict:
     cfg = BM25Config(k1=c["k1"], b=c["b"], alpha=c["alpha"], clean=c["clean"],
                      block_size=c["block_size"],
                      term_partitions=manifest["term_buckets"],
-                     impact_codec=c.get("impact_codec", "f64"))
+                     impact_codec=c["impact_codec"],
+                     stopwords=tuple(c["stopwords"]))
     pairs = spark.read.parquet(*committed_tokenized_paths(root, manifest))
     tpaths = committed_tombstone_paths(root, manifest)
     if tpaths:
@@ -542,8 +529,7 @@ def merge_segments(spark: SparkSession, root: str) -> dict:
     fsio.delete(tmp, spark)
     build_index(spark, corpus=None, root=tmp, config=cfg,
                 shards=manifest["shards"], groups=manifest["groups"],
-                resume=False, tokenized_pairs=pairs,
-                subshards=manifest.get("subshards", 0))
+                resume=False, tokenized_pairs=pairs)
     old = f"{root}.premerge"
     fsio.delete(old, spark)
     marker = f"{root}.MERGE_SWAP"

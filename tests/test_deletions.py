@@ -171,6 +171,31 @@ def test_search_local_after_merge_raises_vanished(spark, corpus, tmp_path):
         r["doc_id"] for r in old.search("import", 5).collect()]
 
 
+def test_searcher_opened_before_merge_refuses_merged_units(spark, tmp_path,
+                                                           spark_jobs):
+    """merge_segments on a tombstoned, unsegmented index recreates the
+    unit dirs under the same names (with new part files). A searcher
+    opened before the merge holds the old dictionary and tombstones, so
+    every kernel path must raise the vanished error (call refresh())
+    instead of answering from the merged postings. Opening it, tombstones
+    included, starts no Spark job."""
+    pdf = corpus_pandas(200).reset_index().rename(columns={"index": "doc_id"})
+    root = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pdf), root, BM25Config(),
+                id_col="doc_id", shards=4, groups=1)
+    delete_documents(spark, root, range(0, 200, 3))
+    with spark_jobs() as jobs:   # tombstones are read on the driver too
+        s = IndexSearcher(spark, root)
+    assert jobs == [] and s._tombstones.size == 67
+    s.search("return import", 5).collect()
+    merge_segments(spark, root)
+    for call in (lambda: s.search("return import", 5).collect(),
+                 lambda: s.search_local("return import", 5),
+                 lambda: s.search_batch_pandas(["return import"], 5)):
+        with pytest.raises(Exception, match="call refresh"):
+            call()
+
+
 def test_fuzzy_paths_mask_deleted(spark, corpus, deleted_index):
     pdf, df = corpus
     root, dead = deleted_index

@@ -410,16 +410,44 @@ def test_manifest_versioned_commit_crash_windows(spark, tmp_path):
         json.dump(dict(m, probe=2), f)
     assert load_manifest(root)["probe"] == 2
 
-    # legacy single-file manifests (pre-versioning indexes) still load,
-    # and their first new commit supersedes + removes the legacy file
-    for _, p in _manifest_versions(paths.manifest):
-        os.remove(p)
-    with open(paths.manifest, "w") as f:
-        json.dump(dict(m, probe="legacy"), f)
-    assert load_manifest(root)["probe"] == "legacy"
-    _write_manifest_atomic(paths.manifest, dict(m, probe=3))
-    assert load_manifest(root)["probe"] == 3
-    assert not os.path.exists(paths.manifest)
+
+def test_other_format_version_refused(spark, tmp_path):
+    """A fresh build writes FORMAT_VERSION 3; every reader and writer
+    loads the manifest through load_manifest, so a manifest of another
+    version gets the one "rebuild" error from each of them."""
+    from data_text_search_spark.config import IndexPaths
+    from data_text_search_spark.operators.index_build import (
+        FORMAT_VERSION,
+        _write_manifest_atomic,
+    )
+    from data_text_search_spark.operators.inspect import index_info
+    from data_text_search_spark.streaming.incremental import delete_documents
+
+    root = _base(spark, tmp_path, n=40)
+    m = load_manifest(root)
+    assert m["version"] == FORMAT_VERSION == 3
+    _write_manifest_atomic(IndexPaths(root).manifest, dict(m, version=2))
+    pdf = corpus_pandas(40).reset_index().rename(columns={"index": "doc_id"})
+    corpus = spark.createDataFrame(pdf)
+    delta = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [900001], "content": ["peregrine falcon"]}))
+    calls = {
+        "IndexSearcher": lambda: IndexSearcher(spark, root),
+        "add_documents": lambda: add_documents(spark, root, delta,
+                                               id_col="doc_id"),
+        "delete_documents": lambda: delete_documents(spark, root, [1]),
+        "merge_segments": lambda: merge_segments(spark, root),
+        "build_index": lambda: build_index(
+            spark, corpus, root, BM25Config(), id_col="doc_id",
+            shards=4, groups=1, resume=True),
+        "index_info": lambda: index_info(spark, root),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match=(
+                r"index format v2; this engine reads v3; rebuild with "
+                r"`build_index\(\.\.\., resume=False\)`")):
+            call()
+            pytest.fail(f"{name} accepted a v2 manifest")
 
 
 def test_write_text_new_refuses_overwrite(spark, tmp_path, monkeypatch):
@@ -483,6 +511,7 @@ def test_load_manifest_survives_concurrent_gc(spark, tmp_path, monkeypatch):
 
     from data_text_search_spark.config import IndexPaths
     from data_text_search_spark.operators.index_build import (
+        FORMAT_VERSION,
         _write_manifest_atomic,
         load_manifest,
     )
@@ -491,7 +520,8 @@ def test_load_manifest_survives_concurrent_gc(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "race")
     os.makedirs(root, exist_ok=True)
     paths = IndexPaths(root)
-    _write_manifest_atomic(paths.manifest, {"probe": 1})
+    _write_manifest_atomic(paths.manifest,
+                           {"version": FORMAT_VERSION, "probe": 1})
 
     real_read = fsio.read_text
     state = {"fired": False}
@@ -501,7 +531,8 @@ def test_load_manifest_survives_concurrent_gc(spark, tmp_path, monkeypatch):
             state["fired"] = True
             # simulate the concurrent committer: newer version lands,
             # then the one we were about to read is GC'd
-            _write_manifest_atomic(paths.manifest, {"probe": 2})
+            _write_manifest_atomic(paths.manifest,
+                                   {"version": FORMAT_VERSION, "probe": 2})
             raise FileNotFoundError(path)
         return real_read(path, spark_)
 

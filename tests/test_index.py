@@ -195,13 +195,22 @@ def test_search_local_matches_distributed(spark, corpus_pdf, searcher):
         r["doc_id"] for r in searcher.search("return import", 5).collect()]
 
 
+def test_open_runs_no_spark_job(spark, index_root, spark_jobs):
+    """Opening a searcher on a tombstone-free index lists its units'
+    files and reads term_stats with the pinned schema: no Spark job
+    (schema inference would start one per read)."""
+    with spark_jobs() as jobs:
+        s = IndexSearcher(spark, index_root)
+    assert jobs == []
+    assert s.search_local("return", 3)["doc_id"].tolist() == [
+        r["doc_id"] for r in s.search("return", 3).collect()]
+
+
 def test_search_local_runs_no_spark_job(spark, index_root, spark_jobs):
-    """On a layout-v2 index a first-touch search_local reads its posting
-    blocks on the driver, and an LRU hit reads nothing: neither starts a
-    Spark job."""
+    """A first-touch search_local reads its posting blocks on the
+    driver, and an LRU hit reads nothing: neither starts a Spark job."""
     s = IndexSearcher(spark, index_root)
     s.warm()
-    assert s._units is not None
     with spark_jobs() as first:
         got = s.search_local("def return import", 10)
     with spark_jobs() as hit:
@@ -284,23 +293,6 @@ def test_index_backed_fuzzy_covers_pruned_terms(spark, corpus, tmp_path):
         _fuzzy_parity(spark, s, corpus, q)
 
 
-def test_index_backed_fuzzy_n_chars_fallback(spark, corpus, tmp_path):
-    """Indexes built before n_chars was stored in doc_stats must still
-    answer fuzzy queries (denominator derived from the tokenized
-    checkpoint on the fly)."""
-    import pandas as pd
-
-    root = str(tmp_path / "old_idx")
-    build_index(spark, corpus, root, BM25Config(), id_col="doc_id",
-                shards=4, groups=1)
-    paths = IndexPaths(root)
-    old = spark.read.parquet(paths.doc_stats).drop("n_chars").toPandas()
-    shutil.rmtree(paths.doc_stats)
-    spark.createDataFrame(old).write.parquet(paths.doc_stats)
-    s = IndexSearcher(spark, root)
-    _fuzzy_parity(spark, s, corpus, "retur improt")
-
-
 def test_doc_id_collision_raises(spark, tmp_path):
     """Colliding doc_ids must fail the build loudly (they would silently
     merge documents into phantom posting sets). The check rides the
@@ -336,39 +328,13 @@ def test_checkpoint_n_chars_matches_formula(spark, corpus, tmp_path):
     assert tok.filter(F.col("n_chars") != derived).count() == 0
     assert tok.filter(F.col("n_chars").isNull()).count() == 0
     # column pruning: the trusted projection must not scan `pairs`
-    plan = doc_stats_df(tok, complete_n_chars=True)._jdf.queryExecution() \
-        .executedPlan().toString()
+    plan = doc_stats_df(tok)._jdf.queryExecution().executedPlan().toString()
     assert "pairs" not in plan, plan
     # and the written doc_stats agrees with the checkpoint
     ds = spark.read.parquet(f"{root}/doc_stats")
     joined = (ds.alias("d").join(tok.alias("t"), "doc_id")
               .filter(F.col("d.n_chars") != F.col("t.n_chars")))
     assert joined.count() == 0
-
-
-def test_doc_stats_df_repairs_null_n_chars(spark):
-    """A mixed legacy+current checkpoint union surfaces n_chars as NULL
-    for legacy rows; doc_stats_df must derive those, not drop them."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from data_text_search_spark.operators.index_build import doc_stats_df
-
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2],
-        "shard": [0, 1],
-        "pairs": [[("ab", 2), ("c", 1)], [("xyz", 1)]],
-        "doc_len": [3, 1],
-        "n_chars": [None, 3],
-    })
-    df = spark.createDataFrame(
-        pdf, schema=("doc_id long, shard int, "
-                     "pairs array<struct<term:string,tf:int>>, "
-                     "doc_len int, n_chars long"))
-    got = {r["doc_id"]: r["n_chars"]
-           for r in doc_stats_df(df).collect()}
-    # doc 1: 2*2 + 1*1 + (3-1) = 7 (derived); doc 2: stored 3 kept
-    assert got == {1: 7, 2: 3}
 
 
 def _phrase_parity(spark, searcher_, corpus_df_, q, mm=1):

@@ -98,8 +98,8 @@ def test_explain(spark, corpus, root):
     assert ex["postings_to_decode"] == sum(
         t["df"] for t in ex["terms"])
     assert ex["plan"]["interactive_local_eligible"] is True
-    assert ex["plan"]["distributed_executor"] in ("colocated-units",
-                                                  "bucket-pruned-scan")
+    assert ex["plan"]["distributed_executor"] == "colocated-units"
+    assert "buckets_touched" not in ex["plan"]
     assert ex["plan"]["driver_merge"] is True
     assert ex["tombstones_masked"] == 0
 

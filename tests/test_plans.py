@@ -39,20 +39,44 @@ def test_column_pruning(spark, docs_path):
     assert cols == {"doc_id", "lang"}, cols  # no 'text' read for a 2-col projection
 
 
-def test_postings_scan_prunes_term_bucket_and_term(spark, corpus, tmp_path_factory):
-    from data_text_search_spark.operators.index_build import build_index
-    from data_text_search_spark.operators.index_query import IndexSearcher
-    root = str(tmp_path_factory.mktemp("planidx") / "idx")
-    build_index(spark, corpus, root, id_col="doc_id", shards=4, groups=1)
-    s = IndexSearcher(spark, root)
-    qcounts, buckets, _qidf = s._query_terms("zyzzyva obelisk")
-    blocks = s.postings.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(list(qcounts)))
-    pf = pushed_filters(blocks)
-    # the term IN-filter must reach the parquet scan (row-group pruning);
-    # term_bucket is a partition column (directory pruning, not in
-    # PushedFilters)
-    assert any("term" in f for f in pf), pf
+def test_driver_reader_prunes_row_groups_by_term(tmp_path, monkeypatch):
+    """_read_terms_local (the driver reader behind search_local and
+    score_explain) must read only the row groups whose term min/max
+    statistics admit a wanted term."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_text_search_spark.operators.index_query import (
+        _arrow_fs,
+        _read_terms_local,
+        _unit_footers,
+    )
+
+    unit = tmp_path / "spart=0"
+    unit.mkdir()
+    path = str(unit / "part-0.parquet")
+    terms = [t for t in "abcdefgh" for _ in range(3)]  # term-sorted
+    pq.write_table(pa.table({"term": terms,
+                             "n_docs": list(range(len(terms)))}),
+                   path, row_group_size=6)   # groups: ab cd ef gh
+    fs, _ = _arrow_fs(path)
+    footers = _unit_footers(fs, {str(unit): [path]})
+    assert [r for *_, r in footers] == [[("a", "b"), ("c", "d"),
+                                         ("e", "f"), ("g", "h")]]
+    read: list[list[int]] = []
+    real = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *a, **kw):
+        read.append(list(row_groups))
+        return real(self, row_groups, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    got = _read_terms_local(footers, ["b", "e", "zz"], ["term", "n_docs"])
+    assert read == [[0, 2]]
+    assert sorted(got["term"]) == ["b"] * 3 + ["e"] * 3
+    read.clear()
+    assert _read_terms_local(footers, ["aa"], ["term", "n_docs"]).empty
+    assert read == [[0]]        # "aa" lies inside group 0's [a, b] range
 
 
 def test_query_term_join_is_broadcast(spark, corpus):
@@ -99,23 +123,6 @@ def test_batch_query_plan_is_shuffle_free_until_topk_merge(
     assert "hashpartitioning(shard" not in plan
     assert "Scan parquet" not in plan  # no driver-planned postings scan
     assert "collect_list" in plan and "Window" not in plan
-
-
-def test_colocated_and_shuffle_executors_agree(spark, corpus, tmp_path_factory):
-    """The layout-v2 colocated kernel stage and the repartition("shard")
-    fallback must return identical rows (same kernels, different data
-    movement)."""
-    from data_text_search_spark.operators.index_build import build_index
-    from data_text_search_spark.operators.index_query import IndexSearcher
-    root = str(tmp_path_factory.mktemp("planidx3") / "idx")
-    build_index(spark, corpus, root, id_col="doc_id", shards=4, groups=2)
-    s = IndexSearcher(spark, root)
-    queries = ["zyzzyva obelisk", "return import", "def"]
-    got_co = [tuple(r) for r in s.search_batch(queries, 5).collect()]
-    got_single_co = [tuple(r) for r in s.search(queries[0], 5).collect()]
-    s._units = None  # force the shuffle fallback executor
-    assert [tuple(r) for r in s.search_batch(queries, 5).collect()] == got_co
-    assert [tuple(r) for r in s.search(queries[0], 5).collect()] == got_single_co
 
 
 def test_driver_and_distributed_merge_agree(spark, corpus, tmp_path_factory):

@@ -171,12 +171,15 @@ def test_similarity_needs_compact_codec(spark, corpus, tmp_path, searcher):
     # term_stats (the round-6 fast path) — and must agree with the
     # compact searcher's posting-derived values
     assert s.collection_tf(["hash"]) == searcher.collection_tf(["hash"])
-    # ... but a cf-less legacy dictionary on a non-compact codec still
-    # raises: the posting-sum fallback needs raw tf varints
-    s2 = IndexSearcher(spark, root)
-    s2._term_stats_all = s2._term_stats_all.drop("cf")
+    # ... but a segmented f64 index still raises: its persisted cf is
+    # stale for pre-existing terms, and the posting-sum path needs raw tf
+    # varints
+    from data_text_search_spark.streaming.incremental import add_documents
+    add_documents(spark, root, spark.createDataFrame(
+        [(900001, "hash join probe")], "doc_id long, content string"),
+        id_col="doc_id")
     with pytest.raises(ValueError, match="compact"):
-        s2.collection_tf(["hash"])
+        IndexSearcher(spark, root).collection_tf(["hash"])
 
 
 def test_similarity_unknown_model(searcher):
@@ -190,16 +193,7 @@ def test_collection_tf_fast_path_matches_job(searcher, stats):
     never the value)."""
     present = sorted(stats["cf"], key=lambda t: -stats["cf"][t])[:3]
     fast = searcher._cf_from_stats(present)
-    assert fast is not None          # compact fixture persists cf
-    # force the posting-decode job by hiding the column
-    import pyspark.sql.functions as F
-    saved_all, saved_map = searcher._term_stats_all, searcher._term_map
-    try:
-        searcher._term_stats_all = saved_all.drop("cf")
-        searcher._term_map = None
-        job = searcher.collection_tf(present)
-    finally:
-        searcher._term_stats_all, searcher._term_map = saved_all, saved_map
+    job = searcher._cf_from_postings(present)
     assert fast == job == {t: stats["cf"][t] for t in present}
 
 
@@ -436,6 +430,11 @@ def test_stopword_flag_survives_incremental_delta(spark, corpus, tmp_path):
     assert s.search("zzznewstop", 5).count() == 0
     assert 100_000 in {r["doc_id"]
                        for r in s.search("hash join", 1000).collect()}
+    # merge_segments rebuilds under the index's own stop list
+    from data_text_search_spark.streaming.incremental import merge_segments
+    assert merge_segments(spark, root)["config"]["stopwords"] == [
+        "zzznewstop"]
+    assert IndexSearcher(spark, root).search("zzznewstop", 5).count() == 0
 
 
 def test_sample_matches_deterministic_and_seeded(searcher):
