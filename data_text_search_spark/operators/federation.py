@@ -83,13 +83,11 @@ from data_text_search_spark.operators.index_build import (
     committed_doc_stats_paths,
 )
 from data_text_search_spark.operators.index_query import (
-    RESULT_SCHEMA,
     IndexSearcher,
     _merge_topn_driver,
+    _top_frame,
     _shard_topk_kernel_factory,
 )
-
-OUT_SCHEMA = RESULT_SCHEMA + ", rank int, score_abs double"
 
 # member-config keys that must agree for federated scoring to be exact
 # (block_size / term_partitions / shards are pure layout and may differ)
@@ -240,9 +238,10 @@ class FederatedSearcher:
                members: "list[str] | None" = None) -> DataFrame:
         """BM25 top-n over all members under exact global statistics —
         row-identical to one combined index over the union corpus
-        (pytest-pinned). Per member: one block-max pruned kernel job with
-        rescaled bounds; then the same driver scatter-gather merge a
-        single index uses across its shards.
+        (pytest-pinned). Per member: the block-max pruned kernel with
+        rescaled bounds, on the driver within the member's
+        `_driver_answers` gate, else one Spark job; then the same driver
+        scatter-gather merge a single index uses across its shards.
 
         `members` restricts EXECUTION to the named roots (routed
         search — no job is ever submitted for the others, so their
@@ -254,10 +253,10 @@ class FederatedSearcher:
         counts = Counter(tokenize_py(query))
         spark = self.spark
         if not counts:
-            return spark.createDataFrame([], OUT_SCHEMA)
+            return _top_frame(spark)
         qidf, metas = self._global_stats(sorted(counts), scan_roots=sel)
         if not qidf:
-            return spark.createDataFrame([], OUT_SCHEMA)
+            return _top_frame(spark)
         k1p1 = self.k1 + 1.0
 
         def _member_top(args) -> "pd.DataFrame | None":
@@ -279,8 +278,10 @@ class FederatedSearcher:
                 tomb=m._tomb_handle)
             kernel = _rescale_bounds_kernel(
                 inner, rmap, fb, self.avgdl / m.avgdl if m.avgdl else 1.0)
-            top = m._topn_job(qcounts, kernel, n)
-            return top.select("doc_id", "score").toPandas()
+            top = m._topn_rows(qcounts, kernel, n)
+            if isinstance(top, DataFrame):   # distributed merge
+                top = top.toPandas()
+            return top[["doc_id", "score"]]
 
         # members are independent indexes: their kernel jobs run on
         # concurrent driver threads so one member's stage tail
@@ -294,9 +295,9 @@ class FederatedSearcher:
                 _member_top, zip(self.members, metas, self.roots))
                 if p is not None]
         if not parts:
-            return spark.createDataFrame([], OUT_SCHEMA)
-        merged = _merge_topn_driver(pd.concat(parts, ignore_index=True), n)
-        return spark.createDataFrame(merged, schema=OUT_SCHEMA)
+            return _top_frame(spark)
+        return _top_frame(spark, _merge_topn_driver(
+            pd.concat(parts, ignore_index=True), n))
 
     # ---- batch -------------------------------------------------------
 

@@ -79,6 +79,8 @@ from data_text_search_spark.operators.index_build import (
 )
 
 RESULT_SCHEMA = "doc_id long, score double"
+# a single query's top-n rows, whichever path answered it
+TOPN_SCHEMA = RESULT_SCHEMA + ", rank int, score_abs double"
 
 # column sets the colocated reader fetches per kernel (never the whole row)
 BATCH_COLS = ["term", "first_doc_id", "n_docs", "doc_deltas", "tfs", "impacts"]
@@ -183,6 +185,27 @@ def _term_decoder(codec: str, qidf: dict[str, float] | None,
         return docs, imps
 
     return decode
+
+
+def _no_hits() -> pd.DataFrame:
+    """The typed empty (doc_id, score) frame a top-k kernel returns."""
+    return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
+                         "score": pd.Series([], dtype="float64")})
+
+
+def _top_frame(spark: SparkSession,
+               top: "pd.DataFrame | None" = None) -> DataFrame:
+    """A top-n answered on the driver, as a Spark frame whose collect()
+    runs no Spark job: built from pandas, which Spark keeps as a local
+    relation. pyspark turns an EMPTY pandas frame into a Python RDD
+    instead (its Arrow path needs rows), whose collect runs a job, so
+    no hits (`top` None or empty) is a typed placeholder row cut by
+    limit(0), which the optimizer folds to an empty local relation."""
+    if top is None or top.empty:
+        return spark.createDataFrame(pd.DataFrame(
+            {"doc_id": [0], "score": [0.0], "rank": [0], "score_abs": [0.0]}),
+            schema=TOPN_SCHEMA).limit(0)
+    return spark.createDataFrame(top, schema=TOPN_SCHEMA)
 
 
 def _score_abs_half_up(s: np.ndarray) -> np.ndarray:
@@ -306,22 +329,29 @@ def _list_units(dirs: list[str]) -> dict[str, list[str]]:
     exactly these files, so a merge that recreates a unit dir under the
     same name (with new part-file names) is caught as a vanished unit
     instead of being read with this searcher's stale dictionary."""
-    import pyarrow.fs as pafs
-
     units: dict[str, list[str]] = {}
     for d in dirs:
         fs, base = _arrow_fs(d)
         found: dict[str, list[str]] = {}
-        for i in fs.get_file_info(pafs.FileSelector(
-                base, allow_not_found=True, recursive=True)):
-            rel = i.path[len(base):].strip("/").split("/")
-            # the dataset reader's rule: skip "."/"_"-prefixed files
-            if (i.type == pafs.FileType.File and len(rel) == 2
-                    and rel[0].startswith("spart=")
-                    and not rel[1].startswith((".", "_"))):
-                found.setdefault(rel[0], []).append(i.path)
-        units.update((f"{d}/{n}", sorted(found[n])) for n in sorted(found))
+        for path in _list_parquet(fs, d):
+            rel = path[len(base):].strip("/").split("/")
+            if len(rel) == 2 and rel[0].startswith("spart="):
+                found.setdefault(rel[0], []).append(path)
+        units.update((f"{d}/{n}", found[n]) for n in sorted(found))
     return units
+
+
+def _list_parquet(fs, path: str) -> list[str]:
+    """The data files under one parquet dir (an index path or URI) on
+    `fs`, sorted, by the dataset reader's rule: "."/"_"-prefixed names
+    are not data."""
+    import pyarrow.fs as pafs
+
+    return sorted(
+        i.path for i in fs.get_file_info(pafs.FileSelector(
+            _arrow_fs(path)[1], allow_not_found=True, recursive=True))
+        if i.type == pafs.FileType.File
+        and not i.base_name.startswith((".", "_")))
 
 
 def _read_unit(fs, unit: str, files: list[str], columns: list[str], flt):
@@ -621,16 +651,19 @@ def _shard_topk_kernel_factory(qcounts: dict[str, int], k: int,
                                b: float = 0.75, tomb=None, allow=None):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
+            return _no_hits()
         decode = _term_decoder(codec, qidf, avgdl, k1, b, tomb, allow)
 
         # per-term bounds: gain = best possible contribution to one doc,
         # loss = worst possible (negative IDF → impacts may be < 0, so
         # scores are NOT monotone in processed terms; all bounds below
         # account for both directions)
-        agg = pdf.groupby("term").agg(bmax=("block_max", "max"),
-                                      bmin=("block_min", "min"))
+        by_term = pdf.groupby("term")
+        agg = by_term.agg(bmax=("block_max", "max"),
+                          bmin=("block_min", "min"))
+        # each term's row positions, in input order: one pass, where a
+        # per-term `pdf["term"] == term` mask rescans every row per term
+        term_rows = by_term.indices
         qc = np.array([qcounts[t] for t in agg.index], dtype=np.float64)
         gain = np.maximum(agg["bmax"].to_numpy() * qc, 0.0)
         loss = np.minimum(agg["bmin"].to_numpy() * qc, 0.0)
@@ -683,7 +716,7 @@ def _shard_topk_kernel_factory(qcounts: dict[str, int], k: int,
 
         for i, term in enumerate(term_list):
             q = qcounts[term]
-            rows = pdf[pdf["term"] == term]
+            rows = pdf.take(term_rows[term])
             # θ_lb: the final kth score is at least (current kth) + all
             # remaining possible losses (incl. this term's). The kth MUST
             # be taken over never-dead docs only: a dead doc's accumulated
@@ -727,8 +760,7 @@ def _shard_topk_kernel_factory(qcounts: dict[str, int], k: int,
         if dead_mask.any():
             acc_docs, acc_scores = acc_docs[~dead_mask], acc_scores[~dead_mask]
         if acc_docs.size == 0:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
+            return _no_hits()
         n = min(k, acc_docs.size)
         # shard-local top-k with the deterministic tie-break (score desc, doc asc)
         order = np.lexsort((acc_docs, -acc_scores))[:n]
@@ -779,10 +811,8 @@ def _sim_topk_kernel_factory(qcounts: dict[str, int], k: int, impact_fn,
     term's postings are processed (the colocated reader still prunes to
     query-term row groups, so the scan stays vocabulary-directed)."""
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                              "score": pd.Series([], dtype="float64")})
         if pdf.empty:
-            return empty
+            return _no_hits()
         decode = _raw_posting_decoder(tomb, allow)
         all_docs, all_c = [], []
         for term, rows in pdf.groupby("term"):
@@ -793,7 +823,7 @@ def _sim_topk_kernel_factory(qcounts: dict[str, int], k: int, impact_fn,
             all_docs.append(docs)
             all_c.append(impact_fn(t, tfs, dls) * qcounts[t])
         if not all_docs:
-            return empty
+            return _no_hits()
         docs = np.concatenate(all_docs)
         c = np.concatenate(all_c)
         u, inv = np.unique(docs, return_inverse=True)
@@ -808,16 +838,25 @@ def _sim_topk_kernel_factory(qcounts: dict[str, int], k: int, impact_fn,
 class IndexSearcher:
     """Loads a persisted index and answers BM25 top-k queries.
 
-    `search` is the single-query path (block-max pruned); `search_batch`
-    answers a whole query set in ONE Spark job — the throughput path:
-    posting blocks for the union of query terms are read once, each term
-    is decoded once per shard, and every query's top-k is computed from
-    the shared decoded arrays.
+    `search` is the single-query path (block-max pruned). A small query
+    (the `_driver_answers` gate) runs on the driver with no Spark job;
+    a larger one runs as one Spark job over the colocation units.
+    `search_batch` answers a whole query set in ONE Spark job — the
+    throughput path: posting blocks for the union of query terms are
+    read once, each term is decoded once per shard, and every query's
+    top-k is computed from the shared decoded arrays.
     """
 
-    # vocab at or below this collects to a driver dict, removing one Spark
-    # job per query; larger dictionaries stay distributed
+    # a dictionary (term_stats rows, alpha-pruned included) at or below
+    # this is read into driver dicts with pyarrow: lookups and small
+    # queries then run no Spark job; larger dictionaries stay distributed
     DRIVER_TERM_CACHE_MAX = 2_000_000
+    # a single query whose live terms' Σ df is at most this (and whose
+    # dictionary fits the budget above) is answered on the driver. The
+    # measured crossover against one executor job (50k docs, 8 units,
+    # 4 cores): the driver is faster up to ~1.8M postings (366 vs 400 ms
+    # at 64 terms) and slower from ~2.7M (644 vs 533 ms at 140 terms)
+    LOCAL_MAX_POSTINGS = 2_000_000
     # per-task top-k rows at or below this merge on the driver (one Arrow
     # transfer, scatter-gather coordinator); above it — enormous batches on
     # enormous task grids — the distributed hash-agg merge takes over
@@ -854,13 +893,18 @@ class IndexSearcher:
         # must match against every term the corpus contains — a pruned hot
         # term still counts for the reference's fuzzy semantics. The
         # pinned schema means opening runs no Spark job
+        ts_paths = committed_term_stats_paths(root, m)
         self._term_stats_all = spark.read.schema(TERM_STATS_SCHEMA).parquet(
-            *committed_term_stats_paths(root, m))
+            *ts_paths)
+        # the same files for the driver reads (warm), listed NOW like
+        # the units; their footers' row count is read at first use
+        self._term_stats_files = [
+            f for p in ts_paths for f in _list_parquet(self._fs, p)]
+        self._dictionary_rows: int | None = None
         if cache:
-            # the dictionary is consulted per query — keep it hot. The
-            # UNFILTERED rows are cached, so warm() counts (budget gate)
-            # and materializes exactly what it collects; the live view
-            # below filters the cached rows
+            # the Spark-side dictionary (over-budget lookups, dictionary
+            # scans) is consulted per call — keep it hot; the live view
+            # below filters the cached UNFILTERED rows
             self._term_stats_all = self._term_stats_all.cache()
         # alpha-cutoff terms are flagged, not deleted (kept for
         # incremental stats); queries must not see them
@@ -919,48 +963,81 @@ class IndexSearcher:
         # instead of re-scoring the match set); cleared on refresh()
         self._page_cache: dict[tuple, DataFrame] = {}
 
+    def _dictionary_fits(self) -> bool:
+        """Whether the whole dictionary (alpha-pruned rows included) fits
+        DRIVER_TERM_CACHE_MAX, counted from the term_stats files' footers
+        (read once, no Spark job)."""
+        if self._dictionary_rows is None:
+            import pyarrow.parquet as pq
+            n = 0
+            for path in self._term_stats_files:
+                try:
+                    with self._fs.open_input_file(path) as f:
+                        n += pq.read_metadata(f).num_rows
+                except FileNotFoundError as e:
+                    raise _unit_vanished(path) from e
+            self._dictionary_rows = n
+        return self._dictionary_rows <= self.DRIVER_TERM_CACHE_MAX
+
     def warm(self) -> None:
-        """Materialize caches (bench calls this before timing). The
-        driver dictionaries are built only when the collected (unfiltered)
-        dictionary fits DRIVER_TERM_CACHE_MAX — the budget term_meta()
-        applies to the same rows."""
-        n = self._term_stats_all.count()
-        if n <= self.DRIVER_TERM_CACHE_MAX and self._term_map is None:
-            # ONE collect over the unfiltered dictionary feeds BOTH maps:
-            # the live query dictionary (_term_map — membership means the
-            # term scores) and the pruned-INCLUDED federation/clause
-            # dictionary (_meta_map), so boolean/msm/query_string clause
-            # gating and per-member term_meta stop paying a filtered
-            # collect per call (alpha-pruned rows are a tiny tail, so the
-            # widened collect costs what the old live-only one did)
-            rows = self._term_stats_all.select(
-                "term", "idf", "df", "cf", "pruned").collect()
-            self._term_map = {r["term"]: (r["idf"], r["df"], int(r["cf"]))
-                              for r in rows if not r["pruned"]}
-            if self._meta_map is None:
-                self._meta_map = {
-                    r["term"]: (int(r["df"]), float(r["idf"]),
-                                bool(r["pruned"]))
-                    for r in rows}
+        """Build the driver dictionaries when the whole dictionary fits
+        DRIVER_TERM_CACHE_MAX (the budget term_meta() applies too): one
+        pyarrow read of the term_stats files listed at open, on the
+        driver with no Spark job. A no-op once built or over budget."""
+        if self._term_map is not None or not self._dictionary_fits():
+            return
+        import pyarrow.parquet as pq
+        cols = ["term", "idf", "df", "cf", "pruned"]
+        rows = []
+        for path in self._term_stats_files:
+            try:
+                with self._fs.open_input_file(path) as f:
+                    tbl = pq.ParquetFile(f).read(columns=cols,
+                                                 use_threads=False)
+            except FileNotFoundError as e:
+                raise _unit_vanished(path) from e
+            rows += zip(*(tbl[c].to_pylist() for c in cols))
+        # ONE read of the unfiltered dictionary feeds BOTH maps: the live
+        # query dictionary (_term_map — membership means the term scores)
+        # and the pruned-INCLUDED federation/clause dictionary
+        # (_meta_map), so boolean/msm/query_string clause gating and
+        # per-member term_meta stop paying a filtered collect per call
+        self._term_map = {t: (idf, df, int(cf))
+                          for t, idf, df, cf, pruned in rows if not pruned}
+        self._meta_map = {t: (int(df), float(idf), bool(pruned))
+                          for t, idf, df, cf, pruned in rows}
+
+    def _driver_answers(self, qcounts,
+                        max_postings: "int | None" = None) -> bool:
+        """THE interactive gate, shared by search() (through _topn_rows),
+        search_local and explain(): a single-query top-n runs on the
+        driver with no Spark job when the dictionary fits
+        DRIVER_TERM_CACHE_MAX (footer count) AND the live query terms'
+        Σ df is at most LOCAL_MAX_POSTINGS (search_local may pass its
+        own `max_postings`). Warms the dictionary when it fits."""
+        if not self._dictionary_fits():
+            return False
+        self.warm()
+        total = sum(self._term_map[t][1] for t in qcounts
+                    if t in self._term_map)
+        return total <= (self.LOCAL_MAX_POSTINGS if max_postings is None
+                         else max_postings)
 
     def term_meta(self, terms) -> dict[str, tuple[int, float, bool]]:
         """(df, local idf, pruned) for the given terms present in this
         index's dictionary INCLUDING alpha-pruned entries (their true df
         still counts toward federated global df) — the per-member
-        statistics operators/federation.py combines. Served from a lazily
-        collected driver map when the vocabulary fits (same budget as
-        warm()), else one vocabulary-directed filtered collect."""
-        ts = self._term_stats_all.select("term", "df", "idf", "pruned")
+        statistics operators/federation.py combines. Served from the
+        driver map (warm(), built lazily here) when the dictionary fits,
+        else one vocabulary-directed filtered collect."""
         if self._meta_map is None:
-            if ts.count() <= self.DRIVER_TERM_CACHE_MAX:
-                self._meta_map = {
-                    r["term"]: (int(r["df"]), float(r["idf"]),
-                                bool(r["pruned"])) for r in ts.collect()}
-            else:
+            self.warm()
+            if self._meta_map is None:
                 self._meta_map = False  # too large: stay distributed
         if self._meta_map:
             return {t: self._meta_map[t] for t in terms
                     if t in self._meta_map}
+        ts = self._term_stats_all.select("term", "df", "idf", "pruned")
         rows = ts.filter(F.col("term").isin(list(terms))).collect()
         return {r["term"]: (int(r["df"]), float(r["idf"]), bool(r["pruned"]))
                 for r in rows}
@@ -1022,8 +1099,7 @@ class IndexSearcher:
             old_bc.unpersist()
 
     def _colocated_run(self, terms: list[str], kernel,
-                       columns: list[str], schema: str,
-                       tasks_per_core: int = 1) -> DataFrame:
+                       columns: list[str], schema: str) -> DataFrame:
         """Shuffle-free kernel stage: one task per group of
         whole colocation units; each task reads ITS OWN units' posting
         files directly (pyarrow dataset: term-IN row-group statistics
@@ -1036,19 +1112,17 @@ class IndexSearcher:
         single-threaded per task (the task grid already saturates the
         cores; per-task thread pools would oversubscribe 32x).
 
-        `tasks_per_core`: 1 (one wave). Python task launch costs ~20 ms
+        Tasks: one wave (_n_tasks). Python task launch costs ~20 ms
         of non-parallelizing protocol overhead per task (measured: a
         noop mapInPandas job is 0.21 s at 1 task, 0.96 s at 32), and for
         search_batch the per-TASK output is ~queries x k rows whatever
         the task holds — so extra waves multiply both the fixed bill and
         the merge input. Doc-hash sharding keeps units balanced (max/
         mean recorded in the build manifest), which is what wave
-        averaging would otherwise buy; raise it on clusters with genuine
-        straggler variance."""
+        averaging would otherwise buy."""
         spark = self.spark
         fs, units = self._fs, list(self._unit_files.items())
-        T = max(min(len(units),
-                    tasks_per_core * spark.sparkContext.defaultParallelism), 1)
+        T = self._n_tasks()
         tset = sorted(terms)
 
         def run(batches):
@@ -1449,7 +1523,14 @@ class IndexSearcher:
     FILTER_BROADCAST_MAX = 10_000_000
 
     def search(self, query: str, n: int = 10, keep=None) -> DataFrame:
-        """BM25 top-n. `keep` (optional) = filtered search: a DataFrame
+        """BM25 top-n. A query within the `_driver_answers` gate (the
+        dictionary fits the driver and the query terms' Σ df is at most
+        LOCAL_MAX_POSTINGS) is answered on the driver with no Spark job
+        and returned as a pandas-built frame, whose collect() runs none
+        either; a larger one runs one Spark job over the colocation
+        units. Rows are bit-identical either way (pytest-pinned).
+
+        `keep` (optional) = filtered search: a DataFrame
         whose first column is a doc_id, or an iterable of ints — only
         those docs may appear in results, under FILTER-CONTEXT semantics
         (Lucene/Elasticsearch filters: corpus statistics and surviving
@@ -1465,11 +1546,11 @@ class IndexSearcher:
         """search() over an explicit (term -> count) multiset — the
         whole execution path behind search, also driven directly by
         search_expanded with synthesized counts."""
+        self.warm()   # a dictionary that fits is read once, with no job
         qcounts, qidf = self._terms_from_counts(counts)
         spark = self.spark
-        empty = RESULT_SCHEMA + ", rank int, score_abs double"
         if not qcounts:
-            return spark.createDataFrame([], empty)
+            return _top_frame(spark)
         allow = None
         if keep is not None:
             arr = self._resolve_keep(keep)
@@ -1477,7 +1558,7 @@ class IndexSearcher:
                 return self._search_filtered_checkpoint(qcounts, qidf, n,
                                                         keep)
             if not arr.size:
-                return spark.createDataFrame([], empty)
+                return _top_frame(spark)
             allow = (spark.sparkContext.broadcast(arr)
                      if arr.size > 1_000_000 else arr)
         kernel = _shard_topk_kernel_factory(qcounts, n, self.codec, qidf,
@@ -1486,20 +1567,56 @@ class IndexSearcher:
                                             allow=allow)
         return self._topn_job(qcounts, kernel, n)
 
+    def _n_tasks(self) -> int:
+        """Tasks of the colocated stage: whole units dealt round-robin,
+        at most one per default-parallelism slot."""
+        return max(min(len(self._units),
+                       self.spark.sparkContext.defaultParallelism), 1)
+
     def _topn_job(self, qcounts, kernel, n: int,
                   columns: list[str] = None) -> DataFrame:
-        """Shared execution tail of every single-query top-n kernel: the
-        colocated shuffle-free stage, then the size-gated driver
-        scatter-gather merge (distributed hash-agg merge above
-        DRIVER_MERGE_MAX_ROWS)."""
-        spark = self.spark
-        tasks = min(len(self._units), spark.sparkContext.defaultParallelism)
-        local = self._colocated_run(sorted(qcounts), kernel,
-                                    columns or WAND_COLS, RESULT_SCHEMA)
-        if tasks * n <= self.DRIVER_MERGE_MAX_ROWS:
-            out = _merge_topn_driver(local.toPandas(), n)
-            return spark.createDataFrame(
-                out, schema=RESULT_SCHEMA + ", rank int, score_abs double")
+        """Shared execution tail of every single-query top-n kernel
+        (search, search_expanded, search_synonyms, search_similarity),
+        as a Spark frame: _topn_rows, built from pandas unless the
+        distributed merge answered."""
+        top = self._topn_rows(qcounts, kernel, n, columns)
+        return (top if isinstance(top, DataFrame)
+                else _top_frame(self.spark, top))
+
+    def _topn_rows(self, qcounts, kernel, n: int,
+                   columns: list[str] = None) -> "pd.DataFrame | DataFrame":
+        """The top-n rows of `kernel` over the query terms' posting
+        blocks, pandas out (federation members call this directly).
+        Within the `_driver_answers` gate the blocks are read on the
+        driver (_read_terms_local on every call, so a unit that vanished
+        since open raises "call refresh()") and the kernel runs once per
+        task's units, exactly as the executor stage deals them, so the
+        rows are bit-identical to the executor's (a kernel's summation
+        order follows its input's block maxima). Above the gate: the
+        colocated shuffle-free stage (one Spark job), then the
+        size-gated driver scatter-gather merge — or, above
+        DRIVER_MERGE_MAX_ROWS, the distributed hash-agg merge, returned
+        as a Spark frame."""
+        columns = columns or WAND_COLS
+        T = self._n_tasks()
+        if self._driver_answers(qcounts):
+            footers = self._driver_footers()
+            task = {u: i % T for i, u in enumerate(self._unit_files)}
+            parts = []
+            for t in range(T):
+                blocks = _read_terms_local(
+                    [f for f in footers if task[f[1]] == t],
+                    sorted(qcounts), columns)
+                out = kernel(blocks) if len(blocks) else blocks
+                if len(out):
+                    parts.append(out)
+            return _merge_topn_driver(
+                pd.concat(parts, ignore_index=True) if parts else _no_hits(),
+                n)
+        local = self._colocated_run(sorted(qcounts), kernel, columns,
+                                    RESULT_SCHEMA)
+        if T * n <= self.DRIVER_MERGE_MAX_ROWS:
+            return _merge_topn_driver(local.toPandas(), n)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             local.orderBy(F.desc("score"), F.asc("doc_id")).limit(n)
@@ -1629,10 +1746,10 @@ class IndexSearcher:
         if model not in self.SIMILARITIES:
             raise ValueError(f"unknown similarity {model!r}; "
                              f"one of {self.SIMILARITIES}")
+        self.warm()
         qcounts, _ = self._query_terms(query)
-        empty = RESULT_SCHEMA + ", rank int, score_abs double"
         if not qcounts:
-            return self.spark.createDataFrame([], empty)
+            return _top_frame(self.spark)
         if model == "tfidf":
             dfm = self._query_term_df(qcounts)
             npl1 = float(self.n_docs) + 1.0
@@ -1656,7 +1773,7 @@ class IndexSearcher:
             pr = {t: cf[t] / total for t in qcounts if cf.get(t)}
             qcounts = {t: c for t, c in qcounts.items() if t in pr}
             if not qcounts:
-                return self.spark.createDataFrame([], empty)
+                return _top_frame(self.spark)
             if model == "lmjm":
                 coef = (1.0 - lam) / lam
 
@@ -2527,9 +2644,10 @@ class IndexSearcher:
         """ES _profile analog: execute the query with per-phase wall
         timings — parse (tokenize), dictionary (term lookup), kernel job
         (the distributed stage incl. Arrow transfer of per-task tops),
-        and driver merge. Runs the scatter-gather path explicitly (the
-        same two steps `search` takes under the driver-merge gate; rows
-        are identical — pytest-pinned against search()). Phases are
+        and driver merge. Runs the executor path explicitly (the two
+        steps `search` takes above the `_driver_answers` gate, with the
+        driver merge; rows are identical — pytest-pinned against
+        search()). Phases are
         driver-observed wall times, so the kernel phase includes Spark
         scheduling — exactly the number an operator tuning a live index
         needs. Returns {"timings_ms": {...}, "rows": [...]}."""
@@ -2615,7 +2733,8 @@ class IndexSearcher:
     def explain(self, query: str, n: int = 10) -> dict:
         """Query EXPLAIN without executing: per-term dictionary stats
         (df, idf, query count) plus every execution decision search()
-        would take for this query — interactive-local eligibility,
+        would take for this query — the executor it runs on ("driver" or
+        "colocated-units", from the same `_driver_answers` gate),
         distributed executor form, task count, whether the
         scatter-gather driver merge applies, posting volume to decode,
         and active tombstone masking. Reads ONLY the term dictionary (vocab-sized);
@@ -2630,13 +2749,8 @@ class IndexSearcher:
             flags = self._pruned_flags(missing)
             pruned = sorted(t for t in missing if flags.get(t))
         total = sum(dfs.values())
-        n_terms = self.manifest.get("metrics", {}).get("n_terms")
-        local_ok = (bool(qcounts) and total <= self.LOCAL_MAX_POSTINGS
-                    and (self._term_map is not None
-                         or n_terms is None
-                         or n_terms <= self.DRIVER_TERM_CACHE_MAX))
-        tasks = min(len(self._units),
-                    self.spark.sparkContext.defaultParallelism)
+        on_driver = self._driver_answers(qcounts)
+        tasks = self._n_tasks()
         return {
             "query": query,
             "terms": [{"term": t, "qcount": int(c), "df": dfs[t],
@@ -2649,7 +2763,9 @@ class IndexSearcher:
             "tombstones_masked": (int(self._tombstones.size)
                                   if self._tombstones is not None else 0),
             "plan": {
-                "interactive_local_eligible": local_ok,
+                "interactive_local_eligible": bool(qcounts) and on_driver,
+                # the path search() takes for this query
+                "executor": "driver" if on_driver else "colocated-units",
                 "distributed_executor": "colocated-units",
                 "tasks": int(tasks),
                 "term_buckets": int(self.manifest["term_buckets"]),
@@ -3241,39 +3357,36 @@ class IndexSearcher:
             self.spark, df.join(cand, id_col, "left_semi"), query,
             text_col=text_col, id_col=id_col)
 
-    # interactive fast path: posting volume gate + driver term-block LRU
-    LOCAL_MAX_POSTINGS = 5_000_000
+    # search_local's driver term-block LRU budget
     LOCAL_CACHE_MAX_POSTINGS = 50_000_000  # ~500 MB of decoded-ready blocks
 
     def search_local(self, query: str, n: int = 10,
-                     max_postings: int = LOCAL_MAX_POSTINGS) -> pd.DataFrame:
+                     max_postings: "int | None" = None) -> pd.DataFrame:
         """Interactive single-query fast path — pandas DataFrame out.
 
-        The distributed `search` pays a full Spark job (~0.5-1 s of
-        scheduling) even when the query's pruned posting lists are a few
-        MB; the reference's in-process dict answers in milliseconds. This
-        path closes that gap for interactive use: the SAME exact kernel
-        runs on the driver over the query terms' blocks, which are kept
-        in a term-level LRU. A term missing from the LRU is fetched on
-        the driver too, with no Spark job: a pyarrow columnar read of the
-        colocation units' files (WAND_COLS only, row groups pruned by
-        their term min/max statistics; the unit footers are read once,
-        at the first miss). A unit file listed at open but gone now (a
-        merge replaced the index) raises the vanished error: call
-        refresh().
-        Size-gated by Σ df of the query terms (postings that would not
-        comfortably fit a driver): above the gate, or when the term
-        dictionary is too large to warm driver-side, it transparently
-        falls back to the distributed executor. Results are identical to
-        `search` (the kernel is posting-set-agnostic; tested)."""
+        The same driver-side answer as `search`, plus a term-level LRU of
+        the query terms' blocks: a repeated term is not read again, and
+        the kernel runs once over all units' blocks. A term missing from
+        the LRU is fetched on the driver with no Spark job: a pyarrow
+        columnar read of the colocation units' files (WAND_COLS only,
+        row groups pruned by their term min/max statistics; the unit
+        footers are read once, at the first miss). A unit file listed at
+        open but gone now (a merge replaced the index) raises the
+        vanished error: call refresh().
+        Gated by the same `_driver_answers` check as `search`, with
+        `max_postings` (default LOCAL_MAX_POSTINGS) as its Σ df bound:
+        above it, or when the term dictionary is too large to warm
+        driver-side, it returns `search(...).toPandas()`. Results equal
+        `search`'s (the kernel is posting-set-agnostic; tested; with
+        three or more terms a score may differ in the last bit, since
+        one kernel run sums a doc's terms in the order of the global
+        block maxima)."""
         cols = ["doc_id", "score", "rank", "score_abs"]
-        if self._term_map is None:
-            self.warm()
+        self.warm()
         qcounts, qidf = self._query_terms(query)
         if not qcounts:
             return pd.DataFrame(columns=cols)
-        if (self._term_map is None
-                or sum(self._term_map[t][1] for t in qcounts) > max_postings):
+        if not self._driver_answers(qcounts, max_postings):
             return self.search(query, n).toPandas()
         missing = sorted(t for t in qcounts if t not in self._local_blocks)
         if missing:

@@ -39,12 +39,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_text_search_spark.config import BM25Config
-from data_text_search_spark.operators.federation import (
-    OUT_SCHEMA,
-    FederatedSearcher,
-)
+from data_text_search_spark.operators.federation import FederatedSearcher
 from data_text_search_spark.operators.index_build import build_index
-from data_text_search_spark.operators.index_query import IndexSearcher
+from data_text_search_spark.operators.index_query import (
+    IndexSearcher,
+    _top_frame,
+)
 from data_text_search_spark.sources import fsio
 
 ROUTING_MANIFEST = "routing.json"
@@ -179,7 +179,7 @@ class RoutedSearcher:
         contribute nothing; all-unknown returns the typed empty."""
         roots = self._roots_for(routing)
         if roots is not None and not roots:
-            return self.spark.createDataFrame([], OUT_SCHEMA)
+            return _top_frame(self.spark)
         return self.fed.search(query, n, members=roots)
 
     def search_batch(self, queries: list[str], n: int = 10,

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_text_search_spark.config import BM25Config, IndexPaths
@@ -241,19 +241,22 @@ def delete_documents(spark: SparkSession, root: str, doc_ids,
         ids = spark.createDataFrame([(int(i),) for i in doc_ids],
                                     "doc_id long")
     ids = ids.dropDuplicates(["doc_id"])
-    existing = spark.read.parquet(
-        *committed_doc_stats_paths(root, manifest)).select("doc_id")
+    # pinned schemas: neither read runs a schema-inference job
+    existing = spark.read.schema("doc_id long").parquet(
+        *committed_doc_stats_paths(root, manifest))
     live = ids.join(existing, "doc_id", "left_semi")
     tpaths = committed_tombstone_paths(root, manifest)
     if tpaths:
-        live = live.join(
-            spark.read.parquet(*tpaths).select("doc_id"),
-            "doc_id", "left_anti")
+        live = live.join(spark.read.schema("doc_id long").parquet(*tpaths),
+                         "doc_id", "left_anti")
     del_id = manifest.get("next_del_id", 0)
     out = paths.tombstones_del(del_id)
-    (live.repartition(1).sortWithinPartitions("doc_id")
+    # the written row count rides the write itself (no read-back job)
+    written = Observation()
+    (live.observe(written, F.count(F.lit(1)).alias("n"))
+     .repartition(1).sortWithinPartitions("doc_id")
      .write.mode("overwrite").parquet(out))
-    n_del = spark.read.parquet(out).count()  # metadata-only count
+    n_del = int(written.get["n"])
     if n_del == 0:
         from data_text_search_spark.sources import fsio
         fsio.delete(out)

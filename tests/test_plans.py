@@ -127,7 +127,9 @@ def test_batch_query_plan_is_shuffle_free_until_topk_merge(
 
 def test_driver_and_distributed_merge_agree(spark, corpus, tmp_path_factory):
     """The driver scatter-gather merge and the distributed hash-agg merge
-    must produce identical rows (same kernels, same tie-breaks)."""
+    must produce identical rows (same kernels, same tie-breaks). The
+    single query is forced onto the executors (LOCAL_MAX_POSTINGS = 0),
+    which the distributed merge runs after."""
     from data_text_search_spark.operators.index_build import build_index
     from data_text_search_spark.operators.index_query import IndexSearcher
     root = str(tmp_path_factory.mktemp("planidx4") / "idx")
@@ -140,9 +142,11 @@ def test_driver_and_distributed_merge_agree(spark, corpus, tmp_path_factory):
     IndexSearcher.DRIVER_MERGE_MAX_ROWS = 0
     try:
         dist_b = sorted(tuple(r) for r in s.search_batch(queries, 5).collect())
+        s.LOCAL_MAX_POSTINGS = 0
         dist_s = [tuple(r) for r in s.search(queries[1], 5).collect()]
     finally:
         IndexSearcher.DRIVER_MERGE_MAX_ROWS = old
+        s.__dict__.pop("LOCAL_MAX_POSTINGS", None)
     assert drv_b == dist_b
     assert drv_s == dist_s
 
