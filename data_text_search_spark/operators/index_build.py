@@ -41,26 +41,27 @@ bm25_functions.py:203-210):
   carries a branch for an older layout.
 
 - **Resumable build.** The expensive upstream (tokenize → per-doc
-  (term, tf) pairs) is checkpointed once to `tokenized/`; posting
-  encoding then
-  runs in `groups` independent jobs (group = shard % G), each writing
-  its own directory and updating the JSON manifest afterwards. A killed
-  build resumes by skipping stages/groups marked done — mirroring (and
-  hardening) the reference's "skip work if artifact exists" shortcuts
-  (bm25_functions.py:315-319,350-352).
+  (term, tf) pairs) is checkpointed once to `tokenized/`; one job then
+  encodes every group (group = shard % G) not yet done and writes each
+  to its own `group=g/` directory (dynamic partition overwrite, so done
+  groups' files are untouched), and one manifest write marks them done
+  together. A killed build resumes by skipping stages/groups marked
+  done — mirroring (and hardening) the reference's "skip work if
+  artifact exists" shortcuts (bm25_functions.py:315-319,350-352).
 
 Shuffle profile: one wide shuffle for the (term,doc) tf aggregate
 (map-side partial combine first), one shuffle for the term_stats join
 (AQE skew-split; term_stats broadcasts when small), one uniform
-repartition by doc-shard for encoding. Nothing keys a shuffle by bare
-term.
+repartition by doc-shard for encoding (an explicit partition count,
+min(shards, default parallelism), so AQE cannot coalesce the encode
+into one task). Nothing keys a shuffle by bare term.
 
 Job profile: every build metric (n_docs/avgdl on the tokenize write,
 average IDF on term_stats, posting payload + per-shard balance on the
 posting write, exact distinct-id collision check on doc_stats) rides
 its write job as observe() CollectMetrics — there are NO read-back
 jobs. The critical path is exactly three actions (tokenize →
-term_stats → postings per group); the doc_stats write runs concurrently
+term_stats → postings of all groups); the doc_stats write runs concurrently
 with term_stats+postings on a second action thread, so its job costs ~no
 wall time. Every extra action pays a core-count-independent scheduling
 floor (~0.2-0.3 s measured), which is pure Amdahl serial fraction in
@@ -94,6 +95,12 @@ POSTINGS_SCHEMA = (
 # opening term_stats never runs a schema-inference job
 TERM_STATS_SCHEMA = ("term string, df long, cf long, idf double, "
                      "pruned boolean, term_bucket int")
+# a tokenized checkpoint (base `tokenized/` and every segment's): the
+# build, merge_tier and merge_segments read it with this schema, so no
+# read of it runs a schema-inference job
+TOKENIZED_SCHEMA = ("doc_id long, shard int, "
+                    "pairs array<struct<term:string,tf:int>>, "
+                    "doc_len int, n_chars long")
 # the layout every build writes: v2 colocation units, doc_stats as its
 # own stage, `cf` + `pruned` in term_stats, a non-null n_chars
 FORMAT_VERSION = 3
@@ -344,6 +351,123 @@ def _encode_shard_factory(block_size: int, impact_codec: str = "f64"):
     return encode_shard
 
 
+def write_postings(td: DataFrame, live_stats: DataFrame, manifest: dict,
+                   out: str, groups: list[int] | None = None
+                   ) -> dict[int, dict]:
+    """THE posting write, shared by the base build and every segment
+    writer: impacts of the (doc_id, doc_len, shard, term, tf) rows in
+    `td` against the live (unpruned) terms of `live_stats`, under the
+    manifest's config, avgdl and layout; per-shard block encoding; one
+    term-sorted parquet file per colocation unit (spart = shard %
+    subshards; bounded 16 MB row groups, so a query task prunes to its
+    terms' row groups via parquet min/max stats).
+
+    `groups=None` (a segment) writes `out/spart=s/`. Otherwise (the base
+    build) it writes the rows of exactly those groups (group = shard % G)
+    to `out/group=g/spart=s/` in ONE job and returns each group's stats.
+    The write overwrites partitions dynamically, so the files of groups
+    not listed (done before a resume) are left as they are."""
+    cfg = manifest["config"]
+    k1, b, avgdl = cfg["k1"], cfg["b"], manifest["avgdl"]
+    shards, subshards = manifest["shards"], manifest["subshards"]
+    enc = (td.join(live_stats.select("term", "idf"), "term")
+           .withColumn(
+               "impact",
+               F.col("idf") * F.col("tf") * F.lit(k1 + 1)
+               / (F.col("tf") + F.lit(k1)
+                  * (1 - b + b * F.col("doc_len") / F.lit(avgdl))))
+           .select("term", "doc_id", "tf", "impact", "shard",
+                   *(["doc_len"] if cfg["impact_codec"] == "compact"
+                     else [])))
+    unit = ["spart"]
+    if groups is not None:
+        n_groups = manifest["groups"]
+        enc = enc.filter(F.pmod(F.col("shard"), F.lit(n_groups))
+                         .isin(groups))
+        # an explicit partition count: AQE coalesces the small groupBy
+        # shuffle into ONE encode task otherwise, but never merges a
+        # repartition by number. Each shard still lands whole in one
+        # task (the groupBy below reuses this hash partitioning)
+        enc = enc.repartition(
+            min(shards, td.sparkSession.sparkContext.defaultParallelism),
+            "shard")
+        unit = ["group", "spart"]
+    blocks = (enc.groupBy("shard")
+              .applyInPandas(_encode_shard_factory(cfg["block_size"],
+                                                   cfg["impact_codec"]),
+                             schema=POSTINGS_SCHEMA)
+              .withColumn("term_bucket",
+                          F.pmod(F.xxhash64("term"),
+                                 F.lit(manifest["term_buckets"])).cast("int"))
+              .withColumn("spart",
+                          F.pmod(F.col("shard"), F.lit(subshards)).cast("int")))
+    if groups is not None:
+        blocks = blocks.withColumn(
+            "group", F.pmod(F.col("shard"), F.lit(n_groups)).cast("int"))
+    # ONE file per colocation unit. When shards == subshards the encode
+    # task that owns a shard owns its whole unit, so the partitioned
+    # write emits one file per unit with no extra shuffle. When shards >
+    # subshards, shards of one unit land in different encode tasks
+    # (up to shards/subshards files per unit — a small-files blowup at
+    # the 10^5-shard scale this layout targets), so ONE repartition of
+    # the already-encoded blocks (the cheapest payload in the build,
+    # ~3-10 B/posting) restores the invariant. File count per group =
+    # subshards, independent of the term-dictionary size.
+    if shards > subshards:
+        blocks = blocks.repartition(subshards, *unit)
+    blocks = blocks.sortWithinPartitions(*unit, "term", "shard", "block_id")
+    obs = None
+    if groups is not None:
+        # per-group payload stats ride the write job as conditional
+        # observe() aggregates — no read-back pass over the payload.
+        # shard_n_docs is set on exactly one row per shard, so max/avg
+        # over non-nulls are the per-shard posting-count extremes (the
+        # doc-hash salting claim). Observed in the write's own stage:
+        # AQE replaces an empty shuffle stage whole, metrics included
+        aggs = []
+        for g in groups:
+            def in_g(c, g=g):
+                return F.when(F.col("group") == g, c)
+            aggs += [
+                F.count(in_g(F.lit(1))).alias(f"n_blocks_{g}"),
+                F.sum(in_g(F.col("n_docs"))).alias(f"n_postings_{g}"),
+                (F.sum(in_g(F.length("doc_deltas")))
+                 + F.sum(in_g(F.length("tfs")))
+                 + F.sum(in_g(F.length("impacts")))).alias(f"payload_{g}"),
+                F.max(in_g(F.col("shard_n_docs"))).alias(f"shard_max_{g}"),
+                F.avg(in_g(F.col("shard_n_docs"))).alias(f"shard_mean_{g}")]
+        obs = Observation()
+        blocks = blocks.observe(obs, *aggs)
+    writer = (blocks.write.mode("overwrite")
+              .option("parquet.block.size", str(16 << 20)))
+    if groups is not None:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy(*unit).parquet(out)
+    if obs is None:
+        return {}
+    from data_text_search_spark.sources import fsio
+    row = obs.get
+    stats = {}
+    for g in groups:
+        n_post = int(row[f"n_postings_{g}"] or 0)
+        payload = int(row[f"payload_{g}"] or 0)
+        mean = row[f"shard_mean_{g}"]
+        stats[g] = {
+            "n_blocks": int(row[f"n_blocks_{g}"] or 0),
+            "n_postings": n_post,
+            "payload_bytes": payload,
+            "bytes_per_posting": round(payload / max(n_post, 1), 3),
+            "shard_balance_max_over_mean": round(
+                float(row[f"shard_max_{g}"]) / float(mean), 3)
+            if mean else None,
+        }
+        if not stats[g]["n_blocks"]:
+            # a group with no shard (groups > shards) writes no partition;
+            # keep its committed dir present, as every group's is
+            fsio.mkdirs(f"{out}/group={g}")
+    return stats
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame | None,
@@ -393,7 +517,6 @@ def build_index(
     }
     # layout params are pinned by the first run of a build
     shards, groups = manifest["shards"], manifest["groups"]
-    subshards = manifest["subshards"]
     if manifest.get("tokenizer") != TOKEN_PATTERN:
         # a resumed (or reopened) index persisted under a different token
         # spec would silently mix incompatible postings with new ones
@@ -469,7 +592,7 @@ def build_index(
             n_docs / max(time.perf_counter() - t0, 1e-9), 1)
         _write_manifest_atomic(paths.manifest, manifest)
 
-    n_docs, avgdl = manifest["n_docs"], manifest["avgdl"]
+    n_docs = manifest["n_docs"]
 
     # ---- stage: doc_stats (runs CONCURRENTLY with term_stats+postings) ---
     # doc_stats is a derivation of the checkpoint that nothing downstream
@@ -483,7 +606,7 @@ def build_index(
     ds_state: dict = {}
     ds_thread = None
     if not stage_done("doc_stats"):
-        pairs_for_ds = spark.read.parquet(td_path)
+        pairs_for_ds = spark.read.schema(TOKENIZED_SCHEMA).parquet(td_path)
 
         def _doc_stats_job() -> None:
             try:
@@ -526,7 +649,7 @@ def build_index(
                 f"unique id column or widen the key (then rebuild with "
                 f"resume=False)")
         mark_stage("doc_stats", seconds=ds_state["seconds"])
-    td = (spark.read.parquet(td_path)
+    td = (spark.read.schema(TOKENIZED_SCHEMA).parquet(td_path)
           .select("doc_id", "doc_len", "shard", F.explode("pairs").alias("p"))
           .select("doc_id", "doc_len", "shard",
                   F.col("p.term").alias("term"), F.col("p.tf").alias("tf")))
@@ -577,85 +700,29 @@ def build_index(
                   "BM25 may produce unintuitive results.")
         mark_stage("term_stats", seconds=round(time.perf_counter() - t0, 3))
 
-    # ---- stage: postings, one job per group (resumable) ------------------
-    k1, b = config.k1, config.b
-    term_stats = (spark.read.schema(TERM_STATS_SCHEMA)
-                  .parquet(paths.term_stats).filter(~F.col("pruned")))
-    enc_df = (
-        td.join(term_stats.select("term", "idf"), "term")
-        .withColumn(
-            "impact",
-            F.col("idf") * F.col("tf") * F.lit(k1 + 1)
-            / (F.col("tf") + F.lit(k1) * (1 - b + b * F.col("doc_len") / F.lit(avgdl))))
-        .select("term", "doc_id", "tf", "impact", "shard",
-                *(["doc_len"] if config.impact_codec == "compact" else []))
-    )
-    kernel = _encode_shard_factory(config.block_size, config.impact_codec)
-    for g in range(groups):
-        gkey = str(g)
-        if manifest["groups_state"].get(gkey, {}).get("status") == "done":
-            continue
+    # ---- stage: postings, every pending group in ONE job (resumable) ----
+    pending = [g for g in range(groups)
+               if manifest["groups_state"].get(str(g), {}).get("status")
+               != "done"]
+    if pending:
         t0 = time.perf_counter()
-        part = enc_df.filter(F.pmod(F.col("shard"), F.lit(groups)) == g)
-        # global payload stats ride the write job as observe() metrics —
-        # re-scanning the written payload for them cost a full extra pass
-        # over every posting byte plus a second job floor per group
-        g_obs = Observation()
-        blocks = (
-            part.groupBy("shard")
-            .applyInPandas(kernel, schema=POSTINGS_SCHEMA)
-            .withColumn("term_bucket",
-                        F.pmod(F.xxhash64("term"), F.lit(tp)).cast("int"))
-            .observe(g_obs,
-                     F.count(F.lit(1)).alias("n_blocks"),
-                     F.sum("n_docs").alias("n_postings"),
-                     (F.sum(F.length("doc_deltas")) + F.sum(F.length("tfs"))
-                      + F.sum(F.length("impacts"))).alias("payload_bytes"),
-                     # shard balance (doc-hash salting claim): shard_n_docs
-                     # is set on exactly one row per shard, so max/avg over
-                     # non-nulls are the per-shard posting-count extremes —
-                     # no post-write read-back job
-                     F.max("shard_n_docs").alias("shard_max"),
-                     F.avg("shard_n_docs").alias("shard_mean"))
-        )
-        # ONE file per colocation unit (spart = shard % subshards). When
-        # shards == subshards the encode stage's groupBy("shard") already
-        # puts each spart's rows in exactly one task, so the partitionBy
-        # write emits one file per unit with no extra shuffle. When
-        # shards > subshards, shards mapping to the same spart land in
-        # different encode tasks and partitionBy would emit up to
-        # shards/subshards files per unit (shards total per group — a
-        # small-files blowup at the 10^5-shard scale this layout
-        # targets), so ONE repartition of the already-encoded blocks (the
-        # cheapest payload in the build, ~3-10 B/posting) restores the
-        # one-file-per-unit invariant. Rows are term-sorted with bounded
-        # row groups, so a query task opens its own unit's file and
-        # prunes to its terms' row groups via parquet min/max stats. File
-        # count per group = subshards, independent of the term-dictionary
-        # size.
-        sparted = blocks.withColumn(
-            "spart", F.pmod(F.col("shard"), F.lit(subshards)).cast("int"))
-        if shards > subshards:
-            sparted = sparted.repartition(subshards, "spart")
-        (sparted
-         .sortWithinPartitions("spart", "term", "shard", "block_id")
-         .write.mode("overwrite")
-         .option("parquet.block.size", str(16 << 20))
-         .partitionBy("spart").parquet(f"{paths.postings}/group={g}"))
-        stats = g_obs.get
-        n_post = int(stats["n_postings"] or 0)
-        manifest["groups_state"][gkey] = {
-            "status": "done",
-            "seconds": round(time.perf_counter() - t0, 3),
-            "n_blocks": int(stats["n_blocks"] or 0),
-            "n_postings": n_post,
-            "payload_bytes": int(stats["payload_bytes"] or 0),
-            "bytes_per_posting": round(
-                (stats["payload_bytes"] or 0) / max(n_post, 1), 3),
-            "shard_balance_max_over_mean": round(
-                float(stats["shard_max"]) / float(stats["shard_mean"]), 3)
-            if stats["shard_mean"] else None,
-        }
+        live_stats = (spark.read.schema(TERM_STATS_SCHEMA)
+                      .parquet(paths.term_stats).filter(~F.col("pruned")))
+        try:
+            group_stats = write_postings(td, live_stats, manifest,
+                                         paths.postings, groups=pending)
+        except BaseException:
+            # leave no doc_stats job writing behind the raise: a retry in
+            # the same process would otherwise race it on the same dir
+            if ds_thread is not None:
+                ds_thread.join()
+            raise
+        # the groups commit together (one manifest write after the one
+        # job): a crash mid-write marks none of them done
+        seconds = round(time.perf_counter() - t0, 3)
+        for g in pending:
+            manifest["groups_state"][str(g)] = {
+                "status": "done", "seconds": seconds, **group_stats[g]}
         _write_manifest_atomic(paths.manifest, manifest)
 
     _join_doc_stats()

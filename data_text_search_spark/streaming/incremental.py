@@ -35,14 +35,14 @@ from pyspark.sql import functions as F
 from data_text_search_spark.config import BM25Config, IndexPaths
 from data_text_search_spark.operators.bm25_exhaustive import ingest
 from data_text_search_spark.operators.index_build import (
-    POSTINGS_SCHEMA,
     TERM_STATS_SCHEMA,
-    _encode_shard_factory,
+    TOKENIZED_SCHEMA,
     _write_manifest_atomic,
     committed_doc_stats_paths,
     committed_term_stats_paths,
     committed_tombstone_paths,
     load_manifest,
+    write_postings,
 )
 from data_text_search_spark.functions.text import tokenize_tf_pandas_udf
 
@@ -130,9 +130,9 @@ def add_documents(spark: SparkSession, root: str, new_corpus: DataFrame,
     # check ride the same aggregate (doc_stats ids are unique, so the
     # marker left join is row-preserving) — the round-6-start shape paid
     # two serial job floors here per append
-    existing = (spark.read.parquet(
+    existing = (spark.read.schema("doc_id long").parquet(
         *committed_doc_stats_paths(root, manifest))
-        .select("doc_id").withColumn("_ex", F.lit(1)))
+        .withColumn("_ex", F.lit(1)))
     row = (pairs_df.join(existing, "doc_id", "left")
            .agg(F.count("*").alias("n"),
                 F.countDistinct("doc_id").alias("nd"),
@@ -149,7 +149,7 @@ def add_documents(spark: SparkSession, root: str, new_corpus: DataFrame,
         n_tomb = 0
         if tpaths:
             n_tomb = pairs_df.join(
-                spark.read.parquet(*tpaths).select("doc_id"),
+                spark.read.schema("doc_id long").parquet(*tpaths),
                 "doc_id").count()
         hint = (f" ({n_tomb} of them are tombstoned — run merge_segments "
                 "to purge deletions, then re-add)" if n_tomb else
@@ -235,12 +235,18 @@ def delete_documents(spark: SparkSession, root: str, doc_ids,
     if not manifest or not manifest.get("complete"):
         raise ValueError(f"no complete index at {root}")
     if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(
+        ids = (doc_ids.select(
             F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
+            .dropDuplicates(["doc_id"]))
     else:
-        ids = spark.createDataFrame([(int(i),) for i in doc_ids],
-                                    "doc_id long")
-    ids = ids.dropDuplicates(["doc_id"])
+        # deduplicated on the driver and built from pandas: no
+        # dropDuplicates shuffle job for a handful of ids
+        import numpy as np
+        import pandas as pd
+        ids = spark.createDataFrame(
+            pd.DataFrame({"doc_id": np.unique(np.fromiter(
+                (int(i) for i in doc_ids), dtype=np.int64))}),
+            "doc_id long")
     # pinned schemas: neither read runs a schema-inference job
     existing = spark.read.schema("doc_id long").parquet(
         *committed_doc_stats_paths(root, manifest))
@@ -251,10 +257,12 @@ def delete_documents(spark: SparkSession, root: str, doc_ids,
                          "doc_id", "left_anti")
     del_id = manifest.get("next_del_id", 0)
     out = paths.tombstones_del(del_id)
-    # the written row count rides the write itself (no read-back job)
+    # the written row count rides the write itself (no read-back job),
+    # observed in the write's own stage: AQE replaces an empty shuffle
+    # stage whole, metrics included
     written = Observation()
-    (live.observe(written, F.count(F.lit(1)).alias("n"))
-     .repartition(1).sortWithinPartitions("doc_id")
+    (live.repartition(1).sortWithinPartitions("doc_id")
+     .observe(written, F.count(F.lit(1)).alias("n"))
      .write.mode("overwrite").parquet(out))
     n_del = int(written.get["n"])
     if n_del == 0:
@@ -284,7 +292,6 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
     new-term count."""
     cfg = manifest["config"]
     tp = manifest["term_buckets"]
-    avgdl = manifest["avgdl"]
     td = (pairs_df.select("doc_id", "doc_len", "shard",
                           F.explode("pairs").alias("p"))
           .select("doc_id", "doc_len", "shard",
@@ -362,35 +369,9 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
         fsio.delete(paths.term_stats_seg(seg_id))
         live_stats = full_stats.filter(~F.col("pruned"))
 
-    k1, b = cfg["k1"], cfg["b"]
-    enc = (td.join(live_stats.select("term", "idf"), "term")
-           .withColumn(
-               "impact",
-               F.col("idf") * F.col("tf") * F.lit(k1 + 1)
-               / (F.col("tf") + F.lit(k1)
-                  * (1 - b + b * F.col("doc_len") / F.lit(avgdl))))
-           .select("term", "doc_id", "tf", "impact", "shard",
-                   *(["doc_len"] if cfg["impact_codec"] == "compact"
-                     else [])))
-    kernel = _encode_shard_factory(cfg["block_size"], cfg["impact_codec"])
-    blocks = (enc.groupBy("shard").applyInPandas(kernel, schema=POSTINGS_SCHEMA)
-              .withColumn("term_bucket",
-                          F.pmod(F.xxhash64("term"), F.lit(tp)).cast("int")))
     # segments mirror the base's spart colocation dirs (one term-sorted
-    # file per unit) so the shuffle-free query path covers them too; same
-    # shards>subshards realignment as the base build (index_build.py
-    # postings stage)
-    subshards = manifest["subshards"]
-    sparted = blocks.withColumn(
-        "spart", F.pmod(F.col("shard"), F.lit(subshards)).cast("int"))
-    if manifest["shards"] > subshards:
-        sparted = sparted.repartition(subshards, "spart")
-    (sparted
-     .sortWithinPartitions("spart", "term", "shard", "block_id")
-     .write.mode("overwrite")
-     .option("parquet.block.size", str(16 << 20))
-     .partitionBy("spart")
-     .parquet(paths.postings_seg(seg_id)))
+    # file per unit), so the shuffle-free query path covers them too
+    write_postings(td, live_stats, manifest, paths.postings_seg(seg_id))
     # doc_stats and the per-segment tokenized checkpoint (merges re-score
     # from it without re-tokenizing) were written by the side threads above
     for t in side_threads:
@@ -441,7 +422,7 @@ def merge_tier(spark: SparkSession, root: str) -> dict:
     _write_manifest_atomic(paths.manifest, manifest)
 
     t0 = time.perf_counter()
-    pairs_df = spark.read.parquet(
+    pairs_df = spark.read.schema(TOKENIZED_SCHEMA).parquet(
         *[paths.tokenized_seg(s["segment"]) for s in old_segments])
     # new-term stats anti-join against the BASE dictionary only: the old
     # segments' term_stats are being replaced by the merged segment's
@@ -518,7 +499,8 @@ def merge_segments(spark: SparkSession, root: str) -> dict:
                      term_partitions=manifest["term_buckets"],
                      impact_codec=c["impact_codec"],
                      stopwords=tuple(c["stopwords"]))
-    pairs = spark.read.parquet(*committed_tokenized_paths(root, manifest))
+    pairs = spark.read.schema(TOKENIZED_SCHEMA).parquet(
+        *committed_tokenized_paths(root, manifest))
     tpaths = committed_tombstone_paths(root, manifest)
     if tpaths:
         # PURGE tombstones: deleted docs are dropped from the re-scored
@@ -526,7 +508,7 @@ def merge_segments(spark: SparkSession, root: str) -> dict:
         # over the surviving documents (refreshed N/avgdl/idf include
         # the deletions); the rebuilt manifest starts with no tombstones
         pairs = pairs.join(
-            spark.read.parquet(*tpaths).select("doc_id"),
+            spark.read.schema("doc_id long").parquet(*tpaths),
             "doc_id", "left_anti")
     tmp = f"{root}.merge"
     fsio.delete(tmp, spark)
@@ -646,10 +628,10 @@ def reindex_delta(spark: SparkSession, root: str, snapshot: DataFrame,
     # to_add leg's full-row scan is the only other snapshot read)
     snap_ids = (snap.select("doc_id").dropDuplicates(["doc_id"])
                 .persist())
-    indexed = spark.read.parquet(
-        *committed_doc_stats_paths(root, manifest)).select("doc_id")
+    indexed = spark.read.schema("doc_id long").parquet(
+        *committed_doc_stats_paths(root, manifest))
     tpaths = committed_tombstone_paths(root, manifest)
-    tomb = (spark.read.parquet(*tpaths).select("doc_id")
+    tomb = (spark.read.schema("doc_id long").parquet(*tpaths)
             if tpaths else None)
     live = indexed if tomb is None else indexed.join(
         tomb, "doc_id", "left_anti")
