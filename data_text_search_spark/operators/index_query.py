@@ -61,6 +61,7 @@ import bisect
 import math
 import os
 import re
+import weakref
 from collections import Counter
 
 import numpy as np
@@ -71,12 +72,12 @@ from pyspark.sql import functions as F
 from data_text_search_spark.config import IndexPaths
 from data_text_search_spark.functions.text import tokenize_py
 from data_text_search_spark.operators.index_build import (
-    TERM_STATS_SCHEMA,
     committed_doc_stats_paths,
     committed_postings_dirs,
     committed_term_stats_paths,
     load_manifest,
 )
+from data_text_search_spark.operators.term_dictionary import TermDictionary
 
 RESULT_SCHEMA = "doc_id long, score double"
 # a single query's top-n rows, whichever path answered it
@@ -838,6 +839,7 @@ def _sim_topk_kernel_factory(qcounts: dict[str, int], k: int, impact_fn,
 class IndexSearcher:
     """Loads a persisted index and answers BM25 top-k queries.
 
+    Term lookups go through one TermDictionary (term_dictionary.py).
     `search` is the single-query path (block-max pruned). A small query
     (the `_driver_answers` gate) runs on the driver with no Spark job;
     a larger one runs as one Spark job over the colocation units.
@@ -848,8 +850,9 @@ class IndexSearcher:
     """
 
     # a dictionary (term_stats rows, alpha-pruned included) at or below
-    # this is read into driver dicts with pyarrow: lookups and small
-    # queries then run no Spark job; larger dictionaries stay distributed
+    # this is read into the TermDictionary's driver map with pyarrow:
+    # lookups and small queries then run no Spark job; larger
+    # dictionaries stay distributed
     DRIVER_TERM_CACHE_MAX = 2_000_000
     # a single query whose live terms' Σ df is at most this (and whose
     # dictionary fits the budget above) is answered on the driver. The
@@ -889,26 +892,13 @@ class IndexSearcher:
         self._fs = _arrow_fs(root)[0]
         self._unit_files = _list_units(committed_postings_dirs(root, m))
         self._units = list(self._unit_files)
-        # unfiltered dictionary (alpha-pruned terms INCLUDED): fuzzy_search
-        # must match against every term the corpus contains — a pruned hot
-        # term still counts for the reference's fuzzy semantics. The
-        # pinned schema means opening runs no Spark job
-        ts_paths = committed_term_stats_paths(root, m)
-        self._term_stats_all = spark.read.schema(TERM_STATS_SCHEMA).parquet(
-            *ts_paths)
-        # the same files for the driver reads (warm), listed NOW like
-        # the units; their footers' row count is read at first use
-        self._term_stats_files = [
-            f for p in ts_paths for f in _list_parquet(self._fs, p)]
-        self._dictionary_rows: int | None = None
-        if cache:
-            # the Spark-side dictionary (over-budget lookups, dictionary
-            # scans) is consulted per call — keep it hot; the live view
-            # below filters the cached UNFILTERED rows
-            self._term_stats_all = self._term_stats_all.cache()
-        # alpha-cutoff terms are flagged, not deleted (kept for
-        # incremental stats); queries must not see them
-        self.term_stats = self._term_stats_all.filter(~F.col("pruned"))
+        # the term dictionary reads DRIVER_TERM_CACHE_MAX from this searcher
+        # at every check; weakly, so no cycle keeps a replaced one's map
+        me = weakref.ref(self)
+        self._dictionary = TermDictionary(
+            spark, self._fs, committed_term_stats_paths(root, m),
+            lambda: me().DRIVER_TERM_CACHE_MAX, cache)
+        self.term_stats = self._dictionary.live   # alpha-pruned rows out
         cfg = m.get("config", {})
         self.codec = cfg.get("impact_codec", "f64")
         self.k1 = cfg.get("k1", 1.5)
@@ -941,12 +931,6 @@ class IndexSearcher:
                 self._tomb_handle = (
                     spark.sparkContext.broadcast(arr) if arr.size > 1_000_000
                     else arr)
-        # live query dictionary: term -> (idf, df, cf); built by warm()
-        self._term_map: dict[str, tuple[float, int, int]] | None = None
-        # lazy federation dictionary (term_meta): includes pruned terms
-        self._meta_map: dict | None | bool = None
-        # code-point-sorted _meta_map keys (prefix bisect); lazy
-        self._sorted_terms: list[str] | None = None
         # Σ doc_len over committed doc_stats (phrase_suggest's LM total;
         # a property of the committed index snapshot — refresh() resets)
         self._total_dl: int | None = None
@@ -963,63 +947,24 @@ class IndexSearcher:
         # instead of re-scoring the match set); cleared on refresh()
         self._page_cache: dict[tuple, DataFrame] = {}
 
-    def _dictionary_fits(self) -> bool:
-        """Whether the whole dictionary (alpha-pruned rows included) fits
-        DRIVER_TERM_CACHE_MAX, counted from the term_stats files' footers
-        (read once, no Spark job)."""
-        if self._dictionary_rows is None:
-            import pyarrow.parquet as pq
-            n = 0
-            for path in self._term_stats_files:
-                try:
-                    with self._fs.open_input_file(path) as f:
-                        n += pq.read_metadata(f).num_rows
-                except FileNotFoundError as e:
-                    raise _unit_vanished(path) from e
-            self._dictionary_rows = n
-        return self._dictionary_rows <= self.DRIVER_TERM_CACHE_MAX
-
     def warm(self) -> None:
-        """Build the driver dictionaries when the whole dictionary fits
-        DRIVER_TERM_CACHE_MAX (the budget term_meta() applies too): one
-        pyarrow read of the term_stats files listed at open, on the
-        driver with no Spark job. A no-op once built or over budget."""
-        if self._term_map is not None or not self._dictionary_fits():
-            return
-        import pyarrow.parquet as pq
-        cols = ["term", "idf", "df", "cf", "pruned"]
-        rows = []
-        for path in self._term_stats_files:
-            try:
-                with self._fs.open_input_file(path) as f:
-                    tbl = pq.ParquetFile(f).read(columns=cols,
-                                                 use_threads=False)
-            except FileNotFoundError as e:
-                raise _unit_vanished(path) from e
-            rows += zip(*(tbl[c].to_pylist() for c in cols))
-        # ONE read of the unfiltered dictionary feeds BOTH maps: the live
-        # query dictionary (_term_map — membership means the term scores)
-        # and the pruned-INCLUDED federation/clause dictionary
-        # (_meta_map), so boolean/msm/query_string clause gating and
-        # per-member term_meta stop paying a filtered collect per call
-        self._term_map = {t: (idf, df, int(cf))
-                          for t, idf, df, cf, pruned in rows if not pruned}
-        self._meta_map = {t: (int(df), float(idf), bool(pruned))
-                          for t, idf, df, cf, pruned in rows}
+        """Load the term dictionary's driver map now, when it fits
+        DRIVER_TERM_CACHE_MAX (one pyarrow read, no Spark job); every
+        lookup loads it lazily anyway."""
+        self._dictionary.load()
 
     def _driver_answers(self, qcounts,
                         max_postings: "int | None" = None) -> bool:
-        """THE interactive gate, shared by search() (through _topn_rows),
+        """THE interactive gate, shared by search() (through _task_tops),
         search_local and explain(): a single-query top-n runs on the
         driver with no Spark job when the dictionary fits
-        DRIVER_TERM_CACHE_MAX (footer count) AND the live query terms'
-        Σ df is at most LOCAL_MAX_POSTINGS (search_local may pass its
-        own `max_postings`). Warms the dictionary when it fits."""
-        if not self._dictionary_fits():
+        DRIVER_TERM_CACHE_MAX AND the live query terms' Σ df is at most
+        LOCAL_MAX_POSTINGS (search_local may pass its own
+        `max_postings`)."""
+        d = self._dictionary
+        if not d.fits():
             return False
-        self.warm()
-        total = sum(self._term_map[t][1] for t in qcounts
-                    if t in self._term_map)
+        total = sum(e[1] for e in d.lookup(qcounts).values())
         return total <= (self.LOCAL_MAX_POSTINGS if max_postings is None
                          else max_postings)
 
@@ -1027,60 +972,15 @@ class IndexSearcher:
         """(df, local idf, pruned) for the given terms present in this
         index's dictionary INCLUDING alpha-pruned entries (their true df
         still counts toward federated global df) — the per-member
-        statistics operators/federation.py combines. Served from the
-        driver map (warm(), built lazily here) when the dictionary fits,
-        else one vocabulary-directed filtered collect."""
-        if self._meta_map is None:
-            self.warm()
-            if self._meta_map is None:
-                self._meta_map = False  # too large: stay distributed
-        if self._meta_map:
-            return {t: self._meta_map[t] for t in terms
-                    if t in self._meta_map}
-        ts = self._term_stats_all.select("term", "df", "idf", "pruned")
-        rows = ts.filter(F.col("term").isin(list(terms))).collect()
-        return {r["term"]: (int(r["df"]), float(r["idf"]), bool(r["pruned"]))
-                for r in rows}
+        statistics operators/federation.py combines."""
+        return {t: (df, idf, pruned) for t, (idf, df, _, pruned)
+                in self._dictionary.lookup(terms, live=False).items()}
 
     def _pruned_flags(self, terms) -> dict[str, bool]:
         """term -> alpha-pruned flag for the given terms PRESENT in the
-        dictionary (pruned entries included) — served from the warmed
-        driver dictionary when built (zero Spark jobs), else one
-        vocabulary-directed filtered collect (the pre-warm shape). Never
-        triggers the lazy full-dictionary build: one-shot unwarmed
-        callers keep paying exactly the old filtered collect."""
-        terms = list(terms)
-        if not terms:
-            return {}
-        if isinstance(self._meta_map, dict):
-            return {t: self._meta_map[t][2] for t in terms
-                    if t in self._meta_map}
-        return {r["term"]: bool(r["pruned"]) for r in
-                self._term_stats_all.filter(F.col("term").isin(terms))
-                .select("term", "pruned").collect()}
-
-    def _prefix_matches(self, prefix: str, cap: int) -> "list[str] | None":
-        """Dictionary terms starting with `prefix` (alpha-pruned
-        INCLUDED), sorted term asc, from the warmed driver dictionary —
-        None when the dictionary is not warmed (callers keep their
-        filtered-collect shape). Code-point-sorted terms make a prefix
-        range contiguous, so this is a bisect + bounded walk. Returns at
-        most cap+1 entries so callers detect overflow exactly like the
-        limit(cap+1) collect they replace."""
-        if not isinstance(self._meta_map, dict):
-            return None
-        if self._sorted_terms is None:
-            self._sorted_terms = sorted(self._meta_map)
-        st = self._sorted_terms
-        i = bisect.bisect_left(st, prefix)
-        out: list[str] = []
-        while i < len(st) and len(out) <= cap:
-            t = st[i]
-            if not t.startswith(prefix):
-                break
-            out.append(t)
-            i += 1
-        return out
+        dictionary (pruned entries included): clause gating."""
+        return {t: e[3] for t, e in
+                self._dictionary.lookup(terms, live=False).items()}
 
     def _driver_footers(self) -> list[tuple]:
         """The units' file footers for reads on the driver
@@ -1148,7 +1048,7 @@ class IndexSearcher:
                         "score_abs double")
 
     def _batch_grid(self, qterms: dict[int, dict[str, int]],
-                    n_units: int, k: int = 10
+                    dfs: dict[str, int], n_units: int, k: int = 10
                     ) -> tuple[int, int, list[list[int]]]:
         """Choose the (query-replicas Tq x doc-slices Td) task grid AND
         the query grouping for a batch — the replication/partitioning
@@ -1172,7 +1072,7 @@ class IndexSearcher:
         Minimizes qf/Tq + max_g(dd_g)/Td + merge(Q·Td·k) over divisor
         pairs Tq·Td = cores, where dd_g is the df-sum of group g's ACTUAL
         term union under the affinity grouping (computed exactly per
-        candidate Tq from the driver term map — Q·|terms| set ops, ~ms).
+        candidate Tq from the terms' `dfs` — Q·|terms| set ops, ~ms).
         Constants fit on measured 2-core and 8-core shape sweeps:
         ~3e-4 s per distinct termset (callers pre-dedup, so every qterm
         entry is distinct), ~1.4e-6 s/posting for the per-replica
@@ -1189,11 +1089,6 @@ class IndexSearcher:
         # affinity order: signature-sorted, so contiguous chunks share terms
         qid_list = sorted(qterms,
                           key=lambda q: (tuple(sorted(qterms[q])), q))
-        if self._term_map is None:
-            # posting volume unknown (warm() not called): dd=0 would
-            # collapse Td to 1 and serialize the whole pruned posting
-            # read into one task — default to the doc-parallel grid
-            return 1, max(1, min(C, n_units)), [qid_list]
         # integer-coded per-sig term lists: grid planning is serial driver
         # time the N→4N criterion pays at full price, so cost evaluation
         # is pure numpy (the python set-sweep version cost ~0.2 s at 12k
@@ -1203,15 +1098,14 @@ class IndexSearcher:
         offs_l = [0]
         for q in qid_list:
             for t in qterms[q]:
-                if t in self._term_map:
-                    flat_l.append(tid.setdefault(t, len(tid)))
+                flat_l.append(tid.setdefault(t, len(tid)))
             offs_l.append(len(flat_l))
         flat = np.asarray(flat_l, dtype=np.int64)
         offs = np.asarray(offs_l, dtype=np.int64)
-        dfs = np.zeros(max(len(tid), 1), dtype=np.float64)
+        dff = np.zeros(max(len(tid), 1), dtype=np.float64)
         for t, i in tid.items():
-            dfs[i] = self._term_map[t][1]
-        sig_df = (np.add.reduceat(dfs[flat], offs[:-1])
+            dff[i] = dfs[t]
+        sig_df = (np.add.reduceat(dff[flat], offs[:-1])
                   if flat.size else np.zeros(Q))
         # per-sig cost estimate → WEIGHTED contiguous chunking: groups
         # carry equal estimated cost, not equal query counts (equal-count
@@ -1230,7 +1124,7 @@ class IndexSearcher:
             for i in range(len(cuts) - 1):
                 seg = flat[offs[cuts[i]]:offs[cuts[i + 1]]]
                 if seg.size:
-                    worst = max(worst, float(dfs[np.unique(seg)].sum()))
+                    worst = max(worst, float(dff[np.unique(seg)].sum()))
             return worst
 
         best = None
@@ -1249,7 +1143,7 @@ class IndexSearcher:
         return len(groups), Td, groups
 
     def _colocated_batch_grid(self, qterms: dict[int, dict[str, int]],
-                              kernel, schema: str,
+                              dfs: dict[str, int], kernel, schema: str,
                               k: int = 10) -> tuple[DataFrame, int]:
         """Grid executor for search_batch: task (qi, di)
         reads ONLY its query group's terms over ONLY its unit slice
@@ -1259,7 +1153,7 @@ class IndexSearcher:
         Q·Td·k rows (≤ the 1-D executor's Q·cores·k)."""
         spark = self.spark
         fs, units = self._fs, list(self._unit_files.items())
-        Tq, Td, groups = self._batch_grid(qterms, len(units), k)
+        Tq, Td, groups = self._batch_grid(qterms, dfs, len(units), k)
         gterms = [sorted({t for qid in g for t in qterms[qid]})
                   for g in groups]
 
@@ -1352,7 +1246,8 @@ class IndexSearcher:
         empty = pd.DataFrame(columns=["query_id", "doc_id", "score"])
         if not all_terms:
             return _merge_topn_driver(empty, n)
-        _, qidf = self._terms_from_counts(dict.fromkeys(all_terms, 1))
+        live = self._dictionary.lookup(all_terms)
+        qidf = {t: e[0] for t, e in live.items()}
         term_set = set(qidf)
         if idf_override is not None:
             term_set = {t for t in term_set if t in idf_override}
@@ -1394,7 +1289,8 @@ class IndexSearcher:
                                        self.k1, self.b,
                                        tomb=self._tomb_handle, allow=allow)
         local, tasks = self._colocated_batch_grid(
-            qterms, kernel, "query_id int, doc_id long, score double", n)
+            qterms, {t: e[1] for t, e in live.items()}, kernel,
+            "query_id int, doc_id long, score double", n)
         if tasks * len(qterms) * n <= self.DRIVER_MERGE_MAX_ROWS:
             # the per-task tops are small (≤ tasks·distinct·n rows): fetch
             # them as ONE Arrow transfer and finish the top-n merge on the
@@ -1503,17 +1399,9 @@ class IndexSearcher:
         the shared tail of _query_terms, also the entry point for
         expanded queries whose counts are synthesized, not tokenized.
         Returns the live terms' (counts, idfs)."""
-        if not counts:
-            return {}, {}
-        if self._term_map is not None:
-            # driver-side dictionary (warm() collected it): zero Spark jobs
-            qcounts = {t: c for t, c in counts.items() if t in self._term_map}
-            return qcounts, {t: self._term_map[t][0] for t in qcounts}
-        present = (self.term_stats
-                   .filter(F.col("term").isin(list(counts)))
-                   .select("term", "idf").collect())
-        return ({r["term"]: counts[r["term"]] for r in present},
-                {r["term"]: r["idf"] for r in present})
+        live = self._dictionary.lookup(counts)
+        return ({t: c for t, c in counts.items() if t in live},
+                {t: e[0] for t, e in live.items()})
 
     # filtered search: an allow set at or below this many ids is
     # collected to a sorted array and masked at decode time (the same
@@ -1546,7 +1434,6 @@ class IndexSearcher:
         """search() over an explicit (term -> count) multiset — the
         whole execution path behind search, also driven directly by
         search_expanded with synthesized counts."""
-        self.warm()   # a dictionary that fits is read once, with no job
         qcounts, qidf = self._terms_from_counts(counts)
         spark = self.spark
         if not qcounts:
@@ -1583,60 +1470,53 @@ class IndexSearcher:
         return (top if isinstance(top, DataFrame)
                 else _top_frame(self.spark, top))
 
+    def _task_tops(self, qcounts, kernel,
+                   columns: list[str] = None) -> "pd.DataFrame | DataFrame":
+        """The per-task partial top-k rows of `kernel` over the query
+        terms' posting blocks. Within the `_driver_answers` gate the
+        blocks are read on the driver (_read_terms_local on every call,
+        so a unit that vanished since open raises "call refresh()") and
+        the kernel runs once per task's units, exactly as the executor
+        stage deals them, so the rows are bit-identical to the
+        executor's (a kernel's summation order follows its input's block
+        maxima): pandas out. Above the gate: the colocated shuffle-free
+        stage, as a lazy Spark frame (one job when collected)."""
+        columns = columns or WAND_COLS
+        if not self._driver_answers(qcounts):
+            return self._colocated_run(sorted(qcounts), kernel, columns,
+                                       RESULT_SCHEMA)
+        T = self._n_tasks()
+        footers = self._driver_footers()
+        task = {u: i % T for i, u in enumerate(self._unit_files)}
+        parts = []
+        for t in range(T):
+            blocks = _read_terms_local(
+                [f for f in footers if task[f[1]] == t],
+                sorted(qcounts), columns)
+            out = kernel(blocks) if len(blocks) else blocks
+            if len(out):
+                parts.append(out)
+        return pd.concat(parts, ignore_index=True) if parts else _no_hits()
+
     def _topn_rows(self, qcounts, kernel, n: int,
                    columns: list[str] = None) -> "pd.DataFrame | DataFrame":
-        """The top-n rows of `kernel` over the query terms' posting
-        blocks, pandas out (federation members call this directly).
-        Within the `_driver_answers` gate the blocks are read on the
-        driver (_read_terms_local on every call, so a unit that vanished
-        since open raises "call refresh()") and the kernel runs once per
-        task's units, exactly as the executor stage deals them, so the
-        rows are bit-identical to the executor's (a kernel's summation
-        order follows its input's block maxima). Above the gate: the
-        colocated shuffle-free stage (one Spark job), then the
-        size-gated driver scatter-gather merge — or, above
-        DRIVER_MERGE_MAX_ROWS, the distributed hash-agg merge, returned
-        as a Spark frame."""
-        columns = columns or WAND_COLS
-        T = self._n_tasks()
-        if self._driver_answers(qcounts):
-            footers = self._driver_footers()
-            task = {u: i % T for i, u in enumerate(self._unit_files)}
-            parts = []
-            for t in range(T):
-                blocks = _read_terms_local(
-                    [f for f in footers if task[f[1]] == t],
-                    sorted(qcounts), columns)
-                out = kernel(blocks) if len(blocks) else blocks
-                if len(out):
-                    parts.append(out)
-            return _merge_topn_driver(
-                pd.concat(parts, ignore_index=True) if parts else _no_hits(),
-                n)
-        local = self._colocated_run(sorted(qcounts), kernel, columns,
-                                    RESULT_SCHEMA)
-        if T * n <= self.DRIVER_MERGE_MAX_ROWS:
-            return _merge_topn_driver(local.toPandas(), n)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            local.orderBy(F.desc("score"), F.asc("doc_id")).limit(n)
-            .withColumn("rank", F.row_number().over(w))
-            .withColumn("score_abs", F.abs(F.round("score", 2)))
-        )
+        """_task_tops, then the driver scatter-gather merge (pandas out;
+        federation members call this directly) — or, for executor tops
+        above DRIVER_MERGE_MAX_ROWS, the distributed hash-agg merge."""
+        tops = self._task_tops(qcounts, kernel, columns)
+        if isinstance(tops, DataFrame):
+            if self._n_tasks() * n > self.DRIVER_MERGE_MAX_ROWS:
+                w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+                return (
+                    tops.orderBy(F.desc("score"), F.asc("doc_id")).limit(n)
+                    .withColumn("rank", F.row_number().over(w))
+                    .withColumn("score_abs", F.abs(F.round("score", 2))))
+            tops = tops.toPandas()
+        return _merge_topn_driver(tops, n)
 
     # ---- pluggable similarity modules (ES `similarity` setting) --------
 
     SIMILARITIES = ("tfidf", "lmjm", "lmdir", "bm25plus")
-
-    def _query_term_df(self, terms) -> dict[str, int]:
-        """Document frequency for the given (live) query terms — from the
-        warmed driver dictionary when present, else one filtered collect
-        over term_stats (vocabulary-sized, never the corpus)."""
-        if self._term_map is not None:
-            return {t: self._term_map[t][1] for t in terms}
-        rows = (self.term_stats.filter(F.col("term").isin(list(terms)))
-                .select("term", "df").collect())
-        return {r["term"]: int(r["df"]) for r in rows}
 
     def collection_tf(self, terms) -> dict[str, int]:
         """Collection frequency (Σ tf over the whole corpus) for the given
@@ -1652,19 +1532,10 @@ class IndexSearcher:
         applies no mask)."""
         terms = list(terms)
         if not self.manifest.get("segments"):
-            return self._cf_from_stats(terms)
+            # live terms only, the shape of _cf_from_postings' output
+            return {t: e[2] for t, e in
+                    self._dictionary.lookup(terms).items()}
         return self._cf_from_postings(terms)
-
-    def _cf_from_stats(self, terms: list[str]) -> dict[str, int]:
-        """Per-term cf from the persisted term_stats column. Terms absent
-        from the live dictionary are absent from the result, matching
-        _cf_from_postings' output shape."""
-        if self._term_map is not None:
-            return {t: self._term_map[t][2] for t in terms
-                    if t in self._term_map}
-        rows = (self.term_stats.filter(F.col("term").isin(terms))
-                .select("term", "cf").collect())
-        return {r["term"]: int(r["cf"]) for r in rows}
 
     def _cf_from_postings(self, terms: list[str]) -> dict[str, int]:
         """Per-term cf summed from the posting blocks' tf varints (one
@@ -1673,8 +1544,8 @@ class IndexSearcher:
             raise ValueError(
                 "collection_tf needs the compact codec (raw tf varints); "
                 "this index stores precomputed f64 impacts")
-        qcounts, _ = self._terms_from_counts(Counter({t: 1 for t in terms}))
-        if not qcounts:
+        live = self._dictionary.lookup(terms)
+        if not live:
             return {}
         from data_text_search_spark.functions.codec import varint_decode
 
@@ -1690,7 +1561,7 @@ class IndexSearcher:
                 out.append((str(term), int(tfs.sum())))
             return pd.DataFrame(out, columns=["term", "cf"])
 
-        local = self._colocated_run(sorted(qcounts), cf_kernel,
+        local = self._colocated_run(sorted(live), cf_kernel,
                                     ["term", "n_docs", "tfs"],
                                     "term string, cf long")
         rows = local.groupBy("term").agg(F.sum("cf").alias("cf")).collect()
@@ -1746,22 +1617,20 @@ class IndexSearcher:
         if model not in self.SIMILARITIES:
             raise ValueError(f"unknown similarity {model!r}; "
                              f"one of {self.SIMILARITIES}")
-        self.warm()
-        qcounts, _ = self._query_terms(query)
+        counts = Counter(tokenize_py(query))
+        live = self._dictionary.lookup(counts)
+        qcounts = {t: c for t, c in counts.items() if t in live}
         if not qcounts:
             return _top_frame(self.spark)
+        npl1 = float(self.n_docs) + 1.0
         if model == "tfidf":
-            dfm = self._query_term_df(qcounts)
-            npl1 = float(self.n_docs) + 1.0
-            w = {t: (1.0 + math.log(npl1 / (dfm[t] + 1.0))) ** 2
+            w = {t: (1.0 + math.log(npl1 / (live[t][1] + 1.0))) ** 2
                  for t in qcounts}
 
             def impact_fn(term, tfs, dls):
                 return np.sqrt(tfs) * w[term] / np.sqrt(dls)
         elif model == "bm25plus":
-            dfm = self._query_term_df(qcounts)
-            npl1 = float(self.n_docs) + 1.0
-            w = {t: math.log(npl1 / dfm[t]) for t in qcounts}
+            w = {t: math.log(npl1 / live[t][1]) for t in qcounts}
             k1, b, avgdl = float(self.k1), float(self.b), float(self.avgdl)
 
             def impact_fn(term, tfs, dls):
@@ -1894,7 +1763,7 @@ class IndexSearcher:
             return spark.createDataFrame([], out_schema)
         qdf = F.broadcast(spark.createDataFrame([(t,) for t in qtokens],
                                                 "qtok string"))
-        matched = (self._term_stats_all.select("term", "pruned")
+        matched = (self._dictionary.all.select("term", "pruned")
                    .join(qdf, _fuzzy_match_cond(F.col("term"), F.col("qtok"),
                                                 max_mistakes))
                    .groupBy("term", "pruned").agg(F.count("*").alias("w"))
@@ -2198,29 +2067,14 @@ class IndexSearcher:
         if not prefix:
             raise ValueError("prefix_search: empty prefix")
         spark = self.spark
-        warm_m = self._prefix_matches(prefix, max_terms)
-        if warm_m is not None:
-            # warmed dictionary: the expansion is a driver-side bisect —
-            # no Spark job before the posting kernel
-            if len(warm_m) > max_terms:
-                raise ValueError(
-                    f"prefix_search: '{prefix}' matches more than "
-                    f"{max_terms} terms; lengthen the prefix or raise "
-                    "max_terms")
-            mm = self._meta_map
-            weights = {t: 1 for t in warm_m if not mm[t][2]}
-            pruned_w = {t: 1 for t in warm_m if mm[t][2]}
-        else:
-            matched = (self._term_stats_all.select("term", "pruned")
-                       .filter(F.col("term").startswith(prefix))
-                       .limit(max_terms + 1).collect())
-            if len(matched) > max_terms:
-                raise ValueError(
-                    f"prefix_search: '{prefix}' matches more than "
-                    f"{max_terms} terms; lengthen the prefix or raise "
-                    "max_terms")
-            weights = {r["term"]: 1 for r in matched if not r["pruned"]}
-            pruned_w = {r["term"]: 1 for r in matched if r["pruned"]}
+        matched = self._dictionary.prefix(prefix, max_terms)
+        if len(matched) > max_terms:
+            raise ValueError(
+                f"prefix_search: '{prefix}' matches more than "
+                f"{max_terms} terms; lengthen the prefix or raise "
+                "max_terms")
+        weights = {t: 1 for t, pr in matched.items() if not pr}
+        pruned_w = {t: 1 for t, pr in matched.items() if pr}
         local = self._tf_weighted_counts(weights, pruned_w)
         if local is None:
             return spark.createDataFrame([], "doc_id long, match_count long")
@@ -2244,7 +2098,7 @@ class IndexSearcher:
         if not pattern:
             raise ValueError("regex_search: empty pattern")
         spark = self.spark
-        matched = (self._term_stats_all.select("term", "pruned")
+        matched = (self._dictionary.all.select("term", "pruned")
                    .filter(F.col("term").rlike(f"^(?:{pattern})$"))
                    .limit(max_terms + 1).collect())
         if len(matched) > max_terms:
@@ -2365,7 +2219,7 @@ class IndexSearcher:
         pairs = (tok.select(F.explode("pairs").alias("p"))
                  .select(F.col("p.term").alias("term"),
                          F.col("p.tf").cast("long").alias("tf")))
-        return (pairs.join(self._term_stats_all.select(
+        return (pairs.join(self._dictionary.all.select(
                     "term", "df", F.round("idf", 6).alias("idf")),
                     "term")
                 .select("term", "tf", "df", "idf")
@@ -2495,7 +2349,8 @@ class IndexSearcher:
         distance asc → document frequency desc → term asc. The whole
         dictionary participates — alpha-PRUNED terms too (a user most
         often misspells a HOT term, and hot terms are exactly the
-        pruned ones), which is why this reads _term_stats_all.
+        pruned ones), which is why this reads the unfiltered
+        dictionary frame.
 
         Scale shape: vocab-sized scan only (never postings, never the
         corpus), with the same length-band + thresholded-DP short-
@@ -2511,7 +2366,7 @@ class IndexSearcher:
             return spark.createDataFrame(
                 [], "term string, distance int, df long")
         q = toks[0]
-        ts = self._term_stats_all.select("term", F.col("df").cast("long")
+        ts = self._dictionary.all.select("term", F.col("df").cast("long")
                                          .alias("df"))
         return (ts.filter(_fuzzy_match_cond(F.col("term"), F.lit(q),
                                             max_edits))
@@ -2533,24 +2388,17 @@ class IndexSearcher:
         turn one query term into the whole vocabulary)."""
         from data_text_search_spark.operators.fuzzy import _fuzzy_match_cond
         if kind == "prefix":
-            warm_m = self._prefix_matches(tok, 10_000)
-            if warm_m is not None:   # warmed dictionary: driver bisect
-                if len(warm_m) > 10_000:
-                    raise ValueError(
-                        f"query_string: clause {tok!r} ({kind}) expands "
-                        "to more than 10000 dictionary terms — anchor it "
-                        "further")
-                return warm_m        # already sorted term asc
-            cond = F.col("term").startswith(tok)
+            terms = list(self._dictionary.prefix(tok, 10_000))
         else:
             cond = _fuzzy_match_cond(F.col("term"), F.lit(tok), int(arg))
-        ts = self._term_stats_all.select("term")
-        rows = ts.filter(cond).limit(10_001).collect()
-        if len(rows) > 10_000:
+            terms = sorted(r["term"] for r in self._dictionary.all
+                           .select("term").filter(cond).limit(10_001)
+                           .collect())
+        if len(terms) > 10_000:
             raise ValueError(
                 f"query_string: clause {tok!r} ({kind}) expands to more "
                 "than 10000 dictionary terms — anchor it further")
-        return sorted(r["term"] for r in rows)
+        return terms
 
     def phrase_suggest(self, text: str, positions_root: str, n: int = 3,
                        max_edits: int = 2, max_candidates: int = 5,
@@ -2587,7 +2435,7 @@ class IndexSearcher:
         if not toks:
             return spark.createDataFrame([], out_schema)
         uniq = list(dict.fromkeys(toks))
-        ts = self._term_stats_all.select(
+        ts = self._dictionary.all.select(
             "term", F.col("df").cast("long").alias("df"))
         cond = _reduce(_or, [_fuzzy_match_cond(F.col("term"), F.lit(t),
                                                max_edits) for t in uniq])
@@ -2641,16 +2489,16 @@ class IndexSearcher:
         return spark.createDataFrame(scored[:n], out_schema)
 
     def profile(self, query: str, n: int = 10) -> dict:
-        """ES _profile analog: execute the query with per-phase wall
-        timings — parse (tokenize), dictionary (term lookup), kernel job
-        (the distributed stage incl. Arrow transfer of per-task tops),
-        and driver merge. Runs the executor path explicitly (the two
-        steps `search` takes above the `_driver_answers` gate, with the
-        driver merge; rows are identical — pytest-pinned against
-        search()). Phases are
+        """ES _profile analog: execute the query the way `search` does,
+        with per-phase wall timings — parse (tokenize), dictionary (term
+        lookup), kernel job (the per-task top-k: on the driver within the
+        `_driver_answers` gate, else the distributed stage incl. the Arrow
+        transfer of the per-task tops), and driver merge; rows are
+        identical to search()'s (pytest-pinned). Phases are
         driver-observed wall times, so the kernel phase includes Spark
         scheduling — exactly the number an operator tuning a live index
-        needs. Returns {"timings_ms": {...}, "rows": [...]}."""
+        needs. Returns {"timings_ms": {...}, "rows": [...], "executor":
+        "driver" | "colocated-units"} — the executor explain() reports."""
         import time as _time
 
         t = {}
@@ -2660,21 +2508,24 @@ class IndexSearcher:
         t0 = _time.perf_counter()
         qcounts, qidf = self._terms_from_counts(counts)
         t["dictionary_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
+        executor = ("driver" if self._driver_answers(qcounts)
+                    else "colocated-units")
         if not qcounts:
-            return {"timings_ms": t, "rows": []}
+            return {"timings_ms": t, "rows": [], "executor": executor}
         kernel = _shard_topk_kernel_factory(qcounts, n, self.codec, qidf,
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle)
         t0 = _time.perf_counter()
-        pdf = self._colocated_run(sorted(qcounts), kernel, WAND_COLS,
-                                  RESULT_SCHEMA).toPandas()
+        tops = self._task_tops(qcounts, kernel)
+        if isinstance(tops, DataFrame):
+            tops = tops.toPandas()
         t["kernel_job_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
         t0 = _time.perf_counter()
-        out = _merge_topn_driver(pdf, n)
+        out = _merge_topn_driver(tops, n)
         t["merge_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
         t["total_ms"] = round(sum(v for v in t.values()), 3)
-        return {"timings_ms": t,
-                "rows": out.to_dict(orient="records")}
+        return {"timings_ms": t, "rows": out.to_dict(orient="records"),
+                "executor": executor}
 
     def score_explain(self, query: str, doc_id: int) -> DataFrame:
         """ES _explain analog: WHY does this doc score what it scores —
@@ -2693,12 +2544,11 @@ class IndexSearcher:
         schema = ("term string, tf long, df long, idf double, "
                   "contribution double")
         counts = Counter(tokenize_py(query))
-        qcounts, qidf = self._terms_from_counts(counts)
-        if not qcounts or (self._tombstones is not None
-                           and int(doc_id) in self._tombstones):
+        live = self._dictionary.lookup(counts)
+        if not live or (self._tombstones is not None
+                        and int(doc_id) in self._tombstones):
             return self.spark.createDataFrame([], schema)
-        dfm = self._query_term_df(qcounts)
-        blocks = _read_terms_local(self._driver_footers(), sorted(qcounts),
+        blocks = _read_terms_local(self._driver_footers(), sorted(live),
                                    BATCH_COLS + ["last_doc_id"])
         blocks = blocks[(blocks["first_doc_id"] <= int(doc_id))
                         & (blocks["last_doc_id"] >= int(doc_id))]
@@ -2714,19 +2564,18 @@ class IndexSearcher:
             if not j.size:
                 continue
             tf = int(tfs[j[0]])
+            idf_t, df_t = live[str(term)][:2]
             if self.codec == "compact":
                 dls = varint_decode(b"".join(trows["impacts"]), total)
                 dl = float(dls[j[0]])
-                idf_t = qidf[str(term)]
                 imp = (idf_t * tf * (self.k1 + 1)
                        / (tf + self.k1 * (1 - self.b
                                           + (self.b * dl) / self.avgdl)))
             else:
                 imp = float(np.frombuffer(b"".join(trows["impacts"]),
                                           dtype="<f8")[j[0]])
-            rows.append((str(term), tf, int(dfm[str(term)]),
-                         round(float(qidf[str(term)]), 6),
-                         round(imp * qcounts[str(term)], 4)))
+            rows.append((str(term), tf, df_t, round(idf_t, 6),
+                         round(imp * counts[str(term)], 4)))
         rows.sort()
         return self.spark.createDataFrame(rows, schema)
 
@@ -2741,20 +2590,18 @@ class IndexSearcher:
         never decodes a posting — safe to call per query at any index
         size."""
         counts = Counter(tokenize_py(query))
-        qcounts, qidf = self._query_terms(query)
-        dfs = {t: int(d) for t, d in self._query_term_df(qcounts).items()}
+        entries = self._dictionary.lookup(counts, live=False)
+        qcounts = {t: c for t, c in counts.items()
+                   if t in entries and not entries[t][3]}
         missing = sorted(set(counts) - set(qcounts))
-        pruned: list[str] = []
-        if missing:
-            flags = self._pruned_flags(missing)
-            pruned = sorted(t for t in missing if flags.get(t))
-        total = sum(dfs.values())
+        pruned = [t for t in missing if t in entries]
+        total = sum(entries[t][1] for t in qcounts)
         on_driver = self._driver_answers(qcounts)
         tasks = self._n_tasks()
         return {
             "query": query,
-            "terms": [{"term": t, "qcount": int(c), "df": dfs[t],
-                       "idf": float(qidf[t])}
+            "terms": [{"term": t, "qcount": int(c), "df": entries[t][1],
+                       "idf": entries[t][0]}
                       for t, c in sorted(qcounts.items())],
             "absent_terms": [t for t in missing if t not in pruned],
             "alpha_pruned_terms": pruned,
@@ -3382,7 +3229,6 @@ class IndexSearcher:
         one kernel run sums a doc's terms in the order of the global
         block maxima)."""
         cols = ["doc_id", "score", "rank", "score_abs"]
-        self.warm()
         qcounts, qidf = self._query_terms(query)
         if not qcounts:
             return pd.DataFrame(columns=cols)

@@ -41,6 +41,8 @@ from data_text_search_spark.operators.index_build import (
     committed_doc_stats_paths,
     committed_term_stats_paths,
     committed_tombstone_paths,
+    doc_stats_df,
+    in_background,
     load_manifest,
     write_postings,
 )
@@ -121,60 +123,61 @@ def add_documents(spark: SparkSession, root: str, new_corpus: DataFrame,
                 F.col("s.doc_len").alias("doc_len"),
                 F.col("s.n_chars").alias("n_chars"))).persist()
     def _abort(msg: str):
-        pairs_df.unpersist()
         manifest.pop("pending", None)
         _write_manifest_atomic(paths.manifest, manifest)
         raise ValueError(msg)
 
-    # ONE integrity job: the duplicate-id check and the already-present
-    # check ride the same aggregate (doc_stats ids are unique, so the
-    # marker left join is row-preserving) — the round-6-start shape paid
-    # two serial job floors here per append
-    existing = (spark.read.schema("doc_id long").parquet(
-        *committed_doc_stats_paths(root, manifest))
-        .withColumn("_ex", F.lit(1)))
-    row = (pairs_df.join(existing, "doc_id", "left")
-           .agg(F.count("*").alias("n"),
-                F.countDistinct("doc_id").alias("nd"),
-                F.count("_ex").alias("ndup")).first())
-    n_new = int(row["n"] or 0)
-    if int(row["nd"] or 0) != n_new:
-        _abort("delta contains duplicate doc_ids")
-    n_dup = int(row["ndup"] or 0)
-    if n_dup:
-        # a tombstoned id is still physically present (postings + stats)
-        # until merge_segments purges it — re-adding before the purge
-        # would strand TWO posting sets behind one doc_id
-        tpaths = committed_tombstone_paths(root, manifest)
-        n_tomb = 0
-        if tpaths:
-            n_tomb = pairs_df.join(
-                spark.read.schema("doc_id long").parquet(*tpaths),
-                "doc_id").count()
-        hint = (f" ({n_tomb} of them are tombstoned — run merge_segments "
-                "to purge deletions, then re-add)" if n_tomb else
-                "; dedup upstream or rebuild")
-        _abort(
-            f"{n_dup} delta doc_ids already exist in the index — re-adding "
-            f"would double their postings{hint}")
-    if n_new == 0:
-        # empty delta: no segment (a zero-doc segment would commit
-        # parts-less parquet dirs that break readers' schema inference —
-        # the same class append_positions_segment guards against); clear
-        # the intent, still record the batch key so a replayed empty
-        # micro-batch stays idempotent
-        pairs_df.unpersist()
-        if batch_key is not None:
-            manifest.setdefault("applied_batches", []).append(batch_key)
-        manifest.pop("pending", None)
-        _write_manifest_atomic(paths.manifest, manifest)
-        return manifest
-    n_total = n_old + n_new
+    try:
+        # ONE integrity job: the duplicate-id check and the
+        # already-present check ride the same aggregate (doc_stats ids are
+        # unique, so the marker left join is row-preserving) — the
+        # round-6-start shape paid two serial job floors here per append
+        existing = (spark.read.schema("doc_id long").parquet(
+            *committed_doc_stats_paths(root, manifest))
+            .withColumn("_ex", F.lit(1)))
+        row = (pairs_df.join(existing, "doc_id", "left")
+               .agg(F.count("*").alias("n"),
+                    F.countDistinct("doc_id").alias("nd"),
+                    F.count("_ex").alias("ndup")).first())
+        n_new = int(row["n"] or 0)
+        if int(row["nd"] or 0) != n_new:
+            _abort("delta contains duplicate doc_ids")
+        n_dup = int(row["ndup"] or 0)
+        if n_dup:
+            # a tombstoned id is still physically present (postings +
+            # stats) until merge_segments purges it — re-adding before the
+            # purge would strand TWO posting sets behind one doc_id
+            tpaths = committed_tombstone_paths(root, manifest)
+            n_tomb = 0
+            if tpaths:
+                n_tomb = pairs_df.join(
+                    spark.read.schema("doc_id long").parquet(*tpaths),
+                    "doc_id").count()
+            hint = (f" ({n_tomb} of them are tombstoned — run "
+                    "merge_segments to purge deletions, then re-add)"
+                    if n_tomb else "; dedup upstream or rebuild")
+            _abort(
+                f"{n_dup} delta doc_ids already exist in the index — "
+                f"re-adding would double their postings{hint}")
+        if n_new == 0:
+            # empty delta: no segment (a zero-doc segment would commit
+            # parts-less parquet dirs that break readers' schema inference
+            # — the same class append_positions_segment guards against);
+            # clear the intent, still record the batch key so a replayed
+            # empty micro-batch stays idempotent
+            if batch_key is not None:
+                manifest.setdefault("applied_batches", []).append(batch_key)
+            manifest.pop("pending", None)
+            _write_manifest_atomic(paths.manifest, manifest)
+            return manifest
+        n_total = n_old + n_new
 
-    new_terms = _encode_segment(
-        spark, paths, manifest, pairs_df, seg_id, n_total,
-        committed_term_stats_paths(root, manifest))
-    pairs_df.unpersist()
+        new_terms = _encode_segment(
+            spark, paths, manifest, pairs_df, seg_id, n_total,
+            committed_term_stats_paths(root, manifest))
+    finally:
+        # on every path — abort, empty delta, a failed encode, success
+        pairs_df.unpersist()
 
     # COMMIT POINT: one atomic manifest write makes the segment visible,
     # records the batch key, and clears the pending intent together
@@ -332,52 +335,36 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
     # segment encode's wall cost is max(), not sum(). All four dirs stay
     # invisible until the caller's atomic manifest commit, and the
     # threads are joined (errors re-raised) before this function
-    # returns, so the crash protocol is unchanged.
-    import threading
-    from data_text_search_spark.operators.index_build import doc_stats_df
-    side_err: list[BaseException] = []
+    # returns — also when the chain raises — so the crash protocol is
+    # unchanged.
+    join_side = in_background(
+        lambda: doc_stats_df(pairs_df)
+        .write.mode("overwrite").parquet(paths.doc_stats_seg(seg_id)),
+        lambda: pairs_df.write.mode("overwrite")
+        .parquet(paths.tokenized_seg(seg_id)))
+    try:
+        dt_obs = Observation()
+        (delta_terms.observe(dt_obs, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(paths.term_stats_seg(seg_id)))
+        new_terms = int(dt_obs.get["n"])
+        if new_terms:
+            live_stats = (full_stats.unionByName(
+                spark.read.schema(TERM_STATS_SCHEMA)
+                .parquet(paths.term_stats_seg(seg_id)))
+                .filter(~F.col("pruned")))
+        else:
+            from data_text_search_spark.sources import fsio
+            fsio.delete(paths.term_stats_seg(seg_id))
+            live_stats = full_stats.filter(~F.col("pruned"))
 
-    def _side(fn):
-        def run():
-            try:
-                fn()
-            except BaseException as e:   # surfaced at join
-                side_err.append(e)
-        t = threading.Thread(target=run, daemon=True)
-        t.start()
-        return t
-
-    side_threads = [
-        _side(lambda: doc_stats_df(pairs_df)
-              .write.mode("overwrite").parquet(paths.doc_stats_seg(seg_id))),
-        _side(lambda: pairs_df.write.mode("overwrite")
-              .parquet(paths.tokenized_seg(seg_id))),
-    ]
-
-    from pyspark.sql import Observation
-    dt_obs = Observation()
-    (delta_terms.observe(dt_obs, F.count(F.lit(1)).alias("n"))
-     .write.mode("overwrite").parquet(paths.term_stats_seg(seg_id)))
-    new_terms = int(dt_obs.get["n"])
-    if new_terms:
-        live_stats = (full_stats.unionByName(
-            spark.read.schema(TERM_STATS_SCHEMA)
-            .parquet(paths.term_stats_seg(seg_id)))
-            .filter(~F.col("pruned")))
-    else:
-        from data_text_search_spark.sources import fsio
-        fsio.delete(paths.term_stats_seg(seg_id))
-        live_stats = full_stats.filter(~F.col("pruned"))
-
-    # segments mirror the base's spart colocation dirs (one term-sorted
-    # file per unit), so the shuffle-free query path covers them too
-    write_postings(td, live_stats, manifest, paths.postings_seg(seg_id))
-    # doc_stats and the per-segment tokenized checkpoint (merges re-score
-    # from it without re-tokenizing) were written by the side threads above
-    for t in side_threads:
-        t.join()
-    if side_err:
-        raise side_err[0]
+        # segments mirror the base's spart colocation dirs (one
+        # term-sorted file per unit), so the shuffle-free query path
+        # covers them too
+        write_postings(td, live_stats, manifest, paths.postings_seg(seg_id))
+    finally:
+        # doc_stats and the per-segment tokenized checkpoint (merges
+        # re-score from it without re-tokenizing) are the side writes
+        join_side()
     return int(new_terms)
 
 

@@ -139,8 +139,8 @@ def test_search_local_negative_cache_columns(spark, segmented_index):
     nothing at all and when it finds other terms' rows."""
     s = IndexSearcher(spark, segmented_index)
     s.warm()
-    entry = s._term_map["flibbertigibbet"]
-    s._term_map["zzghost"] = s._term_map["zzghost2"] = entry
+    m = s._dictionary.map
+    m["zzghost"] = m["zzghost2"] = m["flibbertigibbet"]
     assert s.search_local("zzghost", 5).empty
     s.search_local("flibbertigibbet zzghost2", 5)
     real = s._local_blocks["flibbertigibbet"]

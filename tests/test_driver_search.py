@@ -202,7 +202,7 @@ def test_explain_executor_is_the_path_search_takes(spark, spark_jobs,
     plan = small.explain(q)["plan"]
     assert plan["executor"] == "colocated-units"
     assert not plan["interactive_local_eligible"]
-    assert small._term_map is None
+    assert small._dictionary.map is None
     with spark_jobs() as jobs:
         small.search(q, 10).collect()
     assert len(jobs) >= 1

@@ -514,25 +514,31 @@ def test_wildcard_search_translates_to_regex(spark, corpus, index):
 # ------------------------------------------- warmed-dictionary fast paths
 
 
-def test_warmed_dictionary_paths_match_collect_paths(spark, corpus, tmp_path):
-    """warm() builds the pruned-included driver dictionary in the same
-    collect as the live map; boolean/msm/query_string clause gating,
-    prefix expansion and explain then answer dictionary lookups with
-    ZERO Spark jobs — rows must be identical to the unwarmed
-    filtered-collect shape on an index where alpha-pruning actually
-    bites."""
+def test_warmed_dictionary_paths_match_collect_paths(spark, spark_jobs,
+                                                    corpus, tmp_path):
+    """The term dictionary answers from its driver map when the whole
+    dictionary fits DRIVER_TERM_CACHE_MAX and with one filtered collect
+    when it does not (forced here with a budget of 0). On an index
+    where alpha-pruning actually bites, every dictionary consumer —
+    boolean/msm/query_string clause gating, prefix expansion, explain,
+    term_meta, collection_tf, the similarity models, score_explain and
+    batches — gives identical rows both ways. In budget the lookups run
+    ZERO Spark jobs; over budget each lookup or prefix runs at most 1."""
     pdf, df = corpus
     root = str(tmp_path / "widx")
-    build_index(spark, df, root, BM25Config(alpha=1.0), id_col="doc_id",
-                shards=2, groups=1)
+    build_index(spark, df, root,
+                BM25Config(alpha=1.0, impact_codec="compact"),
+                id_col="doc_id", shards=2, groups=1)
     cold = IndexSearcher(spark, root)
+    cold.DRIVER_TERM_CACHE_MAX = 0
     warm = IndexSearcher(spark, root)
     warm.warm()
-    assert isinstance(warm._meta_map, dict) and warm._meta_map
+    assert isinstance(warm._dictionary.map, dict) and warm._dictionary.map
     # the warmed helpers answer without touching Spark
     flags = warm._pruned_flags(["def", "zzznope"])
     assert flags.get("def") is True and "zzznope" not in flags
     q = "get_heap override"
+    doc = warm.search(q, 1).collect()[0]["doc_id"]
     pairs = [
         (cold.boolean_search(q, must=["def"], n=10 ** 6),
          warm.boolean_search(q, must=["def"], n=10 ** 6)),
@@ -547,15 +553,56 @@ def test_warmed_dictionary_paths_match_collect_paths(spark, corpus, tmp_path):
         (cold.query_string("re* get_heap", 50),
          warm.query_string("re* get_heap", 50)),
     ]
-    for a, b in pairs:
+    # the scoring consumers of the dictionary, on a query that scores
+    scored = [
+        (cold.search(q, 50), warm.search(q, 50)),
+        (cold.score_explain(q, doc), warm.score_explain(q, doc)),
+    ] + [(cold.search_similarity(q, m, 20), warm.search_similarity(q, m, 20))
+         for m in IndexSearcher.SIMILARITIES]
+    for a, b in pairs + scored:
         assert [tuple(r) for r in a.collect()] == \
             [tuple(r) for r in b.collect()]
+    assert all(b.count() for _, b in scored)
+    batch = [q, "def return import", "zzznope", "override"]
+    want = warm.search_batch_pandas(batch, 5)
+    assert len(want) and cold.search_batch_pandas(batch, 5).equals(want)
+    terms = ["def", "get_heap", "override", "zzznope"]
+    assert cold.collection_tf(terms) == warm.collection_tf(terms)
+    assert set(warm.collection_tf(terms)) == {"get_heap", "override"}
     assert cold._expand_clause("prefix", "re", None) == \
         warm._expand_clause("prefix", "re", None)
-    assert cold.explain("def zzznope import") == \
-        warm.explain("def zzznope import")
+    c_exp, w_exp = (s.explain("def zzznope import") for s in (cold, warm))
+    c_plan, w_plan = c_exp.pop("plan"), w_exp.pop("plan")
+    assert c_exp == w_exp and c_exp["alpha_pruned_terms"] == ["def", "import"]
+    assert (c_plan.pop("executor"), w_plan.pop("executor")) == \
+        ("colocated-units", "driver")
+    c_plan.pop("interactive_local_eligible")
+    w_plan.pop("interactive_local_eligible")
+    assert c_plan == w_plan
     assert cold.term_meta(["def", "import"]) == \
         warm.term_meta(["def", "import"])
+    assert cold._dictionary.map is None
+    lookups = [
+        lambda s: s.term_meta(["def", "import", "zzznope"]),
+        lambda s: s._pruned_flags(["def", "override"]),
+        lambda s: s.explain("def get_heap zzznope"),
+        lambda s: s._expand_clause("prefix", "re", None),
+        lambda s: s.collection_tf(["get_heap", "def"]),
+        lambda s: s._terms_from_counts({"get_heap": 1, "def": 2}),
+        lambda s: s._dictionary.lookup(["def", "override"], live=False),
+        lambda s: s._dictionary.prefix("ov", 5),
+    ]
+    fresh = IndexSearcher(spark, root)     # loads lazily, on first lookup
+    for i, call in enumerate(lookups):
+        for s, most in ((fresh, 0), (warm, 0), (cold, 1)):
+            with spark_jobs() as jobs:
+                call(s)
+            assert len(jobs) <= most, (i, most, jobs)
+    with spark_jobs() as jobs:
+        warm.search(q, 10).collect()
+        warm.search_similarity(q, "lmjm", 10).collect()
+        warm.score_explain(q, doc)
+    assert jobs == []
     # overflow parity: the bisect path refuses exactly like limit(cap+1)
     with pytest.raises(ValueError, match="more than"):
         warm.prefix_search("d", max_terms=1)

@@ -3,14 +3,17 @@
 from __future__ import annotations
 
 import json
+import threading
+import time
 
 import pandas as pd
 import pytest
 
-from data_text_search_spark.config import BM25Config
+from data_text_search_spark.config import BM25Config, IndexPaths
 from data_text_search_spark.fixtures.corpus import corpus_pandas
 from data_text_search_spark.operators.index_build import build_index, load_manifest
 from data_text_search_spark.operators.index_query import IndexSearcher
+from data_text_search_spark.streaming import incremental
 from data_text_search_spark.streaming.incremental import (
     add_documents,
     merge_segments,
@@ -632,3 +635,70 @@ def test_new_searcher_after_merge_sees_new_dictionary(spark, tmp_path,
     s = IndexSearcher(spark, root)
     assert s.search("epsilon", 50).count() == 5
     assert s.search("gamma", 50).count() == 10
+
+
+@pytest.mark.parametrize("fail", ["term_stats", "postings"])
+def test_failed_segment_encode_leaves_nothing_running(spark, tmp_path,
+                                                      monkeypatch, fail):
+    """The segment's term_stats write (or its postings write) raises
+    while the doc_stats and tokenized writes are still running on their
+    background threads: add_documents re-raises only once those are
+    done, commits no segment, unpersists the delta's cached pairs, and
+    a retry in the same process equals a clean append."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    delta_pdf = pd.DataFrame({
+        "doc_id": [100000, 100001, 100002],
+        "content": ["flibbertigibbet widget factory " * 3,
+                    "return import def class", "widget quantum spill"]})
+    root = _base(spark, tmp_path)
+    base = load_manifest(root)
+    paths = IndexPaths(root)
+    real = DataFrameWriter.parquet
+    writers: list[threading.Thread] = []
+
+    def parquet(self, path, *args, **kwargs):
+        if path in (paths.doc_stats_seg(0), paths.tokenized_seg(0)):
+            writers.append(threading.current_thread())
+            time.sleep(3)          # still writing when the chain fails
+        if fail == "term_stats" and path == paths.term_stats_seg(0):
+            raise RuntimeError("injected segment failure")
+        return real(self, path, *args, **kwargs)
+
+    def write_postings(*args, **kwargs):
+        raise RuntimeError("injected segment failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    if fail == "postings":
+        monkeypatch.setattr(incremental, "write_postings", write_postings)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="injected segment failure"):
+        add_documents(spark, root, spark.createDataFrame(delta_pdf),
+                      id_col="doc_id")
+    assert len(writers) == 2
+    assert not any(t.is_alive() for t in writers)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
+    m = load_manifest(root)
+    assert "segments" not in m and m["n_docs"] == base["n_docs"]
+    monkeypatch.undo()
+    got = add_documents(spark, root, spark.createDataFrame(delta_pdf),
+                        id_col="doc_id")
+    (tmp_path / "clean").mkdir()
+    clean = _base(spark, tmp_path / "clean")
+    want = add_documents(spark, clean, spark.createDataFrame(delta_pdf),
+                         id_col="doc_id")
+
+    def no_seconds(entries):
+        return [{k: v for k, v in e.items() if k != "seconds"}
+                for e in entries]
+    assert no_seconds(got["segments"]) == no_seconds(want["segments"])
+    assert (no_seconds(got["groups_state"].values())
+            == no_seconds(want["groups_state"].values()))
+    assert got["n_docs"] == want["n_docs"]
+    rows = []
+    for r in (clean, root):
+        s = IndexSearcher(spark, r)
+        rows.append([[(x["doc_id"], x["score"])
+                      for x in s.search(q, 5).collect()]
+                     for q in ("flibbertigibbet", "widget return", "quantum")])
+    assert rows[0] == rows[1] and rows[0][0]

@@ -238,21 +238,22 @@ def test_warm_gates_on_the_dictionary_it_collects(spark, tmp_path,
     build_index(spark, df, root, BM25Config(alpha=0.0), id_col="doc_id",
                 shards=2, groups=1)
     s = IndexSearcher(spark, root)
-    n_live, n_all = s.term_stats.count(), s._term_stats_all.count()
+    n_live, n_all = s.term_stats.count(), s._dictionary.all.count()
     assert (n_live, n_all) == (n, n + 30)
     s.DRIVER_TERM_CACHE_MAX = n_live + 10      # live < budget < all
     with spark_jobs() as jobs:
         s.warm()
-    assert s._term_map is None and s._meta_map is None
+    assert s._dictionary.map is None
     assert len(jobs) <= 3
     assert s.search_local("uniq7 common3", 5)["doc_id"].tolist() == [7]
-    # within budget both driver maps are built from the one collect
+    # within budget the one driver map holds every term, pruned flagged
     s2 = IndexSearcher(spark, root)
     s2.DRIVER_TERM_CACHE_MAX = n_all
     with spark_jobs() as jobs:
         s2.warm()
     assert len(jobs) <= 3
-    assert len(s2._term_map) == n_live and len(s2._meta_map) == n_all
+    m = s2._dictionary.map
+    assert sum(not e[3] for e in m.values()) == n_live and len(m) == n_all
 
 
 def _fuzzy_parity(spark, searcher_, corpus_df_, q, mm=1):
@@ -286,7 +287,7 @@ def test_index_backed_fuzzy_covers_pruned_terms(spark, corpus, tmp_path):
     s = IndexSearcher(spark, root)
     # sanity: the cutoff actually pruned something hot
     pruned = {r["term"] for r in
-              s._term_stats_all.filter("pruned").select("term").collect()}
+              s._dictionary.all.filter("pruned").select("term").collect()}
     assert pruned, "alpha=1.0 should prune hot terms on this corpus"
     probe = sorted(pruned)[0]
     for q in [probe, probe + "x", "retur " + probe]:

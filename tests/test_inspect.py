@@ -167,11 +167,20 @@ def test_profile_matches_search(spark, corpus, tmp_path):
                 shards=4, groups=1)
     s = IndexSearcher(spark, root)
     s.warm()
-    prof = s.profile("hash join table scan", 5)
-    assert set(prof["timings_ms"]) >= {"parse_ms", "dictionary_ms",
-                                       "kernel_job_ms", "merge_ms"}
-    want = [(r["doc_id"], r["score"])
-            for r in s.search("hash join table scan", 5).collect()]
-    got = [(r["doc_id"], r["score"]) for r in prof["rows"]]
-    assert got == want
+    q = "hash join table scan"
+    want = [(r["doc_id"], r["score"]) for r in s.search(q, 5).collect()]
+    # both sides of the `_driver_answers` gate: profile() takes the path
+    # search() takes and reports it as explain() does
+    for local_max, executor in ((s.LOCAL_MAX_POSTINGS, "driver"),
+                                (0, "colocated-units")):
+        s.LOCAL_MAX_POSTINGS = local_max
+        prof = s.profile(q, 5)
+        assert set(prof["timings_ms"]) >= {"parse_ms", "dictionary_ms",
+                                           "kernel_job_ms", "merge_ms"}
+        assert prof["executor"] == s.explain(q, 5)["plan"]["executor"] \
+            == executor
+        got = [(r["doc_id"], r["score"]) for r in prof["rows"]]
+        assert got == want
+        assert got == [(r["doc_id"], r["score"])
+                       for r in s.search(q, 5).collect()]
     assert s.profile("zzznope", 5)["rows"] == []

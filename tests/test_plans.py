@@ -177,7 +177,7 @@ def test_batch_grid_shapes_all_agree(spark, corpus, tmp_path_factory):
     queries = ["zyzzyva obelisk", "return import", "def class", "obelisk",
                "import return def", ""]
     def pin_shape(tq, td):
-        def _stub(qterms, n_units, k=10):
+        def _stub(qterms, dfs, n_units, k=10):
             qids = sorted(qterms, key=lambda q: (tuple(sorted(qterms[q])), q))
             step = max(-(-len(qids) // tq), 1)
             groups = ([qids[i:i + step] for i in range(0, len(qids), step)]

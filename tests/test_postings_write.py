@@ -8,6 +8,8 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import threading
+import time
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -283,6 +285,44 @@ def test_failed_postings_write_marks_nothing_done(spark, corpus, tmp_path,
     assert m["groups_state"] == {}
     assert m["stages"]["term_stats"]["status"] == "done"
     monkeypatch.setattr(index_build, "_encode_shard_factory", factory)
+    m = build_index(spark, corpus, root, cfg, id_col="doc_id",
+                    shards=shards, groups=groups)
+    assert m["complete"]
+    assert _groups_state(m) == PINNED["f64_4x2"]["groups_state"]
+    assert _search(spark, root) == PINNED["f64_4x2"]["search"]
+
+
+def test_failed_term_stats_write_joins_doc_stats(spark, corpus, tmp_path,
+                                                 monkeypatch):
+    """The term_stats stage raises while the doc_stats write is still
+    running on its background thread: build_index re-raises only once
+    that thread is done, commits no stage after the checkpoint, and a
+    retry in the same process gives the clean build's stats and rows."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    cfg, shards, groups = CONFIGS["f64_4x2"]
+    root = str(tmp_path / "idx")
+    paths = IndexPaths(root)
+    real = DataFrameWriter.parquet
+    writers: list[threading.Thread] = []
+
+    def parquet(self, path, *args, **kwargs):
+        if path == paths.doc_stats:
+            writers.append(threading.current_thread())
+            time.sleep(3)           # still writing when term_stats fails
+        if path == paths.term_stats:
+            raise RuntimeError("injected term_stats failure")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(RuntimeError, match="injected term_stats failure"):
+        build_index(spark, corpus, root, cfg, id_col="doc_id",
+                    shards=shards, groups=groups)
+    assert writers and not any(t.is_alive() for t in writers)
+    m = load_manifest(root)
+    assert not m.get("complete") and m["groups_state"] == {}
+    assert set(m["stages"]) == {"tokenized"}
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
     m = build_index(spark, corpus, root, cfg, id_col="doc_id",
                     shards=shards, groups=groups)
     assert m["complete"]

@@ -192,7 +192,8 @@ def test_collection_tf_fast_path_matches_job(searcher, stats):
     agree term for term (the round-6 fast path changes the execution,
     never the value)."""
     present = sorted(stats["cf"], key=lambda t: -stats["cf"][t])[:3]
-    fast = searcher._cf_from_stats(present)
+    assert not searcher.manifest.get("segments")   # the fast path runs
+    fast = searcher.collection_tf(present)
     job = searcher._cf_from_postings(present)
     assert fast == job == {t: stats["cf"][t] for t in present}
 
