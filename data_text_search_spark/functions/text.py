@@ -148,20 +148,21 @@ _TOKTF_SCHEMA = StructType([
 ])
 
 
-@F.pandas_udf(_TOKTF_SCHEMA)
-def tokenize_tf_pandas_udf(texts: pd.Series) -> pd.DataFrame:
-    """Tokenize AND pre-aggregate term frequencies per document in one
-    Arrow batch (SURVEY §2 A2 scale note): emitting unique (term, tf)
-    pairs instead of raw tokens cuts the exploded row count ~2-3x, removes
-    the (term, doc) groupBy shuffle entirely (pairs are already unique per
-    doc), and keeps the string-heavy work in Python processes that scale
-    with cores instead of JVM allocation/GC. Pairs are term-sorted so
-    downstream float summation order is deterministic.
+def tokenize_tf(texts: pd.Series) -> pd.DataFrame:
+    """Tokenize AND pre-aggregate term frequencies per document: per
+    text, its term-sorted unique (term, tf) pairs, doc_len and n_chars.
+    Emitting unique pairs instead of raw tokens (SURVEY §2 A2 scale
+    note) cuts the exploded row count ~2-3x and removes the (term, doc)
+    groupBy shuffle entirely (pairs are already unique per doc); sorted
+    pairs keep downstream float summation order deterministic.
 
     n_chars = len(' '.join(tokens)) = Σ tf·len(term) + max(doc_len−1, 0)
     (the reference's fuzzy denominator, spacy_search_funcs.py:34,100-104)
     is computed here, while the token counts are already in hand, so
-    doc_stats never re-decodes the checkpoint's pairs column for it."""
+    doc_stats never re-decodes the checkpoint's pairs column for it.
+
+    Pure pandas: executors run it as tokenize_tf_pandas_udf, and the
+    driver segment writer (streaming.incremental) calls it directly."""
     from collections import Counter
 
     pairs_out, dlen_out, nch_out = [], [], []
@@ -175,6 +176,14 @@ def tokenize_tf_pandas_udf(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"pairs": pairs_out,
                          "doc_len": pd.Series(dlen_out, dtype="int32"),
                          "n_chars": pd.Series(nch_out, dtype="int64")})
+
+
+@F.pandas_udf(_TOKTF_SCHEMA)
+def tokenize_tf_pandas_udf(texts: pd.Series) -> pd.DataFrame:
+    """tokenize_tf over Arrow batches on the executors: the string-heavy
+    work stays in Python processes that scale with cores instead of JVM
+    allocation/GC."""
+    return tokenize_tf(texts)
 
 
 @F.pandas_udf(StringType())

@@ -26,7 +26,7 @@ from __future__ import annotations
 from collections import Counter
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_text_search_spark.config import BM25Config
@@ -91,6 +91,14 @@ def ingest(corpus: DataFrame, text_col: str = "content",
     )
 
 
+def idf_expr(n_docs: int) -> Column:
+    """THE unsmoothed Robertson idf of a `df` column over `n_docs`
+    documents (bm25_functions.py:94; may be negative): the logical
+    index, the base build and every segment writer compute it here."""
+    return (F.log(F.lit(float(n_docs)) - F.col("df") + 0.5)
+            - F.log(F.col("df") + 0.5))
+
+
 @dataclass
 class LogicalIndex:
     """DataFrame-backed logical index (no physical posting layout)."""
@@ -131,11 +139,7 @@ def build_logical(prepared: DataFrame, config: BM25Config = BM25Config(),
     term_stats = (
         term_doc.groupBy("term")
         .agg(F.count("*").alias("df"))
-        .withColumn(
-            "idf",
-            F.log(F.lit(float(n_docs)) - F.col("df") + 0.5)
-            - F.log(F.col("df") + 0.5),
-        )
+        .withColumn("idf", idf_expr(n_docs))
         .filter(F.col("idf") > F.lit(config.alpha))
     )
     if persist:

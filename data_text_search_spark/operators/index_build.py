@@ -76,7 +76,7 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_text_search_spark.config import BM25Config, IndexPaths
@@ -84,7 +84,7 @@ from data_text_search_spark.functions.text import (
     TOKEN_PATTERN,
     tokenize_tf_pandas_udf,
 )
-from data_text_search_spark.operators.bm25_exhaustive import ingest
+from data_text_search_spark.operators.bm25_exhaustive import idf_expr, ingest
 
 POSTINGS_SCHEMA = (
     "term string, shard int, block_id int, first_doc_id long, last_doc_id long, "
@@ -283,6 +283,53 @@ def doc_stats_df(pairs_df: DataFrame) -> DataFrame:
     return pairs_df.select("doc_id", "doc_len", "shard", "n_chars")
 
 
+def shard_expr(shards: int) -> Column:
+    """THE document shard: pmod(xxhash64(doc_id), shards)."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(shards)).cast("int")
+
+
+def term_bucket_expr(term_buckets: int) -> Column:
+    """THE term bucket of a term_stats or postings row."""
+    return F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int")
+
+
+def with_term_stats(counts: DataFrame, n_docs: int, alpha: float,
+                    stopwords, term_buckets: int) -> DataFrame:
+    """(term, df, cf) rows with THE dictionary columns of `n_docs`
+    documents added: the unsmoothed Robertson idf, the `pruned` flag
+    (idf at or below the alpha cutoff, or a stopword) and the term
+    bucket — the base build, the Spark segment encode and the driver
+    segment writer all compute them here."""
+    return (counts
+            .withColumn("idf", idf_expr(n_docs))
+            .withColumn("pruned",
+                        ~(F.col("idf") > F.lit(alpha))
+                        | (F.col("term").isin(list(stopwords))
+                           if stopwords else F.lit(False)))
+            .withColumn("term_bucket", term_bucket_expr(term_buckets)))
+
+
+def impact_expr(manifest: dict) -> Column:
+    """THE per-posting BM25 impact of (idf, tf, doc_len) under the
+    manifest's k1, b and avgdl — the operand order the compact codec's
+    query kernel repeats to recompute it bit-identically."""
+    cfg = manifest["config"]
+    k1, b, avgdl = cfg["k1"], cfg["b"], manifest["avgdl"]
+    return (F.col("idf") * F.col("tf") * F.lit(k1 + 1)
+            / (F.col("tf") + F.lit(k1)
+               * (1 - b + b * F.col("doc_len") / F.lit(avgdl))))
+
+
+def arrow_schema(ddl: str):
+    """The pyarrow schema of a Spark DDL schema string: the column types
+    a Spark parquet write of that schema stores. The driver segment
+    writer writes its files with these, so every reader sees one set of
+    types whichever path wrote a segment."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+    return to_arrow_schema(_parse_datatype_string(ddl))
+
+
 def _encode_shard_factory(block_size: int, impact_codec: str = "f64"):
     """applyInPandas kernel: one pandas group per shard → posting blocks.
 
@@ -398,14 +445,9 @@ def write_postings(td: DataFrame, live_stats: DataFrame, manifest: dict,
     The write overwrites partitions dynamically, so the files of groups
     not listed (done before a resume) are left as they are."""
     cfg = manifest["config"]
-    k1, b, avgdl = cfg["k1"], cfg["b"], manifest["avgdl"]
     shards, subshards = manifest["shards"], manifest["subshards"]
     enc = (td.join(live_stats.select("term", "idf"), "term")
-           .withColumn(
-               "impact",
-               F.col("idf") * F.col("tf") * F.lit(k1 + 1)
-               / (F.col("tf") + F.lit(k1)
-                  * (1 - b + b * F.col("doc_len") / F.lit(avgdl))))
+           .withColumn("impact", impact_expr(manifest))
            .select("term", "doc_id", "tf", "impact", "shard",
                    *(["doc_len"] if cfg["impact_codec"] == "compact"
                      else [])))
@@ -427,8 +469,7 @@ def write_postings(td: DataFrame, live_stats: DataFrame, manifest: dict,
                                                    cfg["impact_codec"]),
                              schema=POSTINGS_SCHEMA)
               .withColumn("term_bucket",
-                          F.pmod(F.xxhash64("term"),
-                                 F.lit(manifest["term_buckets"])).cast("int"))
+                          term_bucket_expr(manifest["term_buckets"]))
               .withColumn("spart",
                           F.pmod(F.col("shard"), F.lit(subshards)).cast("int")))
     if groups is not None:
@@ -594,8 +635,7 @@ def build_index(
             # from the source index's layout) and checkpoint
             tp_df = tokenized_pairs
             (tp_df
-             .withColumn("shard", F.pmod(F.xxhash64("doc_id"),
-                                         F.lit(shards)).cast("int"))
+             .withColumn("shard", shard_expr(shards))
              .select("doc_id", "shard", "pairs", "doc_len", "n_chars")
              .observe(tk_obs, F.count(F.lit(1)).alias("n"),
                       F.sum("doc_len").alias("len"))
@@ -605,7 +645,7 @@ def build_index(
                           clean=config.clean, materialize_tokens=False)
             (prep.select(
                 "doc_id", tokenize_tf_pandas_udf("prepared").alias("s"),
-                F.pmod(F.xxhash64("doc_id"), F.lit(shards)).cast("int").alias("shard"))
+                shard_expr(shards).alias("shard"))
              .select("doc_id", "shard", F.col("s.pairs").alias("pairs"),
                      F.col("s.doc_len").alias("doc_len"),
                      F.col("s.n_chars").alias("n_chars"))
@@ -682,18 +722,10 @@ def build_index(
             # the column only while the manifest lists no segments — and
             # merge_segments rebuilds term_stats through this stage, making
             # cf fresh again.
-            (td.groupBy("term")
-             .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-             .withColumn(
-                 "idf",
-                 F.log(F.lit(float(n_docs)) - F.col("df") + 0.5)
-                 - F.log(F.col("df") + 0.5))
-             .withColumn("pruned",
-                         ~(F.col("idf") > F.lit(config.alpha))
-                         | (F.col("term").isin(list(config.stopwords))
-                            if config.stopwords else F.lit(False)))
-             .withColumn("term_bucket",
-                         F.pmod(F.xxhash64("term"), F.lit(tp)).cast("int"))
+            (with_term_stats(
+                td.groupBy("term").agg(F.count("*").alias("df"),
+                                       F.sum("tf").alias("cf")),
+                n_docs, config.alpha, config.stopwords, tp)
              .observe(ts_obs, F.avg(F.when(~F.col("pruned"), F.col("idf")))
                       .alias("avg_idf"))
              .write.mode("overwrite").parquet(paths.term_stats))

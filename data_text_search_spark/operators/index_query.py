@@ -1956,7 +1956,16 @@ class IndexSearcher:
         frequency (popularity), term asc tie-break. Dictionary-sized
         lookup — the corpus is never touched; alpha-pruned terms are
         excluded (suggesting a term the index cannot score is
-        unhelpful — unlike fuzzy/spell, which match ALL terms)."""
+        unhelpful — unlike fuzzy/spell, which match ALL terms). In the
+        dictionary budget it is ranked on the driver and returned as a
+        frame built from pandas, whose collect() runs no Spark job."""
+        top = self._dictionary.top_by_df(prefix, n)
+        if top is not None:
+            # no match is a placeholder row cut by limit(0), as in
+            # _top_frame: an empty pandas frame would collect with a job
+            return self.spark.createDataFrame(
+                pd.DataFrame(top or [("", 0)], columns=["term", "df"]),
+                "term string, df long").limit(len(top))
         esc = re.escape(prefix)
         return (self.term_stats
                 .filter(F.col("term").rlike(f"^{esc}"))

@@ -63,6 +63,7 @@ from data_text_search_spark.functions.text import (
     _TOKEN_RE,
     tokenize_py,
 )
+from data_text_search_spark.operators.index_build import shard_expr
 
 BLOCK_SIZE = 128
 
@@ -186,9 +187,7 @@ def _write_position_blocks(spark: SparkSession, corpus: DataFrame,
     rows = (corpus.select(F.col(id_col).alias("doc_id"),
                           F.col(text_col).cast("string").alias("text"))
             .mapInPandas(_tokenize_positions_rows(), schema=_ROWS_SCHEMA)
-            .withColumn("shard",
-                        F.pmod(F.xxhash64("doc_id"),
-                               F.lit(S)).cast("int")))
+            .withColumn("shard", shard_expr(S)))
     obs = Observation()
     (rows.repartition(S, "shard")
      .groupBy("shard")

@@ -17,6 +17,7 @@ counts for federated df, prefix expansion and clause gating, but
 from __future__ import annotations
 
 import bisect
+import heapq
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import SparkSession
@@ -125,3 +126,19 @@ class TermDictionary:
                 .filter(F.col("term").startswith(p)).limit(cap + 1).collect())
         return {r["term"]: bool(r["pruned"])
                 for r in sorted(rows, key=lambda r: r["term"])}
+
+    def top_by_df(self, p: str, n: int) -> list[tuple[str, int]] | None:
+        """The `n` live terms starting with `p` of highest df (then term
+        order), as (term, df), ranked on the driver over the map's
+        prefix range; None when the dictionary is over budget."""
+        if not self.load():
+            return None
+        if self._sorted is None:
+            self._sorted = sorted(self.map)
+        st, m = self._sorted, self.map
+        i = j = bisect.bisect_left(st, p)
+        while j < len(st) and st[j].startswith(p):
+            j += 1
+        return [(t, m[t][1]) for t in heapq.nsmallest(
+            max(n, 0), (t for t in st[i:j] if not m[t][3]),
+            key=lambda t: (-m[t][1], t))]

@@ -19,6 +19,14 @@ Semantics and their honesty budget:
   corpus, which wipes the index root including all segment dirs (a
   resume=True call on a complete manifest is intentionally a no-op).
 
+Small writes run on the driver with no Spark job: a local delta of at
+most DRIVER_SEGMENT_MAX_DOCS documents, a merge_tier of that many, and
+a delete by a list of ids. The driver segment writer writes the same
+four directories as the Spark encode, from the same tokenizer, formula
+expressions and block encoder, under the same intent/commit protocol;
+larger deltas, file and streaming sources, and every non-local root
+take the Spark path.
+
 `stream_ingest` wires this into Structured Streaming: a file-source
 readStream over a corpus directory, foreachBatch → add_documents, so
 new parquet drops become queryable segments with checkpointed exactly-
@@ -27,30 +35,62 @@ once batch tracking.
 
 from __future__ import annotations
 
+import hashlib
 import time
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_text_search_spark.config import BM25Config, IndexPaths
 from data_text_search_spark.operators.bm25_exhaustive import ingest
 from data_text_search_spark.operators.index_build import (
+    POSTINGS_SCHEMA,
     TERM_STATS_SCHEMA,
     TOKENIZED_SCHEMA,
+    _encode_shard_factory,
     _write_manifest_atomic,
+    arrow_schema,
     committed_doc_stats_paths,
     committed_term_stats_paths,
     committed_tombstone_paths,
     doc_stats_df,
+    impact_expr,
     in_background,
     load_manifest,
+    shard_expr,
+    with_term_stats,
     write_postings,
 )
-from data_text_search_spark.functions.text import tokenize_tf_pandas_udf
+from data_text_search_spark.operators.index_query import (
+    _arrow_fs,
+    _list_parquet,
+)
+from data_text_search_spark.functions.text import (
+    tokenize_tf,
+    tokenize_tf_pandas_udf,
+)
+from data_text_search_spark.sources import fsio
+
+# THE driver-write gate: a delta (add_documents) or a set of segments
+# (merge_tier) of at most this many documents, on a local index root,
+# is written on the driver with no Spark job (_write_segment_on_driver);
+# anything larger, and every delta that is not a local relation, takes
+# the Spark encode. The crossover, measured on a 3,000-doc base built
+# from perfbench's generator (4 cores, 15 GB; medians of 6 adds and 3
+# merge_tier calls of two such adds per size, driver vs Spark, seconds):
+#   docs per add     60    250   1000  1500  2000  3000
+#   add_documents    0.30  0.48  1.25  1.69  1.84  2.87  (driver)
+#                    2.11  2.09  2.36  2.98  2.49  2.65  (Spark)
+#   merge_tier docs  120   500   2000  3000  4000  6000
+#   merge_tier       0.33  0.61  1.79  2.39  2.81  4.42  (driver)
+#                    1.44  1.53  2.00  2.31  1.90  2.10  (Spark)
+# Both cross between 2,000 and 3,000 documents.
+DRIVER_SEGMENT_MAX_DOCS = 2000
 
 
 def _wipe_segment_dirs(paths: IndexPaths, seg_id: int) -> None:
-    from data_text_search_spark.sources import fsio
     for d in (paths.postings_seg(seg_id), paths.doc_stats_seg(seg_id),
               paths.term_stats_seg(seg_id), paths.tokenized_seg(seg_id)):
         fsio.delete(d)
@@ -113,71 +153,32 @@ def add_documents(spark: SparkSession, root: str, new_corpus: DataFrame,
     t0 = time.perf_counter()
     prep = ingest(new_corpus, text_col=text_col, id_col=id_col,
                   clean=cfg["clean"], materialize_tokens=False)
-    # pairs (pre-explode) is the unit of truth: zero-token docs are rows
-    # here (pairs=[], doc_len=0) and must reach n_docs/doc_stats, exactly
-    # like the base build
-    pairs_df = (prep.select(
-        "doc_id", tokenize_tf_pandas_udf("prepared").alias("s"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(shards)).cast("int").alias("shard"))
-        .select("doc_id", "shard", F.col("s.pairs").alias("pairs"),
-                F.col("s.doc_len").alias("doc_len"),
-                F.col("s.n_chars").alias("n_chars"))).persist()
+    rows = prep.select("doc_id", "prepared", shard_expr(shards).alias("shard"))
+    local = _local_rows(rows) if fsio.is_local(root) else None
+
     def _abort(msg: str):
         manifest.pop("pending", None)
         _write_manifest_atomic(paths.manifest, manifest)
         raise ValueError(msg)
 
-    try:
-        # ONE integrity job: the duplicate-id check and the
-        # already-present check ride the same aggregate (doc_stats ids are
-        # unique, so the marker left join is row-preserving) — the
-        # round-6-start shape paid two serial job floors here per append
-        existing = (spark.read.schema("doc_id long").parquet(
-            *committed_doc_stats_paths(root, manifest))
-            .withColumn("_ex", F.lit(1)))
-        row = (pairs_df.join(existing, "doc_id", "left")
-               .agg(F.count("*").alias("n"),
-                    F.countDistinct("doc_id").alias("nd"),
-                    F.count("_ex").alias("ndup")).first())
-        n_new = int(row["n"] or 0)
-        if int(row["nd"] or 0) != n_new:
-            _abort("delta contains duplicate doc_ids")
-        n_dup = int(row["ndup"] or 0)
-        if n_dup:
-            # a tombstoned id is still physically present (postings +
-            # stats) until merge_segments purges it — re-adding before the
-            # purge would strand TWO posting sets behind one doc_id
-            tpaths = committed_tombstone_paths(root, manifest)
-            n_tomb = 0
-            if tpaths:
-                n_tomb = pairs_df.join(
-                    spark.read.schema("doc_id long").parquet(*tpaths),
-                    "doc_id").count()
-            hint = (f" ({n_tomb} of them are tombstoned — run "
-                    "merge_segments to purge deletions, then re-add)"
-                    if n_tomb else "; dedup upstream or rebuild")
-            _abort(
-                f"{n_dup} delta doc_ids already exist in the index — "
-                f"re-adding would double their postings{hint}")
-        if n_new == 0:
-            # empty delta: no segment (a zero-doc segment would commit
-            # parts-less parquet dirs that break readers' schema inference
-            # — the same class append_positions_segment guards against);
-            # clear the intent, still record the batch key so a replayed
-            # empty micro-batch stays idempotent
-            if batch_key is not None:
-                manifest.setdefault("applied_batches", []).append(batch_key)
-            manifest.pop("pending", None)
-            _write_manifest_atomic(paths.manifest, manifest)
-            return manifest
-        n_total = n_old + n_new
-
-        new_terms = _encode_segment(
-            spark, paths, manifest, pairs_df, seg_id, n_total,
-            committed_term_stats_paths(root, manifest))
-    finally:
-        # on every path — abort, empty delta, a failed encode, success
-        pairs_df.unpersist()
+    if local is None:
+        n_new, new_terms = _append_with_spark(spark, root, manifest, rows,
+                                              seg_id, _abort)
+    else:
+        n_new, new_terms = _append_on_driver(spark, root, manifest, local,
+                                             seg_id, _abort)
+    if n_new == 0:
+        # empty delta: no segment (a zero-doc segment would commit
+        # parts-less parquet dirs that break readers' schema inference
+        # — the same class append_positions_segment guards against);
+        # clear the intent, still record the batch key so a replayed
+        # empty micro-batch stays idempotent
+        if batch_key is not None:
+            manifest.setdefault("applied_batches", []).append(batch_key)
+        manifest.pop("pending", None)
+        _write_manifest_atomic(paths.manifest, manifest)
+        return manifest
+    n_total = n_old + n_new
 
     # COMMIT POINT: one atomic manifest write makes the segment visible,
     # records the batch key, and clears the pending intent together
@@ -194,6 +195,102 @@ def add_documents(spark: SparkSession, root: str, new_corpus: DataFrame,
     manifest.pop("pending", None)
     _write_manifest_atomic(paths.manifest, manifest)
     return manifest
+
+
+def _check_delta(n_new: int, n_distinct: int, n_dup: int,
+                 count_tombstoned, abort) -> None:
+    """The integrity rules of an append, on either path: no doc_id twice
+    in the delta, and none already in the index."""
+    if n_distinct != n_new:
+        abort("delta contains duplicate doc_ids")
+    if n_dup:
+        # a tombstoned id is still physically present (postings +
+        # stats) until merge_segments purges it — re-adding before the
+        # purge would strand TWO posting sets behind one doc_id
+        n_tomb = count_tombstoned()
+        hint = (f" ({n_tomb} of them are tombstoned — run "
+                "merge_segments to purge deletions, then re-add)"
+                if n_tomb else "; dedup upstream or rebuild")
+        abort(f"{n_dup} delta doc_ids already exist in the index — "
+              f"re-adding would double their postings{hint}")
+
+
+def _append_with_spark(spark: SparkSession, root: str, manifest: dict,
+                       rows: DataFrame, seg_id: int, abort
+                       ) -> tuple[int, int]:
+    """add_documents' Spark path: tokenize on the executors, check,
+    encode and write the segment with Spark jobs. Returns (documents,
+    new terms)."""
+    # pairs (pre-explode) is the unit of truth: zero-token docs are rows
+    # here (pairs=[], doc_len=0) and must reach n_docs/doc_stats, exactly
+    # like the base build
+    pairs_df = (rows.select(
+        "doc_id", tokenize_tf_pandas_udf("prepared").alias("s"), "shard")
+        .select("doc_id", "shard", F.col("s.pairs").alias("pairs"),
+                F.col("s.doc_len").alias("doc_len"),
+                F.col("s.n_chars").alias("n_chars"))).persist()
+    try:
+        # ONE integrity job: the duplicate-id check and the
+        # already-present check ride the same aggregate (doc_stats ids are
+        # unique, so the marker left join is row-preserving) — the
+        # round-6-start shape paid two serial job floors here per append
+        existing = (spark.read.schema("doc_id long").parquet(
+            *committed_doc_stats_paths(root, manifest))
+            .withColumn("_ex", F.lit(1)))
+        row = (pairs_df.join(existing, "doc_id", "left")
+               .agg(F.count("*").alias("n"),
+                    F.countDistinct("doc_id").alias("nd"),
+                    F.count("_ex").alias("ndup")).first())
+        n_new = int(row["n"] or 0)
+
+        def count_tombstoned() -> int:
+            tpaths = committed_tombstone_paths(root, manifest)
+            return pairs_df.join(
+                spark.read.schema("doc_id long").parquet(*tpaths),
+                "doc_id").count() if tpaths else 0
+
+        _check_delta(n_new, int(row["nd"] or 0), int(row["ndup"] or 0),
+                     count_tombstoned, abort)
+        if n_new == 0:
+            return 0, 0
+        return n_new, _encode_segment(
+            spark, IndexPaths(root), manifest, pairs_df, seg_id,
+            manifest["n_docs"] + n_new,
+            committed_term_stats_paths(root, manifest))
+    finally:
+        # on every path — abort, empty delta, a failed encode, success
+        pairs_df.unpersist()
+
+
+def _append_on_driver(spark: SparkSession, root: str, manifest: dict,
+                      local: pd.DataFrame, seg_id: int, abort
+                      ) -> tuple[int, int]:
+    """add_documents' driver path for a small local delta (`local`:
+    doc_id, prepared, shard): the same tokenizer, checks and segment as
+    the Spark path, with no Spark job. Returns (documents, new terms)."""
+    import pyarrow as pa
+
+    fs = _arrow_fs(root)[0]
+    toks = tokenize_tf(local["prepared"])
+    tok = pa.Table.from_pandas(pd.DataFrame({
+        "doc_id": local["doc_id"].astype("int64"),
+        "shard": local["shard"].astype("int32"),
+        "pairs": toks["pairs"], "doc_len": toks["doc_len"],
+        "n_chars": toks["n_chars"]}),
+        schema=arrow_schema(TOKENIZED_SCHEMA), preserve_index=False)
+    ids = tok["doc_id"].to_numpy()
+    n_new = len(ids)
+    _check_delta(
+        n_new, len(np.unique(ids)),
+        len(_ids_stored(fs, committed_doc_stats_paths(root, manifest), ids)),
+        lambda: len(_ids_stored(
+            fs, committed_tombstone_paths(root, manifest), ids)),
+        abort)
+    if n_new == 0:
+        return 0, 0
+    return n_new, _write_segment_on_driver(
+        spark, IndexPaths(root), manifest, tok, seg_id,
+        manifest["n_docs"] + n_new, committed_term_stats_paths(root, manifest))
 
 
 def delete_documents(spark: SparkSession, root: str, doc_ids,
@@ -237,39 +334,24 @@ def delete_documents(spark: SparkSession, root: str, doc_ids,
     manifest = load_manifest(root)
     if not manifest or not manifest.get("complete"):
         raise ValueError(f"no complete index at {root}")
-    if isinstance(doc_ids, DataFrame):
-        ids = (doc_ids.select(
-            F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
-            .dropDuplicates(["doc_id"]))
-    else:
-        # deduplicated on the driver and built from pandas: no
-        # dropDuplicates shuffle job for a handful of ids
-        import numpy as np
-        import pandas as pd
-        ids = spark.createDataFrame(
-            pd.DataFrame({"doc_id": np.unique(np.fromiter(
-                (int(i) for i in doc_ids), dtype=np.int64))}),
-            "doc_id long")
-    # pinned schemas: neither read runs a schema-inference job
-    existing = spark.read.schema("doc_id long").parquet(
-        *committed_doc_stats_paths(root, manifest))
-    live = ids.join(existing, "doc_id", "left_semi")
-    tpaths = committed_tombstone_paths(root, manifest)
-    if tpaths:
-        live = live.join(spark.read.schema("doc_id long").parquet(*tpaths),
-                         "doc_id", "left_anti")
     del_id = manifest.get("next_del_id", 0)
     out = paths.tombstones_del(del_id)
-    # the written row count rides the write itself (no read-back job),
-    # observed in the write's own stage: AQE replaces an empty shuffle
-    # stage whole, metrics included
-    written = Observation()
-    (live.repartition(1).sortWithinPartitions("doc_id")
-     .observe(written, F.count(F.lit(1)).alias("n"))
-     .write.mode("overwrite").parquet(out))
-    n_del = int(written.get["n"])
+    if isinstance(doc_ids, DataFrame) or not fsio.is_local(root):
+        n_del = _tombstone_with_spark(spark, root, manifest, doc_ids, out)
+    else:
+        # a list of ids is on the driver already: the writer's driver
+        # reads find the live ones, and one pyarrow file records them
+        import pyarrow as pa
+        ids = np.unique(np.fromiter((int(i) for i in doc_ids),
+                                    dtype=np.int64))
+        fs = _arrow_fs(root)[0]
+        live = np.setdiff1d(
+            _ids_stored(fs, committed_doc_stats_paths(root, manifest), ids),
+            _ids_stored(fs, committed_tombstone_paths(root, manifest), ids))
+        n_del = len(live)
+        if n_del:
+            _write_parquet(spark, out, pa.table({"doc_id": live}))
     if n_del == 0:
-        from data_text_search_spark.sources import fsio
         fsio.delete(out)
         return manifest
     # COMMIT POINT: one atomic manifest write makes the tombstones live
@@ -285,6 +367,40 @@ def delete_documents(spark: SparkSession, root: str, doc_ids,
     return manifest
 
 
+def _tombstone_with_spark(spark: SparkSession, root: str, manifest: dict,
+                          doc_ids, out: str) -> int:
+    """delete_documents' Spark path: write the live ids among `doc_ids`
+    (a DataFrame whose first column is the doc_id, or an iterable) to
+    `out`, sorted, in one file. Returns how many it wrote."""
+    if isinstance(doc_ids, DataFrame):
+        ids = (doc_ids.select(
+            F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
+            .dropDuplicates(["doc_id"]))
+    else:
+        # deduplicated on the driver and built from pandas: no
+        # dropDuplicates shuffle job for a handful of ids
+        ids = spark.createDataFrame(
+            pd.DataFrame({"doc_id": np.unique(np.fromiter(
+                (int(i) for i in doc_ids), dtype=np.int64))}),
+            "doc_id long")
+    # pinned schemas: neither read runs a schema-inference job
+    existing = spark.read.schema("doc_id long").parquet(
+        *committed_doc_stats_paths(root, manifest))
+    live = ids.join(existing, "doc_id", "left_semi")
+    tpaths = committed_tombstone_paths(root, manifest)
+    if tpaths:
+        live = live.join(spark.read.schema("doc_id long").parquet(*tpaths),
+                         "doc_id", "left_anti")
+    # the written row count rides the write itself (no read-back job),
+    # observed in the write's own stage: AQE replaces an empty shuffle
+    # stage whole, metrics included
+    written = Observation()
+    (live.repartition(1).sortWithinPartitions("doc_id")
+     .observe(written, F.count(F.lit(1)).alias("n"))
+     .write.mode("overwrite").parquet(out))
+    return int(written.get["n"])
+
+
 def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
                     pairs_df: DataFrame, seg_id: int, n_total: int,
                     stats_paths: list[str]) -> int:
@@ -294,7 +410,6 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
     invisible to readers until the caller's manifest commit. Returns the
     new-term count."""
     cfg = manifest["config"]
-    tp = manifest["term_buckets"]
     td = (pairs_df.select("doc_id", "doc_len", "shard",
                           F.explode("pairs").alias("p"))
           .select("doc_id", "doc_len", "shard",
@@ -308,19 +423,11 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
     # whole collection frequency is this segment's Σtf); pre-existing
     # terms keep their frozen base cf, which is why collection_tf
     # ignores the column while segments exist (see IndexSearcher)
-    delta_terms = (td.groupBy("term").agg(F.count("*").alias("df"),
-                                          F.sum("tf").alias("cf"))
-                   .join(full_stats.select("term"), "term", "left_anti")
-                   .withColumn("idf",
-                               F.log(F.lit(float(n_total)) - F.col("df") + 0.5)
-                               - F.log(F.col("df") + 0.5))
-                   .withColumn("pruned",
-                               ~(F.col("idf") > F.lit(cfg["alpha"]))
-                               | (F.col("term").isin(list(cfg["stopwords"]))
-                                  if cfg["stopwords"] else F.lit(False)))
-                   .withColumn("term_bucket",
-                               F.pmod(F.xxhash64("term"), F.lit(tp)).cast("int"))
-                   )
+    delta_terms = with_term_stats(
+        td.groupBy("term").agg(F.count("*").alias("df"),
+                               F.sum("tf").alias("cf"))
+        .join(full_stats.select("term"), "term", "left_anti"),
+        n_total, cfg["alpha"], cfg["stopwords"], manifest["term_buckets"])
     # ONE job: the new-term count rides the segment term_stats write as
     # an observe() metric (the round-6-start shape persisted delta_terms,
     # ran a count job, then re-ran the plan for the write). The dir is
@@ -353,7 +460,6 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
                 .parquet(paths.term_stats_seg(seg_id)))
                 .filter(~F.col("pruned")))
         else:
-            from data_text_search_spark.sources import fsio
             fsio.delete(paths.term_stats_seg(seg_id))
             live_stats = full_stats.filter(~F.col("pruned"))
 
@@ -366,6 +472,155 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
         # re-score from it without re-tokenizing) are the side writes
         join_side()
     return int(new_terms)
+
+
+def _parquet_files(fs, dirs: list[str]) -> list[str]:
+    return [f for d in dirs for f in _list_parquet(fs, d)]
+
+
+def _local_rows(df: DataFrame) -> pd.DataFrame | None:
+    """The rows of `df` as pandas when its optimized plan is ONE local
+    relation of at most DRIVER_SEGMENT_MAX_DOCS rows — a delta built
+    from pandas or a list, through ingest's foldable projections, whose
+    collect() Spark answers on the driver with no job. None for any
+    other plan (files, streams, joins, Python UDFs): the Spark path."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if (plan.getClass().getSimpleName() != "LocalRelation"
+            or plan.data().size() > DRIVER_SEGMENT_MAX_DOCS):
+        return None
+    return pd.DataFrame.from_records(df.collect(), columns=df.columns)
+
+
+def _ids_stored(fs, dirs: list[str], ids: np.ndarray) -> np.ndarray:
+    """The doc_ids among `ids` stored in the parquet dirs (committed
+    doc_stats, or tombstones), read on the driver: the doc_id column
+    alone, filtered as it is read."""
+    import pyarrow as pa
+    import pyarrow.dataset as pds
+
+    files = _parquet_files(fs, dirs)
+    if not files or not len(ids):
+        return np.empty(0, dtype=np.int64)
+    return (pds.dataset(files, format="parquet", filesystem=fs,
+                        schema=pa.schema([("doc_id", pa.int64())]))
+            .to_table(columns=["doc_id"],
+                      filter=pds.field("doc_id").isin(pa.array(ids)))
+            ["doc_id"].to_numpy())
+
+
+def _write_parquet(spark: SparkSession, d: str, table) -> None:
+    """Write `table` as the one data file of directory `d`, replacing
+    what `d` held (as a Spark overwrite does). The file is named by a
+    digest of its bytes, so a replay writes the same file and a new
+    table under a reused directory a new name (readers open the files
+    they listed, and catch a replaced one as vanished). pyarrow writes
+    do not refresh Spark's cached reads of `d` as Spark's own writes
+    do, so that is done here (no job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(table.replace_schema_metadata(None), buf,
+                   compression="snappy")
+    data = buf.getvalue()
+    fs, base = _arrow_fs(d)
+    fsio.delete(d)
+    fs.create_dir(base, recursive=True)
+    name = f"part-{hashlib.sha256(data).hexdigest()[:32]}.snappy.parquet"
+    with fs.open_output_stream(f"{base}/{name}") as f:
+        f.write(data)
+    spark.catalog.refreshByPath(d)
+
+
+def _write_segment_on_driver(spark: SparkSession, paths: IndexPaths,
+                             manifest: dict, tok, seg_id: int, n_total: int,
+                             stats_paths: list[str]) -> int:
+    """The driver twin of _encode_segment, for a delta small enough to
+    hold: `tok` (a pyarrow table of the tokenized checkpoint's columns)
+    becomes the same four segment directories, with no Spark job.
+
+    Both paths share every formula: new-term idf, `pruned` and
+    term_bucket (with_term_stats) and the impact (impact_expr) are the
+    same Spark Column expressions, evaluated over frames built from
+    pandas, whose collect() runs no job; the blocks come from the same
+    _encode_shard_factory. Counting, the dictionary anti-join and the
+    file writes are pandas/pyarrow. Returns the new-term count."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pds
+
+    cfg = manifest["config"]
+    fs = _arrow_fs(paths.root)[0]
+    pairs = tok["pairs"].combine_chunks()
+    row = pc.list_parent_indices(pairs).to_numpy()
+    terms, tfs = pc.list_flatten(pairs).flatten()
+    td = pd.DataFrame({
+        "term": terms.to_numpy(zero_copy_only=False),
+        "doc_id": tok["doc_id"].to_numpy()[row],
+        "tf": tfs.to_numpy(),
+        "shard": tok["shard"].to_numpy()[row],
+        "doc_len": tok["doc_len"].to_numpy()[row]})
+    new, blocks = [], []
+    if len(td):
+        # every delta term's df/cf and dictionary columns, as if new
+        counts = (td.groupby("term", sort=True)["tf"].agg(["size", "sum"])
+                  .reset_index().rename(columns={"size": "df", "sum": "cf"})
+                  .astype({"df": "int64", "cf": "int64"}))
+        stats = pd.DataFrame.from_records(
+            with_term_stats(
+                spark.createDataFrame(counts, "term string, df long, cf long"),
+                n_total, cfg["alpha"], cfg["stopwords"],
+                manifest["term_buckets"]).collect(),
+            columns=["term", "df", "cf", "idf", "pruned", "term_bucket"]
+        ).astype({"idf": "float64", "pruned": bool, "term_bucket": "int32"})
+        # the anti-join against ALL committed terms (alpha-pruned ones
+        # included: a pruned hot term in the delta stays pruned), reading
+        # the three columns it needs, filtered to the delta's terms
+        old = pds.dataset(
+            _parquet_files(fs, stats_paths), format="parquet",
+            filesystem=fs, schema=pa.schema([
+                ("term", pa.string()), ("idf", pa.float64()),
+                ("pruned", pa.bool_())])).to_table(
+            filter=pds.field("term").isin(
+                pa.array(counts["term"], pa.string()))).to_pandas()
+        new = stats[~stats["term"].isin(old["term"])]
+        live = pd.concat([old[~old["pruned"]], new[~new["pruned"]]])
+        post = td.merge(live[["term", "idf"]], on="term")
+        if len(post):
+            post["impact"] = [r[0] for r in spark.createDataFrame(
+                post[["idf", "tf", "doc_len"]],
+                "idf double, tf int, doc_len int")
+                .select(impact_expr(manifest)).collect()]
+            encode = _encode_shard_factory(cfg["block_size"],
+                                           cfg["impact_codec"])
+            blocks = pd.concat([encode(g) for _, g in post.groupby("shard")],
+                               ignore_index=True)
+            blocks["term_bucket"] = blocks["term"].map(
+                dict(zip(stats["term"], stats["term_bucket"])))
+
+    # the four directories, each written as its Spark twin would be
+    # (segment postings: one term-sorted file per colocation unit)
+    fsio.delete(paths.postings_seg(seg_id))
+    fsio.mkdirs(paths.postings_seg(seg_id))
+    if len(blocks):
+        schema = arrow_schema(POSTINGS_SCHEMA + ", term_bucket int")
+        spart = blocks["shard"] % manifest["subshards"]
+        for s, unit in blocks.groupby(spart):
+            _write_parquet(
+                spark, f"{paths.postings_seg(seg_id)}/spart={s}",
+                pa.Table.from_pandas(
+                    unit.sort_values(["term", "shard", "block_id"]),
+                    schema=schema, preserve_index=False))
+    _write_parquet(spark, paths.doc_stats_seg(seg_id), tok.select(
+        ["doc_id", "doc_len", "shard", "n_chars"]))
+    _write_parquet(spark, paths.tokenized_seg(seg_id), tok)
+    fsio.delete(paths.term_stats_seg(seg_id))
+    if len(new):
+        _write_parquet(spark, paths.term_stats_seg(seg_id),
+                       pa.Table.from_pandas(
+                           new, schema=arrow_schema(TERM_STATS_SCHEMA),
+                           preserve_index=False))
+    return len(new)
 
 
 def merge_tier(spark: SparkSession, root: str) -> dict:
@@ -409,12 +664,23 @@ def merge_tier(spark: SparkSession, root: str) -> dict:
     _write_manifest_atomic(paths.manifest, manifest)
 
     t0 = time.perf_counter()
-    pairs_df = spark.read.schema(TOKENIZED_SCHEMA).parquet(
-        *[paths.tokenized_seg(s["segment"]) for s in old_segments])
+    tokenized = [paths.tokenized_seg(s["segment"]) for s in old_segments]
     # new-term stats anti-join against the BASE dictionary only: the old
     # segments' term_stats are being replaced by the merged segment's
-    new_terms = _encode_segment(spark, paths, manifest, pairs_df, seg_id,
-                                manifest["n_docs"], [paths.term_stats])
+    if (fsio.is_local(root) and sum(s["n_docs"] for s in old_segments)
+            <= DRIVER_SEGMENT_MAX_DOCS):
+        import pyarrow.dataset as pds
+        fs = _arrow_fs(root)[0]
+        tok = pds.dataset(_parquet_files(fs, tokenized), format="parquet",
+                          filesystem=fs,
+                          schema=arrow_schema(TOKENIZED_SCHEMA)).to_table()
+        new_terms = _write_segment_on_driver(
+            spark, paths, manifest, tok, seg_id, manifest["n_docs"],
+            [paths.term_stats])
+    else:
+        pairs_df = spark.read.schema(TOKENIZED_SCHEMA).parquet(*tokenized)
+        new_terms = _encode_segment(spark, paths, manifest, pairs_df, seg_id,
+                                    manifest["n_docs"], [paths.term_stats])
 
     # COMMIT POINT: swap the segments list atomically
     merged_entry = {
@@ -460,7 +726,6 @@ def merge_segments(spark: SparkSession, root: str) -> dict:
         build_index,
         committed_tokenized_paths,
     )
-    from data_text_search_spark.sources import fsio
 
     paths = IndexPaths(root)
     manifest = load_manifest(root)
@@ -534,8 +799,6 @@ def recover_merge(spark: SparkSession, root: str) -> dict:
     - root missing, only `root.premerge` present: the merged build was
       already renamed away or lost — roll BACK the previous index.
     Idempotent; a no-op without the marker."""
-    from data_text_search_spark.sources import fsio
-
     marker = f"{root}.MERGE_SWAP"
     tmp, old = f"{root}.merge", f"{root}.premerge"
     if not fsio.exists(marker, spark):

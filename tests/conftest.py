@@ -1,9 +1,12 @@
 from __future__ import annotations
 
 import contextlib
+import hashlib
+import os
 
 import pytest
 
+from data_text_search_spark.config import IndexPaths
 from data_text_search_spark.fixtures.corpus import corpus_pandas
 from data_text_search_spark.session import get_spark
 
@@ -48,3 +51,29 @@ def corpus_pdf():
 def corpus(spark, corpus_pdf):
     df = spark.createDataFrame(corpus_pdf.reset_index().rename(columns={"index": "doc_id"}))
     return df.cache()
+
+
+def unit_files(root: str) -> dict[str, list[str]]:
+    """`group=g/spart=s` -> the data files in it."""
+    base = IndexPaths(root).postings
+    out = {}
+    for g in sorted(os.listdir(base)):
+        if not g.startswith("group="):
+            continue
+        for u in sorted(os.listdir(f"{base}/{g}")):
+            if u.startswith("spart="):
+                out[f"{g}/{u}"] = sorted(
+                    f for f in os.listdir(f"{base}/{g}/{u}")
+                    if not f.startswith((".", "_")))
+    return out
+
+
+def digest_files(base: str) -> dict[str, str]:
+    """Path under directory `base` -> sha256 of that file's bytes."""
+    out = {}
+    for d, _, files in os.walk(base):
+        for f in files:
+            with open(f"{d}/{f}", "rb") as fh:
+                out[os.path.relpath(f"{d}/{f}", base)] = hashlib.sha256(
+                    fh.read()).hexdigest()
+    return out

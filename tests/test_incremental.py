@@ -19,6 +19,7 @@ from data_text_search_spark.streaming.incremental import (
     merge_segments,
     stream_ingest,
 )
+from tests.conftest import digest_files, unit_files
 
 
 def _base(spark, tmp_path, n=200):
@@ -640,11 +641,12 @@ def test_new_searcher_after_merge_sees_new_dictionary(spark, tmp_path,
 @pytest.mark.parametrize("fail", ["term_stats", "postings"])
 def test_failed_segment_encode_leaves_nothing_running(spark, tmp_path,
                                                       monkeypatch, fail):
-    """The segment's term_stats write (or its postings write) raises
-    while the doc_stats and tokenized writes are still running on their
-    background threads: add_documents re-raises only once those are
-    done, commits no segment, unpersists the delta's cached pairs, and
-    a retry in the same process equals a clean append."""
+    """The Spark encode's segment term_stats write (or its postings
+    write) raises while the doc_stats and tokenized writes are still
+    running on their background threads: add_documents re-raises only
+    once those are done, commits no segment, unpersists the delta's
+    cached pairs, and a retry in the same process equals a clean
+    append."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     delta_pdf = pd.DataFrame({
@@ -668,6 +670,7 @@ def test_failed_segment_encode_leaves_nothing_running(spark, tmp_path,
     def write_postings(*args, **kwargs):
         raise RuntimeError("injected segment failure")
 
+    monkeypatch.setattr(incremental, "DRIVER_SEGMENT_MAX_DOCS", 0)
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     if fail == "postings":
         monkeypatch.setattr(incremental, "write_postings", write_postings)
@@ -702,3 +705,220 @@ def test_failed_segment_encode_leaves_nothing_running(spark, tmp_path,
                       for x in s.search(q, 5).collect()]
                      for q in ("flibbertigibbet", "widget return", "quantum")])
     assert rows[0] == rows[1] and rows[0][0]
+
+
+# ------------------------------------------- the driver segment writer
+
+DELTA_A = pd.DataFrame({
+    "doc_id": [100_000 + i for i in range(24)],
+    "content": [f"flibbertigibbet gizmo{i % 5} return import zzstop "
+                f"{'quantum flux ' * (i % 3)}widget{i % 7} Ærø ünïcode"
+                for i in range(22)]
+    + ["", "?! ... -- ;"]})
+DELTA_B = pd.DataFrame({
+    "doc_id": [200_000 + i for i in range(9)],
+    "content": [f"tierword{i % 2} flibbertigibbet spill_page def gizmo{i}"
+                for i in range(9)]})
+PARITY_QS = ["flibbertigibbet", "gizmo3 widget2", "return import",
+             "quantum flux capacitor", "tierword1 spill_page", "ünïcode",
+             "zzstop"]
+PARITY_CONFIGS = {
+    "f64": BM25Config(stopwords=("zzstop",)),
+    "compact": BM25Config(impact_codec="compact", alpha=0.5),
+}
+
+
+def _file_rows(files: list[str]) -> tuple[list, set]:
+    """The rows of parquet files (floats as their hex bits) and the
+    (name, type) columns of each file."""
+    import pyarrow.parquet as pq
+
+    rows, types = [], set()
+    for f in files:
+        t = pq.ParquetFile(f).read()
+        types.add(tuple((c.name, str(c.type)) for c in t.schema))
+        rows.append([{k: v.hex() if isinstance(v, float) else v
+                      for k, v in r.items()} for r in t.to_pylist()])
+    return rows, types
+
+
+def _segment_rows(root: str, seg: int) -> dict:
+    """Every row of segment `seg`'s four directories: postings unit by
+    unit in file order, the other three sorted by their key."""
+    import os
+
+    paths = IndexPaths(root)
+    out = {}
+    for unit, files in unit_files(root).items():
+        if unit.startswith(f"group=seg{seg}/"):
+            out[unit] = _file_rows([f"{paths.postings}/{unit}/{f}"
+                                    for f in files])
+    for name, d, key in [
+            ("term_stats", paths.term_stats_seg(seg), "term"),
+            ("doc_stats", paths.doc_stats_seg(seg), "doc_id"),
+            ("tokenized", paths.tokenized_seg(seg), "doc_id")]:
+        files = sorted(f"{d}/{f}" for f in os.listdir(d)
+                       if not f.startswith((".", "_")))
+        rows, types = _file_rows(files)
+        out[name] = (sorted((r for fr in rows for r in fr),
+                            key=lambda r: r[key]), types)
+    return out
+
+
+def _no_seconds(m: dict) -> dict:
+    return {k: m.get(k) for k in ("n_docs", "drift", "next_seg_id")} | {
+        "segments": [{k: v for k, v in s.items() if k != "seconds"}
+                     for s in m["segments"]]}
+
+
+def _answers(spark, root: str) -> list:
+    s = IndexSearcher(spark, root)
+    return [([(r["doc_id"], r["score"]) for r in s.search(q, 10).collect()],
+             s.search_local(q, 10)[["doc_id", "score"]].values.tolist())
+            for q in PARITY_QS]
+
+
+@pytest.mark.parametrize("codec", list(PARITY_CONFIGS))
+def test_driver_segment_equals_spark_segment(spark, spark_jobs, tmp_path,
+                                             monkeypatch, codec):
+    """A small local delta is written on the driver with no Spark job;
+    a parquet copy of the same delta (not a local relation) takes the
+    Spark encode. The two segments hold the same rows (byte-identical
+    posting payloads, bit-identical idf and block bounds) with the same
+    column types, in the same order within each unit file, and answer
+    search and search_local alike. merge_tier on the driver, of either
+    path's segments, equals merge_tier with the gate forced to 0."""
+    import shutil
+
+    pdf = corpus_pandas(200).reset_index().rename(columns={"index": "doc_id"})
+    drv, spk = str(tmp_path / "driver"), str(tmp_path / "spark")
+    build_index(spark, spark.createDataFrame(pdf), drv,
+                PARITY_CONFIGS[codec], id_col="doc_id", shards=4, groups=2)
+    shutil.copytree(drv, spk)
+
+    def from_files(delta: pd.DataFrame, name: str):
+        spark.createDataFrame(delta).write.parquet(str(tmp_path / name))
+        return spark.read.parquet(str(tmp_path / name))
+
+    for seg, delta in enumerate([DELTA_A, DELTA_B]):
+        with spark_jobs() as jobs:
+            m_drv = add_documents(spark, drv, spark.createDataFrame(delta),
+                                  id_col="doc_id")
+        assert jobs == []
+        with spark_jobs() as jobs:
+            m_spk = add_documents(spark, spk, from_files(delta, f"d{seg}"),
+                                  id_col="doc_id")
+        assert jobs
+        assert _no_seconds(m_drv) == _no_seconds(m_spk)
+        assert _segment_rows(drv, seg) == _segment_rows(spk, seg)
+    assert m_drv["segments"][0]["new_terms"] >= 3
+    assert _answers(spark, drv) == _answers(spark, spk)
+
+    with spark_jobs() as jobs:
+        m_drv = incremental.merge_tier(spark, drv)
+    assert jobs == []
+    # the driver merge reads Spark-written checkpoints just as well
+    mixed = str(tmp_path / "mixed")
+    shutil.copytree(spk, mixed)
+    incremental.merge_tier(spark, mixed)
+    assert _segment_rows(mixed, 2) == _segment_rows(drv, 2)
+    monkeypatch.setattr(incremental, "DRIVER_SEGMENT_MAX_DOCS", 0)
+    with spark_jobs() as jobs:
+        m_spk = incremental.merge_tier(spark, spk)
+    assert jobs
+    assert _no_seconds(m_drv) == _no_seconds(m_spk)
+    assert m_drv["segments"][0]["merged_from"] == [0, 1]
+    assert _segment_rows(drv, 2) == _segment_rows(spk, 2)
+    rows = _answers(spark, drv)
+    assert rows == _answers(spark, spk)
+    assert rows[0][0] and rows[0][0] == [(d, s) for d, s in rows[0][1]]
+
+
+@pytest.mark.parametrize("op", ["add", "merge_tier", "delete"])
+def test_driver_write_crash_before_commit(spark, tmp_path, monkeypatch, op):
+    """The commit (the one manifest write after the driver's file
+    writes) raises: the manifest and a searcher opened next see nothing
+    of the write, and a replay in the same process writes byte-identical
+    files, then commits."""
+    root = _base(spark, tmp_path)
+    paths = IndexPaths(root)
+    if op == "merge_tier":
+        for delta in (DELTA_A, DELTA_B):
+            add_documents(spark, root, spark.createDataFrame(delta),
+                          id_col="doc_id")
+    before = load_manifest(root)
+    seg = before.get("next_seg_id", 0)
+    dirs = ([paths.tombstones_del(0)] if op == "delete" else
+            [paths.postings_seg(seg), paths.doc_stats_seg(seg),
+             paths.term_stats_seg(seg), paths.tokenized_seg(seg)])
+    run = {
+        "add": lambda: add_documents(
+            spark, root, spark.createDataFrame(DELTA_A), id_col="doc_id"),
+        "merge_tier": lambda: incremental.merge_tier(spark, root),
+        "delete": lambda: incremental.delete_documents(
+            spark, root, [3, 5, 100_000, 999_999]),
+    }[op]
+    q = {"add": "flibbertigibbet", "merge_tier": "tierword1 flibbertigibbet",
+         "delete": "return import"}[op]
+    answer = [(r["doc_id"], r["score"])
+              for r in IndexSearcher(spark, root).search(q, 50).collect()]
+    real = incremental._write_manifest_atomic
+
+    def commit_fails(path, manifest):
+        if manifest.get("pending") is None:
+            raise RuntimeError("injected commit failure")
+        real(path, manifest)
+
+    monkeypatch.setattr(incremental, "_write_manifest_atomic", commit_fails)
+    with pytest.raises(RuntimeError, match="injected commit failure"):
+        run()
+    monkeypatch.undo()
+    written = {d: digest_files(d) for d in dirs}
+    assert all(written.values()), written
+    m = load_manifest(root)
+    assert ({k: v for k, v in m.items() if k != "pending"}
+            == {k: v for k, v in before.items() if k != "pending"})
+    s = IndexSearcher(spark, root)
+    assert [(r["doc_id"], r["score"])
+            for r in s.search(q, 50).collect()] == answer
+    assert s._tombstones is None
+    run()
+    assert {d: digest_files(d) for d in dirs} == written
+    m = load_manifest(root)
+    assert "pending" not in m and m != before
+    s = IndexSearcher(spark, root)
+    if op == "delete":
+        assert s._tombstones.tolist() == [3, 5]
+    else:
+        assert [(r["doc_id"], r["score"])
+                for r in s.search(q, 50).collect()] != answer
+
+
+def test_driver_segment_refreshes_cached_dictionary(spark, tmp_path):
+    """pyarrow writes do not refresh Spark's cached reads of a path as
+    Spark's own writes do. A searcher over its dictionary budget looks
+    terms up in the cached term_stats frame, keyed by its read paths;
+    after merge_segments the next append reuses segment id 0, and a
+    searcher opened then must see that segment's terms."""
+    root = _base(spark, tmp_path, n=100)
+
+    def add(word, first, n):
+        add_documents(spark, root, spark.createDataFrame(pd.DataFrame({
+            "doc_id": range(first, first + n),
+            "content": [f"{word} ray burst {i}" for i in range(n)]})),
+            id_col="doc_id")
+
+    def searcher():
+        s = IndexSearcher(spark, root)
+        s.DRIVER_TERM_CACHE_MAX = 0
+        return s
+
+    add("gamma", 500_000, 10)
+    assert searcher().search("gamma", 50).count() == 10   # cached
+    merge_segments(spark, root)
+    add("epsilon", 600_000, 5)
+    assert load_manifest(root)["segments"][0]["segment"] == 0
+    s = searcher()
+    assert s.search("epsilon", 50).count() == 5
+    assert s.search("gamma", 50).count() == 10
+    assert s.term_stats.filter("term = 'epsilon'").count() == 1

@@ -27,7 +27,9 @@ from data_text_search_spark.streaming.incremental import (
     add_documents,
     delete_documents,
     merge_segments,
+    merge_tier,
 )
+from tests.conftest import digest_files, unit_files
 from tests.oracle_bm25 import oracle_search
 
 QS = ["return import", "quantum flux capacitor", "merge_heap spill_page def"]
@@ -109,32 +111,6 @@ def _search(spark, root: str) -> dict:
                 for r in s.search(q, 3).collect()] for q in QS}
 
 
-def _unit_files(root: str) -> dict[str, list[str]]:
-    """`group=g/spart=s` -> the data files in it."""
-    base = IndexPaths(root).postings
-    out = {}
-    for g in sorted(os.listdir(base)):
-        if not g.startswith("group="):
-            continue
-        for u in sorted(os.listdir(f"{base}/{g}")):
-            if u.startswith("spart="):
-                out[f"{g}/{u}"] = sorted(
-                    f for f in os.listdir(f"{base}/{g}/{u}")
-                    if not f.startswith((".", "_")))
-    return out
-
-
-def _digest_files(root: str, group: str) -> dict[str, str]:
-    base = f"{IndexPaths(root).postings}/{group}"
-    out = {}
-    for d, _, files in os.walk(base):
-        for f in files:
-            with open(f"{d}/{f}", "rb") as fh:
-                out[os.path.relpath(f"{d}/{f}", base)] = hashlib.sha256(
-                    fh.read()).hexdigest()
-    return out
-
-
 def _unmark_group(root: str, g: int) -> None:
     m = load_manifest(root)
     del m["groups_state"][str(g)]
@@ -152,7 +128,7 @@ def test_pinned_configs_match_per_group_write(spark, corpus, tmp_path, name):
     assert _groups_state(m) == want["groups_state"]
     assert _term_stats(spark, root) == want["term_stats"]
     assert _search(spark, root) == want["search"]
-    units = _unit_files(root)
+    units = unit_files(root)
     assert len(units) == shards
     assert all(len(files) == 1 for files in units.values()), units
     for unit, (f,) in units.items():
@@ -210,14 +186,17 @@ def test_postings_stage_is_one_job(spark, spark_jobs, corpus, tmp_path,
     assert _groups_state(m2) == _groups_state(m)
 
 
-BUILD_JOBS, ADD_JOBS, MERGE_JOBS = 8, 13, 9
+BUILD_JOBS, ADD_JOBS, MERGE_JOBS = 8, 0, 9
+# add_documents of a delta that is not a local relation: the Spark encode
+SPARK_ADD_JOBS = 13
 
 
 def test_build_merge_add_job_counts(spark, spark_jobs, corpus, tmp_path):
     """No read of a tokenized checkpoint, of doc_stats or of tombstones
     infers a schema, and the postings of all groups are one job. Before
     that, on these inputs, build_index ran 19 jobs, add_documents 14
-    and merge_segments 22."""
+    and merge_segments 22. The delta, built from pandas, is written on
+    the driver (13 jobs on the Spark encode)."""
     root = str(tmp_path / "idx")
     with spark_jobs() as build:
         build_index(spark, corpus, root, id_col="doc_id", shards=8,
@@ -237,17 +216,55 @@ def test_build_merge_add_job_counts(spark, spark_jobs, corpus, tmp_path):
     assert len(merge) <= MERGE_JOBS, merge
 
 
+def test_driver_writes_run_no_job(spark, spark_jobs, corpus, tmp_path):
+    """Small local deltas, merge_tier of their segments and a delete by
+    a list of ids run on the driver: no Spark job. A delta read from
+    files is not a local relation and still takes the Spark encode."""
+    root = str(tmp_path / "idx")
+    build_index(spark, corpus, root, id_col="doc_id", shards=8, groups=4)
+
+    def delta(first, word):
+        return pd.DataFrame({
+            "doc_id": [first + i for i in range(20)],
+            "content": [f"{word} gizmo{i % 3} return import"
+                        for i in range(20)]})
+
+    with spark_jobs() as adds:
+        for first, word in [(100_000, "flibbertigibbet"), (200_000, "zorp")]:
+            add_documents(spark, root, spark.createDataFrame(
+                delta(first, word)), id_col="doc_id")
+    with spark_jobs() as tier:
+        m = merge_tier(spark, root)
+    with spark_jobs() as dels:
+        delete_documents(spark, root, [1, 2, 100_003, 100_003])
+    assert adds == [] and tier == [] and dels == []
+    assert [s["merged_from"] for s in m["segments"]] == [[0, 1]]
+    spark.createDataFrame(delta(300_000, "quux")).write.parquet(
+        str(tmp_path / "delta"))
+    files = spark.read.parquet(str(tmp_path / "delta"))
+    with spark_jobs() as add:
+        m = add_documents(spark, root, files, id_col="doc_id")
+    assert 0 < len(add) <= SPARK_ADD_JOBS, add
+    assert m["n_docs"] == 360
+    s = IndexSearcher(spark, root)
+    assert s._tombstones.tolist() == [1, 2, 100_003]
+    for word, first in [("flibbertigibbet", 100_000), ("zorp", 200_000),
+                        ("quux", 300_000)]:
+        got = {r["doc_id"] for r in s.search(word, 50).collect()}
+        assert got == set(range(first, first + 20)) - {100_003}, word
+
+
 def test_resume_keeps_done_group_files(spark, corpus, corpus_pdf, tmp_path):
     root = str(tmp_path / "idx")
     build_index(spark, corpus, root, id_col="doc_id", shards=8, groups=2)
-    before = _digest_files(root, "group=0")
+    before = digest_files(f"{IndexPaths(root).postings}/group=0")
     shutil.rmtree(f"{IndexPaths(root).postings}/group=1")
     _unmark_group(root, 1)
     m = build_index(spark, corpus, root, id_col="doc_id", shards=8,
                     groups=2)
     assert m["complete"]
-    assert _digest_files(root, "group=0") == before
-    units = _unit_files(root)
+    assert digest_files(f"{IndexPaths(root).postings}/group=0") == before
+    units = unit_files(root)
     assert len(units) == 8
     assert all(len(files) == 1 for files in units.values()), units
     s = IndexSearcher(spark, root)
@@ -340,12 +357,12 @@ def test_more_groups_than_shards(spark, corpus, corpus_pdf, tmp_path):
     assert os.path.isdir(f"{IndexPaths(root).postings}/group=2")
     # a resume whose only pending group is the empty one writes nothing
     # and still records the group's stats
-    before = _digest_files(root, "group=0")
+    before = digest_files(f"{IndexPaths(root).postings}/group=0")
     _unmark_group(root, 2)
     m = build_index(spark, corpus, root, id_col="doc_id", shards=2,
                     groups=3)
     assert m["complete"] and m["groups_state"]["2"]["n_blocks"] == 0
-    assert _digest_files(root, "group=0") == before
+    assert digest_files(f"{IndexPaths(root).postings}/group=0") == before
     # every posting of the corpus, as in the 4-shard build
     assert sum(g["n_postings"] for g in m["groups_state"].values()) == sum(
         g["n_postings"] for g in PINNED["f64_4x2"]["groups_state"].values())

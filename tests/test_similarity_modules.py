@@ -354,6 +354,27 @@ def test_complete_regex_chars_literal(searcher):
     assert searcher.complete("s.", n=5).count() == 0
 
 
+def test_complete_on_driver_matches_spark_plan(spark, spark_jobs, corpus,
+                                               tmp_path):
+    """With the dictionary in budget, complete() ranks the prefix range
+    on the driver and returns a frame whose collect() runs no Spark job;
+    its rows equal the Spark plan's (the same index over budget),
+    alpha-pruned terms left out by both."""
+    root = str(tmp_path / "alpha")
+    build_index(spark, corpus, root, BM25Config(alpha=1.0), id_col="doc_id",
+                shards=2, groups=1)
+    s, over = IndexSearcher(spark, root), IndexSearcher(spark, root)
+    over.DRIVER_TERM_CACHE_MAX = 0
+    assert s._dictionary.load() and any(e[3] for e in s._dictionary.map.values())
+    for prefix, n in [("s", 5), ("re", 3), ("", 7), ("s.", 5), ("zzzz", 2),
+                      ("q", 0)]:
+        with spark_jobs() as jobs:
+            got = s.complete(prefix, n).collect()
+        assert jobs == [], prefix
+        assert got == over.complete(prefix, n).collect(), prefix
+        assert not any(s._dictionary.map[r["term"]][3] for r in got)
+
+
 def test_date_histogram_vs_pandas(spark):
     import pandas as pd
     pdf = pd.DataFrame({
