@@ -24,7 +24,7 @@ differently depending on which member it landed in.
 2. **Member execution with the global stats.** Members must use the
    compact codec: it stores raw (tf, doc_len) per posting, so each
    member's kernel recomputes impacts with the BUILD expression's
-   operand order (index_query._term_decoder) under the federated
+   operand order (index_query._bm25_impacts) under the federated
    idf/avgdl — bit-identical math to a single combined index, just
    with different idf operands.
 
@@ -83,9 +83,10 @@ from data_text_search_spark.operators.index_build import (
     committed_doc_stats_paths,
 )
 from data_text_search_spark.operators.index_query import (
+    TOPN_SCHEMA,
     IndexSearcher,
+    _local_frame,
     _merge_topn_driver,
-    _top_frame,
     _shard_topk_kernel_factory,
 )
 
@@ -253,10 +254,10 @@ class FederatedSearcher:
         counts = Counter(tokenize_py(query))
         spark = self.spark
         if not counts:
-            return _top_frame(spark)
+            return _local_frame(spark, None, TOPN_SCHEMA)
         qidf, metas = self._global_stats(sorted(counts), scan_roots=sel)
         if not qidf:
-            return _top_frame(spark)
+            return _local_frame(spark, None, TOPN_SCHEMA)
         k1p1 = self.k1 + 1.0
 
         def _member_top(args) -> "pd.DataFrame | None":
@@ -295,9 +296,9 @@ class FederatedSearcher:
                 _member_top, zip(self.members, metas, self.roots))
                 if p is not None]
         if not parts:
-            return _top_frame(spark)
-        return _top_frame(spark, _merge_topn_driver(
-            pd.concat(parts, ignore_index=True), n))
+            return _local_frame(spark, None, TOPN_SCHEMA)
+        return _local_frame(spark, _merge_topn_driver(
+            pd.concat(parts, ignore_index=True), n), TOPN_SCHEMA)
 
     # ---- batch -------------------------------------------------------
 
@@ -314,7 +315,7 @@ class FederatedSearcher:
         all_terms = sorted({t for q in set(queries)
                             for t in tokenize_py(q)})
         if not all_terms:
-            return spark.createDataFrame([], IndexSearcher.OUT_SCHEMA_BATCH)
+            return _local_frame(spark, None, IndexSearcher.OUT_SCHEMA_BATCH)
         qidf, _ = self._global_stats(all_terms, scan_roots=sel)
         def _member_batch(args) -> "pd.DataFrame | None":
             m, root = args
@@ -335,7 +336,6 @@ class FederatedSearcher:
                 _member_batch, zip(self.members, self.roots))
                 if p is not None]
         if not parts:
-            return spark.createDataFrame([], IndexSearcher.OUT_SCHEMA_BATCH)
+            return _local_frame(spark, None, IndexSearcher.OUT_SCHEMA_BATCH)
         merged = _merge_topn_driver(pd.concat(parts, ignore_index=True), n)
-        return spark.createDataFrame(merged,
-                                     schema=IndexSearcher.OUT_SCHEMA_BATCH)
+        return _local_frame(spark, merged, IndexSearcher.OUT_SCHEMA_BATCH)

@@ -1,12 +1,17 @@
 """Query executor over the physical index: block-max dynamic pruning.
 
-Document-partitioned, shuffle-free execution: each task
-reads its OWN colocation units' posting files (pyarrow, term-IN
-row-group pruning) and scores them in place; only per-task top-k rows
-leave the task, merged by a driver scatter-gather (or a hash aggregate
-for enormous grids) — the distributed analog of the reference's single
-dict walk + heap (bm25_functions.py:148-175), and of a Lucene cluster's
-per-shard local indexes.
+Document-partitioned, shuffle-free execution through ONE kernel runner
+(`IndexSearcher.run_kernel`): a task reads its OWN colocation units'
+posting blocks with one reader (`_read_terms_local`: pyarrow, row groups
+pruned by the unit footers' term min/max, column-pruned), decodes them
+with one block decoder (`_block_decoder`) and scores them in place. The
+same task body runs in the driver loop, with no Spark job, when the
+`_driver_answers` gate admits the query, and otherwise inside the one
+`mapInPandas` stage. Only per-task top-k rows leave a task, merged by a
+driver scatter-gather (or a hash aggregate for enormous grids): the
+distributed analog of the reference's single dict walk + heap
+(bm25_functions.py:148-175), and of a Lucene cluster's per-shard local
+indexes.
 
 The in-shard kernel is a block-max MaxScore: a WAND-family dynamic
 pruning algorithm restated term-at-a-time so every step is vectorized
@@ -58,6 +63,7 @@ moves only tasks·k rows per query.
 from __future__ import annotations
 
 import bisect
+import functools
 import math
 import os
 import re
@@ -75,6 +81,8 @@ from data_text_search_spark.operators.index_build import (
     committed_doc_stats_paths,
     committed_postings_dirs,
     committed_term_stats_paths,
+    committed_tokenized_paths,
+    impact_expr,
     load_manifest,
 )
 from data_text_search_spark.operators.term_dictionary import TermDictionary
@@ -83,11 +91,14 @@ RESULT_SCHEMA = "doc_id long, score double"
 # a single query's top-n rows, whichever path answered it
 TOPN_SCHEMA = RESULT_SCHEMA + ", rank int, score_abs double"
 
-# column sets the colocated reader fetches per kernel (never the whole row)
-BATCH_COLS = ["term", "first_doc_id", "n_docs", "doc_deltas", "tfs", "impacts"]
+# per doc, a weighted sum over matched terms (_weighted_sum_kernel_factory)
+MATCH_SCHEMA = "doc_id long, match_count long"
+
+# column sets the unit reader fetches per kernel (never the whole row):
+# doc-id blocks, + tf varints, + the impacts payload, + block bounds
+DOC_COLS = ["term", "first_doc_id", "n_docs", "doc_deltas"]
+BATCH_COLS = DOC_COLS + ["tfs", "impacts"]
 WAND_COLS = BATCH_COLS + ["last_doc_id", "block_max", "block_min"]
-FUZZY_COLS = ["term", "first_doc_id", "n_docs", "doc_deltas", "tfs"]
-PRESENCE_COLS = ["term", "first_doc_id", "n_docs", "doc_deltas"]
 
 
 def _tomb_filter(tomb):
@@ -137,18 +148,16 @@ def _doc_mask(tomb, allow):
     return keep
 
 
-def _term_decoder(codec: str, qidf: dict[str, float] | None,
-                  avgdl: float, k1: float, b: float, tomb=None,
-                  allow=None):
-    """Per-term posting decode, shared by both kernels.
-
-    `tomb` / `allow`: deny / allow doc-set handles (see _doc_mask) —
-    deleted or filtered-out docs never leave the decoder.
-
-    codec "compact": the impacts buffer holds doc_len varints; the exact
-    f64 impact is recomputed with the BUILD expression's operand order
-    (index_build enc_df), so scores are bit-identical to the f64 codec:
-    ((idf·tf)·(k1+1)) / (tf + k1·((1−b) + (b·dl)/avgdl)).
+def _block_decoder(codec: "str | None" = None, tomb=None, allow=None):
+    """THE posting-block decode every kernel shares: a term's rows ->
+    (docs, tfs, payload), with the doc mask (`tomb` / `allow`: deny /
+    allow doc-set handles, see _doc_mask) applied once, so deleted or
+    filtered-out docs never leave the decoder. `tfs=True` adds the tf
+    varints (int64); `payload=True` adds the impacts column as float64:
+    the doc-length varints of the compact codec, the stored BM25
+    impacts of the f64 codec (`codec` says which). What is not asked
+    for is None and never decoded. Kernels build it inside their task,
+    so a broadcast doc-set handle is resolved on the executor.
 
     Decode is BATCHED over all of a term's blocks: one varint pass over
     the concatenated buffers + a vectorized segmented reconstruction —
@@ -160,30 +169,57 @@ def _term_decoder(codec: str, qidf: dict[str, float] | None,
         varint_decode,
     )
 
-    one_minus_b = 1 - b
-    k1p1 = k1 + 1
-    tkeep = _doc_mask(tomb, allow)
+    keep = _doc_mask(tomb, allow)
+
+    def decode(rows: pd.DataFrame, tfs: bool = False, payload: bool = False):
+        nd = rows["n_docs"].to_numpy(dtype=np.int64)
+        docs = decode_doc_blocks_batch(
+            rows["first_doc_id"].to_numpy(dtype=np.int64), nd,
+            rows["doc_deltas"].tolist())
+        total = int(nd.sum())
+        t = (varint_decode(b"".join(rows["tfs"]), total).astype(np.int64)
+             if tfs else None)
+        p = None
+        if payload:
+            buf = b"".join(rows["impacts"])
+            p = (varint_decode(buf, total).astype(np.float64)
+                 if codec == "compact" else np.frombuffer(buf, dtype="<f8"))
+        m = keep(docs) if keep is not None and docs.size else None
+        if m is not None:
+            docs = docs[m]
+            t = None if t is None else t[m]
+            p = None if p is None else p[m]
+        return docs, t, p
+
+    return decode
+
+
+def _bm25_impacts(codec: str, idf: float, tfs: np.ndarray,
+                  payload: np.ndarray, avgdl: float, k1: float,
+                  b: float) -> np.ndarray:
+    """Per-posting BM25 impacts from a decode: the f64 codec's payload
+    IS the impact; the compact codec's is the doc length, and the exact
+    f64 impact is recomputed with the BUILD expression's operand order
+    (index_build.impact_expr), so scores are bit-identical to the f64
+    codec: ((idf·tf)·(k1+1)) / (tf + k1·((1−b) + (b·dl)/avgdl))."""
+    if codec != "compact":
+        return payload
+    tf = tfs.astype(np.float64)
+    return idf * tf * (k1 + 1) / (tf + k1 * ((1 - b) + (b * payload) / avgdl))
+
+
+def _term_decoder(codec: str, qidf: dict[str, float] | None,
+                  avgdl: float, k1: float, b: float, tomb=None,
+                  allow=None):
+    """decode(term, rows) -> (docs, BM25 impacts): _block_decoder, then
+    _bm25_impacts; shared by the top-k and the batch kernels."""
+    blocks = _block_decoder(codec, tomb, allow)
+    compact = codec == "compact"
 
     def decode(term: str, rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-        fd = rows["first_doc_id"].to_numpy(dtype=np.int64)
-        nd = rows["n_docs"].to_numpy(dtype=np.int64)
-        docs = decode_doc_blocks_batch(fd, nd, rows["doc_deltas"].tolist())
-        if codec == "compact":
-            idf_t = qidf[term]
-            total = int(nd.sum())
-            tfs = varint_decode(b"".join(rows["tfs"]),
-                                total).astype(np.float64)
-            dls = varint_decode(b"".join(rows["impacts"]),
-                                total).astype(np.float64)
-            imps = (idf_t * tfs * k1p1
-                    / (tfs + k1 * (one_minus_b + (b * dls) / avgdl)))
-        else:
-            imps = np.frombuffer(b"".join(rows["impacts"]), dtype="<f8")
-        if tkeep is not None and docs.size:
-            m = tkeep(docs)
-            if m is not None:
-                docs, imps = docs[m], imps[m]
-        return docs, imps
+        docs, tfs, p = blocks(rows, tfs=compact, payload=True)
+        return docs, _bm25_impacts(codec, qidf[term] if compact else 0.0,
+                                   tfs, p, avgdl, k1, b)
 
     return decode
 
@@ -194,19 +230,53 @@ def _no_hits() -> pd.DataFrame:
                          "score": pd.Series([], dtype="float64")})
 
 
-def _top_frame(spark: SparkSession,
-               top: "pd.DataFrame | None" = None) -> DataFrame:
-    """A top-n answered on the driver, as a Spark frame whose collect()
-    runs no Spark job: built from pandas, which Spark keeps as a local
-    relation. pyspark turns an EMPTY pandas frame into a Python RDD
-    instead (its Arrow path needs rows), whose collect runs a job, so
-    no hits (`top` None or empty) is a typed placeholder row cut by
-    limit(0), which the optimizer folds to an empty local relation."""
-    if top is None or top.empty:
-        return spark.createDataFrame(pd.DataFrame(
-            {"doc_id": [0], "score": [0.0], "rank": [0], "score_abs": [0.0]}),
-            schema=TOPN_SCHEMA).limit(0)
-    return spark.createDataFrame(top, schema=TOPN_SCHEMA)
+def _local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """An answer built on the driver (a pandas frame or a list of
+    tuples; None = no rows) as a Spark frame whose collect() runs no
+    Spark job: built from pandas, which Spark keeps as a local relation.
+    A list of tuples would build an RDD (1 job, 32 tasks to collect),
+    and pyspark turns an EMPTY pandas frame into one too (its Arrow path
+    needs rows), so no rows is one typed placeholder row cut by
+    limit(0), which the optimizer folds to an empty local relation. A
+    Spark frame (an executor answer) passes through unchanged."""
+    if isinstance(rows, DataFrame):
+        return rows
+    if isinstance(rows, pd.DataFrame) and len(rows):
+        return spark.createDataFrame(rows, schema=schema)
+    from pyspark.sql.types import FractionalType, StringType
+    fields = _schema_fields(schema)
+    names = [f.name for f in fields]
+    if rows is not None and len(rows):
+        return spark.createDataFrame(pd.DataFrame(list(rows), columns=names),
+                                     schema=schema)
+    row = ["" if isinstance(f.dataType, StringType)
+           else 0.0 if isinstance(f.dataType, FractionalType) else 0
+           for f in fields]
+    return spark.createDataFrame(pd.DataFrame([row], columns=names),
+                                 schema=schema).limit(0)
+
+
+@functools.lru_cache(maxsize=64)
+def _schema_fields(schema: str) -> list:
+    """The fields of a DDL schema string, parsed once (the parse is a
+    round trip to the JVM)."""
+    from pyspark.sql.types import _parse_datatype_string
+    return _parse_datatype_string(schema).fields
+
+
+def _collected(tops: "pd.DataFrame | DataFrame") -> pd.DataFrame:
+    """A run_kernel answer as pandas (an executor stage is collected)."""
+    return tops.toPandas() if isinstance(tops, DataFrame) else tops
+
+
+def _spark_topn(scored: DataFrame, n: int) -> DataFrame:
+    """Global top-n of a distributed (doc_id, score) frame with the
+    deterministic (score desc, doc_id asc) tie-break, plus rank and
+    score_abs: the shape every single-query answer has."""
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+    return (scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(n)
+            .withColumn("rank", F.row_number().over(w))
+            .withColumn("score_abs", F.abs(F.round("score", 2))))
 
 
 def _score_abs_half_up(s: np.ndarray) -> np.ndarray:
@@ -355,20 +425,6 @@ def _list_parquet(fs, path: str) -> list[str]:
         and not i.base_name.startswith((".", "_")))
 
 
-def _read_unit(fs, unit: str, files: list[str], columns: list[str], flt):
-    """Column-pruned, term-filtered pyarrow read of ONE colocation unit's
-    files, as listed when the searcher opened. A file that is gone means
-    a merge (or a manual wipe) replaced the index under this open
-    searcher: skipping it would drop that unit's corpus slice from the
-    results, so it raises the vanished error instead."""
-    import pyarrow.dataset as pds
-    try:
-        return pds.dataset(files, format="parquet", filesystem=fs).to_table(
-            columns=columns, filter=flt, use_threads=False)
-    except FileNotFoundError as e:
-        raise _unit_vanished(unit) from e
-
-
 def _unit_vanished(unit: str) -> RuntimeError:
     """The error every colocation-unit reader raises for a unit (or one of
     its files) that the searcher's snapshot enumerated but is gone."""
@@ -380,7 +436,7 @@ def _unit_vanished(unit: str) -> RuntimeError:
 
 def _unit_footers(fs, unit_files: dict[str, list[str]]) -> list[tuple]:
     """Footers of the listed files of the given colocation units, for
-    reads on the driver: one (filesystem, unit, file path, footer, term
+    _read_terms_local: one (filesystem, unit, file path, footer, term
     (min, max) per row group — None where a group has no usable
     statistics) per file. Reads footers only and keeps no file open."""
     import pyarrow.parquet as pq
@@ -406,12 +462,15 @@ def _unit_footers(fs, unit_files: dict[str, list[str]]) -> list[tuple]:
 
 def _read_terms_local(footers: list[tuple], terms: list[str],
                       columns: list[str]) -> pd.DataFrame:
-    """`columns` of the rows of `terms` (sorted) in the footer'd unit
-    files, read on the driver with no Spark job: row groups whose term
-    min/max statistics exclude every wanted term are skipped, the rest
-    are read column-pruned and single-threaded, then filtered to the
-    terms. A file gone since its footer was read raises the vanished
-    error."""
+    """THE unit reader: `columns` of the rows of `terms` (sorted) in the
+    footer'd unit files, on the driver (no Spark job) or inside an
+    executor task alike. Row groups whose term min/max statistics
+    exclude every wanted term are skipped, the rest are read
+    column-pruned and single-threaded (a task grid already fills the
+    cores), then filtered to the terms. Readers open exactly the files
+    listed when the searcher opened, so a file gone since (a merge that
+    recreated its unit dir, or a manual wipe) raises the vanished error
+    instead of dropping that unit's corpus slice from the results."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -443,12 +502,27 @@ def _read_terms_local(footers: list[tuple], terms: list[str],
     return pa.concat_tables(tables).to_pandas(use_threads=False)
 
 
+def _kernel_task(footers: list[tuple], terms: list[str], kernel,
+                 columns: list[str]) -> "pd.DataFrame | None":
+    """THE task body of every posting kernel, in the driver loop or in
+    an executor: read the `columns` of `terms`' blocks in the task's
+    unit files, run `kernel` over them. None when no block or no output
+    row."""
+    if not footers:
+        return None
+    blocks = _read_terms_local(footers, terms, columns)
+    if blocks.empty:
+        return None
+    out = kernel(blocks)
+    return out if len(out) else None
+
+
 def _batch_kernel_factory(qterms: dict[int, dict[str, int]], k: int,
                           codec: str = "f64",
                           qidf: dict[str, float] | None = None,
                           avgdl: float = 1.0, k1: float = 1.5,
                           b: float = 0.75, tomb=None, allow=None):
-    """Partition-level kernel for search_batch: decode each term once,
+    """Task kernel for search_batch: decode each term once,
     score all queries from the shared arrays (exhaustive within the
     partition — the read was already pruned to the union of query
     terms)."""
@@ -460,8 +534,6 @@ def _batch_kernel_factory(qterms: dict[int, dict[str, int]], k: int,
         empty = pd.DataFrame({"query_id": pd.Series([], dtype="int32"),
                               "doc_id": pd.Series([], dtype="int64"),
                               "score": pd.Series([], dtype="float64")})
-        if pdf.empty:
-            return empty
         decode = _term_decoder(codec, qidf, avgdl, k1, b, tomb, allow)
         decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         for term, rows in pdf.groupby("term", sort=True):
@@ -564,82 +636,31 @@ def _batch_kernel_factory(qterms: dict[int, dict[str, int]], k: int,
     return kernel
 
 
-def _fuzzy_tf_kernel_factory(weights: dict[str, int], tomb=None,
-                             allow=None):
-    """Partition kernel for IndexSearcher.fuzzy_search: per doc,
-    Σ over matched terms of tf · (number of query tokens the term
-    fuzzy-matches) — the reference's per-occurrence match count (a corpus
+def _weighted_sum_kernel_factory(weights: dict[str, int], tf: bool,
+                                 tomb=None):
+    """Kernel of the per-doc match counts (IndexSearcher._match_counts):
+    per doc, Σ over matched terms of weights[term] · tf (`tf`), or of
+    weights[term] alone (presence: a presence weight is a tf of 1, and
+    the tf varints are never read). With tf, the reference's
+    per-occurrence match count (fuzzy_search, prefix_search: a corpus
     occurrence matching two query tokens counts twice,
-    spacy_search_funcs.py:99-110). Decodes doc ids + tf varints only
-    (impacts untouched — identical for both codecs). Docs are
-    shard-partitioned, so per-task outputs are disjoint by doc."""
+    spacy_search_funcs.py:99-110); with presence and weights all 1, the
+    distinct-match count (search_msm); with disjoint power-of-two
+    weights an exact clause-membership BITMASK (one posting row per
+    (term, doc)). Docs are shard-partitioned, so per-task outputs are
+    disjoint by doc."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from data_text_search_spark.functions.codec import (
-            decode_doc_blocks_batch,
-            varint_decode,
-        )
-        if pdf.empty:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "match_count": pd.Series([], dtype="int64")})
-        tkeep = _doc_mask(tomb, allow)
+        decode = _block_decoder(tomb=tomb)
         out_d, out_c = [], []
         for term, rows in pdf.groupby("term", sort=False):
-            fd = rows["first_doc_id"].to_numpy(dtype=np.int64)
-            nd = rows["n_docs"].to_numpy(dtype=np.int64)
-            docs = decode_doc_blocks_batch(fd, nd, rows["doc_deltas"].tolist())
-            tfs = varint_decode(b"".join(rows["tfs"]),
-                                int(nd.sum())).astype(np.int64)
-            if tkeep is not None and docs.size:
-                m = tkeep(docs)
-                if m is not None:
-                    docs, tfs = docs[m], tfs[m]
+            docs, tfs, _ = decode(rows, tfs=tf)
             out_d.append(docs)
-            out_c.append(tfs * weights[term])
-        docs = np.concatenate(out_d)
-        cnt = np.concatenate(out_c)
-        u, inv = np.unique(docs, return_inverse=True)
-        mc = np.bincount(inv, weights=cnt).astype(np.int64)
-        return pd.DataFrame({"doc_id": u, "match_count": mc})
-
-    return kernel
-
-
-def _presence_kernel_factory(weights: dict[str, int], tomb=None,
-                             allow=None):
-    """Partition kernel for the fused clause-membership pass
-    (search_msm / boolean_search / query_string gates): per doc,
-    Σ over terms PRESENT in the doc of weights[term] — presence, not tf,
-    so only doc-id blocks are decoded (tf varints never read). With
-    weights all 1 the sum is the distinct-match count (msm); with
-    disjoint power-of-two weights it is an exact clause-membership
-    BITMASK (a term contributes at most once per doc — one posting row
-    per (term, doc)). One kernel job replaces the round-5 one-doc-set-
-    job-per-clause loop."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from data_text_search_spark.functions.codec import (
-            decode_doc_blocks_batch,
-        )
-        if pdf.empty:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "match_count": pd.Series([], dtype="int64")})
-        tkeep = _doc_mask(tomb, allow)
-        out_d, out_c = [], []
-        for term, rows in pdf.groupby("term", sort=False):
-            fd = rows["first_doc_id"].to_numpy(dtype=np.int64)
-            nd = rows["n_docs"].to_numpy(dtype=np.int64)
-            docs = decode_doc_blocks_batch(fd, nd, rows["doc_deltas"].tolist())
-            if tkeep is not None and docs.size:
-                m = tkeep(docs)
-                if m is not None:
-                    docs = docs[m]
-            out_d.append(docs)
-            out_c.append(np.full(docs.size, weights[term], dtype=np.int64))
-        docs = np.concatenate(out_d)
-        cnt = np.concatenate(out_c)
-        u, inv = np.unique(docs, return_inverse=True)
-        mc = np.bincount(inv, weights=cnt).astype(np.int64)
+            out_c.append(tfs * weights[term] if tf
+                         else np.full(docs.size, weights[term],
+                                      dtype=np.int64))
+        u, inv = np.unique(np.concatenate(out_d), return_inverse=True)
+        mc = np.bincount(inv, weights=np.concatenate(out_c)).astype(np.int64)
         return pd.DataFrame({"doc_id": u, "match_count": mc})
 
     return kernel
@@ -770,36 +791,6 @@ def _shard_topk_kernel_factory(qcounts: dict[str, int], k: int,
     return kernel
 
 
-def _raw_posting_decoder(tomb=None, allow=None):
-    """Decode compact-codec posting rows to RAW (docs, tfs, doc_lens)
-    arrays — the inputs of any similarity function. Only the compact
-    codec stores raw term frequencies and document lengths (the f64
-    codec persists precomputed BM25 impacts), which is what makes the
-    persisted index similarity-pluggable at query time."""
-    from data_text_search_spark.functions.codec import (
-        decode_doc_blocks_batch,
-        varint_decode,
-    )
-
-    tkeep = _doc_mask(tomb, allow)
-
-    def decode(rows: pd.DataFrame):
-        fd = rows["first_doc_id"].to_numpy(dtype=np.int64)
-        nd = rows["n_docs"].to_numpy(dtype=np.int64)
-        docs = decode_doc_blocks_batch(fd, nd, rows["doc_deltas"].tolist())
-        total = int(nd.sum())
-        tfs = varint_decode(b"".join(rows["tfs"]), total).astype(np.float64)
-        dls = varint_decode(b"".join(rows["impacts"]),
-                            total).astype(np.float64)
-        if tkeep is not None and docs.size:
-            m = tkeep(docs)
-            if m is not None:
-                docs, tfs, dls = docs[m], tfs[m], dls[m]
-        return docs, tfs, dls
-
-    return decode
-
-
 def _sim_topk_kernel_factory(qcounts: dict[str, int], k: int, impact_fn,
                              tomb=None, allow=None):
     """Exhaustive shard-local top-k kernel for PLUGGABLE similarities
@@ -812,17 +803,16 @@ def _sim_topk_kernel_factory(qcounts: dict[str, int], k: int, impact_fn,
     term's postings are processed (the colocated reader still prunes to
     query-term row groups, so the scan stays vocabulary-directed)."""
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return _no_hits()
-        decode = _raw_posting_decoder(tomb, allow)
+        decode = _block_decoder("compact", tomb, allow)
         all_docs, all_c = [], []
         for term, rows in pdf.groupby("term"):
-            docs, tfs, dls = decode(rows)
+            docs, tfs, dls = decode(rows, tfs=True, payload=True)
             if docs.size == 0:
                 continue
             t = str(term)
             all_docs.append(docs)
-            all_c.append(impact_fn(t, tfs, dls) * qcounts[t])
+            all_c.append(impact_fn(t, tfs.astype(np.float64), dls)
+                         * qcounts[t])
         if not all_docs:
             return _no_hits()
         docs = np.concatenate(all_docs)
@@ -840,13 +830,21 @@ class IndexSearcher:
     """Loads a persisted index and answers BM25 top-k queries.
 
     Term lookups go through one TermDictionary (term_dictionary.py).
-    `search` is the single-query path (block-max pruned). A small query
-    (the `_driver_answers` gate) runs on the driver with no Spark job;
-    a larger one runs as one Spark job over the colocation units.
-    `search_batch` answers a whole query set in ONE Spark job — the
-    throughput path: posting blocks for the union of query terms are
-    read once, each term is decoded once per shard, and every query's
-    top-k is computed from the shared decoded arrays.
+    Every posting kernel (search's block-max top-k, the similarity
+    top-k, score_all, the per-doc match counts behind fuzzy / prefix /
+    boolean / msm search and the match-set aggregations, the
+    collection-frequency sum) runs through one runner, `run_kernel`:
+    one task per slice of whole colocation units, each reading its
+    units' blocks with the one reader and running the kernel in place.
+    Within the `_driver_answers` gate the tasks run in a driver loop
+    with no Spark job, above it in the one executor stage
+    (`_kernel_stage`, one job when collected); rows are bit-identical
+    either way. `search_batch` answers a whole query set in ONE Spark
+    job through the same stage, over a (query groups × unit slices)
+    grid: posting blocks for each group's terms are read once, each
+    term is decoded once per task, and every query's top-k is computed
+    from the shared decoded arrays. `search_local` is the interactive
+    path with its own driver LRU of term blocks.
     """
 
     # a dictionary (term_stats rows, alpha-pruned included) at or below
@@ -955,11 +953,11 @@ class IndexSearcher:
 
     def _driver_answers(self, qcounts,
                         max_postings: "int | None" = None) -> bool:
-        """THE interactive gate, shared by search() (through _task_tops),
-        search_local and explain(): a single-query top-n runs on the
-        driver with no Spark job when the dictionary fits
-        DRIVER_TERM_CACHE_MAX AND the live query terms' Σ df is at most
-        LOCAL_MAX_POSTINGS (search_local may pass its own
+        """THE driver-or-executor gate, shared by run_kernel (so by every
+        posting kernel but search_batch's), search_local and explain():
+        a kernel runs on the driver with no Spark job when the
+        dictionary fits DRIVER_TERM_CACHE_MAX AND the live terms' Σ df
+        is at most LOCAL_MAX_POSTINGS (search_local may pass its own
         `max_postings`)."""
         d = self._dictionary
         if not d.fits():
@@ -998,51 +996,66 @@ class IndexSearcher:
         if old_bc is not None and hasattr(old_bc, "unpersist"):
             old_bc.unpersist()
 
-    def _colocated_run(self, terms: list[str], kernel,
-                       columns: list[str], schema: str) -> DataFrame:
-        """Shuffle-free kernel stage: one task per group of
-        whole colocation units; each task reads ITS OWN units' posting
-        files directly (pyarrow dataset: term-IN row-group statistics
-        pruning on the term-sorted files, column-pruned to `columns`)
-        and runs the kernel in place. The posting payload never crosses
-        a Spark exchange — the only shuffled rows in a query are the
-        per-task top-k results. This is the document-partitioned
-        execution of a distributed search engine: every sub-shard is a
-        self-contained local index for its documents. Reads are
-        single-threaded per task (the task grid already saturates the
-        cores; per-task thread pools would oversubscribe 32x).
+    def run_kernel(self, terms, kernel, columns: list[str] = WAND_COLS,
+                   schema: str = RESULT_SCHEMA) -> "pd.DataFrame | DataFrame":
+        """THE runner of a posting kernel over `terms`' blocks: the
+        (Tq=1, Td=_n_tasks()) shape of the batch grid, one task per
+        slice of whole colocation units (dealt round-robin), each
+        running _kernel_task. Within the `_driver_answers` gate the
+        tasks run in a driver loop over the footers read at first use,
+        with no Spark job: pandas out (the tasks' rows concatenated in
+        task order, `schema`'s columns when there are none). Above it:
+        the executor stage, as a lazy Spark frame of `schema` (one job
+        when collected). Both run each task over the same units, so the
+        rows are bit-identical (a kernel's summation order follows its
+        input's block maxima)."""
+        td, tset = self._n_tasks(), sorted(terms)
+        if not self._driver_answers(tset):
+            return self._kernel_stage([(tset, kernel)], td, columns, schema)
+        slice_of = {u: i % td for i, u in enumerate(self._unit_files)}
+        footers = self._driver_footers()
+        outs = [_kernel_task([f for f in footers if slice_of[f[1]] == di],
+                             tset, kernel, columns)
+                for di in range(td)]
+        outs = [o for o in outs if o is not None]
+        if not outs:
+            return pd.DataFrame(columns=[f.name for f in
+                                         _schema_fields(schema)])
+        return pd.concat(outs, ignore_index=True)
 
-        Tasks: one wave (_n_tasks). Python task launch costs ~20 ms
-        of non-parallelizing protocol overhead per task (measured: a
-        noop mapInPandas job is 0.21 s at 1 task, 0.96 s at 32), and for
-        search_batch the per-TASK output is ~queries x k rows whatever
-        the task holds — so extra waves multiply both the fixed bill and
-        the merge input. Doc-hash sharding keeps units balanced (max/
-        mean recorded in the build manifest), which is what wave
-        averaging would otherwise buy."""
-        spark = self.spark
+    def _kernel_stage(self, jobs: list[tuple], td: int,
+                      columns: list[str], schema: str) -> DataFrame:
+        """THE executor stage of every posting kernel, shuffle-free: task
+        t = (qi, di) = divmod(t, td) runs _kernel_task with job qi's
+        (sorted terms, kernel) over unit slice di (every td-th unit from
+        di), reading its units' footers itself. The posting payload
+        never crosses a Spark exchange — the only rows leaving a task
+        are its kernel's output. This is the document-partitioned
+        execution of a distributed search engine: every sub-shard is a
+        self-contained local index for its documents.
+
+        Tasks: one wave (run_kernel passes one job over _n_tasks()
+        slices; search_batch a grid of query groups x slices). Python
+        task launch costs ~20 ms of non-parallelizing protocol overhead
+        per task (measured: a noop mapInPandas job is 0.21 s at 1 task,
+        0.96 s at 32), and for search_batch the per-TASK output is
+        ~queries x k rows whatever the task holds — so extra waves
+        multiply both the fixed bill and the merge input. Doc-hash
+        sharding keeps units balanced (max/mean recorded in the build
+        manifest), which is what wave averaging would otherwise buy."""
         fs, units = self._fs, list(self._unit_files.items())
-        T = self._n_tasks()
-        tset = sorted(terms)
 
         def run(batches):
-            import pyarrow.dataset as pds
-            flt = pds.field("term").isin(tset)
             for idx in batches:
-                for tid in idx["id"].tolist():
-                    parts = []
-                    for u, files in units[tid::T]:
-                        tbl = _read_unit(fs, u, files, columns, flt)
-                        if tbl.num_rows:
-                            parts.append(tbl.to_pandas())
-                    if not parts:
-                        continue
-                    out = kernel(pd.concat(parts, ignore_index=True)
-                                 if len(parts) > 1 else parts[0])
-                    if len(out):
+                for t in idx["id"].tolist():
+                    qi, di = divmod(int(t), td)
+                    out = _kernel_task(_unit_footers(fs, dict(units[di::td])),
+                                       *jobs[qi], columns)
+                    if out is not None:
                         yield out
 
-        return spark.range(0, T, 1, T).mapInPandas(run, schema=schema)
+        T = len(jobs) * td
+        return self.spark.range(0, T, 1, T).mapInPandas(run, schema=schema)
 
     OUT_SCHEMA_BATCH = ("query_id int, doc_id long, score double, rank int, "
                         "score_abs double")
@@ -1142,45 +1155,6 @@ class IndexSearcher:
                   for i in range(len(cuts) - 1) if cuts[i + 1] > cuts[i]]
         return len(groups), Td, groups
 
-    def _colocated_batch_grid(self, qterms: dict[int, dict[str, int]],
-                              dfs: dict[str, int], kernel, schema: str,
-                              k: int = 10) -> tuple[DataFrame, int]:
-        """Grid executor for search_batch: task (qi, di)
-        reads ONLY its query group's terms over ONLY its unit slice
-        (pyarrow, term-IN row-group pruned) and scores that group in
-        place. Returns (per-task partial top-k frame, Td) — each query's
-        rows appear in exactly Td tasks, so the merge input is
-        Q·Td·k rows (≤ the 1-D executor's Q·cores·k)."""
-        spark = self.spark
-        fs, units = self._fs, list(self._unit_files.items())
-        Tq, Td, groups = self._batch_grid(qterms, dfs, len(units), k)
-        gterms = [sorted({t for qid in g for t in qterms[qid]})
-                  for g in groups]
-
-        def run(batches):
-            import pyarrow.dataset as pds
-            for idx in batches:
-                for tid in idx["id"].tolist():
-                    qi, di = divmod(int(tid), Td)
-                    if not gterms[qi]:
-                        continue
-                    flt = pds.field("term").isin(gterms[qi])
-                    parts = []
-                    for u, files in units[di::Td]:
-                        tbl = _read_unit(fs, u, files, BATCH_COLS, flt)
-                        if tbl.num_rows:
-                            parts.append(tbl.to_pandas())
-                    if not parts:
-                        continue
-                    out = kernel(pd.concat(parts, ignore_index=True)
-                                 if len(parts) > 1 else parts[0],
-                                 groups[qi])
-                    if len(out):
-                        yield out
-
-        T = Tq * Td
-        return spark.range(0, T, 1, T).mapInPandas(run, schema=schema), Td
-
     def search_batch(self, queries: list[str], n: int = 10,
                      keep=None) -> DataFrame:
         """Top-n per query for a batch, one Spark job. `keep` = the same
@@ -1190,10 +1164,8 @@ class IndexSearcher:
         Returns (query_id int, doc_id long, score double, rank int,
         score_abs double); query_id is the position in `queries`.
         """
-        res = self._search_batch_impl(queries, n, keep)
-        if isinstance(res, DataFrame):
-            return res
-        return self.spark.createDataFrame(res, schema=self.OUT_SCHEMA_BATCH)
+        return _local_frame(self.spark, self._search_batch_impl(queries, n, keep),
+                            self.OUT_SCHEMA_BATCH)
 
     def search_batch_pandas(self, queries: list[str],
                             n: int = 10, keep=None) -> pd.DataFrame:
@@ -1203,10 +1175,7 @@ class IndexSearcher:
         pandas→Spark→Row round trip that `search_batch(...).collect()`
         pays just to satisfy the DataFrame signature — the reference
         returns pandas frames too (bm25_functions.py:619-640)."""
-        res = self._search_batch_impl(queries, n, keep)
-        if isinstance(res, DataFrame):
-            return res.toPandas()
-        return res
+        return _collected(self._search_batch_impl(queries, n, keep))
 
     def _search_batch_impl(self, queries: list[str], n: int,
                            keep=None, *, idf_override=None,
@@ -1288,9 +1257,15 @@ class IndexSearcher:
                                         else float(avgdl_override)),
                                        self.k1, self.b,
                                        tomb=self._tomb_handle, allow=allow)
-        local, tasks = self._colocated_batch_grid(
-            qterms, {t: e[1] for t, e in live.items()}, kernel,
-            "query_id int, doc_id long, score double", n)
+        _, tasks, groups = self._batch_grid(
+            qterms, {t: e[1] for t, e in live.items()}, len(self._units), n)
+        # task (qi, di) reads ONLY group qi's terms over ONLY unit slice
+        # di and scores that group: each query's rows appear in exactly
+        # `tasks` (= Td) tasks, so the merge input is Q·Td·k rows
+        local = self._kernel_stage(
+            [(sorted({t for q in g for t in qterms[q]}),
+              functools.partial(kernel, qids=g)) for g in groups],
+            tasks, BATCH_COLS, "query_id int, doc_id long, score double")
         if tasks * len(qterms) * n <= self.DRIVER_MERGE_MAX_ROWS:
             # the per-task tops are small (≤ tasks·distinct·n rows): fetch
             # them as ONE Arrow transfer and finish the top-n merge on the
@@ -1325,7 +1300,8 @@ class IndexSearcher:
         broadcast the tiny (position, effective-id) map and re-key
         (rank/scores are identical for duplicate queries by
         construction)."""
-        pos_map = self.spark.createDataFrame(
+        pos_map = _local_frame(
+            self.spark,
             [(int(i), int(e)) for i, e in enumerate(orig_eff) if e >= 0],
             "pos int, eff int")
         return (per_eff.join(F.broadcast(pos_map),
@@ -1338,54 +1314,13 @@ class IndexSearcher:
                                    qidf: dict[str, float], n: int,
                                    keep: DataFrame) -> DataFrame:
         """Batch form of _search_filtered_checkpoint — ONE distributed
-        plan for the whole batch: checkpoint pairs explode once over the
-        UNION of query terms, a broadcast (query, term, count) table
-        fans each posting into its queries' contributions, per-(query,
-        doc) sorted-term fold pins the accumulation order, and a
-        per-query window takes top-n. The allow set stays a shuffle
-        semi-join; it never lands on the driver."""
-        from data_text_search_spark.operators.index_build import (
-            committed_tokenized_paths,
-        )
-        spark = self.spark
-        tok = spark.read.parquet(
-            *committed_tokenized_paths(self.paths.root, self.manifest))
-        tdf = self._tombstone_df()
-        if tdf is not None:
-            tok = tok.join(tdf, "doc_id", "left_anti")
-        keep_ids = keep.select(
-            F.col(keep.columns[0]).cast("long").alias("doc_id"))
-        tok = tok.join(keep_ids, "doc_id", "left_semi")
-        all_terms = sorted({t for c in qterms.values() for t in c})
-        qt = spark.createDataFrame(
-            [(int(q), t, int(c)) for q, counts in sorted(qterms.items())
-             for t, c in sorted(counts.items())],
-            "query_id int, term string, qcount int")
-        idf_m = F.create_map(*[x for t in all_terms
-                               for x in (F.lit(t), F.lit(float(qidf[t])))])
-        k1, b, avgdl = float(self.k1), float(self.b), float(self.avgdl)
-        tf = F.col("tf").cast("double")
-        dl = F.col("doc_len").cast("double")
-        imp = ((idf_m[F.col("term")] * tf) * F.lit(k1 + 1)
-               / (tf + F.lit(k1) * (F.lit(1 - b) + (F.lit(b) * dl)
-                                    / F.lit(avgdl))))
-        contrib = (tok
-                   .select("doc_id", "doc_len", F.explode("pairs").alias("p"))
-                   .filter(F.col("p.term").isin(all_terms))
-                   .select("doc_id", "doc_len",
-                           F.col("p.term").alias("term"),
-                           F.col("p.tf").alias("tf"))
-                   .join(F.broadcast(qt), "term")
-                   .select("query_id", "doc_id", "term",
-                           (F.col("qcount") * imp).alias("c")))
-        scored = (contrib.groupBy("query_id", "doc_id")
-                  .agg(F.aggregate(
-                      F.array_sort(F.collect_list(F.struct("term", "c"))),
-                      F.lit(0.0), lambda acc, x: acc + x["c"])
-                      .alias("score")))
+        plan for the whole batch (_checkpoint_scores), then a per-query
+        window takes top-n. The allow set stays a shuffle semi-join; it
+        never lands on the driver."""
         w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                    F.asc("doc_id"))
-        return (scored.withColumn("rank", F.row_number().over(w))
+        return (self._checkpoint_scores(qterms, qidf, keep)
+                .withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= n)
                 .withColumn("score_abs", F.abs(F.round("score", 2))))
 
@@ -1437,7 +1372,7 @@ class IndexSearcher:
         qcounts, qidf = self._terms_from_counts(counts)
         spark = self.spark
         if not qcounts:
-            return _top_frame(spark)
+            return _local_frame(spark, None, TOPN_SCHEMA)
         allow = None
         if keep is not None:
             arr = self._resolve_keep(keep)
@@ -1445,7 +1380,7 @@ class IndexSearcher:
                 return self._search_filtered_checkpoint(qcounts, qidf, n,
                                                         keep)
             if not arr.size:
-                return _top_frame(spark)
+                return _local_frame(spark, None, TOPN_SCHEMA)
             allow = (spark.sparkContext.broadcast(arr)
                      if arr.size > 1_000_000 else arr)
         kernel = _shard_topk_kernel_factory(qcounts, n, self.codec, qidf,
@@ -1461,58 +1396,27 @@ class IndexSearcher:
                        self.spark.sparkContext.defaultParallelism), 1)
 
     def _topn_job(self, qcounts, kernel, n: int,
-                  columns: list[str] = None) -> DataFrame:
+                  columns: list[str] = WAND_COLS) -> DataFrame:
         """Shared execution tail of every single-query top-n kernel
         (search, search_expanded, search_synonyms, search_similarity),
         as a Spark frame: _topn_rows, built from pandas unless the
         distributed merge answered."""
-        top = self._topn_rows(qcounts, kernel, n, columns)
-        return (top if isinstance(top, DataFrame)
-                else _top_frame(self.spark, top))
-
-    def _task_tops(self, qcounts, kernel,
-                   columns: list[str] = None) -> "pd.DataFrame | DataFrame":
-        """The per-task partial top-k rows of `kernel` over the query
-        terms' posting blocks. Within the `_driver_answers` gate the
-        blocks are read on the driver (_read_terms_local on every call,
-        so a unit that vanished since open raises "call refresh()") and
-        the kernel runs once per task's units, exactly as the executor
-        stage deals them, so the rows are bit-identical to the
-        executor's (a kernel's summation order follows its input's block
-        maxima): pandas out. Above the gate: the colocated shuffle-free
-        stage, as a lazy Spark frame (one job when collected)."""
-        columns = columns or WAND_COLS
-        if not self._driver_answers(qcounts):
-            return self._colocated_run(sorted(qcounts), kernel, columns,
-                                       RESULT_SCHEMA)
-        T = self._n_tasks()
-        footers = self._driver_footers()
-        task = {u: i % T for i, u in enumerate(self._unit_files)}
-        parts = []
-        for t in range(T):
-            blocks = _read_terms_local(
-                [f for f in footers if task[f[1]] == t],
-                sorted(qcounts), columns)
-            out = kernel(blocks) if len(blocks) else blocks
-            if len(out):
-                parts.append(out)
-        return pd.concat(parts, ignore_index=True) if parts else _no_hits()
+        return _local_frame(self.spark,
+                            self._topn_rows(qcounts, kernel, n, columns),
+                            TOPN_SCHEMA)
 
     def _topn_rows(self, qcounts, kernel, n: int,
-                   columns: list[str] = None) -> "pd.DataFrame | DataFrame":
-        """_task_tops, then the driver scatter-gather merge (pandas out;
-        federation members call this directly) — or, for executor tops
-        above DRIVER_MERGE_MAX_ROWS, the distributed hash-agg merge."""
-        tops = self._task_tops(qcounts, kernel, columns)
-        if isinstance(tops, DataFrame):
-            if self._n_tasks() * n > self.DRIVER_MERGE_MAX_ROWS:
-                w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-                return (
-                    tops.orderBy(F.desc("score"), F.asc("doc_id")).limit(n)
-                    .withColumn("rank", F.row_number().over(w))
-                    .withColumn("score_abs", F.abs(F.round("score", 2))))
-            tops = tops.toPandas()
-        return _merge_topn_driver(tops, n)
+                   columns: list[str] = WAND_COLS
+                   ) -> "pd.DataFrame | DataFrame":
+        """run_kernel's per-task partial top-k rows, then the driver
+        scatter-gather merge (pandas out; federation members call this
+        directly) — or, for executor tops above DRIVER_MERGE_MAX_ROWS,
+        the distributed merge."""
+        tops = self.run_kernel(qcounts, kernel, columns)
+        if (isinstance(tops, DataFrame)
+                and self._n_tasks() * n > self.DRIVER_MERGE_MAX_ROWS):
+            return _spark_topn(tops, n)
+        return _merge_topn_driver(_collected(tops), n)
 
     # ---- pluggable similarity modules (ES `similarity` setting) --------
 
@@ -1538,8 +1442,10 @@ class IndexSearcher:
         return self._cf_from_postings(terms)
 
     def _cf_from_postings(self, terms: list[str]) -> dict[str, int]:
-        """Per-term cf summed from the posting blocks' tf varints (one
-        kernel job; the compact codec is the one that keeps raw tfs)."""
+        """Per-term cf summed from the posting blocks' tf varints through
+        run_kernel, the tasks' per-term sums added on the driver (the
+        compact codec is the one that keeps raw tfs). No doc mask:
+        tombstoned docs still count."""
         if self.codec != "compact":
             raise ValueError(
                 "collection_tf needs the compact codec (raw tf varints); "
@@ -1547,25 +1453,17 @@ class IndexSearcher:
         live = self._dictionary.lookup(terms)
         if not live:
             return {}
-        from data_text_search_spark.functions.codec import varint_decode
 
         def cf_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"term": pd.Series([], dtype="object"),
-                                  "cf": pd.Series([], dtype="int64")})
-            if pdf.empty:
-                return empty
-            out = []
-            for term, rows in pdf.groupby("term"):
-                total = int(rows["n_docs"].sum())
-                tfs = varint_decode(b"".join(rows["tfs"]), total)
-                out.append((str(term), int(tfs.sum())))
-            return pd.DataFrame(out, columns=["term", "cf"])
+            decode = _block_decoder()
+            return pd.DataFrame(
+                [(str(t), int(decode(rows, tfs=True)[1].sum()))
+                 for t, rows in pdf.groupby("term")], columns=["term", "cf"])
 
-        local = self._colocated_run(sorted(live), cf_kernel,
-                                    ["term", "n_docs", "tfs"],
-                                    "term string, cf long")
-        rows = local.groupBy("term").agg(F.sum("cf").alias("cf")).collect()
-        return {r["term"]: int(r["cf"]) for r in rows}
+        tops = _collected(self.run_kernel(live, cf_kernel, DOC_COLS + ["tfs"],
+                                          "term string, cf long"))
+        return {str(t): int(c)
+                for t, c in tops.groupby("term")["cf"].sum().items()}
 
     def search_similarity(self, query: str, model: str = "tfidf",
                           n: int = 10, lam: float = 0.1,
@@ -1621,7 +1519,7 @@ class IndexSearcher:
         live = self._dictionary.lookup(counts)
         qcounts = {t: c for t, c in counts.items() if t in live}
         if not qcounts:
-            return _top_frame(self.spark)
+            return _local_frame(self.spark, None, TOPN_SCHEMA)
         npl1 = float(self.n_docs) + 1.0
         if model == "tfidf":
             w = {t: (1.0 + math.log(npl1 / (live[t][1] + 1.0))) ** 2
@@ -1642,7 +1540,7 @@ class IndexSearcher:
             pr = {t: cf[t] / total for t in qcounts if cf.get(t)}
             qcounts = {t: c for t, c in qcounts.items() if t in pr}
             if not qcounts:
-                return _top_frame(self.spark)
+                return _local_frame(self.spark, None, TOPN_SCHEMA)
             if model == "lmjm":
                 coef = (1.0 - lam) / lam
 
@@ -1666,19 +1564,19 @@ class IndexSearcher:
         any monotone-breaking reranker needs the full match set, not a
         top-k window. Embarrassingly parallel with NO merge stage: the
         index is document-sharded, so each doc's postings live in exactly
-        one colocation unit and every task emits a disjoint doc set. The
+        one colocation unit and every task emits a disjoint doc set
+        (run_kernel: on the driver within its gate, no Spark job). The
         kernel runs with k past any shard's doc count, which statically
         disables block-max pruning (θ_lb stays −inf) — exhaustive exact
         accumulation."""
         qcounts, qidf = self._query_terms(query)
         if not qcounts:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        k = (1 << 62)
-        kernel = _shard_topk_kernel_factory(qcounts, k, self.codec, qidf,
-                                            self.avgdl, self.k1, self.b,
-                                            tomb=self._tomb_handle)
-        return self._colocated_run(sorted(qcounts), kernel,
-                                   WAND_COLS, RESULT_SCHEMA)
+            return _local_frame(self.spark, None, RESULT_SCHEMA)
+        kernel = _shard_topk_kernel_factory(qcounts, 1 << 62, self.codec,
+                                            qidf, self.avgdl, self.k1,
+                                            self.b, tomb=self._tomb_handle)
+        return _local_frame(self.spark, self.run_kernel(qcounts, kernel),
+                            RESULT_SCHEMA)
 
     def function_score(self, query: str, values: DataFrame,
                        val_col: str = "n_chars", n: int = 10) -> DataFrame:
@@ -1760,9 +1658,9 @@ class IndexSearcher:
                       "score double, score_abs double")
         qtokens = sorted(set(tokenize_py(query)))
         if not qtokens:
-            return spark.createDataFrame([], out_schema)
-        qdf = F.broadcast(spark.createDataFrame([(t,) for t in qtokens],
-                                                "qtok string"))
+            return _local_frame(spark, None, out_schema)
+        qdf = F.broadcast(_local_frame(spark, [(t,) for t in qtokens],
+                                       "qtok string"))
         matched = (self._dictionary.all.select("term", "pruned")
                    .join(qdf, _fuzzy_match_cond(F.col("term"), F.col("qtok"),
                                                 max_mistakes))
@@ -1770,12 +1668,12 @@ class IndexSearcher:
                    .collect())
         weights = {r["term"]: int(r["w"]) for r in matched if not r["pruned"]}
         pruned_w = {r["term"]: int(r["w"]) for r in matched if r["pruned"]}
-        local = self._tf_weighted_counts(weights, pruned_w)
+        local = self._match_counts(weights, pruned_w)
         if local is None:
-            return spark.createDataFrame([], out_schema)
+            return _local_frame(spark, None, out_schema)
         dstats = spark.read.parquet(
             *committed_doc_stats_paths(self.paths.root, self.manifest))
-        return (local.join(dstats.select("doc_id", "n_chars"), "doc_id")
+        return (_local_frame(spark, local, MATCH_SCHEMA).join(dstats.select("doc_id", "n_chars"), "doc_id")
                 .select("doc_id",
                         F.col("n_chars").cast("int").alias("n_chars"),
                         "match_count")
@@ -1785,100 +1683,45 @@ class IndexSearcher:
                 .filter(F.col("score") > 0)
                 .orderBy(F.desc("score_abs"), F.asc("doc_id")))
 
-    def _tf_weighted_counts(self, weights: dict[str, int],
-                            pruned_w: dict[str, int]) -> "DataFrame | None":
-        """Shared tf-sum core of fuzzy_search / prefix_search: per doc,
-        Σ over matched terms of tf · weight, live terms answered from
-        posting blocks (tombstone-masked in the kernel) and alpha-pruned
-        terms from the tokenized checkpoint (tombstone-anti-joined).
-        Returns (doc_id, match_count) or None when nothing matched."""
-        spark = self.spark
-        parts: list[DataFrame] = []
-        mc_schema = "doc_id long, match_count long"
+    def _match_counts(self, weights: dict[str, int],
+                      pruned_w: dict[str, int], tf: bool = True
+                      ) -> "pd.DataFrame | DataFrame | None":
+        """Per doc, Σ over the given terms of weight · tf (`tf`), or of
+        weight · presence (doc-id blocks only, tf varints never read):
+        live terms through run_kernel (_weighted_sum_kernel_factory;
+        tombstones masked in the kernel), alpha-pruned terms from the
+        tokenized checkpoint (tombstone-anti-joined; a narrow HOF sum
+        over each doc's pairs, no explode, no shuffle). fuzzy_search /
+        prefix_search pass tf; search_msm passes presence with all-1
+        weights (distinct-match count), boolean_search / query_string
+        presence with disjoint bit weights (an exact membership bitmask
+        — one posting row per (term, doc), so the sum IS the OR). One
+        kernel run however many clauses. Returns (doc_id, match_count)
+        rows: pandas when the driver answered them all, else a Spark
+        frame; None when no term is given."""
+        parts: list = []
         if weights:
-            kernel = _fuzzy_tf_kernel_factory(weights,
-                                              tomb=self._tomb_handle)
-            parts.append(self._colocated_run(sorted(weights), kernel,
-                                             FUZZY_COLS, mc_schema))
+            kernel = _weighted_sum_kernel_factory(weights, tf,
+                                                  tomb=self._tomb_handle)
+            parts.append(self.run_kernel(
+                weights, kernel, DOC_COLS + (["tfs"] if tf else []),
+                MATCH_SCHEMA))
         if pruned_w:
-            from data_text_search_spark.operators.index_build import (
-                committed_tokenized_paths,
-            )
-            tok = spark.read.parquet(
-                *committed_tokenized_paths(self.paths.root, self.manifest))
-            tdf = self._tombstone_df()
-            if tdf is not None:
-                tok = tok.join(tdf, "doc_id", "left_anti")
+            tok = self._live_checkpoint()
             wmap = F.create_map(*[x for t, w in sorted(pruned_w.items())
-                                  for x in (F.lit(t), F.lit(w))])
-            parts.append(
-                tok.select("doc_id", F.explode("pairs").alias("p"))
-                .filter(F.col("p.term").isin(sorted(pruned_w)))
-                .select("doc_id",
-                        (F.col("p.tf").cast("long")
-                         * wmap[F.col("p.term")]).alias("match_count"))
-                .groupBy("doc_id")
+                                  for x in (F.lit(t), F.lit(int(w)).cast("long"))])
+            mc = F.aggregate(
+                F.filter("pairs", lambda p: p["term"].isin(sorted(pruned_w))),
+                F.lit(0).cast("long"),
+                lambda acc, p: acc + wmap[p["term"]]
+                * (p["tf"].cast("long") if tf else F.lit(1)))
+            parts.append(tok.select("doc_id", mc.alias("match_count"))
+                         .filter(F.col("match_count") > 0))
+        if len(parts) < 2:
+            return parts[0] if parts else None
+        return (_local_frame(self.spark, parts[0], MATCH_SCHEMA)
+                .unionByName(parts[1]).groupBy("doc_id")
                 .agg(F.sum("match_count").alias("match_count")))
-        if not parts:
-            return None
-        local = parts[0]
-        for p in parts[1:]:
-            local = local.unionByName(p)
-        if len(parts) > 1:
-            local = (local.groupBy("doc_id")
-                     .agg(F.sum("match_count").alias("match_count")))
-        return local
-
-    def _presence_mask_counts(self, weights: dict[str, int],
-                              pruned_w: dict[str, int]
-                              ) -> "DataFrame | None":
-        """Fused clause-membership pass: per doc, Σ weights[t] over the
-        given terms PRESENT in the doc — live terms from the posting
-        doc-id blocks (tf varints never decoded; tombstones masked in
-        the kernel), alpha-pruned terms from the tokenized checkpoint
-        (tombstone-anti-joined). One kernel job however many clauses;
-        search_msm passes all-1 weights (distinct-match count),
-        boolean_search / query_string pass disjoint bit weights (an
-        exact membership bitmask — one posting row per (term, doc), so
-        the sum IS the OR). Returns (doc_id, match_count) or None when
-        no term exists."""
-        spark = self.spark
-        parts: list[DataFrame] = []
-        mc_schema = "doc_id long, match_count long"
-        if weights:
-            kernel = _presence_kernel_factory(weights,
-                                              tomb=self._tomb_handle)
-            parts.append(self._colocated_run(sorted(weights), kernel,
-                                             PRESENCE_COLS, mc_schema))
-        if pruned_w:
-            from data_text_search_spark.operators.index_build import (
-                committed_tokenized_paths,
-            )
-            tok = spark.read.parquet(
-                *committed_tokenized_paths(self.paths.root, self.manifest))
-            tdf = self._tombstone_df()
-            if tdf is not None:
-                tok = tok.join(tdf, "doc_id", "left_anti")
-            # presence of each pruned term, weighted — a narrow HOF sum
-            # over the per-doc pairs column, no explode, no shuffle
-            pres = None
-            for t, w in sorted(pruned_w.items()):
-                e = (F.exists("pairs", (lambda tt: lambda p:
-                                        p["term"] == tt)(t))
-                     .cast("long") * F.lit(int(w)))
-                pres = e if pres is None else pres + e
-            parts.append(
-                tok.select("doc_id", pres.alias("match_count"))
-                .filter(F.col("match_count") > 0))
-        if not parts:
-            return None
-        local = parts[0]
-        for p in parts[1:]:
-            local = local.unionByName(p)
-        if len(parts) > 1:
-            local = (local.groupBy("doc_id")
-                     .agg(F.sum("match_count").alias("match_count")))
-        return local
 
     def match_ids(self, query: str) -> "DataFrame | None":
         """Distinct doc_ids containing at least one live query term
@@ -1888,8 +1731,9 @@ class IndexSearcher:
         qcounts, _ = self._query_terms(query)
         if not qcounts:
             return None
-        local = self._tf_weighted_counts({t: 1 for t in qcounts}, {})
-        return None if local is None else local.select("doc_id")
+        return _local_frame(self.spark, self._match_counts(
+            {t: 1 for t in qcounts}, {}, tf=False), MATCH_SCHEMA
+        ).select("doc_id")
 
     def stats_agg(self, query: str, values: DataFrame,
                   val_col: str = "n_chars") -> DataFrame:
@@ -1904,7 +1748,7 @@ class IndexSearcher:
             # SQL aggregate-over-empty semantics (one row: count 0,
             # NULL extremes) so the no-live-terms edge matches the
             # oracle's shape instead of returning zero rows
-            ids = self.spark.createDataFrame([], "doc_id long")
+            ids = _local_frame(self.spark, None, "doc_id long")
         return (values.join(ids, "doc_id", "left_semi")
                 .agg(F.count("*").alias("n_matched"),
                      F.min(val_col).cast("long").alias(f"min_{val_col}"),
@@ -1922,7 +1766,7 @@ class IndexSearcher:
         column is read (column-pruned scan of the values table)."""
         ids = self.match_ids(query)
         if ids is None:
-            return self.spark.createDataFrame([], f"doc_id long, "
+            return _local_frame(self.spark, None, f"doc_id long, "
                                                   f"{val_col} long")
         key = F.asc(val_col) if asc else F.desc(val_col)
         return (values.select("doc_id", F.col(val_col).cast("long")
@@ -1947,7 +1791,7 @@ class IndexSearcher:
                 .alias(nm) for p, nm in zip(probs, names)]
         if ids is None:
             # one all-NULL aggregate row, like SQL over an empty match set
-            ids = self.spark.createDataFrame([], "doc_id long")
+            ids = _local_frame(self.spark, None, "doc_id long")
         return (values.join(ids, "doc_id", "left_semi").agg(*cols))
 
     def complete(self, prefix: str, n: int = 5) -> DataFrame:
@@ -1961,11 +1805,7 @@ class IndexSearcher:
         frame built from pandas, whose collect() runs no Spark job."""
         top = self._dictionary.top_by_df(prefix, n)
         if top is not None:
-            # no match is a placeholder row cut by limit(0), as in
-            # _top_frame: an empty pandas frame would collect with a job
-            return self.spark.createDataFrame(
-                pd.DataFrame(top or [("", 0)], columns=["term", "df"]),
-                "term string, df long").limit(len(top))
+            return _local_frame(self.spark, top, "term string, df long")
         esc = re.escape(prefix)
         return (self.term_stats
                 .filter(F.col("term").rlike(f"^{esc}"))
@@ -1983,8 +1823,7 @@ class IndexSearcher:
         Returns (doc_id, sample_key), key asc."""
         ids = self.match_ids(query)
         if ids is None:
-            return self.spark.createDataFrame(
-                [], "doc_id long, sample_key string")
+            return _local_frame(self.spark, None, "doc_id long, sample_key string")
         key = F.md5(F.concat(F.col("doc_id").cast("string"),
                              F.lit(":" + seed)))
         return (ids.withColumn("sample_key", key)
@@ -2001,12 +1840,9 @@ class IndexSearcher:
         names = sorted(terms)
         sets: dict[str, DataFrame] = {}
         for name in names:
-            local = self._tf_weighted_counts({terms[name]: 1}, {})
-            sets[name] = (local.select("doc_id",
-                                       F.lit(1).alias(f"_f_{name}"))
-                          if local is not None
-                          else self.spark.createDataFrame(
-                              [], f"doc_id long, _f_{name} int"))
+            local = self._match_counts({terms[name]: 1}, {}, tf=False)
+            sets[name] = _local_frame(self.spark, local, MATCH_SCHEMA).select(
+                "doc_id", F.lit(1).alias(f"_f_{name}"))
         # one per-doc membership frame (full outer join over the filter
         # sets), ONE aggregate job computing every single and pairwise
         # count at once — not one job per bucket (the naive form pays a
@@ -2024,7 +1860,7 @@ class IndexSearcher:
         row = flags.agg(*aggs).collect()[0]
         out = sorted((k, int(row[k]) if row[k] is not None else 0)
                      for k in row.asDict())
-        return self.spark.createDataFrame(out, "key string, n long")
+        return _local_frame(self.spark, out, "key string, n long")
 
     def highlight(self, df: DataFrame, query: str, n: int = 10,
                   frag: int = 30) -> DataFrame:
@@ -2075,19 +1911,28 @@ class IndexSearcher:
         Returns (doc_id, match_count), match_count desc, doc_id asc."""
         if not prefix:
             raise ValueError("prefix_search: empty prefix")
-        spark = self.spark
         matched = self._dictionary.prefix(prefix, max_terms)
         if len(matched) > max_terms:
             raise ValueError(
                 f"prefix_search: '{prefix}' matches more than "
                 f"{max_terms} terms; lengthen the prefix or raise "
                 "max_terms")
-        weights = {t: 1 for t, pr in matched.items() if not pr}
-        pruned_w = {t: 1 for t, pr in matched.items() if pr}
-        local = self._tf_weighted_counts(weights, pruned_w)
-        if local is None:
-            return spark.createDataFrame([], "doc_id long, match_count long")
-        return local.orderBy(F.desc("match_count"), F.asc("doc_id"))
+        return self._ranked_match_counts(matched)
+
+    def _ranked_match_counts(self, matched: dict[str, bool]) -> DataFrame:
+        """prefix_search / regex_search's answer: per doc, the
+        occurrences of the matched terms (term -> alpha-pruned flag),
+        match_count desc, doc_id asc — sorted on the driver when the
+        driver answered (no Spark job)."""
+        local = self._match_counts(
+            {t: 1 for t, pr in matched.items() if not pr},
+            {t: 1 for t, pr in matched.items() if pr})
+        if isinstance(local, DataFrame):
+            return local.orderBy(F.desc("match_count"), F.asc("doc_id"))
+        return _local_frame(self.spark, None if local is None else
+                            local.sort_values(["match_count", "doc_id"],
+                                              ascending=[False, True]),
+                            MATCH_SCHEMA)
 
     def regex_search(self, pattern: str,
                      max_terms: int = 10_000) -> DataFrame:
@@ -2106,7 +1951,6 @@ class IndexSearcher:
         Returns (doc_id, match_count), match_count desc, doc_id asc."""
         if not pattern:
             raise ValueError("regex_search: empty pattern")
-        spark = self.spark
         matched = (self._dictionary.all.select("term", "pruned")
                    .filter(F.col("term").rlike(f"^(?:{pattern})$"))
                    .limit(max_terms + 1).collect())
@@ -2114,12 +1958,8 @@ class IndexSearcher:
             raise ValueError(
                 f"regex_search: pattern matches more than {max_terms} "
                 "terms; tighten the pattern or raise max_terms")
-        weights = {r["term"]: 1 for r in matched if not r["pruned"]}
-        pruned_w = {r["term"]: 1 for r in matched if r["pruned"]}
-        local = self._tf_weighted_counts(weights, pruned_w)
-        if local is None:
-            return spark.createDataFrame([], "doc_id long, match_count long")
-        return local.orderBy(F.desc("match_count"), F.asc("doc_id"))
+        return self._ranked_match_counts(
+            {r["term"]: r["pruned"] for r in matched})
 
     def wildcard_search(self, pattern: str,
                         max_terms: int = 10_000) -> DataFrame:
@@ -2151,9 +1991,6 @@ class IndexSearcher:
         base = [r["doc_id"] for r in self.search(query, fb_docs).collect()]
         if not base:
             return []
-        from data_text_search_spark.operators.index_build import (
-            committed_tokenized_paths,
-        )
         spark = self.spark
         tok = (spark.read.parquet(
             *committed_tokenized_paths(self.paths.root, self.manifest))
@@ -2215,16 +2052,7 @@ class IndexSearcher:
         exploded + a dictionary join — corpus-size-independent work.
         Tombstoned or absent doc returns the typed empty frame (ES
         'found: false')."""
-        from data_text_search_spark.operators.index_build import (
-            committed_tokenized_paths,
-        )
-        spark = self.spark
-        tok = (spark.read.parquet(
-            *committed_tokenized_paths(self.paths.root, self.manifest))
-            .filter(F.col("doc_id") == int(doc_id)))
-        tdf = self._tombstone_df()
-        if tdf is not None:
-            tok = tok.join(tdf, "doc_id", "left_anti")
+        tok = self._live_checkpoint().filter(F.col("doc_id") == int(doc_id))
         pairs = (tok.select(F.explode("pairs").alias("p"))
                  .select(F.col("p.term").alias("term"),
                          F.col("p.tf").cast("long").alias("tf")))
@@ -2249,11 +2077,7 @@ class IndexSearcher:
         dictionary join; the query itself is a normal m_terms-term
         search. Returns the standard (doc_id, score, rank, score_abs)
         rows; empty if the doc is absent or has no live terms."""
-        from data_text_search_spark.operators.index_build import (
-            committed_tokenized_paths,
-        )
         spark = self.spark
-        empty = RESULT_SCHEMA + ", rank int, score_abs double"
         tok = (spark.read.parquet(
             *committed_tokenized_paths(self.paths.root, self.manifest))
             .filter(F.col("doc_id") == int(doc_id)))
@@ -2265,15 +2089,11 @@ class IndexSearcher:
                 .orderBy(F.desc("mass"), F.asc("term"))
                 .limit(m_terms).collect())
         if not seed:
-            return spark.createDataFrame([], empty)
+            return _local_frame(spark, None, TOPN_SCHEMA)
         counts = Counter({r["term"]: 1 for r in seed})
-        hits = (self._search_counts(counts, n + 1)
-                .filter(F.col("doc_id") != int(doc_id))
-                .drop("rank", "score_abs"))
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return (hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(n)
-                .withColumn("rank", F.row_number().over(w))
-                .withColumn("score_abs", F.abs(F.round("score", 2))))
+        return _spark_topn(self._search_counts(counts, n + 1)
+                           .filter(F.col("doc_id") != int(doc_id))
+                           .drop("rank", "score_abs"), n)
 
     def search_facets(self, query: str, meta: DataFrame,
                       facet_col: str = "lang") -> DataFrame:
@@ -2288,9 +2108,8 @@ class IndexSearcher:
         qcounts, qidf = self._query_terms(query)
         spark = self.spark
         if not qcounts:
-            return spark.createDataFrame(
-                [], "facet string, n_docs long, top_score double")
-        scored = self._checkpoint_scores(qcounts, qidf)
+            return _local_frame(spark, None, "facet string, n_docs long, top_score double")
+        scored = self._checkpoint_scores({0: qcounts}, qidf)
         return (scored
                 .join(meta.select(F.col("doc_id"),
                                   F.col(facet_col).alias("facet")),
@@ -2313,25 +2132,18 @@ class IndexSearcher:
         spark = self.spark
         empty = "term string, fg_df long, bg_df long, lift double"
         if not qcounts:
-            return spark.createDataFrame([], empty)
-        from data_text_search_spark.operators.index_build import (
-            committed_tokenized_paths,
-        )
-        tok = spark.read.parquet(
-            *committed_tokenized_paths(self.paths.root, self.manifest))
-        tdf = self._tombstone_df()
-        if tdf is not None:
-            tok = tok.join(tdf, "doc_id", "left_anti")
+            return _local_frame(spark, None, empty)
+        tok = self._live_checkpoint()
         qterms = sorted(qcounts)
         # match set: docs whose pairs contain >= 1 live query term
         live_q = [t for t in qterms if t in qidf] if qidf else qterms
         if not live_q:
-            return spark.createDataFrame([], empty)
+            return _local_frame(spark, None, empty)
         fg_tok = tok.filter(F.exists(
             "pairs", lambda p: p["term"].isin(live_q)))
         fg_n = fg_tok.count()
         if fg_n == 0:
-            return spark.createDataFrame([], empty)
+            return _local_frame(spark, None, empty)
         fg_df = (fg_tok.select(F.explode("pairs").alias("p"))
                  .groupBy(F.col("p.term").alias("term"))
                  .agg(F.count("*").alias("fg_df")))
@@ -2372,8 +2184,7 @@ class IndexSearcher:
         spark = self.spark
         toks = tokenize_py(token)
         if not toks:
-            return spark.createDataFrame(
-                [], "term string, distance int, df long")
+            return _local_frame(spark, None, "term string, distance int, df long")
         q = toks[0]
         ts = self._dictionary.all.select("term", F.col("df").cast("long")
                                          .alias("df"))
@@ -2442,7 +2253,7 @@ class IndexSearcher:
         out_schema = "suggestion string, score double"
         toks = tokenize_py(text)
         if not toks:
-            return spark.createDataFrame([], out_schema)
+            return _local_frame(spark, None, out_schema)
         uniq = list(dict.fromkeys(toks))
         ts = self._dictionary.all.select(
             "term", F.col("df").cast("long").alias("df"))
@@ -2482,7 +2293,7 @@ class IndexSearcher:
                 .agg(F.sum("doc_len")).first()[0] or 0)
         T = self._total_dl
         if T == 0:
-            return spark.createDataFrame([], out_schema)
+            return _local_frame(spark, None, out_schema)
         bo = float(backoff)
         scored = []
         for seq in itertools.product(*cands):
@@ -2495,15 +2306,15 @@ class IndexSearcher:
                     score = score * (bo * (lm.get((w, ""), 0) / T))
             scored.append((" ".join(seq), float(score)))
         scored.sort(key=lambda s: (-s[1], s[0]))
-        return spark.createDataFrame(scored[:n], out_schema)
+        return _local_frame(spark, scored[:n], out_schema)
 
     def profile(self, query: str, n: int = 10) -> dict:
         """ES _profile analog: execute the query the way `search` does,
         with per-phase wall timings — parse (tokenize), dictionary (term
-        lookup), kernel job (the per-task top-k: on the driver within the
-        `_driver_answers` gate, else the distributed stage incl. the Arrow
-        transfer of the per-task tops), and driver merge; rows are
-        identical to search()'s (pytest-pinned). Phases are
+        lookup), kernel job (run_kernel's per-task top-k: the driver loop
+        within the `_driver_answers` gate, else the executor stage incl.
+        the Arrow transfer of the per-task tops), and driver merge; rows
+        are identical to search()'s on either side (pytest-pinned). Phases are
         driver-observed wall times, so the kernel phase includes Spark
         scheduling — exactly the number an operator tuning a live index
         needs. Returns {"timings_ms": {...}, "rows": [...], "executor":
@@ -2525,9 +2336,7 @@ class IndexSearcher:
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle)
         t0 = _time.perf_counter()
-        tops = self._task_tops(qcounts, kernel)
-        if isinstance(tops, DataFrame):
-            tops = tops.toPandas()
+        tops = _collected(self.run_kernel(qcounts, kernel))
         t["kernel_job_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
         t0 = _time.perf_counter()
         out = _merge_topn_driver(tops, n)
@@ -2541,63 +2350,50 @@ class IndexSearcher:
         one row per matching query term with (tf, df, idf, contribution),
         the additive decomposition of the doc's BM25 score. Reads the
         query terms' rows of the colocation units on the driver with no
-        Spark job (_read_terms_local: term row-group pruned), keeps the
+        Spark job (the one unit reader, term row-group pruned), keeps the
         blocks whose [first_doc_id, last_doc_id] range covers the doc and
-        decodes them; tombstoned docs return the typed empty result (a deleted doc cannot be explained, like ES on a deleted
-        _id). Columns: (term, tf, df, idf 6dp, contribution 4dp),
+        decodes them with the one block decoder; tombstoned docs return
+        the typed empty result (a deleted doc cannot be explained, like
+        ES on a deleted _id). Columns: (term, tf, df, idf 6dp, contribution 4dp),
         term asc."""
-        from data_text_search_spark.functions.codec import (
-            decode_doc_blocks_batch,
-            varint_decode,
-        )
         schema = ("term string, tf long, df long, idf double, "
                   "contribution double")
         counts = Counter(tokenize_py(query))
         live = self._dictionary.lookup(counts)
         if not live or (self._tombstones is not None
                         and int(doc_id) in self._tombstones):
-            return self.spark.createDataFrame([], schema)
+            return _local_frame(self.spark, None, schema)
         blocks = _read_terms_local(self._driver_footers(), sorted(live),
                                    BATCH_COLS + ["last_doc_id"])
         blocks = blocks[(blocks["first_doc_id"] <= int(doc_id))
                         & (blocks["last_doc_id"] >= int(doc_id))]
+        decode = _block_decoder(self.codec)
         rows = []
         for term, trows in blocks.groupby("term"):
-            fd = trows["first_doc_id"].to_numpy(dtype=np.int64)
-            nd = trows["n_docs"].to_numpy(dtype=np.int64)
-            docs = decode_doc_blocks_batch(fd, nd,
-                                           trows["doc_deltas"].tolist())
-            total = int(nd.sum())
-            tfs = varint_decode(b"".join(trows["tfs"]), total)
+            docs, tfs, p = decode(trows, tfs=True, payload=True)
             j = np.flatnonzero(docs == int(doc_id))
             if not j.size:
                 continue
-            tf = int(tfs[j[0]])
+            j = j[:1]
             idf_t, df_t = live[str(term)][:2]
-            if self.codec == "compact":
-                dls = varint_decode(b"".join(trows["impacts"]), total)
-                dl = float(dls[j[0]])
-                imp = (idf_t * tf * (self.k1 + 1)
-                       / (tf + self.k1 * (1 - self.b
-                                          + (self.b * dl) / self.avgdl)))
-            else:
-                imp = float(np.frombuffer(b"".join(trows["impacts"]),
-                                          dtype="<f8")[j[0]])
-            rows.append((str(term), tf, df_t, round(idf_t, 6),
+            imp = float(_bm25_impacts(self.codec, idf_t, tfs[j], p[j],
+                                      self.avgdl, self.k1, self.b)[0])
+            rows.append((str(term), int(tfs[j[0]]), df_t, round(idf_t, 6),
                          round(imp * counts[str(term)], 4)))
         rows.sort()
-        return self.spark.createDataFrame(rows, schema)
+        return _local_frame(self.spark, rows, schema)
 
     def explain(self, query: str, n: int = 10) -> dict:
         """Query EXPLAIN without executing: per-term dictionary stats
         (df, idf, query count) plus every execution decision search()
-        would take for this query — the executor it runs on ("driver" or
-        "colocated-units", from the same `_driver_answers` gate),
-        distributed executor form, task count, whether the
+        would take for this query — where run_kernel runs its tasks
+        ("driver" loop or the "colocated-units" executor stage, from the
+        same `_driver_answers` gate), distributed executor form, task
+        count (the same unit slices on either side), whether the
         scatter-gather driver merge applies, posting volume to decode,
-        and active tombstone masking. Reads ONLY the term dictionary (vocab-sized);
-        never decodes a posting — safe to call per query at any index
-        size."""
+        and active tombstone masking. Reads ONLY the term dictionary
+        (vocab-sized); never decodes a posting — safe to call per query
+        at any index size."""
         counts = Counter(tokenize_py(query))
         entries = self._dictionary.lookup(counts, live=False)
         qcounts = {t: c for t, c in counts.items()
@@ -2639,7 +2435,7 @@ class IndexSearcher:
         score, exactly Lucene's should+must composition).
 
         Clause membership comes from ONE fused presence pass over every
-        clause term (_presence_mask_counts with disjoint bit weights —
+        clause term (_match_counts' presence form with disjoint bit weights —
         an exact per-doc membership bitmask from the posting doc-id
         blocks; alpha-pruned terms via the checkpoint; no corpus scan).
         Must/must_not compose as bit tests on that single frame instead
@@ -2652,20 +2448,12 @@ class IndexSearcher:
         spark = self.spark
         must_terms = sorted({t for m in must for t in tokenize_py(m)})
         not_terms = sorted({t for m in must_not for t in tokenize_py(m)})
-        empty = RESULT_SCHEMA + ", rank int, score_abs double"
         both = must_terms + not_terms
         pr = self._pruned_flags(both)
         if any(t not in pr for t in must_terms):
-            return spark.createDataFrame([], empty)
+            return _local_frame(spark, None, TOPN_SCHEMA)
 
-        if keep is None:
-            kdf = None
-        elif isinstance(keep, DataFrame):
-            kdf = keep.select(
-                F.col(keep.columns[0]).cast("long").alias("doc_id"))
-        else:
-            kdf = spark.createDataFrame([(int(i),) for i in keep],
-                                        "doc_id long")
+        kdf = None if keep is None else self._keep_ids(keep)
         live_must = [t for t in must_terms if t in pr]
         live_not = [t for t in not_terms if t in pr]
         # one presence pass per 62 clause terms (bit weights must stay
@@ -2674,9 +2462,9 @@ class IndexSearcher:
         for lo in range(0, len(clause_terms), 62):
             chunk = clause_terms[lo:lo + 62]
             bit = {t: 1 << i for i, t in enumerate(chunk)}
-            counts = self._presence_mask_counts(
+            counts = _local_frame(spark, self._match_counts(
                 {t: bit[t] for t in bit if not pr[t]},
-                {t: bit[t] for t in bit if pr[t]})
+                {t: bit[t] for t in bit if pr[t]}, tf=False), MATCH_SCHEMA)
             mask = F.col("match_count")
             must_bits = sum(bit[t] for t in chunk if t in set(live_must))
             not_bits = sum(bit[t] for t in chunk if t in set(live_not))
@@ -2716,33 +2504,27 @@ class IndexSearcher:
         scored doc matches >= 1 term by construction).
 
         Scale shape: ONE fused presence pass over every distinct query
-        term (_presence_mask_counts: per-doc distinct-match counts
+        term (_match_counts' presence form: per-doc distinct-match counts
         straight from the posting doc-id blocks, pruned terms from the
         checkpoint — the round-5 form looped one doc-set kernel per
         term and unioned), then the standard filtered-search paths.
         `keep` intersects a further external allow set."""
         spark = self.spark
         terms = sorted(set(tokenize_py(query)))
-        empty = RESULT_SCHEMA + ", rank int, score_abs double"
         if m <= 1:
             return self.search(query, n, keep=keep)
         if len(terms) < m:
-            return spark.createDataFrame([], empty)
+            return _local_frame(spark, None, TOPN_SCHEMA)
         pr = self._pruned_flags(terms)
         if len(pr) < m:       # not enough terms exist to ever reach m
-            return spark.createDataFrame([], empty)
-        counts = self._presence_mask_counts(
+            return _local_frame(spark, None, TOPN_SCHEMA)
+        counts = _local_frame(spark, self._match_counts(
             {t: 1 for t in pr if not pr[t]},
-            {t: 1 for t in pr if pr[t]})
+            {t: 1 for t in pr if pr[t]}, tf=False), MATCH_SCHEMA)
         kdf = (counts.filter(F.col("match_count") >= m)
                .select("doc_id"))
         if keep is not None:
-            ext = (keep.select(F.col(keep.columns[0]).cast("long")
-                               .alias("doc_id"))
-                   if isinstance(keep, DataFrame)
-                   else spark.createDataFrame([(int(i),) for i in keep],
-                                              "doc_id long"))
-            kdf = kdf.join(ext, "doc_id", "left_semi")
+            kdf = kdf.join(self._keep_ids(keep), "doc_id", "left_semi")
         return self.search(query, n, keep=kdf)
 
     def query_string(self, qs: str, n: int = 10, df: DataFrame = None,
@@ -2780,7 +2562,6 @@ class IndexSearcher:
         spark = self.spark
         counts, must, must_not, phrases, not_phrases, exps = \
             compile_query_string(qs)
-        empty = RESULT_SCHEMA + ", rank int, score_abs double"
         # prefix/fuzzy clauses expand against the term dictionary
         # (suggest()'s vocabulary — alpha-pruned terms included); every
         # expansion scores with the clause boost, '+' gates on ANY
@@ -2795,10 +2576,10 @@ class IndexSearcher:
                     counts[e] += boost if boost != 1.0 else 1
                 if sign == "+":
                     if not terms:
-                        return spark.createDataFrame([], empty)
+                        return _local_frame(spark, None, TOPN_SCHEMA)
                     must_any.append(terms)
         if not counts:
-            return spark.createDataFrame([], empty)
+            return _local_frame(spark, None, TOPN_SCHEMA)
         if self.manifest["config"].get("clean"):
             positions_root = None
         if (phrases or not_phrases) and df is None and positions_root is None:
@@ -2808,13 +2589,13 @@ class IndexSearcher:
         both = must + must_not + [t for g in must_any for t in g]
         pr = self._pruned_flags(both)
         if any(t not in pr for t in must):
-            return spark.createDataFrame([], empty)
+            return _local_frame(spark, None, TOPN_SCHEMA)
 
         def docs_of(t: str) -> DataFrame:
             w = {t: 1}
-            d = self._tf_weighted_counts({} if pr[t] else w,
-                                         w if pr[t] else {})
-            return d.select("doc_id")
+            return _local_frame(spark, self._match_counts(
+                {} if pr[t] else w, w if pr[t] else {}, tf=False),
+                MATCH_SCHEMA).select("doc_id")
 
         def phrase_docs(toks: list[str]) -> DataFrame:
             if positions_root is not None:
@@ -2834,14 +2615,7 @@ class IndexSearcher:
                                        text_col=text_col, id_col=id_col)
                     .select(F.col(id_col).cast("long").alias("doc_id")))
 
-        if keep is None:
-            kdf = None
-        elif isinstance(keep, DataFrame):
-            kdf = keep.select(
-                F.col(keep.columns[0]).cast("long").alias("doc_id"))
-        else:
-            kdf = spark.createDataFrame([(int(i),) for i in keep],
-                                        "doc_id long")
+        kdf = None if keep is None else self._keep_ids(keep)
         live_not = [t for t in must_not if t in pr]
         uniq = sorted(set(must) | set(live_not)
                       | {t for g in must_any for t in g if t in pr})
@@ -2853,9 +2627,9 @@ class IndexSearcher:
             # group = any of its bits, must_not = bit clear — the
             # round-5 form ran one doc-set kernel per clause term
             bit = {t: 1 << i for i, t in enumerate(uniq)}
-            cnts = self._presence_mask_counts(
+            cnts = _local_frame(spark, self._match_counts(
                 {t: bit[t] for t in uniq if not pr[t]},
-                {t: bit[t] for t in uniq if pr[t]})
+                {t: bit[t] for t in uniq if pr[t]}, tf=False), MATCH_SCHEMA)
             mask = F.col("match_count")
             cond = None
             must_bits = sum(bit[t] for t in set(must))
@@ -2906,21 +2680,36 @@ class IndexSearcher:
             kdf = kdf.join(ndf, "doc_id", "left_anti")
         return self._search_counts(counts, n, keep=kdf)
 
+    def _keep_ids(self, keep) -> DataFrame:
+        """A filter-context allow set (a DataFrame whose first column is
+        a doc_id, or an iterable of ints) as one (doc_id long) frame."""
+        if isinstance(keep, DataFrame):
+            return keep.select(
+                F.col(keep.columns[0]).cast("long").alias("doc_id"))
+        return _local_frame(self.spark, [(int(i),) for i in keep],
+                            "doc_id long")
+
     def _resolve_keep(self, keep) -> "np.ndarray | None":
         """Normalize a filtered-search allow set to a sorted int64 array;
         None = too large to collect (count > FILTER_BROADCAST_MAX) — the
         caller must use the distributed checkpoint path. Iterables are
         driver-resident by construction and always materialize."""
         if isinstance(keep, DataFrame):
-            ids = keep.select(
-                F.col(keep.columns[0]).cast("long").alias("doc_id"))
+            ids = self._keep_ids(keep)
             # one action: collect up to gate+1 rows — a separate count()
             # would execute the whole allow-set plan (clause kernels,
-            # phrase gates, joins) a second time just to learn the size
-            pdf = ids.limit(self.FILTER_BROADCAST_MAX + 1).toPandas()
-            if len(pdf) > self.FILTER_BROADCAST_MAX:
+            # phrase gates, joins) a second time just to learn the size.
+            # A plan that optimizes to one local relation (a driver-built
+            # allow set, or clause masks the driver answered) is
+            # collected with no Spark job; toPandas() would start one
+            ids = ids.limit(self.FILTER_BROADCAST_MAX + 1)
+            local = (ids._jdf.queryExecution().optimizedPlan().getClass()
+                     .getSimpleName() == "LocalRelation")
+            arr = (np.array([r[0] for r in ids.collect()], dtype=np.int64)
+                   if local else
+                   ids.toPandas()["doc_id"].to_numpy(dtype=np.int64))
+            if arr.size > self.FILTER_BROADCAST_MAX:
                 return None
-            arr = pdf["doc_id"].to_numpy(dtype=np.int64)
         else:
             arr = np.fromiter((int(i) for i in keep), dtype=np.int64)
         return np.unique(arr)
@@ -2928,58 +2717,51 @@ class IndexSearcher:
     def _search_filtered_checkpoint(self, qcounts: dict[str, int],
                                     qidf: dict[str, float], n: int,
                                     keep: DataFrame) -> DataFrame:
-        """Filtered search, distributed form: score the query terms
-        straight from the tokenized checkpoint (tf · the SAME impact
-        expression the kernels evaluate, frozen full-corpus stats from
-        the manifest), with the allow set as a shuffle semi-join — the
-        filter never lands on the driver. Per-doc contributions sum in
-        sorted-term order (array_sort before the fold), the same
-        accumulation order the kernels pin, so rows match the mask path
-        bit-for-bit (pytest-pinned)."""
-        from data_text_search_spark.operators.index_build import (
-            committed_tokenized_paths,
-        )
-        scored = self._checkpoint_scores(qcounts, qidf, keep)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return (scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(n)
-                .withColumn("rank", F.row_number().over(w))
-                .withColumn("score_abs", F.abs(F.round("score", 2))))
+        """Filtered search, distributed form: the checkpoint scores of a
+        batch of one (_checkpoint_scores), global top-n."""
+        return _spark_topn(
+            self._checkpoint_scores({0: qcounts}, qidf, keep)
+            .drop("query_id"), n)
 
-    def _checkpoint_scores(self, qcounts: dict[str, int],
+    def _checkpoint_scores(self, qterms: dict[int, dict[str, int]],
                            qidf: dict[str, float],
                            keep: "DataFrame | None" = None) -> DataFrame:
-        """(doc_id, score) for every matching doc, scored distributed
-        from the tokenized checkpoint — the scoring body shared by
-        filtered search's distributed branch and search_after."""
-        from data_text_search_spark.operators.index_build import (
-            committed_tokenized_paths,
-        )
+        """(query_id, doc_id, score) for every matching doc of every
+        query, scored distributed from the tokenized checkpoint: tf · THE
+        build impact expression (index_build.impact_expr, frozen
+        full-corpus stats from the manifest) · the query count, with the
+        allow set as a shuffle semi-join — the filter never lands on the
+        driver. The checkpoint pairs explode once over the UNION of query
+        terms and a broadcast (query, term, count) table fans each
+        posting into its queries' contributions. Per (query, doc) the
+        contributions sum in sorted-term order (array_sort before the
+        fold), the accumulation order the kernels pin, so rows match the
+        mask path bit-for-bit (pytest-pinned). The scoring body of
+        filtered search's distributed branch (single and batch),
+        search_facets and search_after."""
         spark = self.spark
-        tok = spark.read.parquet(
-            *committed_tokenized_paths(self.paths.root, self.manifest))
-        tdf = self._tombstone_df()
-        if tdf is not None:
-            tok = tok.join(tdf, "doc_id", "left_anti")
+        tok = self._live_checkpoint()
         if keep is not None:
-            keep_ids = keep.select(
-                F.col(keep.columns[0]).cast("long").alias("doc_id"))
-            tok = tok.join(keep_ids, "doc_id", "left_semi")
-        idf_m = F.create_map(*[x for t in sorted(qcounts)
+            tok = tok.join(self._keep_ids(keep), "doc_id", "left_semi")
+        all_terms = sorted({t for c in qterms.values() for t in c})
+        qt = _local_frame(
+            spark, [(int(q), t, int(c)) for q, counts in sorted(qterms.items())
+                    for t, c in sorted(counts.items())],
+            "query_id int, term string, qcount int")
+        idf_m = F.create_map(*[x for t in all_terms
                                for x in (F.lit(t), F.lit(float(qidf[t])))])
-        cnt_m = F.create_map(*[x for t in sorted(qcounts)
-                               for x in (F.lit(t), F.lit(int(qcounts[t])))])
-        k1, b, avgdl = float(self.k1), float(self.b), float(self.avgdl)
-        tf = F.col("p.tf").cast("double")
-        dl = F.col("doc_len").cast("double")
-        imp = ((idf_m[F.col("p.term")] * tf) * F.lit(k1 + 1)
-               / (tf + F.lit(k1) * (F.lit(1 - b) + (F.lit(b) * dl)
-                                    / F.lit(avgdl))))
         contrib = (tok
                    .select("doc_id", "doc_len", F.explode("pairs").alias("p"))
-                   .filter(F.col("p.term").isin(sorted(qcounts)))
-                   .select("doc_id", F.col("p.term").alias("term"),
-                           (cnt_m[F.col("p.term")] * imp).alias("c")))
-        return (contrib.groupBy("doc_id")
+                   .filter(F.col("p.term").isin(all_terms))
+                   .select("doc_id", "doc_len",
+                           F.col("p.term").alias("term"),
+                           F.col("p.tf").alias("tf"),
+                           idf_m[F.col("p.term")].alias("idf"))
+                   .join(F.broadcast(qt), "term")
+                   .select("query_id", "doc_id", "term",
+                           (F.col("qcount") * impact_expr(self.manifest))
+                           .alias("c")))
+        return (contrib.groupBy("query_id", "doc_id")
                 .agg(F.aggregate(
                     F.array_sort(F.collect_list(F.struct("term", "c"))),
                     F.lit(0.0), lambda acc, x: acc + x["c"])
@@ -3009,18 +2791,15 @@ class IndexSearcher:
         cursor predicate + TakeOrderedAndProject. Composes with
         tombstones and filter-context `keep` like every other path."""
         qcounts, qidf = self._query_terms(query)
-        spark = self.spark
-        empty = "doc_id long, score double, rank int, score_abs double"
         if not qcounts:
-            return spark.createDataFrame([], empty)
+            return _local_frame(self.spark, None, TOPN_SCHEMA)
         keep_df = None
         if keep is not None:
             arr = self._resolve_keep(keep)
             if arr is not None and not arr.size:
-                return spark.createDataFrame([], empty)
-            keep_df = (keep if isinstance(keep, DataFrame) else
-                       spark.createDataFrame([(int(x),) for x in arr],
-                                             "doc_id long"))
+                return _local_frame(self.spark, None, TOPN_SCHEMA)
+            keep_df = self._keep_ids(keep if isinstance(keep, DataFrame)
+                                     else arr)
         if keep_df is None:
             # cursor pagination re-scores NOTHING after page 1: the full
             # rounded match-set frame is localCheckpointed per termset
@@ -3031,7 +2810,7 @@ class IndexSearcher:
             ck = tuple(sorted(qcounts.items()))
             scored = self._page_cache.get(ck)
             if scored is None:
-                scored = (self._checkpoint_scores(qcounts, qidf, None)
+                scored = (self._checkpoint_scores({0: qcounts}, qidf)
                           .select("doc_id",
                                   F.round("score", 4).alias("score"))
                           .localCheckpoint(eager=True))
@@ -3039,17 +2818,22 @@ class IndexSearcher:
                     self._page_cache.pop(next(iter(self._page_cache)))
                 self._page_cache[ck] = scored
         else:
-            scored = (self._checkpoint_scores(qcounts, qidf, keep_df)
+            scored = (self._checkpoint_scores({0: qcounts}, qidf, keep_df)
                       .select("doc_id", F.round("score", 4).alias("score")))
         if after is not None:
             s, d = float(after[0]), int(after[1])
             scored = scored.filter(
                 (F.col("score") < s)
                 | ((F.col("score") == s) & (F.col("doc_id") > d)))
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return (scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(n)
-                .withColumn("rank", F.row_number().over(w))
-                .withColumn("score_abs", F.abs(F.round("score", 2))))
+        return _spark_topn(scored, n)
+
+    def _live_checkpoint(self) -> DataFrame:
+        """The committed tokenized checkpoint (doc_id, doc_len, pairs),
+        tombstoned docs anti-joined out."""
+        tok = self.spark.read.parquet(
+            *committed_tokenized_paths(self.paths.root, self.manifest))
+        tdf = self._tombstone_df()
+        return tok if tdf is None else tok.join(tdf, "doc_id", "left_anti")
 
     def _tombstone_df(self) -> "DataFrame | None":
         """Deleted doc_ids as a (broadcastable) DataFrame for plan-side
@@ -3128,9 +2912,6 @@ class IndexSearcher:
                 return fuzzy.fuzzy_phrase_search(
                     self.spark, df, query, max_mistakes,
                     text_col=text_col, id_col=id_col)
-        from data_text_search_spark.operators.index_build import (
-            committed_tokenized_paths,
-        )
         tok = self.spark.read.parquet(
             *committed_tokenized_paths(self.paths.root, self.manifest))
         hits = F.size(F.filter(
@@ -3193,9 +2974,6 @@ class IndexSearcher:
         if not qtokens or self.manifest["config"].get("clean"):
             return fuzzy.phrase_search(self.spark, df, query,
                                        text_col=text_col, id_col=id_col)
-        from data_text_search_spark.operators.index_build import (
-            committed_tokenized_paths,
-        )
         tok = self.spark.read.parquet(
             *committed_tokenized_paths(self.paths.root, self.manifest))
         def term_cond(t: str, c: int):

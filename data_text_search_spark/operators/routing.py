@@ -42,8 +42,9 @@ from data_text_search_spark.config import BM25Config
 from data_text_search_spark.operators.federation import FederatedSearcher
 from data_text_search_spark.operators.index_build import build_index
 from data_text_search_spark.operators.index_query import (
+    TOPN_SCHEMA,
     IndexSearcher,
-    _top_frame,
+    _local_frame,
 )
 from data_text_search_spark.sources import fsio
 
@@ -179,7 +180,7 @@ class RoutedSearcher:
         contribute nothing; all-unknown returns the typed empty."""
         roots = self._roots_for(routing)
         if roots is not None and not roots:
-            return _top_frame(self.spark)
+            return _local_frame(self.spark, None, TOPN_SCHEMA)
         return self.fed.search(query, n, members=roots)
 
     def search_batch(self, queries: list[str], n: int = 10,
@@ -187,6 +188,6 @@ class RoutedSearcher:
         """Batch form — one restricted kernel job per selected member."""
         roots = self._roots_for(routing)
         if roots is not None and not roots:
-            return self.spark.createDataFrame(
-                [], IndexSearcher.OUT_SCHEMA_BATCH)
+            return _local_frame(self.spark, None,
+                                IndexSearcher.OUT_SCHEMA_BATCH)
         return self.fed.search_batch(queries, n, members=roots)

@@ -194,6 +194,10 @@ def test_searcher_opened_before_merge_refuses_merged_units(spark, tmp_path,
                  lambda: s.search_batch_pandas(["return import"], 5)):
         with pytest.raises(Exception, match="call refresh"):
             call()
+    # the executor stage's tasks read through the same unit reader
+    s.LOCAL_MAX_POSTINGS = 0
+    with pytest.raises(Exception, match="call refresh"):
+        s.search("return import", 5).collect()
 
 
 def test_fuzzy_paths_mask_deleted(spark, corpus, deleted_index):

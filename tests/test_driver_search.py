@@ -38,25 +38,40 @@ QUERIES = (["def return import", "return", "zyzzyva obelisk",
 
 
 def _rows(df):
+    """A frame's rows, or an answer that is already data (profile()'s
+    rows, collection_tf's dict) as it is."""
+    if isinstance(df, (list, dict)):
+        return df
     return [tuple(r) for r in df.collect()]
 
 
-def _driver_and_executor(spark_jobs, searchers, call):
+def _driver_and_executor(spark_jobs, searchers, call, own_jobs=False):
     """(rows on the driver, rows on the executors) of `call()`, with
     `searchers` forced onto the executor path for the second run. Also
-    checks which path each run took: the driver run starts no Spark
-    job; a non-empty executor run starts at least one."""
-    with spark_jobs() as on_driver:
-        drv = _rows(call())
+    checks which path each run took: the driver run starts no executor
+    kernel stage and no Spark job; the executor run starts a stage, and
+    a job when it has rows. `own_jobs`: the call's answer is a Spark
+    plan around its kernel (a dictionary scan, a doc-values join), so
+    the driver run may start that plan's jobs, just no kernel stage."""
+    stages = []
     for s in searchers:
-        s.LOCAL_MAX_POSTINGS = 0
+        s._kernel_stage = (lambda run: lambda *a: stages.append(a)
+                           or run(*a))(s._kernel_stage)
     try:
+        with spark_jobs() as on_driver:
+            drv = _rows(call())
+        on_driver_stages = len(stages)
+        for s in searchers:
+            s.LOCAL_MAX_POSTINGS = 0
         with spark_jobs() as on_executors:
             exe = _rows(call())
     finally:
         for s in searchers:
-            del s.LOCAL_MAX_POSTINGS
-    assert on_driver == []
+            s.__dict__.pop("LOCAL_MAX_POSTINGS", None)
+            del s._kernel_stage
+    assert on_driver_stages == 0
+    assert own_jobs or on_driver == []
+    assert len(stages) or not exe
     assert on_executors or not exe
     return drv, exe
 
@@ -70,17 +85,19 @@ def indexes(spark, corpus, tmp_path_factory):
         build_index(spark, corpus, roots[codec],
                     BM25Config(impact_codec=codec), id_col="doc_id",
                     shards=4, groups=1)
-    # a segment with terms no base doc holds, tombstones in both
-    seg = str(base / "seg")
-    build_index(spark, corpus, seg, BM25Config(), id_col="doc_id",
-                shards=4, groups=1)
-    add_documents(spark, seg, spark.createDataFrame(pd.DataFrame({
-        "doc_id": range(10_000, 10_012),
-        "content": [f"flibbertigibbet gizmo{i % 3} return import "
-                    f"{'wobble ' * (i % 4)}" for i in range(12)]})),
-        id_col="doc_id")
-    delete_documents(spark, seg, [2, 7, 12, 10_001, 10_004])
-    roots["segmented"] = seg
+    # a segment with terms no base doc holds, tombstones in both; on
+    # both codecs (collection_tf sums raw tfs, which only compact keeps)
+    for name, codec in (("segmented", "f64"),
+                        ("segmented_compact", "compact")):
+        roots[name] = seg = str(base / name)
+        build_index(spark, corpus, seg, BM25Config(impact_codec=codec),
+                    id_col="doc_id", shards=4, groups=1)
+        add_documents(spark, seg, spark.createDataFrame(pd.DataFrame({
+            "doc_id": range(10_000, 10_012),
+            "content": [f"flibbertigibbet gizmo{i % 3} return import "
+                        f"{'wobble ' * (i % 4)}" for i in range(12)]})),
+            id_col="doc_id")
+        delete_documents(spark, seg, [2, 7, 12, 10_001, 10_004])
     # hot terms in most docs: negative IDF
     rs = np.random.RandomState(99)
     texts = [" ".join(["omnibus"] * int(rs.rand() < 0.9)
@@ -230,3 +247,51 @@ def test_delete_documents_job_count(spark, spark_jobs, corpus, tmp_path):
     assert not fsio.exists(f"{root}/tombstones/del2")
     s = IndexSearcher(spark, root)
     assert s._tombstones.tolist() == [3, 4, 5, 6]
+
+
+@pytest.mark.parametrize("name", ["f64", "compact", "segmented"])
+def test_kernel_callers_driver_equals_executor(spark, spark_jobs, corpus,
+                                               indexes, name):
+    """Every caller of the one kernel runner answers with bit-identical
+    rows on the driver (no Spark job of its own) and on the executors."""
+    s = IndexSearcher(spark, indexes[name])
+    values = spark.createDataFrame(corpus.select("doc_id", "content")
+                                   .toPandas().assign(
+                                       n_chars=lambda d: d.content.str.len())
+                                   [["doc_id", "n_chars"]])
+    kernel_only = {
+        "score_all": lambda q: s.score_all(q),
+        "prefix_search": lambda q: s.prefix_search(q.split()[0][:2]),
+        "boolean_search": lambda q: s.boolean_search(
+            q, must=[q.split()[0]], must_not=["select"]),
+        "search_msm": lambda q: s.search_msm(q, 2),
+        "profile": lambda q: s.profile(q)["rows"],
+    }
+    with_plan = {
+        "fuzzy_search": lambda q: s.fuzzy_search(q.split()[0] + "x", 1),
+        "stats_agg": lambda q: s.stats_agg(q, values),
+    }
+    answered = 0
+    for q in ["def return import", "return", "gizmo1 wobble return"]:
+        for calls, own in ((kernel_only, False), (with_plan, True)):
+            for label, call in calls.items():
+                drv, exe = _driver_and_executor(spark_jobs, [s],
+                                                lambda: call(q), own)
+                assert drv == exe, (label, q)
+                answered += bool(drv)
+                if name == "segmented" and label != "stats_agg":
+                    assert not {r[0] if isinstance(r, tuple) else
+                                r["doc_id"] for r in drv} & {2, 7, 12}
+    assert answered >= 15
+
+
+def test_collection_tf_driver_equals_executor(spark, spark_jobs, indexes):
+    """collection_tf on a segmented index sums tf varints through the
+    runner: the same counts on the driver (no Spark job) as on the
+    executors, tombstoned docs still counted."""
+    s = IndexSearcher(spark, indexes["segmented_compact"])
+    terms = ["return", "import", "flibbertigibbet", "wobble", "absentzz"]
+    drv, exe = _driver_and_executor(spark_jobs, [s],
+                                    lambda: s.collection_tf(terms))
+    assert drv == exe and drv["flibbertigibbet"] == 12
+    assert drv["wobble"] == sum(i % 4 for i in range(12))
