@@ -86,13 +86,14 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _physical_searcher(spark: SparkSession, sf_dir: str,
-                       codec: str = "f64"):
-    """Build (once per session+sf+codec) the real on-disk index and return
+def _physical_searcher(spark: SparkSession, sf_dir: str, codec=None):
+    """Build (once per session+sf) the real on-disk index and return
     a warmed IndexSearcher — the production path: index_build encode +
     block-max pruned WAND executor, under the same DuckDB oracle as the
-    exhaustive scorer."""
-    key = ("pidx", _session_token(spark), sf_dir, codec)
+    exhaustive scorer. `codec` is accepted and ignored: it stays only
+    for the frozen bench.py, which still passes codec="compact"; every
+    call gets the one index."""
+    key = ("pidx", _session_token(spark), sf_dir)
     if key not in _CACHE:
         import tempfile
 
@@ -100,15 +101,10 @@ def _physical_searcher(spark: SparkSession, sf_dir: str,
         from data_text_search_spark.operators.index_query import IndexSearcher
 
         root = tempfile.mkdtemp(prefix="dts_pidx_") + "/idx"
-        # non-f64 codecs re-encode the SAME tokenize artifact: reuse the
-        # f64 index's tokenized checkpoint through the documented merge
-        # path (bit-identical pairs -> bit-identical stats/impacts)
-        pairs = None if codec == "f64" else _physical_pairs(spark, sf_dir)
-        build_index(spark, None if pairs is not None
-                    else _documents(spark, sf_dir), root,
-                    BM25Config(alpha=APP_CFG.alpha, impact_codec=codec),
+        build_index(spark, _documents(spark, sf_dir), root,
+                    BM25Config(alpha=APP_CFG.alpha),
                     text_col="text", id_col="doc_id",
-                    groups=ENTRY_BUILD_GROUPS, tokenized_pairs=pairs)
+                    groups=ENTRY_BUILD_GROUPS)
         s = IndexSearcher(spark, root)
         s.warm()
         _CACHE[key] = (None, s)
@@ -124,10 +120,10 @@ ENTRY_BUILD_GROUPS = 1
 
 
 def _physical_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The session f64 physical index's tokenized checkpoint —
-    (doc_id, shard, pairs, doc_len, n_chars), the codec- and
-    stopword-independent tokenize artifact that every derivative build
-    below reuses via build_index(tokenized_pairs=...), exactly as
+    """The session physical index's tokenized checkpoint —
+    (doc_id, shard, pairs, doc_len, n_chars), the stopword-independent
+    tokenize artifact that every derivative build below reuses via
+    build_index(tokenized_pairs=...), exactly as
     merge_segments rebuilds from persisted checkpoints (the pairs are a
     pure function of the text under the pinned tokenizer, so the
     resulting index is bit-identical to a fresh corpus build)."""
@@ -466,10 +462,10 @@ def q_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_topk_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship query through the COMPACT posting codec ((delta, tf,
-    doc_len) varints, impacts recomputed exactly at decode) — same DuckDB
-    oracle, proving the 3.8-bytes/posting payload is score-identical."""
-    s = _physical_searcher(spark, sf_dir, codec="compact")
+    """Flagship query through the physical index, the name kept for the
+    contract row: (delta, tf, doc_len) varints, impacts recomputed
+    exactly at decode — same DuckDB oracle as bm25_topk_physical."""
+    s = _physical_searcher(spark, sf_dir)
     res = s.search(FLAGSHIP_QUERY, 10)
     return res.select("doc_id", F.round("score", 4).alias("score"),
                       F.col("score_abs"))
@@ -559,7 +555,7 @@ def _delta_searcher(spark: SparkSession, sf_dir: str):
         # v1 = 90% unchanged docs + 10% stale rewrites. The unchanged
         # slice reuses the physical index's tokenized checkpoint (pairs
         # are a pure function of the text under the pinned tokenizer —
-        # same reuse the incremental base and codec builds make); only
+        # same reuse the incremental base build makes); only
         # the stale rewrites (modified text, shifted ids) tokenize fresh.
         from data_text_search_spark.functions.text import (
             tokenize_tf_pandas_udf,
@@ -612,7 +608,7 @@ def q_bm25_batch_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _federated(spark: SparkSession, sf_dir: str):
-    """Build (once per session+sf) TWO disjoint compact indexes over the
+    """Build (once per session+sf) TWO disjoint indexes over the
     documents table split by doc_id parity, and open them through
     FederatedSearcher — the multi-index deployment shape (generations /
     tenant slices searched as one corpus with exact global stats)."""
@@ -637,8 +633,7 @@ def _federated(spark: SparkSession, sf_dir: str):
         def _member(i: int) -> str:
             root = f"{base}/m{i}"
             build_index(spark, None, root,
-                        BM25Config(alpha=APP_CFG.alpha,
-                                   impact_codec="compact"),
+                        BM25Config(alpha=APP_CFG.alpha),
                         text_col="text", id_col="doc_id",
                         groups=ENTRY_BUILD_GROUPS,
                         tokenized_pairs=pairs.filter(
@@ -669,8 +664,7 @@ def _routed(spark: SparkSession, sf_dir: str):
         )
         root = tempfile.mkdtemp(prefix="dts_routed_") + "/idx"
         build_routed_index(spark, _documents(spark, sf_dir), root, "lang",
-                           BM25Config(alpha=APP_CFG.alpha,
-                                      impact_codec="compact"),
+                           BM25Config(alpha=APP_CFG.alpha),
                            text_col="text", id_col="doc_id")
         rs = RoutedSearcher(spark, root)
         rs.warm()
@@ -742,7 +736,7 @@ def q_bm25_batch_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _snapshot_searcher(spark: SparkSession, sf_dir: str):
-    """Snapshot the compact physical index (operators/snapshot.py: copy
+    """Snapshot the physical index (operators/snapshot.py: copy
     committed files, distributed sha256 source-vs-copy verification,
     manifest re-committed last) and open a searcher AT THE SNAPSHOT —
     queries against it prove a snapshot is a complete, openable index."""
@@ -758,7 +752,7 @@ def _snapshot_searcher(spark: SparkSession, sf_dir: str):
             verify_snapshot,
         )
 
-        src = _physical_searcher(spark, sf_dir, codec="compact")
+        src = _physical_searcher(spark, sf_dir)
         dest = tempfile.mkdtemp(prefix="dts_snap_") + "/snap"
         snapshot_index(spark, src.paths.root, dest)
         rep = verify_snapshot(spark, dest)
@@ -771,7 +765,7 @@ def _snapshot_searcher(spark: SparkSession, sf_dir: str):
 
 
 def q_bm25_topk_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship query answered from a VERIFIED SNAPSHOT of the compact
+    """Flagship query answered from a VERIFIED SNAPSHOT of the physical
     index (never the original root), hash-checked against the same
     DuckDB oracle — snapshot/restore produces byte-faithful, queryable
     copies."""
@@ -1522,11 +1516,11 @@ def q_bm25_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- pluggable similarities + match-set aggregations (ES parity) -------
 
 def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic TF-IDF answered from the SAME compact physical index as
-    BM25 (ES per-field `similarity` setting): the compact codec stores
-    raw (tf, doc_len) per posting, so the scoring function is a
-    query-time expression — no rebuild between similarity modules."""
-    s = _physical_searcher(spark, sf_dir, codec="compact")
+    """Classic TF-IDF answered from the SAME physical index as BM25 (ES
+    per-field `similarity` setting): every posting stores its raw
+    (tf, doc_len), so the scoring function is a query-time expression —
+    no rebuild between similarity modules."""
+    s = _physical_searcher(spark, sf_dir)
     res = s.search_similarity(FLAGSHIP_QUERY, model="tfidf", n=10)
     return res.select("doc_id", F.round("score", 4).alias("score"),
                       F.col("score_abs"))
@@ -1534,9 +1528,9 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lmjm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-model ranking (Jelinek-Mercer smoothing, λ=0.1) from the
-    same compact index; collection frequencies come from one
+    same physical index; collection frequencies come from one
     vocabulary-directed pass over the query terms' posting blocks."""
-    s = _physical_searcher(spark, sf_dir, codec="compact")
+    s = _physical_searcher(spark, sf_dir)
     res = s.search_similarity(FLAGSHIP_QUERY, model="lmjm", n=10, lam=0.1)
     return res.select("doc_id", F.round("score", 4).alias("score"),
                       F.col("score_abs"))
@@ -1544,10 +1538,10 @@ def q_lmjm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lmdir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LM-Dirichlet ranking (Lucene LMDirichletSimilarity, μ=2000 — the
-    ES default) from the same compact index: matched-terms scoring with
+    ES default) from the same physical index: matched-terms scoring with
     the per-term clamp at 0, per-posting decomposable because doc_len
-    rides every compact posting."""
-    s = _physical_searcher(spark, sf_dir, codec="compact")
+    rides every posting."""
+    s = _physical_searcher(spark, sf_dir)
     res = s.search_similarity(FLAGSHIP_QUERY, model="lmdir", n=10,
                               mu=2000.0)
     return res.select("doc_id", F.round("score", 4).alias("score"),
@@ -1556,9 +1550,9 @@ def q_lmdir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bm25plus_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25+ (Lv & Zhai 2011, δ=1): the lower-bounded variant that fixes
-    BM25's long-document penalty — same compact index, query-time
+    BM25's long-document penalty — same physical index, query-time
     expression swap only."""
-    s = _physical_searcher(spark, sf_dir, codec="compact")
+    s = _physical_searcher(spark, sf_dir)
     res = s.search_similarity(FLAGSHIP_QUERY, model="bm25plus", n=10,
                               delta=1.0)
     return res.select("doc_id", F.round("score", 4).alias("score"),

@@ -24,15 +24,11 @@ class BM25Config:
 
     # physical-index knobs (engine-only; no reference analog — the
     # reference keeps the whole index as one in-RAM dict)
-    block_size: int = 128          # postings per compressed block
-    term_partitions: int = 32      # hash-partition count of the term dictionary
-    # posting payload codec:
-    # - "f64": exact per-posting impact scores, 8 B each (default)
-    # - "compact": store doc_len varints instead; the query kernel
-    #   recomputes the EXACT same f64 impact from (idf, tf, doc_len)
-    #   with the build expression's operand order — ~2.5x smaller
-    #   payload, bit-identical scores (pytest-pinned)
-    impact_codec: str = "f64"
+    # postings per compressed block. Every posting stores its tf and
+    # doc_len varints; the query kernel recomputes the EXACT f64 impact
+    # from (idf, tf, doc_len) with the build expression's operand order
+    # (bit-identical scores, pytest-pinned)
+    block_size: int = 128
     # ES stop-token-filter analog, SCORING-TIME semantics: stopwords are
     # flagged `pruned` in term_stats (exactly the A5 alpha-cutoff
     # mechanism — flag, never delete), so they cannot score and their

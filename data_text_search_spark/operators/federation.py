@@ -21,12 +21,11 @@ differently depending on which member it landed in.
    exact expression ln(N − df + 0.5) − ln(df + 0.5)
    (index_build.py term_stats stage) at the federated N/df.
 
-2. **Member execution with the global stats.** Members must use the
-   compact codec: it stores raw (tf, doc_len) per posting, so each
-   member's kernel recomputes impacts with the BUILD expression's
-   operand order (index_query._bm25_impacts) under the federated
-   idf/avgdl — bit-identical math to a single combined index, just
-   with different idf operands.
+2. **Member execution with the global stats.** Every posting stores
+   its raw (tf, doc_len), so each member's kernel recomputes impacts
+   with the BUILD expression's operand order (index_query._bm25_impacts)
+   under the federated idf/avgdl — bit-identical math to a single
+   combined index, just with different idf operands.
 
 3. **Block-max pruning survives the stat swap.** Stored block bounds
    are extrema of `idf_l · g_l` where g_a(tf, dl) = tf(k1+1)/(tf +
@@ -80,6 +79,7 @@ from pyspark.sql import functions as F
 
 from data_text_search_spark.functions.text import tokenize_py
 from data_text_search_spark.operators.index_build import (
+    DOC_STATS_SCHEMA,
     committed_doc_stats_paths,
 )
 from data_text_search_spark.operators.index_query import (
@@ -91,7 +91,7 @@ from data_text_search_spark.operators.index_query import (
 )
 
 # member-config keys that must agree for federated scoring to be exact
-# (block_size / term_partitions / shards are pure layout and may differ)
+# (block_size / shards are pure layout and may differ)
 _SEMANTIC_KEYS = ("k1", "b", "alpha", "clean", "stopwords")
 
 
@@ -150,12 +150,6 @@ class FederatedSearcher:
         cfg0 = dict(self.members[0].manifest["config"])
         for m, r in zip(self.members, self.roots):
             c = m.manifest["config"]
-            if c.get("impact_codec") != "compact":
-                raise ValueError(
-                    f"federated scoring needs the compact codec (raw "
-                    f"tf/doc_len); member {r} stores precomputed f64 "
-                    f"impacts — rebuild with "
-                    f"BM25Config(impact_codec='compact')")
             diff = [k for k in _SEMANTIC_KEYS if c.get(k) != cfg0.get(k)]
             if diff:
                 raise ValueError(
@@ -172,7 +166,7 @@ class FederatedSearcher:
         paths = [p for m in self.members
                  for p in committed_doc_stats_paths(m.paths.root,
                                                     m.manifest)]
-        row = (spark.read.parquet(*paths)
+        row = (spark.read.schema(DOC_STATS_SCHEMA).parquet(*paths)
                .agg(F.count("*").alias("n"),
                     F.sum("doc_len").alias("sdl")).collect()[0])
         self.n_docs = int(row["n"])
@@ -275,7 +269,7 @@ class FederatedSearcher:
                 e = qidf[t] * k1p1
                 fb[t] = (max(e, 0.0), min(e, 0.0))
             inner = _shard_topk_kernel_factory(
-                qcounts, n, "compact", qidf, self.avgdl, self.k1, self.b,
+                qcounts, n, qidf, self.avgdl, self.k1, self.b,
                 tomb=m._tomb_handle)
             kernel = _rescale_bounds_kernel(
                 inner, rmap, fb, self.avgdl / m.avgdl if m.avgdl else 1.0)

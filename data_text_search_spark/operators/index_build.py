@@ -14,15 +14,14 @@ bm25_functions.py:203-210):
 
 - **Block codec.** Within a shard, postings sort by (term, doc_id) and
   chunk into blocks of `block_size`: first/last doc id + delta-varint
-  doc gaps + varint tfs + per-posting impact payload + block max/min
-  metadata for block-skipping at query time. Impacts are the exact BM25
-  per-(term,doc) contribution (idf·tf·(k1+1)/(tf+k1(1−b+b·dl/avgdl)))
-  computed in float64 at build time — queries never touch doc_stats.
-  Two payload codecs (BM25Config.impact_codec): "f64" stores the raw
-  impact (8 B/posting, ~10.1 B total); "compact" stores the doc_len
-  varint instead (~3.8 B total) and the query kernel recomputes the
-  identical f64 impact from (idf, tf, doc_len) with the same operand
-  order — 2.6x smaller index, bit-identical scores (pytest-pinned).
+  doc gaps + varint tfs + varint doc lengths (the `impacts` column) +
+  block max/min metadata for block-skipping at query time. The block
+  bounds are the exact BM25 per-(term,doc) contributions
+  (idf·tf·(k1+1)/(tf+k1(1−b+b·dl/avgdl))) computed in float64 at build
+  time; the query kernel recomputes the identical f64 impact from
+  (idf, tf, doc_len) with the same operand order, so queries never touch
+  doc_stats and any similarity model scores the same postings (~3.7 B
+  per posting in all, bit-identical scores, pytest-pinned).
 
 - **Sub-shard-major layout.** Inside each group directory, postings are
   parquet-partitioned by spart = shard % subshards (subshards =
@@ -86,6 +85,8 @@ from data_text_search_spark.functions.text import (
 )
 from data_text_search_spark.operators.bm25_exhaustive import idf_expr, ingest
 
+# `impacts` holds the per-posting doc-length varints the query kernel
+# recomputes each BM25 impact from (with `tfs`)
 POSTINGS_SCHEMA = (
     "term string, shard int, block_id int, first_doc_id long, last_doc_id long, "
     "n_docs int, doc_deltas binary, tfs binary, impacts binary, "
@@ -93,17 +94,20 @@ POSTINGS_SCHEMA = (
 )
 # the term dictionary: every reader passes it to spark.read.schema, so
 # opening term_stats never runs a schema-inference job
-TERM_STATS_SCHEMA = ("term string, df long, cf long, idf double, "
-                     "pruned boolean, term_bucket int")
+TERM_STATS_SCHEMA = "term string, df long, cf long, idf double, pruned boolean"
 # a tokenized checkpoint (base `tokenized/` and every segment's): the
 # build, merge_tier and merge_segments read it with this schema, so no
 # read of it runs a schema-inference job
 TOKENIZED_SCHEMA = ("doc_id long, shard int, "
                     "pairs array<struct<term:string,tf:int>>, "
                     "doc_len int, n_chars long")
+# the per-document statistics (base `doc_stats/` and every segment's),
+# read with this schema for the same reason
+DOC_STATS_SCHEMA = "doc_id long, doc_len int, shard int, n_chars long"
 # the layout every build writes: v2 colocation units, doc_stats as its
-# own stage, `cf` + `pruned` in term_stats, a non-null n_chars
-FORMAT_VERSION = 3
+# own stage, `cf` + `pruned` in term_stats, a non-null n_chars, and
+# doc-length varints as the one posting payload
+FORMAT_VERSION = 4
 # shard_n_docs: the shard's TOTAL posting count, emitted on the shard's
 # first block row only (null elsewhere). It exists so the shard-balance
 # metric (max/mean postings per shard — the doc-hash salting claim) rides
@@ -288,31 +292,26 @@ def shard_expr(shards: int) -> Column:
     return F.pmod(F.xxhash64("doc_id"), F.lit(shards)).cast("int")
 
 
-def term_bucket_expr(term_buckets: int) -> Column:
-    """THE term bucket of a term_stats or postings row."""
-    return F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int")
-
-
 def with_term_stats(counts: DataFrame, n_docs: int, alpha: float,
-                    stopwords, term_buckets: int) -> DataFrame:
+                    stopwords) -> DataFrame:
     """(term, df, cf) rows with THE dictionary columns of `n_docs`
-    documents added: the unsmoothed Robertson idf, the `pruned` flag
-    (idf at or below the alpha cutoff, or a stopword) and the term
-    bucket — the base build, the Spark segment encode and the driver
-    segment writer all compute them here."""
+    documents added: the unsmoothed Robertson idf and the `pruned` flag
+    (idf at or below the alpha cutoff, or a stopword) — the base build,
+    the Spark segment encode and the driver segment writer all compute
+    them here."""
     return (counts
             .withColumn("idf", idf_expr(n_docs))
             .withColumn("pruned",
                         ~(F.col("idf") > F.lit(alpha))
                         | (F.col("term").isin(list(stopwords))
-                           if stopwords else F.lit(False)))
-            .withColumn("term_bucket", term_bucket_expr(term_buckets)))
+                           if stopwords else F.lit(False))))
 
 
 def impact_expr(manifest: dict) -> Column:
     """THE per-posting BM25 impact of (idf, tf, doc_len) under the
-    manifest's k1, b and avgdl — the operand order the compact codec's
-    query kernel repeats to recompute it bit-identically."""
+    manifest's k1, b and avgdl — the operand order the query kernel
+    repeats to recompute it bit-identically from the stored tf and doc
+    length."""
     cfg = manifest["config"]
     k1, b, avgdl = cfg["k1"], cfg["b"], manifest["avgdl"]
     return (F.col("idf") * F.col("tf") * F.lit(k1 + 1)
@@ -330,14 +329,13 @@ def arrow_schema(ddl: str):
     return to_arrow_schema(_parse_datatype_string(ddl))
 
 
-def _encode_shard_factory(block_size: int, impact_codec: str = "f64"):
+def _encode_shard_factory(block_size: int):
     """applyInPandas kernel: one pandas group per shard → posting blocks.
 
-    impact_codec "f64" stores exact per-posting impacts (8 B each);
-    "compact" stores per-posting doc_len varints in the same binary
-    column instead — the query kernel recomputes the identical f64
-    impact from (idf, tf, doc_len). block_max/block_min are exact
-    either way (computed from the exact impacts here)."""
+    The `impacts` column holds per-posting doc_len varints — the query
+    kernel recomputes the identical f64 impact from (idf, tf, doc_len).
+    block_max/block_min are exact (computed from the exact impacts
+    here)."""
 
     def encode_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         from data_text_search_spark.functions.codec import (
@@ -395,17 +393,10 @@ def _encode_shard_factory(block_size: int, impact_codec: str = "f64"):
         block_max = np.maximum.reduceat(impacts, block_start)
         block_min = np.minimum.reduceat(impacts, block_start)
 
-        if impact_codec == "compact":
-            # per-posting doc_len varints (impacts recomputed at read)
-            dlens = pdf["doc_len"].to_numpy(dtype=np.int64)[order]
-            impacts_bufs = varint_encode_segmented(
-                dlens.astype(np.uint64), block_len)
-        else:
-            # impacts: raw little-endian float64 per block
-            imp_le = impacts.astype("<f8").tobytes()
-            imp_ends = np.cumsum(block_len) * 8
-            imp_starts = imp_ends - block_len * 8
-            impacts_bufs = [imp_le[s:e] for s, e in zip(imp_starts, imp_ends)]
+        # per-posting doc_len varints (impacts recomputed at read)
+        dlens = pdf["doc_len"].to_numpy(dtype=np.int64)[order]
+        impacts_bufs = varint_encode_segmented(dlens.astype(np.uint64),
+                                               block_len)
 
         # shard total on the first row only (see POSTINGS_SCHEMA note)
         shard_total = pd.array([None] * n_blocks, dtype="Int64")
@@ -444,13 +435,10 @@ def write_postings(td: DataFrame, live_stats: DataFrame, manifest: dict,
     to `out/group=g/spart=s/` in ONE job and returns each group's stats.
     The write overwrites partitions dynamically, so the files of groups
     not listed (done before a resume) are left as they are."""
-    cfg = manifest["config"]
     shards, subshards = manifest["shards"], manifest["subshards"]
     enc = (td.join(live_stats.select("term", "idf"), "term")
            .withColumn("impact", impact_expr(manifest))
-           .select("term", "doc_id", "tf", "impact", "shard",
-                   *(["doc_len"] if cfg["impact_codec"] == "compact"
-                     else [])))
+           .select("term", "doc_id", "tf", "impact", "shard", "doc_len"))
     unit = ["spart"]
     if groups is not None:
         n_groups = manifest["groups"]
@@ -465,11 +453,8 @@ def write_postings(td: DataFrame, live_stats: DataFrame, manifest: dict,
             "shard")
         unit = ["group", "spart"]
     blocks = (enc.groupBy("shard")
-              .applyInPandas(_encode_shard_factory(cfg["block_size"],
-                                                   cfg["impact_codec"]),
-                             schema=POSTINGS_SCHEMA)
-              .withColumn("term_bucket",
-                          term_bucket_expr(manifest["term_buckets"]))
+              .applyInPandas(_encode_shard_factory(
+                  manifest["config"]["block_size"]), schema=POSTINGS_SCHEMA)
               .withColumn("spart",
                           F.pmod(F.col("shard"), F.lit(subshards)).cast("int")))
     if groups is not None:
@@ -570,7 +555,6 @@ def build_index(
         fsio.delete(root, spark)
     fsio.mkdirs(root, spark)
     shards = shards or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tp = config.term_partitions
     # colocation units of the shuffle-free query path: capped so the file
     # count (subshards per group) stays sane at 10^5+ shards
     subshards = min(shards, 256)
@@ -580,9 +564,8 @@ def build_index(
         "tokenizer": TOKEN_PATTERN,
         "config": {"k1": config.k1, "b": config.b, "alpha": config.alpha,
                    "clean": config.clean, "block_size": config.block_size,
-                   "impact_codec": config.impact_codec,
                    "stopwords": sorted(config.stopwords)},
-        "shards": shards, "term_buckets": tp, "groups": groups,
+        "shards": shards, "groups": groups,
         "subshards": subshards,
         "stages": {}, "groups_state": {}, "metrics": {},
     }
@@ -596,17 +579,16 @@ def build_index(
             f"tokenizer {manifest.get('tokenizer')!r}, this engine uses "
             f"{TOKEN_PATTERN!r}; pass resume=False to rebuild")
     # semantic/layout config is pinned too: resuming with different
-    # k1/b/alpha/block_size/term_partitions would mix incompatible impacts
-    # or bucket layouts across groups and silently corrupt query results
+    # k1/b/alpha/block_size would mix incompatible impacts or block
+    # layouts across groups and silently corrupt query results
     want_cfg = {"k1": config.k1, "b": config.b, "alpha": config.alpha,
                 "clean": config.clean, "block_size": config.block_size,
-                "impact_codec": config.impact_codec,
                 "stopwords": sorted(config.stopwords)}
-    if manifest["config"] != want_cfg or manifest["term_buckets"] != tp:
+    if manifest["config"] != want_cfg:
         raise ValueError(
             f"resume config mismatch: index at {root} was built with "
-            f"{manifest['config']} / term_buckets={manifest['term_buckets']}, "
-            f"got {want_cfg} / term_buckets={tp}; pass resume=False to rebuild")
+            f"{manifest['config']}, got {want_cfg}; pass resume=False to "
+            f"rebuild")
 
     def stage_done(name: str) -> bool:
         return manifest["stages"].get(name, {}).get("status") == "done"
@@ -725,7 +707,7 @@ def build_index(
             (with_term_stats(
                 td.groupBy("term").agg(F.count("*").alias("df"),
                                        F.sum("tf").alias("cf")),
-                n_docs, config.alpha, config.stopwords, tp)
+                n_docs, config.alpha, config.stopwords)
              .observe(ts_obs, F.avg(F.when(~F.col("pruned"), F.col("idf")))
                       .alias("avg_idf"))
              .write.mode("overwrite").parquet(paths.term_stats))

@@ -78,6 +78,8 @@ from pyspark.sql import functions as F
 from data_text_search_spark.config import IndexPaths
 from data_text_search_spark.functions.text import tokenize_py
 from data_text_search_spark.operators.index_build import (
+    DOC_STATS_SCHEMA,
+    TOKENIZED_SCHEMA,
     committed_doc_stats_paths,
     committed_postings_dirs,
     committed_term_stats_paths,
@@ -148,16 +150,15 @@ def _doc_mask(tomb, allow):
     return keep
 
 
-def _block_decoder(codec: "str | None" = None, tomb=None, allow=None):
+def _block_decoder(tomb=None, allow=None):
     """THE posting-block decode every kernel shares: a term's rows ->
-    (docs, tfs, payload), with the doc mask (`tomb` / `allow`: deny /
+    (docs, tfs, doc lengths), with the doc mask (`tomb` / `allow`: deny /
     allow doc-set handles, see _doc_mask) applied once, so deleted or
     filtered-out docs never leave the decoder. `tfs=True` adds the tf
-    varints (int64); `payload=True` adds the impacts column as float64:
-    the doc-length varints of the compact codec, the stored BM25
-    impacts of the f64 codec (`codec` says which). What is not asked
-    for is None and never decoded. Kernels build it inside their task,
-    so a broadcast doc-set handle is resolved on the executor.
+    varints (int64); `payload=True` adds the doc-length varints of the
+    `impacts` column as float64. What is not asked for is None and never
+    decoded. Kernels build it inside their task, so a broadcast doc-set
+    handle is resolved on the executor.
 
     Decode is BATCHED over all of a term's blocks: one varint pass over
     the concatenated buffers + a vectorized segmented reconstruction —
@@ -179,11 +180,8 @@ def _block_decoder(codec: "str | None" = None, tomb=None, allow=None):
         total = int(nd.sum())
         t = (varint_decode(b"".join(rows["tfs"]), total).astype(np.int64)
              if tfs else None)
-        p = None
-        if payload:
-            buf = b"".join(rows["impacts"])
-            p = (varint_decode(buf, total).astype(np.float64)
-                 if codec == "compact" else np.frombuffer(buf, dtype="<f8"))
+        p = (varint_decode(b"".join(rows["impacts"]), total)
+             .astype(np.float64) if payload else None)
         m = keep(docs) if keep is not None and docs.size else None
         if m is not None:
             docs = docs[m]
@@ -194,32 +192,26 @@ def _block_decoder(codec: "str | None" = None, tomb=None, allow=None):
     return decode
 
 
-def _bm25_impacts(codec: str, idf: float, tfs: np.ndarray,
-                  payload: np.ndarray, avgdl: float, k1: float,
-                  b: float) -> np.ndarray:
-    """Per-posting BM25 impacts from a decode: the f64 codec's payload
-    IS the impact; the compact codec's is the doc length, and the exact
-    f64 impact is recomputed with the BUILD expression's operand order
-    (index_build.impact_expr), so scores are bit-identical to the f64
-    codec: ((idf·tf)·(k1+1)) / (tf + k1·((1−b) + (b·dl)/avgdl))."""
-    if codec != "compact":
-        return payload
+def _bm25_impacts(idf: float, tfs: np.ndarray, dls: np.ndarray,
+                  avgdl: float, k1: float, b: float) -> np.ndarray:
+    """Per-posting BM25 impacts from a decode's tfs and doc lengths,
+    computed with the BUILD expression's operand order
+    (index_build.impact_expr), so they are bit-identical to the impacts
+    the build bounds its blocks with:
+    ((idf·tf)·(k1+1)) / (tf + k1·((1−b) + (b·dl)/avgdl))."""
     tf = tfs.astype(np.float64)
-    return idf * tf * (k1 + 1) / (tf + k1 * ((1 - b) + (b * payload) / avgdl))
+    return idf * tf * (k1 + 1) / (tf + k1 * ((1 - b) + (b * dls) / avgdl))
 
 
-def _term_decoder(codec: str, qidf: dict[str, float] | None,
-                  avgdl: float, k1: float, b: float, tomb=None,
-                  allow=None):
+def _term_decoder(qidf: dict[str, float], avgdl: float, k1: float,
+                  b: float, tomb=None, allow=None):
     """decode(term, rows) -> (docs, BM25 impacts): _block_decoder, then
     _bm25_impacts; shared by the top-k and the batch kernels."""
-    blocks = _block_decoder(codec, tomb, allow)
-    compact = codec == "compact"
+    blocks = _block_decoder(tomb, allow)
 
     def decode(term: str, rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-        docs, tfs, p = blocks(rows, tfs=compact, payload=True)
-        return docs, _bm25_impacts(codec, qidf[term] if compact else 0.0,
-                                   tfs, p, avgdl, k1, b)
+        docs, tfs, dls = blocks(rows, tfs=True, payload=True)
+        return docs, _bm25_impacts(qidf[term], tfs, dls, avgdl, k1, b)
 
     return decode
 
@@ -518,8 +510,7 @@ def _kernel_task(footers: list[tuple], terms: list[str], kernel,
 
 
 def _batch_kernel_factory(qterms: dict[int, dict[str, int]], k: int,
-                          codec: str = "f64",
-                          qidf: dict[str, float] | None = None,
+                          qidf: dict[str, float],
                           avgdl: float = 1.0, k1: float = 1.5,
                           b: float = 0.75, tomb=None, allow=None):
     """Task kernel for search_batch: decode each term once,
@@ -534,7 +525,7 @@ def _batch_kernel_factory(qterms: dict[int, dict[str, int]], k: int,
         empty = pd.DataFrame({"query_id": pd.Series([], dtype="int32"),
                               "doc_id": pd.Series([], dtype="int64"),
                               "score": pd.Series([], dtype="float64")})
-        decode = _term_decoder(codec, qidf, avgdl, k1, b, tomb, allow)
+        decode = _term_decoder(qidf, avgdl, k1, b, tomb, allow)
         decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         for term, rows in pdf.groupby("term", sort=True):
             d = decode(term, rows)
@@ -667,14 +658,13 @@ def _weighted_sum_kernel_factory(weights: dict[str, int], tf: bool,
 
 
 def _shard_topk_kernel_factory(qcounts: dict[str, int], k: int,
-                               codec: str = "f64",
-                               qidf: dict[str, float] | None = None,
+                               qidf: dict[str, float],
                                avgdl: float = 1.0, k1: float = 1.5,
                                b: float = 0.75, tomb=None, allow=None):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return _no_hits()
-        decode = _term_decoder(codec, qidf, avgdl, k1, b, tomb, allow)
+        decode = _term_decoder(qidf, avgdl, k1, b, tomb, allow)
 
         # per-term bounds: gain = best possible contribution to one doc,
         # loss = worst possible (negative IDF → impacts may be < 0, so
@@ -794,7 +784,7 @@ def _shard_topk_kernel_factory(qcounts: dict[str, int], k: int,
 def _sim_topk_kernel_factory(qcounts: dict[str, int], k: int, impact_fn,
                              tomb=None, allow=None):
     """Exhaustive shard-local top-k kernel for PLUGGABLE similarities
-    over the compact codec: per query term, decode raw (docs, tf, dl),
+    over the raw postings: per query term, decode (docs, tf, dl),
     contribution = impact_fn(term, tfs, dls) · qcount, segmented-sum the
     concatenation, emit the shard top-k (score desc, doc_id asc).
 
@@ -803,7 +793,7 @@ def _sim_topk_kernel_factory(qcounts: dict[str, int], k: int, impact_fn,
     term's postings are processed (the colocated reader still prunes to
     query-term row groups, so the scan stays vocabulary-directed)."""
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        decode = _block_decoder("compact", tomb, allow)
+        decode = _block_decoder(tomb, allow)
         all_docs, all_c = [], []
         for term, rows in pdf.groupby("term"):
             docs, tfs, dls = decode(rows, tfs=True, payload=True)
@@ -898,7 +888,6 @@ class IndexSearcher:
             lambda: me().DRIVER_TERM_CACHE_MAX, cache)
         self.term_stats = self._dictionary.live   # alpha-pruned rows out
         cfg = m.get("config", {})
-        self.codec = cfg.get("impact_codec", "f64")
         self.k1 = cfg.get("k1", 1.5)
         self.b = cfg.get("b", 0.75)
         self.avgdl = m.get("avgdl", 1.0)
@@ -1192,7 +1181,7 @@ class IndexSearcher:
             results by construction: absent terms contribute nothing).
         Results are identical to the undeduplicated run (pytest-pinned).
 
-        `idf_override` / `avgdl_override` (compact codec only): score with
+        `idf_override` / `avgdl_override`: score with
         EXTERNAL statistics instead of this index's own — the federation
         layer's hook (operators/federation.py computes exact global
         df/idf/avgdl across member indexes). The batch kernel recomputes
@@ -1200,13 +1189,9 @@ class IndexSearcher:
         block bounds, so an override changes only the idf/avgdl operands.
         Terms absent from `idf_override` (globally pruned) are excluded
         exactly like dictionary-absent terms."""
-        if idf_override is not None:
-            if self.codec != "compact":
-                raise ValueError("stats override needs the compact codec "
-                                 "(raw tf/doc_len per posting)")
-            if keep is not None:
-                raise ValueError("stats override with a filter-context "
-                                 "keep set is not supported")
+        if idf_override is not None and keep is not None:
+            raise ValueError("stats override with a filter-context "
+                             "keep set is not supported")
         spark = self.spark
         uniq_strs, inv_str = np.unique(np.asarray(queries, dtype=object),
                                        return_inverse=True)
@@ -1252,7 +1237,7 @@ class IndexSearcher:
                 return _merge_topn_driver(empty, n)
             allow = (spark.sparkContext.broadcast(arr)
                      if arr.size > 1_000_000 else arr)
-        kernel = _batch_kernel_factory(qterms, n, self.codec, qidf,
+        kernel = _batch_kernel_factory(qterms, n, qidf,
                                        (self.avgdl if avgdl_override is None
                                         else float(avgdl_override)),
                                        self.k1, self.b,
@@ -1383,7 +1368,7 @@ class IndexSearcher:
                 return _local_frame(spark, None, TOPN_SCHEMA)
             allow = (spark.sparkContext.broadcast(arr)
                      if arr.size > 1_000_000 else arr)
-        kernel = _shard_topk_kernel_factory(qcounts, n, self.codec, qidf,
+        kernel = _shard_topk_kernel_factory(qcounts, n, qidf,
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle,
                                             allow=allow)
@@ -1443,13 +1428,8 @@ class IndexSearcher:
 
     def _cf_from_postings(self, terms: list[str]) -> dict[str, int]:
         """Per-term cf summed from the posting blocks' tf varints through
-        run_kernel, the tasks' per-term sums added on the driver (the
-        compact codec is the one that keeps raw tfs). No doc mask:
-        tombstoned docs still count."""
-        if self.codec != "compact":
-            raise ValueError(
-                "collection_tf needs the compact codec (raw tf varints); "
-                "this index stores precomputed f64 impacts")
+        run_kernel, the tasks' per-term sums added on the driver. No
+        doc mask: tombstoned docs still count."""
         live = self._dictionary.lookup(terms)
         if not live:
             return {}
@@ -1471,7 +1451,7 @@ class IndexSearcher:
                           delta: float = 1.0) -> DataFrame:
         """Top-n under a pluggable similarity, answered from the SAME
         persisted index as BM25 (Elasticsearch's per-field `similarity`
-        setting): the compact codec stores raw (tf, doc_len) per posting,
+        setting): every posting stores its raw (tf, doc_len),
         so the scoring function is a query-time expression — one physical
         index serves BM25, classic TF-IDF, and LM rankers with no
         rebuild. Models:
@@ -1490,7 +1470,7 @@ class IndexSearcher:
 
         lmdir — language model with Dirichlet smoothing, Lucene
         LMDirichletSimilarity's matched-terms form (per-posting
-        decomposable because dl rides every compact posting):
+        decomposable because dl rides every posting):
             Σ_t qtf · max(0, ln(1 + tf/(μ·cf_t/T)) + ln(μ/(dl+μ)))
         (Lucene clamps each term's contribution at 0). ES default
         μ = 2000.
@@ -1506,12 +1486,6 @@ class IndexSearcher:
         similarity (they have no postings) — exactly Lucene: a term
         absent from the index cannot score. Tie-break and output shape
         match search(): (doc_id, score, rank, score_abs)."""
-        if self.codec != "compact":
-            raise ValueError(
-                "search_similarity needs an index built with the compact "
-                "codec (raw tf + doc_len per posting); this index stores "
-                "precomputed f64 BM25 impacts — rebuild with "
-                "BM25Config(impact_codec='compact')")
         if model not in self.SIMILARITIES:
             raise ValueError(f"unknown similarity {model!r}; "
                              f"one of {self.SIMILARITIES}")
@@ -1572,9 +1546,9 @@ class IndexSearcher:
         qcounts, qidf = self._query_terms(query)
         if not qcounts:
             return _local_frame(self.spark, None, RESULT_SCHEMA)
-        kernel = _shard_topk_kernel_factory(qcounts, 1 << 62, self.codec,
-                                            qidf, self.avgdl, self.k1,
-                                            self.b, tomb=self._tomb_handle)
+        kernel = _shard_topk_kernel_factory(qcounts, 1 << 62, qidf,
+                                            self.avgdl, self.k1, self.b,
+                                            tomb=self._tomb_handle)
         return _local_frame(self.spark, self.run_kernel(qcounts, kernel),
                             RESULT_SCHEMA)
 
@@ -1671,7 +1645,7 @@ class IndexSearcher:
         local = self._match_counts(weights, pruned_w)
         if local is None:
             return _local_frame(spark, None, out_schema)
-        dstats = spark.read.parquet(
+        dstats = spark.read.schema(DOC_STATS_SCHEMA).parquet(
             *committed_doc_stats_paths(self.paths.root, self.manifest))
         return (_local_frame(spark, local, MATCH_SCHEMA).join(dstats.select("doc_id", "n_chars"), "doc_id")
                 .select("doc_id",
@@ -1992,7 +1966,7 @@ class IndexSearcher:
         if not base:
             return []
         spark = self.spark
-        tok = (spark.read.parquet(
+        tok = (spark.read.schema(TOKENIZED_SCHEMA).parquet(
             *committed_tokenized_paths(self.paths.root, self.manifest))
             .filter(F.col("doc_id").isin([int(d) for d in base])))
         ts = self.term_stats  # live (unpruned) terms only
@@ -2078,7 +2052,7 @@ class IndexSearcher:
         search. Returns the standard (doc_id, score, rank, score_abs)
         rows; empty if the doc is absent or has no live terms."""
         spark = self.spark
-        tok = (spark.read.parquet(
+        tok = (spark.read.schema(TOKENIZED_SCHEMA).parquet(
             *committed_tokenized_paths(self.paths.root, self.manifest))
             .filter(F.col("doc_id") == int(doc_id)))
         seed = (tok.select(F.explode("pairs").alias("p"))
@@ -2288,7 +2262,7 @@ class IndexSearcher:
             # Σ doc_len of the committed snapshot (segments included) —
             # a per-searcher constant (stale under tombstones by design,
             # like every suggest statistic); refresh() re-derives it
-            self._total_dl = int(spark.read.parquet(
+            self._total_dl = int(spark.read.schema(DOC_STATS_SCHEMA).parquet(
                 *committed_doc_stats_paths(self.paths.root, self.manifest))
                 .agg(F.sum("doc_len")).first()[0] or 0)
         T = self._total_dl
@@ -2332,7 +2306,7 @@ class IndexSearcher:
                     else "colocated-units")
         if not qcounts:
             return {"timings_ms": t, "rows": [], "executor": executor}
-        kernel = _shard_topk_kernel_factory(qcounts, n, self.codec, qidf,
+        kernel = _shard_topk_kernel_factory(qcounts, n, qidf,
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle)
         t0 = _time.perf_counter()
@@ -2367,17 +2341,17 @@ class IndexSearcher:
                                    BATCH_COLS + ["last_doc_id"])
         blocks = blocks[(blocks["first_doc_id"] <= int(doc_id))
                         & (blocks["last_doc_id"] >= int(doc_id))]
-        decode = _block_decoder(self.codec)
+        decode = _block_decoder()
         rows = []
         for term, trows in blocks.groupby("term"):
-            docs, tfs, p = decode(trows, tfs=True, payload=True)
+            docs, tfs, dls = decode(trows, tfs=True, payload=True)
             j = np.flatnonzero(docs == int(doc_id))
             if not j.size:
                 continue
             j = j[:1]
             idf_t, df_t = live[str(term)][:2]
-            imp = float(_bm25_impacts(self.codec, idf_t, tfs[j], p[j],
-                                      self.avgdl, self.k1, self.b)[0])
+            imp = float(_bm25_impacts(idf_t, tfs[j], dls[j], self.avgdl,
+                                      self.k1, self.b)[0])
             rows.append((str(term), int(tfs[j[0]]), df_t, round(idf_t, 6),
                          round(imp * counts[str(term)], 4)))
         rows.sort()
@@ -2411,7 +2385,6 @@ class IndexSearcher:
             "absent_terms": [t for t in missing if t not in pruned],
             "alpha_pruned_terms": pruned,
             "postings_to_decode": int(total),
-            "codec": self.codec,
             "tombstones_masked": (int(self._tombstones.size)
                                   if self._tombstones is not None else 0),
             "plan": {
@@ -2420,7 +2393,6 @@ class IndexSearcher:
                 "executor": "driver" if on_driver else "colocated-units",
                 "distributed_executor": "colocated-units",
                 "tasks": int(tasks),
-                "term_buckets": int(self.manifest["term_buckets"]),
                 "driver_merge": tasks * n <= self.DRIVER_MERGE_MAX_ROWS,
             },
         }
@@ -2481,10 +2453,9 @@ class IndexSearcher:
                     mask.bitwiseAND(F.lit(not_bits)) != 0)
                     .select("doc_id"))
                 if kdf is None:
-                    kdf = spark.read.parquet(
+                    kdf = spark.read.schema("doc_id long").parquet(
                         *committed_doc_stats_paths(self.paths.root,
-                                                   self.manifest)
-                    ).select("doc_id")
+                                                   self.manifest))
                 kdf = kdf.join(ndf, "doc_id", "left_anti")
         if kdf is None:
             return self.search(query, n)
@@ -2673,10 +2644,9 @@ class IndexSearcher:
             for d in nots[1:]:
                 ndf = ndf.unionByName(d)
             if kdf is None:
-                kdf = spark.read.parquet(
+                kdf = spark.read.schema("doc_id long").parquet(
                     *committed_doc_stats_paths(self.paths.root,
-                                               self.manifest)
-                ).select("doc_id")
+                                               self.manifest))
             kdf = kdf.join(ndf, "doc_id", "left_anti")
         return self._search_counts(counts, n, keep=kdf)
 
@@ -2830,7 +2800,7 @@ class IndexSearcher:
     def _live_checkpoint(self) -> DataFrame:
         """The committed tokenized checkpoint (doc_id, doc_len, pairs),
         tombstoned docs anti-joined out."""
-        tok = self.spark.read.parquet(
+        tok = self.spark.read.schema(TOKENIZED_SCHEMA).parquet(
             *committed_tokenized_paths(self.paths.root, self.manifest))
         tdf = self._tombstone_df()
         return tok if tdf is None else tok.join(tdf, "doc_id", "left_anti")
@@ -2843,9 +2813,8 @@ class IndexSearcher:
         from data_text_search_spark.operators.index_build import (
             committed_tombstone_paths,
         )
-        tdf = self.spark.read.parquet(
-            *committed_tombstone_paths(self.paths.root, self.manifest)) \
-            .select("doc_id")
+        tdf = self.spark.read.schema("doc_id long").parquet(
+            *committed_tombstone_paths(self.paths.root, self.manifest))
         # size is known exactly (the sorted array is on the driver):
         # broadcast the anti-join side while it comfortably fits
         return F.broadcast(tdf) if self._tombstones.size <= 10_000_000 else tdf
@@ -2912,7 +2881,7 @@ class IndexSearcher:
                 return fuzzy.fuzzy_phrase_search(
                     self.spark, df, query, max_mistakes,
                     text_col=text_col, id_col=id_col)
-        tok = self.spark.read.parquet(
+        tok = self.spark.read.schema(TOKENIZED_SCHEMA).parquet(
             *committed_tokenized_paths(self.paths.root, self.manifest))
         hits = F.size(F.filter(
             F.col("pairs"), lambda p: p["term"].isin(distinct)))
@@ -2974,7 +2943,7 @@ class IndexSearcher:
         if not qtokens or self.manifest["config"].get("clean"):
             return fuzzy.phrase_search(self.spark, df, query,
                                        text_col=text_col, id_col=id_col)
-        tok = self.spark.read.parquet(
+        tok = self.spark.read.schema(TOKENIZED_SCHEMA).parquet(
             *committed_tokenized_paths(self.paths.root, self.manifest))
         def term_cond(t: str, c: int):
             # pyspark HOFs infer arity from the python signature, so the
@@ -3045,7 +3014,7 @@ class IndexSearcher:
                     self._local_blocks.pop(victim)["n_docs"].sum())
         blocks = pd.concat([self._local_blocks[t] for t in sorted(qcounts)],
                            ignore_index=True)
-        kernel = _shard_topk_kernel_factory(qcounts, n, self.codec, qidf,
+        kernel = _shard_topk_kernel_factory(qcounts, n, qidf,
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle)
         res = kernel(blocks).reset_index(drop=True)

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from data_text_search_spark.config import IndexPaths
 from data_text_search_spark.operators.index_build import (
+    DOC_STATS_SCHEMA,
     TERM_STATS_SCHEMA,
     committed_doc_stats_paths,
     committed_term_stats_paths,
@@ -72,7 +73,6 @@ def index_info(spark: SparkSession, root: str) -> dict:
         "segments": len(m.get("segments", [])),
         "tombstone_files": len(m.get("tombstones", [])),
         "shards": m["shards"],
-        "term_buckets": m["term_buckets"],
         "config": dict(m["config"]),
         "bytes": bytes_by,
         "total_bytes": sum(bytes_by.values()),
@@ -100,10 +100,11 @@ def doc_length_histogram(spark: SparkSession, root: str,
     m = load_manifest(root)
     if not m or not m.get("complete"):
         raise ValueError(f"no complete index at {root}")
-    ds = spark.read.parquet(*committed_doc_stats_paths(root, m))
+    ds = spark.read.schema(DOC_STATS_SCHEMA).parquet(
+        *committed_doc_stats_paths(root, m))
     tpaths = committed_tombstone_paths(root, m)
     if tpaths:
-        ds = ds.join(spark.read.parquet(*tpaths).select("doc_id"),
+        ds = ds.join(spark.read.schema("doc_id long").parquet(*tpaths),
                      "doc_id", "left_anti")
     bucket = F.least(F.floor(F.log2(F.greatest(F.col("doc_len"),
                                                F.lit(1)))).cast("int"),

@@ -10,9 +10,9 @@ routed vs unrouted.
 This module keeps the pruning and fixes the scoring:
 
 - `build_routed_index` writes the corpus ONCE partitioned by the
-  routing column, then builds one compact-codec member index per
-  routing value from its partition-pruned slice (1 + V pruned scans,
-  never V full passes). The value → member mapping commits LAST
+  routing column, then builds one member index per routing value from
+  its partition-pruned slice (1 + V pruned scans, never V full
+  passes). The value → member mapping commits LAST
   through fsio's atomic text protocol, so a crashed build never loads.
 - `RoutedSearcher` opens the members under ONE `FederatedSearcher`:
   statistics are always GLOBAL (exact N/avgdl/df across every member —
@@ -54,7 +54,7 @@ MAX_ROUTING_VALUES = 1024
 
 def build_routed_index(spark: SparkSession, corpus: DataFrame, root: str,
                        routing_col: str,
-                       config: BM25Config = None,
+                       config: BM25Config = BM25Config(),
                        text_col: str = "content",
                        id_col: str | None = None,
                        shards: int | None = None) -> dict:
@@ -62,13 +62,7 @@ def build_routed_index(spark: SparkSession, corpus: DataFrame, root: str,
     layout is opaque (`m_0000`, ...); the value mapping lives in
     routing.json so arbitrary routing strings never become path
     segments. Members must share semantics, so one config builds all
-    of them; the compact codec is required (federated scoring needs
-    raw tf/doc_len) and is forced on here."""
-    cfg = config or BM25Config(impact_codec="compact")
-    if cfg.impact_codec != "compact":
-        raise ValueError(
-            "build_routed_index: members must use the compact codec "
-            "(routed queries score under federated global statistics)")
+    of them."""
     vals = [r[0] for r in
             corpus.select(routing_col).distinct().collect()]
     if any(v is None for v in vals):
@@ -113,7 +107,7 @@ def build_routed_index(spark: SparkSession, corpus: DataFrame, root: str,
     def _build_member(i: int) -> int:
         member = f"m_{i:04d}"
         build_index(spark, by_rt.filter(F.col("_rk") == i),
-                    f"{root}/{member}", cfg, text_col=text_col,
+                    f"{root}/{member}", config, text_col=text_col,
                     id_col=id_col, shards=shards)
         return int(load_manifest(f"{root}/{member}")["n_docs"])
 

@@ -427,7 +427,7 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
         td.groupBy("term").agg(F.count("*").alias("df"),
                                F.sum("tf").alias("cf"))
         .join(full_stats.select("term"), "term", "left_anti"),
-        n_total, cfg["alpha"], cfg["stopwords"], manifest["term_buckets"])
+        n_total, cfg["alpha"], cfg["stopwords"])
     # ONE job: the new-term count rides the segment term_stats write as
     # an observe() metric (the round-6-start shape persisted delta_terms,
     # ran a count job, then re-ran the plan for the write). The dir is
@@ -539,8 +539,8 @@ def _write_segment_on_driver(spark: SparkSession, paths: IndexPaths,
     hold: `tok` (a pyarrow table of the tokenized checkpoint's columns)
     becomes the same four segment directories, with no Spark job.
 
-    Both paths share every formula: new-term idf, `pruned` and
-    term_bucket (with_term_stats) and the impact (impact_expr) are the
+    Both paths share every formula: new-term idf and `pruned`
+    (with_term_stats) and the impact (impact_expr) are the
     same Spark Column expressions, evaluated over frames built from
     pandas, whose collect() runs no job; the blocks come from the same
     _encode_shard_factory. Counting, the dictionary anti-join and the
@@ -569,10 +569,9 @@ def _write_segment_on_driver(spark: SparkSession, paths: IndexPaths,
         stats = pd.DataFrame.from_records(
             with_term_stats(
                 spark.createDataFrame(counts, "term string, df long, cf long"),
-                n_total, cfg["alpha"], cfg["stopwords"],
-                manifest["term_buckets"]).collect(),
-            columns=["term", "df", "cf", "idf", "pruned", "term_bucket"]
-        ).astype({"idf": "float64", "pruned": bool, "term_bucket": "int32"})
+                n_total, cfg["alpha"], cfg["stopwords"]).collect(),
+            columns=["term", "df", "cf", "idf", "pruned"]
+        ).astype({"idf": "float64", "pruned": bool})
         # the anti-join against ALL committed terms (alpha-pruned ones
         # included: a pruned hot term in the delta stays pruned), reading
         # the three columns it needs, filtered to the delta's terms
@@ -591,19 +590,16 @@ def _write_segment_on_driver(spark: SparkSession, paths: IndexPaths,
                 post[["idf", "tf", "doc_len"]],
                 "idf double, tf int, doc_len int")
                 .select(impact_expr(manifest)).collect()]
-            encode = _encode_shard_factory(cfg["block_size"],
-                                           cfg["impact_codec"])
+            encode = _encode_shard_factory(cfg["block_size"])
             blocks = pd.concat([encode(g) for _, g in post.groupby("shard")],
                                ignore_index=True)
-            blocks["term_bucket"] = blocks["term"].map(
-                dict(zip(stats["term"], stats["term_bucket"])))
 
     # the four directories, each written as its Spark twin would be
     # (segment postings: one term-sorted file per colocation unit)
     fsio.delete(paths.postings_seg(seg_id))
     fsio.mkdirs(paths.postings_seg(seg_id))
     if len(blocks):
-        schema = arrow_schema(POSTINGS_SCHEMA + ", term_bucket int")
+        schema = arrow_schema(POSTINGS_SCHEMA)
         spart = blocks["shard"] % manifest["subshards"]
         for s, unit in blocks.groupby(spart):
             _write_parquet(
@@ -748,8 +744,6 @@ def merge_segments(spark: SparkSession, root: str) -> dict:
     c = manifest["config"]
     cfg = BM25Config(k1=c["k1"], b=c["b"], alpha=c["alpha"], clean=c["clean"],
                      block_size=c["block_size"],
-                     term_partitions=manifest["term_buckets"],
-                     impact_codec=c["impact_codec"],
                      stopwords=tuple(c["stopwords"]))
     pairs = spark.read.schema(TOKENIZED_SCHEMA).parquet(
         *committed_tokenized_paths(root, manifest))

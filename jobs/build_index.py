@@ -40,12 +40,6 @@ def main() -> None:
     ap.add_argument("--groups", type=int, default=4,
                     help="resume granularity: posting encode runs as this "
                          "many independent jobs")
-    ap.add_argument("--impact-codec", default="f64",
-                    choices=["f64", "compact"],
-                    help="posting payload: exact f64 impacts (default) or "
-                         "compact (delta,tf,doc_len) varints — ~2.6x smaller "
-                         "index, bit-identical scores, slightly more decode "
-                         "CPU; pick compact when scans are I/O-bound")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--cores", type=int, default=None,
                     help="local mode cores (ignored under spark-submit "
@@ -64,8 +58,7 @@ def main() -> None:
         from data_text_search_spark.session import get_spark
         spark = get_spark(app_name="build_index", cores=args.cores)
 
-    cfg = BM25Config(k1=args.k1, b=args.b, alpha=args.alpha, clean=args.clean,
-                     impact_codec=args.impact_codec)
+    cfg = BM25Config(k1=args.k1, b=args.b, alpha=args.alpha, clean=args.clean)
     corpus = spark.read.parquet(args.input)
     manifest = build_index(
         spark, corpus, args.output, cfg, text_col=args.text_col,

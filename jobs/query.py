@@ -6,7 +6,7 @@
 
 A comma-separated --index federates: every root is searched as ONE
 corpus under exact global statistics (operators/federation.py;
-compact-codec members, plain --query / --queries-file modes):
+plain --query / --queries-file modes):
 
     jobs/query.py --index s3a://b/gen1,s3a://b/gen2 --query "..."
 
@@ -78,7 +78,7 @@ def main(argv: list[str] | None = None) -> list[dict]:
     ap.add_argument("--similarity", default=None,
                     choices=["tfidf", "lmjm"],
                     help="score --query with a pluggable similarity "
-                         "instead of BM25 (compact-codec index only)")
+                         "instead of BM25")
     ap.add_argument("--lam", type=float, default=0.1,
                     help="Jelinek-Mercer lambda for --similarity lmjm")
     ap.add_argument("--rescore-phrase", default=None, metavar="PHRASE",
@@ -170,8 +170,8 @@ def main(argv: list[str] | None = None) -> list[dict]:
 
     if "," in args.index:
         # federation: --index root1,root2,... searches every member as
-        # ONE corpus under exact global statistics (compact-codec
-        # members; operators/federation.py). Plain --query /
+        # ONE corpus under exact global statistics
+        # (operators/federation.py). Plain --query /
         # --queries-file only — the side modes are single-index APIs.
         from data_text_search_spark.operators.federation import (
             FederatedSearcher,

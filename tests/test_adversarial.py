@@ -112,23 +112,33 @@ def test_negative_idf_pruning_parity_random(spark, tmp_path):
 
 # ------------------------------------------- kernel-level posting fuzz
 
-def _make_blocks(term_postings: dict, block_size: int) -> pd.DataFrame:
+K1, B, AVGDL = 1.5, 0.75, 10.0
+
+
+def _make_blocks(term_postings: dict, qidf: dict,
+                 block_size: int) -> pd.DataFrame:
+    """Posting blocks of (docs, tfs, doc lengths) per term, with the
+    block bounds of their BM25 impacts under `qidf`."""
     from data_text_search_spark.functions.codec import varint_encode_segmented
+    from data_text_search_spark.operators.index_query import _bm25_impacts
+
+    def varints(v):
+        return varint_encode_segmented(np.asarray(v, dtype=np.uint64),
+                                       np.array([len(v)]))[0]
+
     rows = []
-    for term, (docs, imps) in sorted(term_postings.items()):
-        docs = np.asarray(docs, dtype=np.int64)
-        imps = np.asarray(imps, dtype=np.float64)
+    for term, (docs, tfs, dls) in sorted(term_postings.items()):
         order = np.argsort(docs)
-        docs, imps = docs[order], imps[order]
+        docs, tfs, dls = docs[order], tfs[order], dls[order]
+        imps = _bm25_impacts(qidf[term], tfs, dls, AVGDL, K1, B)
         for bi in range(0, len(docs), block_size):
-            d, im = docs[bi:bi + block_size], imps[bi:bi + block_size]
-            gaps = np.diff(d).astype(np.uint64)
-            bufs = varint_encode_segmented(gaps, np.array([len(gaps)]))
+            blk = slice(bi, bi + block_size)
+            d, im = docs[blk], imps[blk]
             rows.append({
                 "term": term, "shard": 0, "block_id": bi // block_size,
                 "first_doc_id": int(d[0]), "last_doc_id": int(d[-1]),
-                "n_docs": len(d), "doc_deltas": bufs[0], "tfs": b"",
-                "impacts": im.astype("<f8").tobytes(),
+                "n_docs": len(d), "doc_deltas": varints(np.diff(d)),
+                "tfs": varints(tfs[blk]), "impacts": varints(dls[blk]),
                 "block_max": float(im.max()), "block_min": float(im.min())})
     return pd.DataFrame(rows)
 
@@ -139,27 +149,26 @@ def test_shard_kernel_fuzz_vs_bruteforce():
     (A 30k-trial offline sweep of the same generator found 0 divergences;
     this keeps an 800-trial regression in-suite.)"""
     from data_text_search_spark.operators.index_query import (
-        _shard_topk_kernel_factory)
+        _bm25_impacts, _shard_topk_kernel_factory)
     rs = np.random.RandomState(7)
     for trial in range(800):
         n_docs = rs.randint(4, 25)
         n_terms = rs.randint(2, 7)
-        tp = {}
+        tp, qidf = {}, {}
         for ti in range(n_terms):
             nd = rs.randint(1, n_docs + 1)
             docs = rs.choice(n_docs, size=nd, replace=False)
             style = rs.randint(4)
             if style == 0:
-                imps = np.round(-np.abs(rs.randn(nd)) * 8, 2)
+                idf = -abs(rs.randn()) * 4
             elif style == 1:
-                imps = np.round(rs.randn(nd) * 10, 2)
+                idf = rs.randn() * 5
             elif style == 2:
-                imps = np.round(np.abs(rs.randn(nd)) * 6, 2)
-            else:
-                imps = np.round(
-                    rs.choice([-9, -5, -1, -.1, .1, 1, 5, 9], nd)
-                    + rs.randn(nd) * 0.05, 3)
-            tp[f"t{ti}"] = (docs, imps)
+                idf = abs(rs.randn()) * 3
+            else:      # few distinct values: exact score ties
+                idf = float(rs.choice([-4, -2, -.5, -.05, .05, .5, 2, 4]))
+            tp[f"t{ti}"] = (docs, rs.randint(1, 4, nd), rs.randint(1, 30, nd))
+            qidf[f"t{ti}"] = idf
         qn = rs.randint(1, n_terms + 1)
         qc = {f"t{t}": int(rs.randint(1, 4))
               for t in rs.choice(n_terms, size=qn, replace=False)}
@@ -168,11 +177,13 @@ def test_shard_kernel_fuzz_vs_bruteforce():
         # brute force
         acc: dict[int, float] = {}
         for t, c in qc.items():
-            for d, im in zip(*tp[t]):
+            docs, tfs, dls = tp[t]
+            imps = _bm25_impacts(qidf[t], tfs, dls, AVGDL, K1, B)
+            for d, im in zip(docs, imps):
                 acc[int(d)] = acc.get(int(d), 0.0) + float(im) * c
         want = sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:k]
-        out = _shard_topk_kernel_factory(qc, k)(
-            _make_blocks({t: tp[t] for t in qc}, bs))
+        out = _shard_topk_kernel_factory(qc, k, qidf, AVGDL, K1, B)(
+            _make_blocks({t: tp[t] for t in qc}, qidf, bs))
         got = list(zip(out["doc_id"].tolist(), out["score"].tolist()))
         assert len(got) == len(want), (trial, got, want)
         for (gd, gs), (wd, ws) in zip(got, want):

@@ -17,7 +17,7 @@ from data_text_search_spark.operators.federation import FederatedSearcher
 from data_text_search_spark.operators.index_build import build_index
 from data_text_search_spark.operators.index_query import IndexSearcher
 
-CFG = BM25Config(alpha=-5.0, impact_codec="compact")
+CFG = BM25Config(alpha=-5.0)
 Q = "def class return"
 
 

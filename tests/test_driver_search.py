@@ -79,25 +79,20 @@ def _driver_and_executor(spark_jobs, searchers, call, own_jobs=False):
 @pytest.fixture(scope="module")
 def indexes(spark, corpus, tmp_path_factory):
     base = tmp_path_factory.mktemp("drvsearch")
-    roots = {}
-    for codec in ("f64", "compact"):
-        roots[codec] = str(base / codec)
-        build_index(spark, corpus, roots[codec],
-                    BM25Config(impact_codec=codec), id_col="doc_id",
+    # "compact": a plain build of the (compact) posting codec
+    roots = {"compact": str(base / "compact"),
+             "segmented": str(base / "segmented")}
+    for root in roots.values():
+        build_index(spark, corpus, root, BM25Config(), id_col="doc_id",
                     shards=4, groups=1)
-    # a segment with terms no base doc holds, tombstones in both; on
-    # both codecs (collection_tf sums raw tfs, which only compact keeps)
-    for name, codec in (("segmented", "f64"),
-                        ("segmented_compact", "compact")):
-        roots[name] = seg = str(base / name)
-        build_index(spark, corpus, seg, BM25Config(impact_codec=codec),
-                    id_col="doc_id", shards=4, groups=1)
-        add_documents(spark, seg, spark.createDataFrame(pd.DataFrame({
-            "doc_id": range(10_000, 10_012),
-            "content": [f"flibbertigibbet gizmo{i % 3} return import "
-                        f"{'wobble ' * (i % 4)}" for i in range(12)]})),
-            id_col="doc_id")
-        delete_documents(spark, seg, [2, 7, 12, 10_001, 10_004])
+    # a segment with terms no base doc holds, and tombstones in both
+    seg = roots["segmented"]
+    add_documents(spark, seg, spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(10_000, 10_012),
+        "content": [f"flibbertigibbet gizmo{i % 3} return import "
+                    f"{'wobble ' * (i % 4)}" for i in range(12)]})),
+        id_col="doc_id")
+    delete_documents(spark, seg, [2, 7, 12, 10_001, 10_004])
     # hot terms in most docs: negative IDF
     rs = np.random.RandomState(99)
     texts = [" ".join(["omnibus"] * int(rs.rand() < 0.9)
@@ -112,7 +107,7 @@ def indexes(spark, corpus, tmp_path_factory):
     return roots
 
 
-@pytest.mark.parametrize("name", ["f64", "compact", "segmented"])
+@pytest.mark.parametrize("name", ["compact", "segmented"])
 def test_forced_executor_rows_bit_identical(spark, spark_jobs, indexes,
                                             name):
     s = IndexSearcher(spark, indexes[name])
@@ -127,7 +122,7 @@ def test_forced_executor_rows_bit_identical(spark, spark_jobs, indexes,
 
 def test_forced_executor_parity_keep_and_negative_idf(spark, spark_jobs,
                                                       indexes):
-    s = IndexSearcher(spark, indexes["f64"])
+    s = IndexSearcher(spark, indexes["compact"])
     keep = list(range(0, 300, 3))
     for q in QUERIES[:12]:
         drv, exe = _driver_and_executor(
@@ -151,7 +146,7 @@ def test_forced_executor_parity_similarity_and_federation(
             drv, exe = _driver_and_executor(
                 spark_jobs, [s], lambda: s.search_similarity(q, model, 10))
             assert drv == exe, (model, q)
-    cfg = BM25Config(alpha=-5.0, impact_codec="compact")
+    cfg = BM25Config(alpha=-5.0)
     roots = []
     for i in range(2):
         roots.append(str(tmp_path / f"m{i}"))
@@ -200,7 +195,7 @@ def test_search_job_counts(spark, spark_jobs, corpus, tmp_path):
 def test_explain_executor_is_the_path_search_takes(spark, spark_jobs,
                                                    indexes):
     q = "def return import"
-    s = IndexSearcher(spark, indexes["f64"])
+    s = IndexSearcher(spark, indexes["compact"])
     plan = s.explain(q)["plan"]
     assert plan["executor"] == "driver" and plan["interactive_local_eligible"]
     with spark_jobs() as jobs:
@@ -214,7 +209,7 @@ def test_explain_executor_is_the_path_search_takes(spark, spark_jobs,
         s.search(q, 10).collect()
     assert len(jobs) >= 1
     # the dictionary budget is checked too (footer row count)
-    small = IndexSearcher(spark, indexes["f64"])
+    small = IndexSearcher(spark, indexes["compact"])
     small.DRIVER_TERM_CACHE_MAX = 1
     plan = small.explain(q)["plan"]
     assert plan["executor"] == "colocated-units"
@@ -249,7 +244,7 @@ def test_delete_documents_job_count(spark, spark_jobs, corpus, tmp_path):
     assert s._tombstones.tolist() == [3, 4, 5, 6]
 
 
-@pytest.mark.parametrize("name", ["f64", "compact", "segmented"])
+@pytest.mark.parametrize("name", ["compact", "segmented"])
 def test_kernel_callers_driver_equals_executor(spark, spark_jobs, corpus,
                                                indexes, name):
     """Every caller of the one kernel runner answers with bit-identical
@@ -289,9 +284,38 @@ def test_collection_tf_driver_equals_executor(spark, spark_jobs, indexes):
     """collection_tf on a segmented index sums tf varints through the
     runner: the same counts on the driver (no Spark job) as on the
     executors, tombstoned docs still counted."""
-    s = IndexSearcher(spark, indexes["segmented_compact"])
+    s = IndexSearcher(spark, indexes["segmented"])
     terms = ["return", "import", "flibbertigibbet", "wobble", "absentzz"]
     drv, exe = _driver_and_executor(spark_jobs, [s],
                                     lambda: s.collection_tf(terms))
     assert drv == exe and drv["flibbertigibbet"] == 12
     assert drv["wobble"] == sum(i % 4 for i in range(12))
+
+
+# jobs of a repeated call on the 300-doc index; each read of doc_stats,
+# of a tokenized checkpoint or of tombstones infers no schema (with a
+# bare read they were 3, 7 and 8: one schema-inference job each)
+PINNED_READ_JOBS = {"boolean_must_not": 2, "more_like_this": 6,
+                    "fuzzy_search": 7}
+
+
+def test_index_reads_infer_no_schema(spark, spark_jobs, indexes):
+    import pathlib
+
+    from data_text_search_spark.operators import index_query
+
+    src = pathlib.Path(index_query.__file__).read_text(encoding="utf-8")
+    assert "read.parquet(" not in src
+    s = IndexSearcher(spark, indexes["compact"])
+    s.warm()
+    calls = {
+        "boolean_must_not": lambda: s.boolean_search(
+            "return import", must_not=["select"]),
+        "more_like_this": lambda: s.more_like_this(5, 10),
+        "fuzzy_search": lambda: s.fuzzy_search("defx", 1),
+    }
+    for label, call in calls.items():
+        call().collect()
+        with spark_jobs() as jobs:
+            assert call().collect(), label
+        assert len(jobs) <= PINNED_READ_JOBS[label], (label, jobs)

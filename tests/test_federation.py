@@ -18,7 +18,7 @@ from data_text_search_spark.operators.federation import FederatedSearcher
 from data_text_search_spark.operators.index_build import build_index
 from data_text_search_spark.operators.index_query import IndexSearcher
 
-CFG = BM25Config(alpha=-5.0, impact_codec="compact")
+CFG = BM25Config(alpha=-5.0)
 
 
 def _build(spark, df, root, cfg=CFG, shards=4):
@@ -149,22 +149,12 @@ def test_federated_with_tombstoned_member(spark, corpus, tmp_path):
     assert not set(victims) & {r[0] for r in got}
 
 
-def test_federated_rejects_f64_member(spark, corpus, tmp_path):
-    r1 = _build(spark, corpus.filter(F.col("doc_id") < 100),
-                str(tmp_path / "c1"))
-    r2 = str(tmp_path / "f1")
-    build_index(spark, corpus.filter(F.col("doc_id") >= 100), r2,
-                BM25Config(alpha=-5.0), id_col="doc_id", shards=2, groups=1)
-    with pytest.raises(ValueError, match="compact codec"):
-        FederatedSearcher(spark, [r1, r2])
-
-
 def test_federated_rejects_config_mismatch(spark, corpus, tmp_path):
     r1 = _build(spark, corpus.filter(F.col("doc_id") < 100),
                 str(tmp_path / "k1a"))
     r2 = _build(spark, corpus.filter(F.col("doc_id") >= 100),
                 str(tmp_path / "k1b"),
-                cfg=BM25Config(k1=1.2, alpha=-5.0, impact_codec="compact"))
+                cfg=BM25Config(k1=1.2, alpha=-5.0))
     with pytest.raises(ValueError, match="disagrees"):
         FederatedSearcher(spark, [r1, r2])
 
@@ -182,7 +172,7 @@ def test_member_pruned_live_global_raises(spark, tmp_path):
         (100 + i, "rare") for i in range(5)]
     cold = [(1000 + i, "hot common") for i in range(150)] + [
         (2000 + i, "other common") for i in range(150)]
-    cfg = BM25Config(alpha=-2.0, impact_codec="compact")
+    cfg = BM25Config(alpha=-2.0)
     a = spark.createDataFrame(hot, "doc_id long, content string")
     b = spark.createDataFrame(cold, "doc_id long, content string")
     ra = str(tmp_path / "a")

@@ -527,7 +527,7 @@ def test_warmed_dictionary_paths_match_collect_paths(spark, spark_jobs,
     pdf, df = corpus
     root = str(tmp_path / "widx")
     build_index(spark, df, root,
-                BM25Config(alpha=1.0, impact_codec="compact"),
+                BM25Config(alpha=1.0),
                 id_col="doc_id", shards=2, groups=1)
     cold = IndexSearcher(spark, root)
     cold.DRIVER_TERM_CACHE_MAX = 0

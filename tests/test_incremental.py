@@ -416,9 +416,10 @@ def test_manifest_versioned_commit_crash_windows(spark, tmp_path):
 
 
 def test_other_format_version_refused(spark, tmp_path):
-    """A fresh build writes FORMAT_VERSION 3; every reader and writer
+    """A fresh build writes FORMAT_VERSION 4; every reader and writer
     loads the manifest through load_manifest, so a manifest of another
-    version gets the one "rebuild" error from each of them."""
+    version (v3: the f64-or-compact payload with `term_bucket`) gets the
+    one "rebuild" error from each of them."""
     from data_text_search_spark.config import IndexPaths
     from data_text_search_spark.operators.index_build import (
         FORMAT_VERSION,
@@ -429,8 +430,8 @@ def test_other_format_version_refused(spark, tmp_path):
 
     root = _base(spark, tmp_path, n=40)
     m = load_manifest(root)
-    assert m["version"] == FORMAT_VERSION == 3
-    _write_manifest_atomic(IndexPaths(root).manifest, dict(m, version=2))
+    assert m["version"] == FORMAT_VERSION == 4
+    _write_manifest_atomic(IndexPaths(root).manifest, dict(m, version=3))
     pdf = corpus_pandas(40).reset_index().rename(columns={"index": "doc_id"})
     corpus = spark.createDataFrame(pdf)
     delta = spark.createDataFrame(pd.DataFrame({
@@ -448,10 +449,10 @@ def test_other_format_version_refused(spark, tmp_path):
     }
     for name, call in calls.items():
         with pytest.raises(ValueError, match=(
-                r"index format v2; this engine reads v3; rebuild with "
+                r"index format v3; this engine reads v4; rebuild with "
                 r"`build_index\(\.\.\., resume=False\)`")):
             call()
-            pytest.fail(f"{name} accepted a v2 manifest")
+            pytest.fail(f"{name} accepted a v3 manifest")
 
 
 def test_write_text_new_refuses_overwrite(spark, tmp_path, monkeypatch):
@@ -723,8 +724,8 @@ PARITY_QS = ["flibbertigibbet", "gizmo3 widget2", "return import",
              "quantum flux capacitor", "tierword1 spill_page", "ünïcode",
              "zzstop"]
 PARITY_CONFIGS = {
-    "f64": BM25Config(stopwords=("zzstop",)),
-    "compact": BM25Config(impact_codec="compact", alpha=0.5),
+    "stopwords": BM25Config(stopwords=("zzstop",)),
+    "compact": BM25Config(alpha=0.5),
 }
 
 
@@ -778,9 +779,9 @@ def _answers(spark, root: str) -> list:
             for q in PARITY_QS]
 
 
-@pytest.mark.parametrize("codec", list(PARITY_CONFIGS))
+@pytest.mark.parametrize("name", list(PARITY_CONFIGS))
 def test_driver_segment_equals_spark_segment(spark, spark_jobs, tmp_path,
-                                             monkeypatch, codec):
+                                             monkeypatch, name):
     """A small local delta is written on the driver with no Spark job;
     a parquet copy of the same delta (not a local relation) takes the
     Spark encode. The two segments hold the same rows (byte-identical
@@ -793,7 +794,7 @@ def test_driver_segment_equals_spark_segment(spark, spark_jobs, tmp_path,
     pdf = corpus_pandas(200).reset_index().rename(columns={"index": "doc_id"})
     drv, spk = str(tmp_path / "driver"), str(tmp_path / "spark")
     build_index(spark, spark.createDataFrame(pdf), drv,
-                PARITY_CONFIGS[codec], id_col="doc_id", shards=4, groups=2)
+                PARITY_CONFIGS[name], id_col="doc_id", shards=4, groups=2)
     shutil.copytree(drv, spk)
 
     def from_files(delta: pd.DataFrame, name: str):

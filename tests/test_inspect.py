@@ -51,7 +51,8 @@ def test_index_info_counts(spark, corpus, root):
     assert info["bytes"]["postings"] > 0 and info["bytes"]["doc_stats"] > 0
     assert info["total_bytes"] >= sum(info["bytes"].values())
     assert 0 < info["bytes_per_posting"] < 100
-    assert info["config"]["impact_codec"] == "f64"
+    assert set(info["config"]) == {"k1", "b", "alpha", "clean",
+                                   "block_size", "stopwords"}
     with pytest.raises(ValueError):
         index_info(spark, root + "-nope")
 

@@ -441,7 +441,7 @@ def test_query_cli_similarity_rescore_highlight_complete(spark, tmp_path):
     pdf = corpus_pandas(200).reset_index().rename(columns={"index": "doc_id"})
     cdf = spark.createDataFrame(pdf)
     root = str(tmp_path / "cidx")
-    build_index(spark, cdf, root, BM25Config(impact_codec="compact"),
+    build_index(spark, cdf, root, BM25Config(),
                 id_col="doc_id", shards=4, groups=1)
     corpus_path = str(tmp_path / "corpus.parquet")
     cdf.selectExpr("doc_id", "content as text").write.parquet(corpus_path)
@@ -504,7 +504,7 @@ def test_query_cli_routed(spark, tmp_path):
         "bucket", (F.col("doc_id") % 2).cast("string"))
     root = str(tmp_path / "ridx")
     build_routed_index(spark, cdf, root, "bucket",
-                       BM25Config(impact_codec="compact"),
+                       BM25Config(),
                        text_col="content", id_col="doc_id")
     rs = RoutedSearcher(spark, root)
     q = "hash join table scan def"

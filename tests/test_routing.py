@@ -23,7 +23,7 @@ from data_text_search_spark.operators.routing import (
     load_routing_manifest,
 )
 
-CFG = BM25Config(alpha=-5.0, impact_codec="compact")
+CFG = BM25Config(alpha=-5.0)
 
 
 @pytest.fixture(scope="module")
@@ -113,11 +113,6 @@ def test_build_routed_guards(spark, corpus, tmp_path):
     with pytest.raises(ValueError, match="NULL"):
         build_routed_index(spark, df, str(tmp_path / "x"), "bucket",
                            CFG, text_col="content", id_col="doc_id")
-    with pytest.raises(ValueError, match="compact"):
-        build_routed_index(spark, corpus.withColumn("b", F.lit("a")),
-                           str(tmp_path / "y"), "b",
-                           BM25Config(), text_col="content",
-                           id_col="doc_id")
     with pytest.raises(ValueError, match="routing.json"):
         RoutedSearcher(spark, str(tmp_path / "never_built"))
 

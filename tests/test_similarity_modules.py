@@ -20,16 +20,16 @@ QUERY = "hash join table scan"
 
 
 @pytest.fixture(scope="module")
-def compact_root(spark, corpus, tmp_path_factory):
+def index_root(spark, corpus, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("simidx") / "bm25")
-    build_index(spark, corpus, root, BM25Config(impact_codec="compact"),
+    build_index(spark, corpus, root, BM25Config(),
                 id_col="doc_id", shards=4, groups=2)
     return root
 
 
 @pytest.fixture(scope="module")
-def searcher(spark, compact_root):
-    s = IndexSearcher(spark, compact_root)
+def searcher(spark, index_root):
+    s = IndexSearcher(spark, index_root)
     s.warm()
     return s
 
@@ -160,26 +160,33 @@ def test_similarity_duplicate_query_terms(searcher, stats):
         assert math.isclose(gs, ws, rel_tol=0, abs_tol=1e-9)
 
 
-def test_similarity_needs_compact_codec(spark, corpus, tmp_path, searcher):
-    root = str(tmp_path / "f64")
-    build_index(spark, corpus, root, BM25Config(impact_codec="f64"),
-                id_col="doc_id", shards=2, groups=1)
-    s = IndexSearcher(spark, root)
-    with pytest.raises(ValueError, match="compact"):
-        s.search_similarity(QUERY, "tfidf", 5)
-    # collection_tf works on ANY codec now that build persists cf in
-    # term_stats (the round-6 fast path) — and must agree with the
-    # compact searcher's posting-derived values
-    assert s.collection_tf(["hash"]) == searcher.collection_tf(["hash"])
-    # ... but a segmented f64 index still raises: its persisted cf is
-    # stale for pre-existing terms, and the posting-sum path needs raw tf
-    # varints
+def test_similarity_on_default_segmented_index(spark, corpus, tmp_path,
+                                               stats):
+    """A default-config index serves every similarity model, and with a
+    segment appended collection_tf takes the posting-sum path and counts
+    the segment's occurrences."""
     from data_text_search_spark.streaming.incremental import add_documents
+    root = str(tmp_path / "default")
+    build_index(spark, corpus, root, BM25Config(), id_col="doc_id",
+                shards=2, groups=1)
+    got = [(r["doc_id"], r["score"]) for r in IndexSearcher(spark, root)
+           .search_similarity(QUERY, "tfidf", 5).collect()]
+    want = _py_tfidf(stats, QUERY, 5)
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert math.isclose(gs, ws, rel_tol=0, abs_tol=1e-9)
     add_documents(spark, root, spark.createDataFrame(
-        [(900001, "hash join probe")], "doc_id long, content string"),
+        [(900001, "join table probe")], "doc_id long, content string"),
         id_col="doc_id")
-    with pytest.raises(ValueError, match="compact"):
-        IndexSearcher(spark, root).collection_tf(["hash"])
+    s = IndexSearcher(spark, root)
+    assert s.manifest["segments"]
+    assert s.collection_tf(["join", "probe"]) == {
+        "join": stats["cf"]["join"] + 1, "probe": 1}
+    for model in IndexSearcher.SIMILARITIES:
+        docs = {r["doc_id"] for r in
+                s.search_similarity("join table probe", model, 1000)
+                .collect()}
+        assert 900001 in docs, model
 
 
 def test_similarity_unknown_model(searcher):
@@ -208,12 +215,12 @@ def test_collection_tf_segment_fallback(spark, corpus, tmp_path):
     root = str(tmp_path / "seg")
     base = corpus.filter(F.col("doc_id") % 5 != 0)
     delta = corpus.filter(F.col("doc_id") % 5 == 0)
-    build_index(spark, base, root, BM25Config(impact_codec="compact"),
+    build_index(spark, base, root, BM25Config(),
                 id_col="doc_id", shards=2, groups=1)
     add_documents(spark, root, delta, id_col="doc_id")
     s = IndexSearcher(spark, root)
     froot = str(tmp_path / "full")
-    build_index(spark, corpus, froot, BM25Config(impact_codec="compact"),
+    build_index(spark, corpus, froot, BM25Config(),
                 id_col="doc_id", shards=2, groups=1)
     full = IndexSearcher(spark, froot)
     assert s.collection_tf(["hash"]) == full.collection_tf(["hash"])
@@ -314,7 +321,7 @@ def test_highlight_snippet_contains_term(searcher, spark, corpus):
 def test_similarity_respects_tombstones(spark, corpus, tmp_path):
     from data_text_search_spark.streaming.incremental import delete_documents
     root = str(tmp_path / "tomb")
-    build_index(spark, corpus, root, BM25Config(impact_codec="compact"),
+    build_index(spark, corpus, root, BM25Config(),
                 id_col="doc_id", shards=2, groups=1)
     s0 = IndexSearcher(spark, root)
     top = s0.search_similarity(QUERY, "tfidf", 3).collect()
@@ -499,7 +506,7 @@ def test_score_explain_sums_to_search_score(searcher):
 def test_score_explain_tombstoned_doc_empty(spark, corpus, tmp_path):
     from data_text_search_spark.streaming.incremental import delete_documents
     root = str(tmp_path / "expl")
-    build_index(spark, corpus, root, BM25Config(impact_codec="compact"),
+    build_index(spark, corpus, root, BM25Config(),
                 id_col="doc_id", shards=2, groups=1)
     s0 = IndexSearcher(spark, root)
     victim = int(s0.search(QUERY, 1).collect()[0]["doc_id"])

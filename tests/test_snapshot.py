@@ -28,7 +28,7 @@ def snap_root(spark, corpus, tmp_path_factory):
     base = tmp_path_factory.mktemp("snap")
     src = str(base / "src")
     build_index(spark, corpus, src,
-                BM25Config(alpha=-5.0, impact_codec="compact"),
+                BM25Config(alpha=-5.0),
                 id_col="doc_id", shards=4, groups=1)
     return src, str(base)
 
